@@ -17,11 +17,18 @@ read any manifest; rollback = move HEAD. Crash between data-write and HEAD
 swap leaves an orphan dir, never a torn table — the same guarantee Iceberg's
 metadata pointer gives.
 
+:func:`local_df` builds the small relations the driver itself produces
+(seed lists, the per-wave ``state``/``lineage``/``metrics`` rows, empty
+tables for ``read_or_empty``) on the JVM from an Arrow table, so writing
+them runs no Python worker task.
+
 On a real cluster every call site swaps one-for-one onto Iceberg:
 ``append``   → ``df.writeTo(tbl).append()``
 ``overwrite``→ ``df.writeTo(tbl).overwritePartitions()``
 ``merge_upsert`` → ``MERGE INTO tbl USING src ON key``
 ``read(snapshot_id=k)`` → ``spark.read.option("snapshot-id", k).table(tbl)``
+``local_df(spark, rows, schema)`` → unchanged (it is the source of a
+commit, not a table operation)
 """
 
 from __future__ import annotations
@@ -33,6 +40,37 @@ import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """DataFrame of driver-side `rows` (tuples or Rows, in `schema`'s
+    column order) built on the JVM from one Arrow table.
+
+    A Python list handed to ``spark.createDataFrame`` travels through a
+    Python RDD, even when empty, so every driver-built relation ran Python
+    worker tasks, each paying the worker's fixed start-up cost (~0.2
+    CPU-s) for a handful of rows. An Arrow table is handed to the JVM
+    as-is: no Python task runs, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. Values are
+    type-checked against `schema` (a wrong type raises); map columns take
+    dicts."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    width = len(struct.fields)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(f"row {bad!r} does not have the {width} fields "
+                         f"of {schema!r}")
+    cols = zip(*rows) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 class SnapshotTable:
@@ -89,7 +127,7 @@ class SnapshotTable:
     def read_or_empty(self, schema: str) -> DataFrame:
         if self.exists():
             return self.read()
-        return self.spark.createDataFrame([], schema)
+        return local_df(self.spark, [], schema)
 
     # -- write -------------------------------------------------------------
     def _commit(self, df: DataFrame, dirs_base: list[str], summary: dict) -> int:

@@ -654,7 +654,16 @@ def normalize_url_udf(col) -> Column:
     it builds the pure-JVM `normalize_url_column` expression instead (same
     call shape: accepts a column or column name, returns a Column), which
     removes the JVM↔Python lane from every canonicalization stage. The
-    batched Python kernel survives as `normalize_url_pandas_udf`."""
+    batched Python kernel survives as `normalize_url_pandas_udf`.
+
+    The returned Column is NONDETERMINISTIC (the evaluation-count pin of
+    `normalize_url_column`), although its value is a pure function of the
+    URL. Catalyst takes nondeterministic expressions only in projections,
+    filters, aggregates, windows and generators, so a join condition on
+    it fails analysis (INVALID_NON_DETERMINISTIC_EXPRESSIONS). The engine
+    only projects and filters it; elsewhere, project the normalized URL
+    into a column first, or call ``normalize_url_column(c,
+    pin_single_eval=False)``."""
     c = F.col(col) if isinstance(col, str) else col
     return normalize_url_column(c)
 

@@ -60,13 +60,14 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from navi_spark.catalog import SnapshotTable
+from navi_spark.catalog import SnapshotTable, local_df
 from navi_spark.functions.urlnorm import host_expr, normalize_url_udf
 from navi_spark.operators import bloom, cuckoo
 from navi_spark.operators.fetch import (
@@ -214,6 +215,16 @@ def _run_commits_concurrently(commits) -> None:
         for extra in errors[1:]:
             errors[0].add_note(f"concurrent commit also failed: {extra!r}")
         raise errors[0]
+
+
+def _local_checkpoint(df: DataFrame, held: ExitStack) -> DataFrame:
+    """Eager ``localCheckpoint`` whose blocks are dropped when `held`
+    unwinds. Spark frees a local checkpoint only once the JVM's garbage
+    collector reaches its DataFrame, so without this a failed wave, or a
+    long run of waves, keeps them in the block store until then."""
+    out = df.localCheckpoint(eager=True)
+    held.callback(out._jdf.queryExecution().logical().rdd().unpersist, False)
+    return out
 
 
 def take_k_smallest(pool: DataFrame, k: int,
@@ -382,22 +393,16 @@ class CrawlEngine:
         if isinstance(seeds, DataFrame):
             seed_df = seeds.toDF("raw")
         else:
-            seed_df = self.spark.createDataFrame(
-                [(s,) for s in seeds], "raw string")
+            seed_df = local_df(self.spark, [(s,) for s in seeds], "raw string")
         normed = seed_df.select(
             normalize_url_udf(F.col("raw")).alias("url")
         ).filter(F.col("url").isNotNull())
         self.t["frontier"].overwrite(
             self._frontier_rows(normed), {"wave": 0, "op": "bootstrap"}
         )
-        self.t["state"].overwrite(
-            self.spark.createDataFrame(
-                [(0, 0, False, self._snapshot_map())], STATE_SCHEMA
-            ),
-            {"op": "bootstrap"},
-        )
         self.wave_id = 0
         self.budget_consumed = 0
+        self._commit_state(False, {"op": "bootstrap"})
 
     def _snapshot_map(self) -> dict[str, int]:
         """Snapshot id of EVERY non-state table; sentinel 0 = no commit yet
@@ -456,13 +461,7 @@ class CrawlEngine:
                            "files_after": len(self.t[name].data_files()),
                            "compacted": sid is not None}
         done = self.t["state"].read().collect()[0]["done"]
-        self.t["state"].overwrite(
-            self.spark.createDataFrame(
-                [(self.wave_id, self.budget_consumed, done,
-                  self._snapshot_map())], STATE_SCHEMA
-            ),
-            {"op": "maintain", "wave": self.wave_id},
-        )
+        self._commit_state(done, {"op": "maintain", "wave": self.wave_id})
         for name in self.TABLES:
             if not self.t[name].exists():
                 continue
@@ -474,6 +473,12 @@ class CrawlEngine:
 
     # -- the wave ------------------------------------------------------------
     def wave(self) -> WaveStats:
+        """Run one wave. Everything the wave caches is unpersisted when it
+        returns or raises, so a failed wave leaks no cached relation."""
+        with ExitStack() as cached:
+            return self._wave(cached)
+
+    def _wave(self, cached: ExitStack) -> WaveStats:
         cfg = self.cfg
         w = self.wave_id + 1
         stats = WaveStats(wave_id=w)
@@ -509,9 +514,9 @@ class CrawlEngine:
             .withColumn("url_hash", F.xxhash64("url"))
         )
         cand = cand.withColumn("host_partition", self._hp()).cache()
+        cached.callback(cand.unpersist)
         if remaining_global <= 0 or cand.isEmpty():
-            cand.unpersist()
-            self._commit_done()
+            self._commit_state(True, {"op": "done"})
             return stats
 
         # ---- 2. depth split FIRST (C6): the reference checks depth before
@@ -545,6 +550,7 @@ class CrawlEngine:
         else:
             new = shallow.join(seen.select("url"), on="url", how="left_anti")
         new = new.cache()
+        cached.callback(new.unpersist)
 
         # ---- 3. pop-time domain quota (C8). Shallow rows of an AT-CAP host
         # are discarded (pop-time discard — eager is sound, at-cap is
@@ -621,13 +627,13 @@ class CrawlEngine:
         # merge task (see take_k_smallest). Both return the exact same set.
         if k > 10_000:
             pool = pool.persist()
-            attempts = take_k_smallest(pool, k).localCheckpoint(eager=True)
-            pool.unpersist()
+            try:
+                attempts = _local_checkpoint(take_k_smallest(pool, k), cached)
+            finally:
+                pool.unpersist()
         else:
-            attempts = (
-                pool.orderBy("rank", "url").limit(k)
-                .localCheckpoint(eager=True)
-            )
+            attempts = _local_checkpoint(
+                pool.orderBy("rank", "url").limit(k), cached)
 
         # ---- 5-8. ONE labeled attempt pass: depth quirk (C6) → robots
         # (C10-C12) → fetch+validate (C13) → language (C14) → in-wave phash
@@ -716,7 +722,7 @@ class CrawlEngine:
                   | (F.col("_rnp") > 1), "dup_content")
             .otherwise(F.lit("fetched"))
         )
-        labeled = (
+        labeled = _local_checkpoint(  # cut lineage; reused ~6×, no bytes
             att.withColumn("outcome", outcome)
             .withColumn(
                 "children",
@@ -729,8 +735,8 @@ class CrawlEngine:
             .select(
                 "url", "image_id", "phash", "caption", "depth", "rank",
                 "host", "children", "url_hash", "host_partition", "outcome",
-            )
-            .localCheckpoint(eager=True)  # cut lineage; reused ~6×, no bytes
+            ),
+            cached,
         )
         successes = labeled.filter(F.col("outcome") == "fetched")
 
@@ -860,11 +866,12 @@ class CrawlEngine:
         par = self.spark.sparkContext.defaultParallelism
         _run_commits_concurrently([
             lambda: self.t["lineage"].append(
-                self.spark.createDataFrame(lin_rows, LINEAGE_SCHEMA),
+                local_df(self.spark, lin_rows, LINEAGE_SCHEMA),
                 {"wave": w},
             ),
             lambda: self.t["metrics"].append(
-                self.spark.createDataFrame(
+                local_df(
+                    self.spark,
                     [(w, stats.scheduled, stats.deduped, stats.attempted,
                       stats.fetched, stats.expanded, stats.wall_ms,
                       stats.scheduled / max(stats.wall_ms / 1000.0, 1e-9),
@@ -878,15 +885,7 @@ class CrawlEngine:
         # ---- 12. state commit = the checkpoint barrier
         self.budget_consumed += stats.fetched + stats.depth_skips
         self.wave_id = w
-        self.t["state"].overwrite(
-            self.spark.createDataFrame(
-                [(w, self.budget_consumed, False, self._snapshot_map())],
-                STATE_SCHEMA,
-            ),
-            {"wave": w},
-        )
-        cand.unpersist()
-        new.unpersist()
+        self._commit_state(False, {"wave": w})
         return stats
 
     def _lineage_rows(self, w, cand, poppable, labeled) -> list:
@@ -923,13 +922,13 @@ class CrawlEngine:
         )
         return lin.collect()
 
-    def _commit_done(self) -> None:
+    def _commit_state(self, done: bool, summary: dict) -> None:
+        """Overwrite `state` with the engine's position and every other
+        table's snapshot id — the consistent cut resume() rolls back to."""
         self.t["state"].overwrite(
-            self.spark.createDataFrame(
-                [(self.wave_id, self.budget_consumed, True,
-                  self._snapshot_map())], STATE_SCHEMA
-            ),
-            {"op": "done"},
+            local_df(self.spark, [(self.wave_id, self.budget_consumed, done,
+                                   self._snapshot_map())], STATE_SCHEMA),
+            summary,
         )
 
     # -- drivers -------------------------------------------------------------
@@ -958,19 +957,22 @@ class CrawlEngine:
         no count job), not by the web, so its post-shuffle partition
         count is derived from that size (guide §2.2) instead of running
         dozens of store-bounded exchanges at the session's scan-scale
-        default. Restored on exit; the session conf is never leaked."""
+        default. Restored on exit; the session conf is never leaked, and
+        nothing the pass caches outlives it, on error paths too."""
         spark = self.spark
         sess = spark.conf.get("spark.sql.shuffle.partitions")
         p = _partitions_for_rows(self.budget_consumed, int(sess))
         spark.conf.set("spark.sql.shuffle.partitions", str(p))
         try:
-            return self._recrawl_impl(web, images, max_pages,
-                                      pagerank_iterations)
+            with ExitStack() as cached:
+                return self._recrawl_impl(cached, web, images, max_pages,
+                                          pagerank_iterations)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", sess)
 
     def _recrawl_impl(
         self,
+        cached: ExitStack,
         web: DataFrame | None = None,
         images: DataFrame | None = None,
         max_pages: int | None = None,
@@ -1105,6 +1107,7 @@ class CrawlEngine:
             # no-drift job discipline at 17; unpersisted right after the
             # labeled checkpoint that consumes it.
             web_side = web_side.filter(web_pred).cache()
+            cached.callback(web_side.unpersist)
             # image keys referenced by the matched web rows; set() both
             # dedups shared images and drops bloom-FP extras.
             img_keys = sorted({
@@ -1164,7 +1167,7 @@ class CrawlEngine:
         # checkpoint the labeled set ONCE so the store-side joins behind it
         # run a single scan — both the boundary derivation and the final
         # broadcast join read the materialized rows, not the join tree
-        labeled = re_f.withColumn("status", status).localCheckpoint(eager=True)
+        labeled = _local_checkpoint(re_f.withColumn("status", status), cached)
         if prune_scans:
             web_side.unpersist()
         _mark("1-classify+labeled-ckpt")
@@ -1192,21 +1195,21 @@ class CrawlEngine:
             | ((F.col("rank") == F.col("_b_rank"))
                & (F.col("url") > F.col("_b_url")))
         )
-        lab = (
+        lab = _local_checkpoint(
             labeled.join(F.broadcast(boundary), "host", "left")
             .withColumn("_after_cap", after_cap)
             .withColumn("_cap_eligible", consuming & ~F.col("_after_cap"))
-            .drop("_b_rank", "_b_url")
-            .localCheckpoint(eager=True)
+            .drop("_b_rank", "_b_url"),
+            cached,
         )
         _mark("2-boundary+lab-ckpt")
 
         # the consumed set: first `budget` cap-eligible rows in global pop
         # order — distributed TakeOrdered, never a single-partition window
-        consumed = (
+        consumed = _local_checkpoint(
             lab.filter(F.col("_cap_eligible"))
-            .orderBy(F.desc("rank"), "url").limit(budget)
-            .localCheckpoint(eager=True)
+            .orderBy(F.desc("rank"), "url").limit(budget),
+            cached,
         )
         # ONE aggregation of the (checkpointed, ≤ budget rows) consumed set
         # yields every consumed-side stat plus the budget boundary — the
@@ -1280,7 +1283,7 @@ class CrawlEngine:
             # and REVERTED: the phase is bounded by its ~4 fixed jobs
             # (broadcast builds, checkpoint, n_struct agg), not by the
             # ≤budget-row kernel work (0.62-0.64 s unchanged, +1 job).
-            changed = (
+            changed = _local_checkpoint(
                 changed.join(new_kids, "url", "left")
                 .join(old_kids, "url", "left")
                 .withColumn(
@@ -1295,8 +1298,8 @@ class CrawlEngine:
                     ~(F.col("children") == F.coalesce(
                         F.col("old_children"),
                         F.array().cast("array<string>"))),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                cached,
             )
             n_struct = int(
                 changed.agg(
@@ -1358,13 +1361,7 @@ class CrawlEngine:
         _mark("8-status-agg")
         # state commit = the checkpoint barrier (same machinery as wave():
         # a crash between the MERGE and here rolls pages back on resume)
-        self.t["state"].overwrite(
-            self.spark.createDataFrame(
-                [(self.wave_id, self.budget_consumed, False,
-                  self._snapshot_map())], STATE_SCHEMA
-            ),
-            {"op": "recrawl"},
-        )
+        self._commit_state(False, {"op": "recrawl"})
         return stats
 
     # -- outputs ---------------------------------------------------------------

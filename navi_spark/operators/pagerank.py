@@ -34,6 +34,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from navi_spark.catalog import local_df
+
 # The 10-iteration loop is a FIXED plan shape (ranks-join on pre-partitioned
 # cached edges + one aggregation, ×10). Under AQE every one of its ~2×10
 # exchanges materializes as a separately scheduled query-stage job, whose
@@ -96,7 +98,7 @@ def pagerank(
     _mark("nodes-count")
     if n == 0:
         nodes.unpersist()
-        return pages.sparkSession.createDataFrame([], "url string, rank double")
+        return local_df(pages.sparkSession, [], "url string, rank double")
     spark = pages.sparkSession
     aqe_off = n <= PAGERANK_AQE_OFF_MAX_NODES
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")

@@ -7,7 +7,14 @@ import tempfile
 
 import pytest
 
-from navi_spark.catalog import SnapshotTable
+from pyspark.sql.types import StructType
+
+from navi_spark.catalog import SnapshotTable, local_df
+from navi_spark.operators.frontier import (
+    LINEAGE_SCHEMA,
+    METRICS_SCHEMA,
+    STATE_SCHEMA,
+)
 
 
 @pytest.fixture()
@@ -48,7 +55,46 @@ def test_merge_upsert(spark, table):
 
 
 def test_read_or_empty(spark, table):
-    assert table.read_or_empty("k long, v string").count() == 0
+    df = table.read_or_empty("k long, v string")
+    assert df.schema == StructType.fromDDL("k long, v string")
+    assert df.count() == 0
+
+
+# the engine's driver-built rows: a state row with the 0 = "no commit yet"
+# sentinel in its snapshot map, per-partition lineage rows, a metrics row
+DRIVER_ROWS = {
+    "state": (STATE_SCHEMA, [
+        (3, 42, False, {"frontier": 4, "seen": 0, "pages": 2}),
+        (0, 0, True, {}),
+    ]),
+    "lineage": (LINEAGE_SCHEMA, [
+        (1, hp, 10 + hp, 9, 7, 2, 1, 1, 0, 1, 4) for hp in range(3)
+    ]),
+    "metrics": (METRICS_SCHEMA, [
+        (1, 100, 96, 89, 80, 412, 7520, 13.3, 2),
+    ]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DRIVER_ROWS))
+def test_local_df_matches_create_dataframe(spark, name):
+    """local_df gives the rows and schema a Python-list createDataFrame
+    gives, for the engine's driver-built tables and for no rows."""
+    schema, rows = DRIVER_ROWS[name]
+    want = spark.createDataFrame(rows, schema)
+    got = local_df(spark, rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    empty = local_df(spark, [], schema)
+    assert empty.schema == want.schema
+    assert empty.collect() == []
+
+
+def test_local_df_rejects_mistyped_rows(spark):
+    with pytest.raises((TypeError, ValueError)):
+        local_df(spark, [("not-an-int", 0, False, {})], STATE_SCHEMA)
+    with pytest.raises(ValueError, match="4 fields"):
+        local_df(spark, [(1, 0, False)], STATE_SCHEMA)
 
 
 def _rows(table):
