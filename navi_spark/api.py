@@ -15,7 +15,9 @@ relationship the reference's controller has to its Ranker/DBManager.
 Endpoints (paths, params, and response shapes mirror the reference):
   GET  /home                → "Query Engine is running!"  (:68-71)
   POST /search?query=…      → JSON array of parsed tokens (:73-166);
-                              side effect: suggestion insert (:81)
+                              side effect: insert-if-absent of the
+                              query as a suggestion (:81) — a repeated
+                              query commits nothing
   GET  /results             → {"results": [{url, score, snippets}, …],
                                "total_time": ms}          (:305-358)
   GET  /suggestions?query=… → JSON array, case-insensitive contains,
@@ -44,7 +46,7 @@ from pyspark.sql import DataFrame
 
 from navi_spark.operators import ranker
 from navi_spark.operators.queryengine import parse_query
-from navi_spark.operators.search import search
+from navi_spark.operators.search import record_suggestion, search
 
 
 @dataclass
@@ -153,8 +155,10 @@ class QueryEngineServer:
             target=self._httpd.serve_forever, daemon=True
         )
 
-    # -- endpoint bodies (run on handler threads; Spark calls are safe
-    # there — the session is thread-confined only by GIL-level access) --
+    # -- endpoint bodies (run on handler threads, possibly concurrently;
+    # Spark calls are thread-safe, state.lock serializes the POST's
+    # suggestion commit and stored query, and search() serializes its own
+    # session-conf changes, so /results runs outside state.lock) --
 
     def _post_search(self, query: str) -> list[str]:
         if not query or not query.strip():
@@ -164,12 +168,7 @@ class QueryEngineServer:
             # the reference inserts the suggestion BEFORE validating
             # (:81 runs ahead of the grammar walk) — same here
             if self.index.suggestions is not None:
-                spark = self.index.pages.sparkSession
-                self.index.suggestions.merge_upsert(
-                    spark.createDataFrame([(query,)], "suggestion string"),
-                    "suggestion",
-                    {"op": "search-side-effect"},
-                )
+                record_suggestion(self.index.suggestions, query)
             if parsed.kind == "invalid":
                 self.state.query = None
                 return []

@@ -26,6 +26,7 @@ On a real cluster every call site swaps one-for-one onto Iceberg:
 ``append``   → ``df.writeTo(tbl).append()``
 ``overwrite``→ ``df.writeTo(tbl).overwritePartitions()``
 ``merge_upsert`` → ``MERGE INTO tbl USING src ON key``
+``insert_absent`` → ``MERGE INTO … WHEN NOT MATCHED THEN INSERT *``
 ``read(snapshot_id=k)`` → ``spark.read.option("snapshot-id", k).table(tbl)``
 ``local_df(spark, rows, schema)`` → unchanged (it is the source of a
 commit, not a table operation)
@@ -179,6 +180,24 @@ class SnapshotTable:
         # single write job both evaluates and commits the merge (a checkpoint
         # here would materialize the full table twice — block store + parquet)
         return self.overwrite(merged, summary)
+
+    def insert_absent(self, src: DataFrame, key: str | list[str],
+                      summary: Optional[dict] = None) -> int:
+        """MERGE INTO … USING src ON key WHEN NOT MATCHED THEN INSERT *.
+
+        Insert-only: the rows of `src` whose key the table lacks are
+        appended; matched rows stay as they are. When every key is already
+        present nothing is committed and the current snapshot id is
+        returned, so re-recording a known row costs a probe, not a
+        rewrite of the table (merge_upsert rewrites it on every call)."""
+        keys = [key] if isinstance(key, str) else list(key)
+        if not self.exists():
+            return self.overwrite(src, summary)
+        tgt = self.read()
+        new = src.join(tgt.select(*keys), on=keys, how="left_anti")
+        if new.isEmpty():
+            return self.snapshot_id()
+        return self.append(new.select(*tgt.columns), summary)
 
     # -- maintenance ---------------------------------------------------------
     def data_files(self, snapshot_id: Optional[int] = None) -> list[tuple[str, int]]:

@@ -36,6 +36,20 @@ from pyspark.sql import DataFrame
 
 from navi_spark.catalog import local_df
 
+
+def _env_int(name: str, default: int) -> int:
+    """Integer value of environment variable `name`, or `default` when
+    unset; a non-integer value raises a ValueError naming the variable."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"{name}={raw!r} is not an integer") from None
+
+
 # The 10-iteration loop is a FIXED plan shape (ranks-join on pre-partitioned
 # cached edges + one aggregation, ×10). Under AQE every one of its ~2×10
 # exchanges materializes as a separately scheduled query-stage job, whose
@@ -45,9 +59,8 @@ from navi_spark.catalog import local_df
 # with AQE off — one job, stages pipelined by the DAG scheduler; above it
 # AQE stays on (its runtime skew/broadcast decisions matter when a hot dst
 # key or an unexpectedly small ranks side appears at web scale).
-PAGERANK_AQE_OFF_MAX_NODES = int(
-    os.environ.get("NAVI_PAGERANK_AQE_OFF_MAX_NODES", "5000000")
-)
+PAGERANK_AQE_OFF_MAX_NODES = _env_int("NAVI_PAGERANK_AQE_OFF_MAX_NODES",
+                                      5000000)
 
 
 def edges_from_pages(pages: DataFrame) -> DataFrame:
@@ -93,6 +106,9 @@ def pagerank(
             print(f"[pagerank-phase] {label}: {t - _t0:.3f}s", flush=True)
             _t0 = t
 
+    # loop sizing, see below; read before any job so a bad value fails
+    # before anything is cached
+    rows_per_part = _env_int("NAVI_PAGERANK_LOOP_ROWS_PER_PART", 2000)
     nodes = pages.select(F.col("url").alias("node")).distinct().cache()
     n = nodes.count()
     _mark("nodes-count")
@@ -115,9 +131,6 @@ def pagerank(
     # oracle tolerances, same class as the python-vs-spark oracle delta).
     # ~2k nodes per loop partition measured best (12k-node graph,
     # local[32]: 64 parts 3.85 s, 1 part 1.91 s, 4-12 parts 1.35-1.40 s)
-    rows_per_part = int(
-        os.environ.get("NAVI_PAGERANK_LOOP_ROWS_PER_PART", "2000")
-    )
     loop_parts = max(1, -(-n // rows_per_part)) if rows_per_part else int(
         sp_prev
     )

@@ -15,14 +15,37 @@ queryengine/QueryEngine.java:360-375 (quoted phrase, bare terms, `X OR Y`,
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 from typing import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from navi_spark.catalog import local_df
 from navi_spark.operators import ranker
 from navi_spark.operators.queryengine import parse_query, snippet
+
+# held by search() for a whole query: it sets session-wide confs
+_CONF_LOCK = threading.Lock()
+
+
+def record_suggestion(suggestions, query: str) -> None:
+    """Record `query` in the `suggestions` SnapshotTable with the
+    reference's exact-duplicate check (DBManager.java:680-703
+    insertSuggestion): an insert-only MERGE keyed on the raw query text,
+    so a known query commits nothing. Each new query appends one data
+    directory, which every later probe and GET /suggestions reads; the
+    compaction after an append keeps that fan-out below compact()'s
+    `min_files` (8) however many distinct queries arrive."""
+    before = suggestions.snapshot_id()
+    sid = suggestions.insert_absent(
+        local_df(suggestions.spark, [(query,)], "suggestion string"),
+        "suggestion",
+        {"op": "search-side-effect"},
+    )
+    if sid != before:
+        suggestions.compact(summary={"op": "search-side-effect"})
 
 
 @dataclass
@@ -76,23 +99,28 @@ def search(
     # own layout (index_partitions is the invariant that scales with the
     # corpus), never a constant for the host. Both restored on exit.
     # Measured at a 50k-doc corpus, local[32]: terms 0.615 → 0.357 s,
-    # phrase 0.727 → 0.470 s min-of-6. NOTE: session-conf scoped — callers
-    # running concurrent queries on one session serialize (api.py does).
+    # phrase 0.727 → 0.470 s min-of-6. The confs are session-wide, so
+    # _CONF_LOCK serializes save/set/run/restore: without it two
+    # concurrent queries interleave and the later restore leaves the
+    # session at the serving values.
     spark = pages.sparkSession
-    _sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
-    _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    serving_parts = max(postings.rdd.getNumPartitions(), 1)
-    spark.conf.set("spark.sql.shuffle.partitions", str(serving_parts))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _search_impl(
-            query, pages, postings, lengths, field_cols, n_docs, k,
-            stopwords, snippet_field, phrase_index, suggestions,
-            avg_lengths, idf_table, parsed,
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", _sp_prev)
-        spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
+    with _CONF_LOCK:
+        # planned under the lock: an uncached `postings` plans its exchange
+        # at the session's confs, which another query may have set
+        serving_parts = max(postings.rdd.getNumPartitions(), 1)
+        _sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
+        _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.shuffle.partitions", str(serving_parts))
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return _search_impl(
+                query, pages, postings, lengths, field_cols, n_docs, k,
+                stopwords, snippet_field, phrase_index, suggestions,
+                avg_lengths, idf_table, parsed,
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", _sp_prev)
+            spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
 
 
 def _search_impl(
@@ -102,15 +130,8 @@ def _search_impl(
 ) -> list[SearchResult]:
     if suggestions is not None:
         # the reference records every successfully-parsed query as a
-        # suggestion, with an exact-duplicate check (QueryEngine.java:81,
-        # DBManager.java:680-703 insertSuggestion) — here one MERGE keyed
-        # on the raw query text
-        spark = pages.sparkSession
-        suggestions.merge_upsert(
-            spark.createDataFrame([(query,)], "suggestion string"),
-            "suggestion",
-            {"op": "search-side-effect"},
-        )
+        # suggestion (QueryEngine.java:81)
+        record_suggestion(suggestions, query)
     fields = list(field_cols.keys())
 
     def pruned(phrase: list[str]) -> DataFrame:

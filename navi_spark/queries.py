@@ -1884,10 +1884,10 @@ def i1_unindexed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q4_suggestions_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 INSERT path: the reference stores each issued query with an
     exact-duplicate check (DBManager.java:680-703 insertSuggestion). Here
-    two overlapping suggestion batches flow through catalog.merge_upsert
-    (the Iceberg MERGE seam) keyed on the suggestion text — the read-back
-    table must equal the distinct union, proving the dup check held across
-    batches AND within a batch."""
+    two overlapping suggestion batches flow through catalog.insert_absent
+    (the insert-only MERGE the engine's suggestion writers use) keyed on
+    the suggestion text — the read-back table must equal the distinct
+    union, proving the dup check held across batches AND within a batch."""
     import shutil
     import tempfile
 
@@ -1903,8 +1903,8 @@ def q4_suggestions_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     workdir = tempfile.mkdtemp(prefix="navi-sugg-")
     try:
         tbl = SnapshotTable(spark, workdir)
-        tbl.merge_upsert(batch1, "suggestion", {"batch": 1})
-        tbl.merge_upsert(batch2, "suggestion", {"batch": 2})
+        tbl.insert_absent(batch1, "suggestion", {"batch": 1})
+        tbl.insert_absent(batch2, "suggestion", {"batch": 2})
         rows = tbl.read().collect()
     finally:
         shutil.rmtree(workdir, ignore_errors=True)

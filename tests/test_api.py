@@ -6,9 +6,15 @@ two-step, /suggestions contains-match, CORS * on every response."""
 from __future__ import annotations
 
 import json
+import os
+import threading
+import time
 import urllib.error
 import urllib.parse
 import urllib.request
+import uuid
+
+from dataclasses import replace
 
 import pytest
 
@@ -131,3 +137,150 @@ def test_unknown_path_404(served):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(url, "/nope")
     assert e.value.code == 404
+
+
+def test_concurrent_results_keep_session_conf(spark, served):
+    """search() sets the session's shuffle-partition and AQE confs for a
+    query and restores them; concurrent GET /results calls must not
+    interleave that save/set/restore (the session was left at the serving
+    values) nor rank under each other's confs."""
+    _, idx = served
+    queries = ["rivers banks", "spark tables", '"big tables"', "spark",
+               '"big tables" OR "rivers"', "tables AND spark NOT rivers"]
+    confs = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = [spark.conf.get(c) for c in confs]
+    want = {
+        q: [(h.doc_id, h.score) for h in search(
+            q, idx.pages, idx.postings, idx.lengths, FIELDS,
+            n_docs=idx.n_docs, k=idx.k)]
+        for q in queries
+    }
+    # one server per query: a server ranks its last POSTed query, so each
+    # thread's GETs have a known expected answer
+    servers = [QueryEngineServer(replace(idx, suggestions=None)).start()
+               for _ in queries]
+    got: dict[str, list] = {q: [] for q in queries}
+    errors: list[Exception] = []
+    rounds = threading.Barrier(len(queries))
+
+    def client(i, srv, q):
+        try:
+            for _ in range(5):
+                # staggered starts: each query begins while the earlier
+                # ones are in flight, where an unserialized save/restore
+                # interleaves (simultaneous starts all save the same value)
+                rounds.wait()
+                time.sleep(0.02 * i)
+                _, body = _get(srv.url, "/results")
+                got[q].append([(h["url"], h["score"])
+                               for h in json.loads(body)["results"]])
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+            rounds.abort()  # release the other clients
+
+    try:
+        for srv, q in zip(servers, queries):
+            _post(srv.url, "/search?query=" + urllib.parse.quote(q))
+        threads = [threading.Thread(target=client, args=(i, srv, q))
+                   for i, (srv, q) in enumerate(zip(servers, queries))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        for srv in servers:
+            srv.stop()
+        after = [spark.conf.get(c) for c in confs]
+        for c, v in zip(confs, before):  # keep a leak out of later tests
+            spark.conf.set(c, v)
+    assert not errors, errors
+    assert after == before
+    for q in queries:
+        assert got[q] == [want[q]] * 5, q
+
+
+def test_post_builds_no_python_rdd(spark, served, monkeypatch):
+    """POST /search records its suggestion from a JVM-built row: neither a
+    new query nor a repeated one starts a Python RDD."""
+    url, idx = served
+
+    def no_python_rdd(*_a, **_k):
+        raise AssertionError("POST /search built a Python RDD")
+
+    monkeypatch.setattr(spark.sparkContext, "parallelize", no_python_rdd)
+    for _ in range(2):
+        _, body = _post(url, "/search?query=rivers%20flow%20slowly")
+        assert json.loads(body) == ["river", "flow", "slowli"]
+    hits = idx.suggestions.read().filter("suggestion = 'rivers flow slowly'")
+    assert hits.count() == 1
+
+
+def test_suggestion_commits_once_per_distinct_query(spark, served, tmp_path):
+    """Recording an already-recorded query commits nothing: 50 POSTs over
+    5 distinct queries leave 5 rows, 5 snapshots and 5 data directories."""
+    _, idx = served
+    tbl = SnapshotTable(spark, str(tmp_path / "suggestions"))
+    queries = ["rivers banks", "spark", '"big tables"', "slow rivers",
+               '"unclosed']  # invalid queries are recorded too (:81)
+    with QueryEngineServer(replace(idx, suggestions=tbl)) as url:
+        for i in range(50):
+            _post(url, "/search?query=" + urllib.parse.quote(queries[i % 5]))
+    assert sorted(r["suggestion"] for r in tbl.read().collect()) == sorted(
+        queries)
+    assert len(tbl.history()) == 5
+    assert len(os.listdir(os.path.join(tbl.root, "data"))) == 5
+
+
+def _post_jobs(spark, srv, query):
+    """Spark jobs one POST of `query` launches (the endpoint body runs on
+    this thread, so the job group sees its jobs)."""
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()  # noqa: SLF001
+    group = f"post-jobcount-{uuid.uuid4().hex}"  # a group's count is cumulative
+    sc.setJobGroup(group, "count jobs of one POST")
+    try:
+        srv._post_search(query)
+    finally:
+        sc.setJobGroup(None, None)
+    return len(list(tracker.getJobIdsForGroup(group)))
+
+
+def test_repeated_post_spark_job_count_bounded(spark, served, tmp_path):
+    """Guard the cost of re-recording a known query by counting the Spark
+    jobs one repeated POST launches."""
+    _, idx = served
+    srv = QueryEngineServer(
+        replace(idx, suggestions=SnapshotTable(spark, str(tmp_path / "s"))))
+    srv._post_search("rivers banks")
+    n_jobs = _post_jobs(spark, srv, "rivers banks")
+    # measured with AQE on (3): the parquet footer read that infers the
+    # table's schema in read(), the broadcast build of the table's keys
+    # for the left-anti probe, and the probe's isEmpty. The query's own
+    # ranking runs on GET, not here.
+    assert 0 < n_jobs <= 3, f"a repeated POST launched {n_jobs} Spark jobs"
+
+
+def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
+                                                      tmp_path):
+    """Every new query appends a data directory that each later probe and
+    GET /suggestions reads. Past 32 directories
+    (spark.sql.sources.parallelPartitionDiscovery.threshold) listing them
+    alone starts one more Spark job per request; the compaction after an
+    append keeps the table below that, so at 40 distinct suggestions a
+    POST launches no more jobs than on a one-row table."""
+    _, idx = served
+    tbl = SnapshotTable(spark, str(tmp_path / "s"))
+    srv = QueryEngineServer(replace(idx, suggestions=tbl))
+    n = 40
+    for i in range(n):
+        srv._post_search(f"spark q{i}")
+    assert sorted(r["suggestion"] for r in tbl.read().collect()) == sorted(
+        f"spark q{i}" for i in range(n))
+    assert len(tbl.data_files()) < 8  # compact()'s default min_files
+    repeated = _post_jobs(spark, srv, "spark q7")
+    assert 0 < repeated <= 3, f"a repeated POST launched {repeated} jobs"
+    # a new query, with no compaction due on it (7 data files after it):
+    # measured 5 with AQE on, the repeated POST's 3 plus the append
+    # re-running the probe's broadcast build and its parquet write job
+    new = _post_jobs(spark, srv, f"spark q{n}")
+    assert 0 < new <= 5, f"a new query's POST launched {new} jobs"

@@ -54,6 +54,19 @@ def test_merge_upsert(spark, table):
     assert got == {1: "a", 2: "B", 3: "c"}
 
 
+def test_insert_absent(spark, table):
+    """Insert-only MERGE: the first call creates the table, matched keys
+    keep their rows, only unmatched source rows are appended, and a source
+    with no new key commits nothing."""
+    s1 = table.insert_absent(_df(spark, [(1, "a"), (2, "b")]), key="k")
+    s2 = table.insert_absent(_df(spark, [(2, "B"), (3, "c")]), key="k")
+    got = {r["k"]: r["v"] for r in table.read().collect()}
+    assert got == {1: "a", 2: "b", 3: "c"}
+    assert s2 == s1 + 1 and len(table.history()) == 2
+    assert table.insert_absent(_df(spark, [(1, "A"), (3, "C")]), "k") == s2
+    assert table.snapshot_id() == s2 and len(table.history()) == 2
+
+
 def test_read_or_empty(spark, table):
     df = table.read_or_empty("k long, v string")
     assert df.schema == StructType.fromDDL("k long, v string")

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from navi_spark.operators.pagerank import (
@@ -63,3 +67,21 @@ def test_detect_changes(spark, pages_df):
     assert not got["a"]["content_changed"] and not got["a"]["link_structure_changed"]
     assert got["b"]["content_changed"] and not got["b"]["link_structure_changed"]
     assert not got["c"]["content_changed"] and got["c"]["link_structure_changed"]
+
+
+def test_bad_env_int_names_the_variable(pages_df, monkeypatch):
+    """A non-integer NAVI_PAGERANK_* value raises a ValueError naming the
+    variable and its value, at pagerank() call time for the loop sizing
+    and at import time for the AQE gate."""
+    monkeypatch.setenv("NAVI_PAGERANK_LOOP_ROWS_PER_PART", "2k")
+    with pytest.raises(ValueError,
+                       match="NAVI_PAGERANK_LOOP_ROWS_PER_PART='2k'"):
+        pagerank(pages_df)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", "import navi_spark.operators.pagerank"],
+        cwd=root, capture_output=True, text=True, timeout=120,
+        env=dict(os.environ, NAVI_PAGERANK_AQE_OFF_MAX_NODES="5e6"),
+    )
+    assert proc.returncode != 0
+    assert "NAVI_PAGERANK_AQE_OFF_MAX_NODES='5e6'" in proc.stderr
