@@ -69,7 +69,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from navi_spark.catalog import SnapshotTable, local_df
 from navi_spark.functions.urlnorm import host_expr, normalize_url_udf
-from navi_spark.operators import bloom, cuckoo
+from navi_spark.operators import bloom
 from navi_spark.operators.fetch import (
     language_gate,
     payload_etag,
@@ -94,7 +94,7 @@ LINEAGE_SCHEMA = (
 )
 METRICS_SCHEMA = (
     "wave_id int, scheduled long, deduped long, attempted long, fetched long, "
-    "expanded long, wall_ms long, urls_per_sec double, parallelism int"
+    "wall_ms long, urls_per_sec double, parallelism int"
 )
 STATE_SCHEMA = (
     "wave_id int, budget_consumed long, done boolean, snapshots map<string,int>"
@@ -121,9 +121,7 @@ RECRAWL_BROADCAST_MAX = 4_000_000
 # `ROWS_PER_SHUFFLE_PARTITION`-row units, capped by the session default
 # times 1024 so the derived value can grow well past the local default
 # but never unboundedly.
-ROWS_PER_SHUFFLE_PARTITION = int(
-    os.environ.get("NAVI_ROWS_PER_SHUFFLE_PARTITION", "2500")
-)
+ROWS_PER_SHUFFLE_PARTITION = 2500
 
 
 def _partitions_for_rows(rows: int, session_parts: int) -> int:
@@ -146,12 +144,6 @@ class CrawlConfig:
     bloom_bits_per_partition: int = 1 << 20
     bloom_hashes: int = 7
     use_bloom: bool = True
-    # which approximate-membership structure backs the seen pre-filter:
-    # 'bloom' (default) or 'cuckoo' (lower FP per bit at high load +
-    # deletion support — north star names both). Parity is identical:
-    # either filter only prunes the exact anti-join's input.
-    seen_filter: str = "bloom"
-    cuckoo_buckets_per_partition: int = 1 << 16
     validate_payloads: bool = True
     max_waves: int = 10_000
     # North-rule crawl-delay budget (robots Crawl-delay, which the
@@ -177,7 +169,6 @@ class WaveStats:
     deduped: int = 0
     attempted: int = 0
     fetched: int = 0
-    expanded: int = 0
     depth_skips: int = 0
     wall_ms: int = 0
 
@@ -535,13 +526,9 @@ class CrawlEngine:
         # budget either way.
         seen = self.t["seen"].read_or_empty(SEEN_SCHEMA)
         if cfg.use_bloom and self.t["filters"].exists():
-            flt = self.t["filters"].read()
-            if cfg.seen_filter == "cuckoo":
-                marked = cuckoo.annotate_maybe_seen(shallow, flt)
-            else:
-                marked = bloom.annotate_maybe_seen(
-                    shallow, flt, cfg.bloom_hashes
-                )
+            marked = bloom.annotate_maybe_seen(
+                shallow, self.t["filters"].read(), cfg.bloom_hashes
+            )
             definite_new = marked.filter(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = marked.filter(F.col("maybe_seen")).drop("maybe_seen")
             new = definite_new.unionByName(
@@ -772,20 +759,12 @@ class CrawlEngine:
                    lambda: self.t["phash_seen"].append(
                        successes.select("phash").distinct(), {"wave": w})]
         if cfg.use_bloom:
-            old_f = self.t["filters"].read_or_empty(bloom.FILTERS_SCHEMA)
-            if cfg.seen_filter == "cuckoo":
-                new_f = cuckoo.update_filters(
-                    old_f,
-                    successes.select("host_partition", "url_hash"),
-                    cfg.cuckoo_buckets_per_partition,
-                )
-            else:
-                new_f = bloom.update_filters(
-                    old_f,
-                    successes.select("host_partition", "url_hash"),
-                    cfg.bloom_bits_per_partition,
-                    cfg.bloom_hashes,
-                )
+            new_f = bloom.update_filters(
+                self.t["filters"].read_or_empty(bloom.FILTERS_SCHEMA),
+                successes.select("host_partition", "url_hash"),
+                cfg.bloom_bits_per_partition,
+                cfg.bloom_hashes,
+            )
             commits.append(
                 lambda: self.t["filters"].overwrite(new_f, {"wave": w}))
         new_counts = (
@@ -853,9 +832,6 @@ class CrawlEngine:
             lambda: self.t["frontier"].overwrite(new_frontier, {"wave": w}),
             _collect_lineage,
         ])
-        # exact count from the committed snapshot: a no-column parquet scan
-        # reads row-group footers only, not the data pages
-        stats.expanded = self.t["frontier"].read().count()
         lin_rows = lin_holder["rows"]
         stats.scheduled = sum(r["scheduled"] for r in lin_rows)
         stats.deduped = sum(r["deduped"] for r in lin_rows)
@@ -873,7 +849,7 @@ class CrawlEngine:
                 local_df(
                     self.spark,
                     [(w, stats.scheduled, stats.deduped, stats.attempted,
-                      stats.fetched, stats.expanded, stats.wall_ms,
+                      stats.fetched, stats.wall_ms,
                       stats.scheduled / max(stats.wall_ms / 1000.0, 1e-9),
                       par)],
                     METRICS_SCHEMA,
@@ -1026,17 +1002,6 @@ class CrawlEngine:
         budget = max_pages if max_pages is not None else cfg.max_pages
         cap = cfg.max_pages_per_domain
         old = self.pages()
-        import time as _time
-        _pt = os.environ.get("NAVI_RECRAWL_PHASE_TIMING")
-        _t0 = _time.monotonic()
-
-        def _mark(label):
-            nonlocal _t0
-            if _pt:
-                t = _time.monotonic()
-                print(f"[recrawl-phase] {label}: {t - _t0:.3f}s", flush=True)
-                _t0 = t
-
         web_cols = [
             "url",
             F.col("image_id").alias("new_image_id"),
@@ -1093,7 +1058,6 @@ class CrawlEngine:
             old_keys = [
                 r[0] for r in old.select(F.xxhash64("url")).collect()
             ]
-            _mark("1a-old-key-collect")
             web_bf = literal_bloom_build(old_keys, fpp=0.01)
             web_pred = literal_bloom_predicate(
                 *web_bf, F.xxhash64(F.col("url"))
@@ -1115,7 +1079,6 @@ class CrawlEngine:
                 for r in web_side
                 .select(F.xxhash64("new_image_id")).collect()
             })
-            _mark("1b-img-key-collect")
             img_bf = literal_bloom_build(img_keys, fpp=0.01)
             img_side = img_side.filter(
                 literal_bloom_predicate(
@@ -1170,7 +1133,6 @@ class CrawlEngine:
         labeled = _local_checkpoint(re_f.withColumn("status", status), cached)
         if prune_scans:
             web_side.unpersist()
-        _mark("1-classify+labeled-ckpt")
         cons = labeled.filter(consuming).select("host", "rank", "url")
         salted = cons.withColumn(
             "_salt", F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
@@ -1202,7 +1164,6 @@ class CrawlEngine:
             .drop("_b_rank", "_b_url"),
             cached,
         )
-        _mark("2-boundary+lab-ckpt")
 
         # the consumed set: first `budget` cap-eligible rows in global pop
         # order — distributed TakeOrdered, never a single-partition window
@@ -1223,7 +1184,6 @@ class CrawlEngine:
                            F.col("url").alias("u"))).alias("b"),
         ).collect()[0]
         n_consumed = int(brow["n"] or 0)
-        _mark("3-consumed-ckpt+agg")
         n_changed = int(brow["n_changed"] or 0)
         if budget <= 0:
             # degenerate config (max_pages=0): the reference checks budget
@@ -1316,14 +1276,11 @@ class CrawlEngine:
             payload_etag("new_phash", "new_caption").alias("etag"),
             payload_last_modified("new_phash").alias("last_modified"),
         )
-        _mark("4-children-fetch")
         self.t["pages"].merge_upsert(merge_src, "url", {"op": "recrawl"})
-        _mark("5-merge-upsert")
 
         if n_struct > 0:
             # :571-580 — calculatePageRank writes into the docs' rank field
             pr = pagerank(self.pages(), pagerank_iterations)
-            _mark("6-pagerank")
             repaged = (
                 self.pages().drop("rank")
                 .join(pr, "url", "left").fillna({"rank": 0.0})
@@ -1334,7 +1291,6 @@ class CrawlEngine:
             # snapshot's dirs (kept until expire_snapshots) — one write job,
             # no block-store double-materialization
             self.t["pages"].overwrite(repaged, {"op": "recrawl-rank"})
-            _mark("7-rank-overwrite")
 
         # ONE aggregation of the checkpointed labeled set yields the exact
         # pop-outcome telemetry (no per-stat rescans of the pages table)
@@ -1358,7 +1314,6 @@ class CrawlEngine:
             "statuses": status_counts,
             "not_popped": not_popped,
         }
-        _mark("8-status-agg")
         # state commit = the checkpoint barrier (same machinery as wave():
         # a crash between the MERGE and here rolls pages back on resume)
         self._commit_state(False, {"op": "recrawl"})

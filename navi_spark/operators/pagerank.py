@@ -17,11 +17,9 @@ src once and cache — every iteration reuses the same partitioning, so only
 
 Lineage: for the reference's FIXED 10 iterations the plan depth is bounded
 and every shuffle stage materializes as a natural retry cut, so no
-PER-ITERATION checkpointing is done by default — a per-iteration
-localCheckpoint forces a full Catalyst planning pass each time (measured
-4.7× slower end-to-end at sf0.1) and its blocks are not fault-tolerant.
-`checkpoint_every` opts back in for callers running iteration counts large
-enough that plan depth itself becomes the cost. One FINAL eager
+PER-ITERATION checkpointing is done — a per-iteration localCheckpoint
+forces a full Catalyst planning pass each time (measured 4.7× slower
+end-to-end at sf0.1) and its blocks are not fault-tolerant. One FINAL eager
 localCheckpoint does run: it is the job that materializes the loop while
 the edges/nodes caches are still registered (see the comment at the
 return), and it leaves callers a leaf-plan result.
@@ -29,25 +27,10 @@ return), and it leaves callers a leaf-plan result.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from navi_spark.catalog import local_df
-
-
-def _env_int(name: str, default: int) -> int:
-    """Integer value of environment variable `name`, or `default` when
-    unset; a non-integer value raises a ValueError naming the variable."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            f"{name}={raw!r} is not an integer") from None
 
 
 # The 10-iteration loop is a FIXED plan shape (ranks-join on pre-partitioned
@@ -59,8 +42,19 @@ def _env_int(name: str, default: int) -> int:
 # with AQE off — one job, stages pipelined by the DAG scheduler; above it
 # AQE stays on (its runtime skew/broadcast decisions matter when a hot dst
 # key or an unexpectedly small ranks side appears at web scale).
-PAGERANK_AQE_OFF_MAX_NODES = _env_int("NAVI_PAGERANK_AQE_OFF_MAX_NODES",
-                                      5000000)
+PAGERANK_AQE_OFF_MAX_NODES = 5_000_000
+
+# Loop shuffle sizing (guide §2.2, size-derived — never a host constant):
+# the 10-iteration loop runs ~2 exchanges per iteration; at the session
+# default (64) that is 1300+ task launches for stages of a few thousand rows
+# each, and task-launch overhead dominates the whole materialization.
+# Partitions are derived from the graph size and only ever lowered, so big
+# graphs keep the session's parallelism and the e2e plan shape. Rank values
+# shift by summation order only (≪ the 1e-12 test / 4dp oracle tolerances,
+# same class as the python-vs-spark oracle delta). ~2k nodes per loop
+# partition measured best (12k-node graph, local[32]: 64 parts 3.85 s,
+# 1 part 1.91 s, 4-12 parts 1.35-1.40 s).
+PAGERANK_LOOP_ROWS_PER_PART = 2000
 
 
 def edges_from_pages(pages: DataFrame) -> DataFrame:
@@ -83,7 +77,6 @@ def pagerank(
     pages: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """(url, rank) after `iterations` of the reference recurrence.
 
@@ -95,155 +88,130 @@ def pagerank(
     # cached: every iteration's rank rebuild scans this relation — without
     # the cache each of the 10 iterations re-runs the pages scan + distinct
     # exchange for an identical ≤|pages| row set
-    import time as _time
-    _pt = os.environ.get("NAVI_PAGERANK_PHASE_TIMING")
-    _t0 = _time.monotonic()
-
-    def _mark(label):
-        nonlocal _t0
-        if _pt:
-            t = _time.monotonic()
-            print(f"[pagerank-phase] {label}: {t - _t0:.3f}s", flush=True)
-            _t0 = t
-
-    # loop sizing, see below; read before any job so a bad value fails
-    # before anything is cached
-    rows_per_part = _env_int("NAVI_PAGERANK_LOOP_ROWS_PER_PART", 2000)
     nodes = pages.select(F.col("url").alias("node")).distinct().cache()
-    n = nodes.count()
-    _mark("nodes-count")
-    if n == 0:
-        nodes.unpersist()
-        return local_df(pages.sparkSession, [], "url string, rank double")
-    spark = pages.sparkSession
-    aqe_off = n <= PAGERANK_AQE_OFF_MAX_NODES
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    cg_prev = spark.conf.get("spark.sql.codegen.wholeStage")
-    sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # Loop shuffle sizing (guide §2.2, size-derived — never a host
-    # constant): the 10-iteration loop runs ~2 exchanges per iteration;
-    # at the session default (64) that is 1300+ task launches for stages
-    # of a few thousand rows each, and task-launch overhead dominates the
-    # whole materialization (measured below). Partitions are derived from
-    # the graph size (one per ~20k nodes) and only ever lowered, so big
-    # graphs keep the session's parallelism and the e2e plan shape.
-    # Rank values shift by summation order only (≪ the 1e-12 test / 4dp
-    # oracle tolerances, same class as the python-vs-spark oracle delta).
-    # ~2k nodes per loop partition measured best (12k-node graph,
-    # local[32]: 64 parts 3.85 s, 1 part 1.91 s, 4-12 parts 1.35-1.40 s)
-    loop_parts = max(1, -(-n // rows_per_part)) if rows_per_part else int(
-        sp_prev
-    )
-    shrink_shuffle = aqe_off and loop_parts < int(sp_prev)
-    edges = (
-        edges_from_pages(pages)
-        .join(out_degrees(pages), "src")
-        # closed-world prune AT SETUP: contributions to never-crawled
-        # children are discarded by the final nodes join anyway (updateOne
-        # no-op, DBManager.java:1122) — dropping those edges once here
-        # keeps them out of all 10 per-iteration groupBy(dst) exchanges.
-        # In a recrawl store most children point OUTSIDE the store (438k
-        # pages linking into an 8M-URL web), so this is the bulk of the
-        # loop's shuffled bytes. Value-identical: the surviving groups' term
-        # sets are unchanged.
-        .join(nodes.withColumnRenamed("node", "dst"), "dst", "semi")
-        .repartition("src")  # one partitioning, reused every iteration
-        .cache()
-    )
-    if iterations <= 0:
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    # The loop iterates on the CONTRIBUTION recurrence, not on ranks:
-    #     c_i(dst) = Σ_{(src,dst)∈E} (0.15 + 0.85·coalesce(c_{i-1}(src), 0))
-    #                / outdeg(src)
-    # with the first iteration folding in the uniform init rank 1/N, and
-    # ranks materialized from c_last ONCE at the end. Equivalent to the
-    # textbook ranks loop (every edge src IS a node, so rebuilding the
-    # full rank vector per iteration adds no information), but each
-    # iteration is one join + one aggregation instead of two joins + one
-    # aggregation: the per-iteration nodes-join exchange disappears (at
-    # web scale that was a full |nodes| shuffle per iteration), and the
-    # logical plan the optimizer must chew is ~40% smaller — driver
-    # planning time is the measured bottleneck of the whole loop on
-    # small graphs (see the conf note below).
-    contrib = None
-    for i in range(iterations):
-        if contrib is None:
-            src_side = edges
-            rank_prev = F.lit(1.0 / n)
-        else:
-            src_side = edges.join(
-                contrib.withColumnRenamed("dst", "src"), "src", "left"
-            )
-            rank_prev = (
-                F.lit(1 - damping)
-                + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
-            )
-        contrib = (
-            src_side.select("dst", (rank_prev / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            contrib = contrib.localCheckpoint(eager=False)
-    if iterations > 0:
-        ranks = (
-            nodes.join(contrib.withColumnRenamed("dst", "node"), "node",
-                       "left")
-            .select(
-                "node",
-                (F.lit(1 - damping)
-                 + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
-                 ).alias("rank"),
-            )
-        )
-    _mark("loop-build")
-    # Materialize BEFORE dropping the caches: unpersisting first would
-    # deregister them from the CacheManager while the loop plan is still
-    # lazy, so the caller's first action would replay edges construction
-    # once per iteration with nothing cached (measured at 400k pages /
-    # 3M edges, local[16]: 48.8 s / 3,293 MB shuffled / 393 exec-cpu-s
-    # lazy-then-unpersist vs 9.1 s / 306 MB / 51 cpu-s with this eager
-    # cut — bit-identical ranks). The checkpoint is one |nodes|-row
-    # write; the returned plan is a leaf, so downstream re-use (recrawl's
-    # repaged join, repeated collects) never re-runs the loop.
-    #
-    # Small-graph materialization config (size-gated on n, restored in the
-    # finally): AQE off — the loop is a FIXED plan shape and AQE turns its
-    # ~2 exchanges/iteration into separately scheduled query-stage jobs
-    # whose scheduling latency dominates at small n; codegen off — the 10
-    # iterations generate ~20 distinct codegen units (fresh expression ids
-    # each iteration, so the compiled-class cache never hits) and Janino
-    # compilation costs more than interpreting a few-thousand-row stage.
-    # Both measured on the drifted-recrawl recompute at 11.7k nodes:
-    # 3.36 s → 1.9 s for the whole pagerank call, bit-identical ranks.
-    # Above the gate both stay on (compilation amortizes; AQE's runtime
-    # skew/broadcast decisions matter at web scale).
-    if aqe_off:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    if shrink_shuffle:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    edges = None
     try:
-        out = ranks.select(F.col("node").alias("url"), "rank").localCheckpoint(
-            eager=True
+        n = nodes.count()
+        if n == 0:
+            return local_df(pages.sparkSession, [], "url string, rank double")
+        spark = pages.sparkSession
+        aqe_off = n <= PAGERANK_AQE_OFF_MAX_NODES
+        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
+        cg_prev = spark.conf.get("spark.sql.codegen.wholeStage")
+        sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
+        loop_parts = max(1, -(-n // PAGERANK_LOOP_ROWS_PER_PART))
+        shrink_shuffle = aqe_off and loop_parts < int(sp_prev)
+        edges = (
+            edges_from_pages(pages)
+            .join(out_degrees(pages), "src")
+            # closed-world prune AT SETUP: contributions to never-crawled
+            # children are discarded by the final nodes join anyway
+            # (updateOne no-op, DBManager.java:1122) — dropping those edges
+            # once here keeps them out of all 10 per-iteration groupBy(dst)
+            # exchanges. In a recrawl store most children point OUTSIDE the
+            # store (438k pages linking into an 8M-URL web), so this is the
+            # bulk of the loop's shuffled bytes. Value-identical: the
+            # surviving groups' term sets are unchanged.
+            .join(nodes.withColumnRenamed("node", "dst"), "dst", "semi")
+            .repartition("src")  # one partitioning, reused every iteration
+            .cache()
         )
-    finally:
+        if iterations <= 0:
+            ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+        # The loop iterates on the CONTRIBUTION recurrence, not on ranks:
+        #     c_i(dst) = Σ_{(src,dst)∈E}
+        #                (0.15 + 0.85·coalesce(c_{i-1}(src), 0)) / outdeg(src)
+        # with the first iteration folding in the uniform init rank 1/N, and
+        # ranks materialized from c_last ONCE at the end. Equivalent to the
+        # textbook ranks loop (every edge src IS a node, so rebuilding the
+        # full rank vector per iteration adds no information), but each
+        # iteration is one join + one aggregation instead of two joins + one
+        # aggregation: the per-iteration nodes-join exchange disappears (at
+        # web scale that was a full |nodes| shuffle per iteration), and the
+        # logical plan the optimizer must chew is ~40% smaller — driver
+        # planning time is the measured bottleneck of the whole loop on
+        # small graphs (see the conf note below).
+        contrib = None
+        for _ in range(iterations):
+            if contrib is None:
+                src_side = edges
+                rank_prev = F.lit(1.0 / n)
+            else:
+                src_side = edges.join(
+                    contrib.withColumnRenamed("dst", "src"), "src", "left"
+                )
+                rank_prev = (
+                    F.lit(1 - damping)
+                    + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
+                )
+            contrib = (
+                src_side.select(
+                    "dst", (rank_prev / F.col("outdeg")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
+            )
+        if iterations > 0:
+            ranks = (
+                nodes.join(contrib.withColumnRenamed("dst", "node"), "node",
+                           "left")
+                .select(
+                    "node",
+                    (F.lit(1 - damping)
+                     + damping * F.coalesce(F.col("contrib"), F.lit(0.0))
+                     ).alias("rank"),
+                )
+            )
+        # Materialize BEFORE dropping the caches: unpersisting first would
+        # deregister them from the CacheManager while the loop plan is still
+        # lazy, so the caller's first action would replay edges construction
+        # once per iteration with nothing cached (measured at 400k pages /
+        # 3M edges, local[16]: 48.8 s / 3,293 MB shuffled / 393 exec-cpu-s
+        # lazy-then-unpersist vs 9.1 s / 306 MB / 51 cpu-s with this eager
+        # cut — bit-identical ranks). The checkpoint is one |nodes|-row
+        # write; the returned plan is a leaf, so downstream re-use (recrawl's
+        # repaged join, repeated collects) never re-runs the loop.
+        #
+        # Small-graph materialization config (size-gated on n, restored in
+        # the finally): AQE off — the loop is a FIXED plan shape and AQE
+        # turns its ~2 exchanges/iteration into separately scheduled
+        # query-stage jobs whose scheduling latency dominates at small n;
+        # codegen off — the 10 iterations generate ~20 distinct codegen
+        # units (fresh expression ids each iteration, so the compiled-class
+        # cache never hits) and Janino compilation costs more than
+        # interpreting a few-thousand-row stage.
+        # Both measured on the drifted-recrawl recompute at 11.7k nodes:
+        # 3.36 s → 1.9 s for the whole pagerank call, bit-identical ranks.
+        # Above the gate both stay on (compilation amortizes; AQE's runtime
+        # skew/broadcast decisions matter at web scale).
         if aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-            spark.conf.set("spark.sql.codegen.wholeStage", cg_prev)
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            spark.conf.set("spark.sql.codegen.wholeStage", "false")
         if shrink_shuffle:
-            spark.conf.set("spark.sql.shuffle.partitions", sp_prev)
-    _mark("checkpoint-action")
-    edges.unpersist()
-    nodes.unpersist()
-    # Block lifetime note (r05 ADVICE): the returned leaf is backed by
-    # localCheckpoint blocks that live until the RDD is GC'd (the
-    # ContextCleaner frees them); callers that hold the result long-term
-    # (recrawl writes the rank snapshot and drops the reference promptly)
-    # should not accumulate many of these, and the blocks are not
-    # fault-tolerant on a real cluster — a lost executor after return
-    # makes the result unrecoverable (acceptable in local mode).
-    return out
+            spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+        try:
+            out = ranks.select(
+                F.col("node").alias("url"), "rank"
+            ).localCheckpoint(eager=True)
+        finally:
+            if aqe_off:
+                spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+                spark.conf.set("spark.sql.codegen.wholeStage", cg_prev)
+            if shrink_shuffle:
+                spark.conf.set("spark.sql.shuffle.partitions", sp_prev)
+        # Block lifetime note (r05 ADVICE): the returned leaf is backed by
+        # localCheckpoint blocks that live until the RDD is GC'd (the
+        # ContextCleaner frees them); callers that hold the result long-term
+        # (recrawl writes the rank snapshot and drops the reference promptly)
+        # should not accumulate many of these, and the blocks are not
+        # fault-tolerant on a real cluster — a lost executor after return
+        # makes the result unrecoverable (acceptable in local mode).
+        return out
+    finally:
+        # only after the eager checkpoint above (see its comment), and on
+        # every error path too, so a failed call leaks no cache
+        if edges is not None:
+            edges.unpersist()
+        nodes.unpersist()
 
 
 def pagerank_py(

@@ -34,10 +34,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # Below this input size the _spread exchange costs more than the serial
 # scan it parallelizes (measured at sf0.1: i3 0.266 → 0.322 with an
-# unconditional spread; at sf1.0 the spread wins 3.4×). Parameterized —
-# a conf knob, not a host constant; unknown/non-local paths assume big.
-SPREAD_MIN_BYTES = int(os.environ.get("NAVI_SPREAD_MIN_BYTES",
-                                      str(2 << 20)))
+# unconditional spread; at sf1.0 the spread wins 3.4×). Unknown/non-local
+# paths assume big.
+SPREAD_MIN_BYTES = 2 << 20
 
 
 def _table_bytes(sf_dir: str, name: str) -> int:

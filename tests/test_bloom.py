@@ -56,67 +56,3 @@ def test_update_and_annotate(spark):
     )
     out2 = bloom.annotate_maybe_seen(cand, filters2, k).collect()
     assert all(r["maybe_seen"] for r in out2)
-
-
-# ---------------------------------------------------------------------------
-# cuckoo filter (the second north-star seen-set option)
-# ---------------------------------------------------------------------------
-
-def test_cuckoo_roundtrip_and_delete():
-    import numpy as np
-
-    from navi_spark.operators import cuckoo
-
-    blob = cuckoo.cuckoo_new(1 << 10)
-    keys = np.arange(-500, 500, dtype=np.int64) * 2654435761
-    blob = cuckoo.cuckoo_add(blob, keys)
-    assert cuckoo.cuckoo_maybe(blob, keys).all()          # no false negatives
-    fresh = np.arange(10_000, 30_000, dtype=np.int64) * 40503
-    fp_rate = cuckoo.cuckoo_maybe(blob, fresh).mean()
-    assert fp_rate < 0.01, fp_rate                        # 16-bit fp ⇒ ~1e-4
-    # deletion (what a bloom cannot do): removed keys go definitely-new
-    victims = keys[:100]
-    blob = cuckoo.cuckoo_delete(blob, victims)
-    assert not cuckoo.cuckoo_maybe(blob, victims).any() or (
-        cuckoo.cuckoo_maybe(blob, victims).mean() < 0.05  # fp collisions only
-    )
-    assert cuckoo.cuckoo_maybe(blob, keys[100:]).all()    # others intact
-
-
-def test_cuckoo_overflow_degrades_conservatively():
-    import numpy as np
-
-    from navi_spark.operators import cuckoo
-
-    blob = cuckoo.cuckoo_new(2)  # 8 slots total
-    keys = np.arange(100, dtype=np.int64) * 7919
-    blob = cuckoo.cuckoo_add(blob, keys)
-    # saturated: the filter must stop claiming definitely-new for ANY key
-    assert cuckoo.cuckoo_maybe(blob, np.array([123456789], np.int64)).all()
-
-
-def test_cuckoo_filters_update_and_annotate(spark):
-    import numpy as np  # noqa: F401
-
-    import pyspark.sql.functions as F
-
-    from navi_spark.operators import cuckoo
-
-    keys = spark.range(1000).select(
-        (F.col("id") % 8).cast("int").alias("host_partition"),
-        F.xxhash64("id").alias("url_hash"),
-    )
-    filters = spark.createDataFrame([], cuckoo.FILTERS_SCHEMA)
-    filters = cuckoo.update_filters(filters, keys, 1 << 10)
-    cand = spark.range(2000).select(
-        (F.col("id") % 8).cast("int").alias("host_partition"),
-        F.xxhash64("id").alias("url_hash"),
-    )
-    marked = cuckoo.annotate_maybe_seen(cand, filters)
-    rows = {r["url_hash"]: r["maybe_seen"] for r in marked.collect()}
-    seen_hashes = {r["url_hash"] for r in keys.collect()}
-    misses = [h for h in seen_hashes if not rows[h]]
-    assert not misses                                     # no false negatives
-    fresh = [h for h in rows if h not in seen_hashes]
-    fp = sum(rows[h] for h in fresh) / len(fresh)
-    assert fp < 0.02, fp

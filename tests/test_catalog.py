@@ -84,7 +84,7 @@ DRIVER_ROWS = {
         (1, hp, 10 + hp, 9, 7, 2, 1, 1, 0, 1, 4) for hp in range(3)
     ]),
     "metrics": (METRICS_SCHEMA, [
-        (1, 100, 96, 89, 80, 412, 7520, 13.3, 2),
+        (1, 100, 96, 89, 80, 7520, 13.3, 2),
     ]),
 }
 
