@@ -8,27 +8,36 @@ semantics over plain parquet:
 
     root/
       data/s<k>/part-*.parquet      one immutable directory per commit
-      manifests/<k>.json            {snapshot_id, parent, dirs, summary}
+      manifests/<k>.json            {snapshot_id, parent, dirs, schema, summary}
       HEAD                          text file "k" — atomically os.replace()d
 
 A commit = write data dir → write manifest → atomic HEAD swap. Readers
-resolve HEAD → manifest → ``spark.read.parquet(*dirs)``. Time travel =
-read any manifest; rollback = move HEAD. Crash between data-write and HEAD
-swap leaves an orphan dir, never a torn table — the same guarantee Iceberg's
-metadata pointer gives.
+resolve HEAD → manifest → ``spark.read.schema(schema).parquet(*dirs)``.
+Time travel = read any manifest; rollback = move HEAD. Crash between
+data-write and HEAD swap leaves an orphan dir, never a torn table — the
+same guarantee Iceberg's metadata pointer gives.
 
-:func:`local_df` builds the small relations the driver itself produces
+The manifest records the schema the commit wrote, as Iceberg's table
+metadata does, so a read hands it to the parquet reader and never starts
+the footer-reading Spark job that schema inference costs.
+
+:func:`arrow_table` turns the small relations the driver itself produces
 (seed lists, the per-wave ``state``/``lineage``/``metrics`` rows, empty
-tables for ``read_or_empty``) on the JVM from an Arrow table, so writing
-them runs no Python worker task.
+tables for ``read_or_empty``) into one Arrow table. :func:`local_df` hands
+that table to the JVM as a DataFrame, so building it runs no Python worker
+task; ``append``/``overwrite`` also take the Arrow table itself and write
+it with ``pyarrow.parquet``, so committing it runs no Spark job at all.
 
 On a real cluster every call site swaps one-for-one onto Iceberg:
-``append``   → ``df.writeTo(tbl).append()``
-``overwrite``→ ``df.writeTo(tbl).overwritePartitions()``
+``append``   → ``df.writeTo(tbl).append()``; an Arrow table →
+PyIceberg's ``Table.append(pa.Table)``
+``overwrite``→ ``df.writeTo(tbl).overwritePartitions()``; an Arrow table →
+PyIceberg's ``Table.overwrite(pa.Table)``
 ``merge_upsert`` → ``MERGE INTO tbl USING src ON key``
 ``insert_absent`` → ``MERGE INTO … WHEN NOT MATCHED THEN INSERT *``
 ``read(snapshot_id=k)`` → ``spark.read.option("snapshot-id", k).table(tbl)``
-``local_df(spark, rows, schema)`` → unchanged (it is the source of a
+(the schema comes from the table metadata there too)
+``arrow_table``/``local_df`` → unchanged (they are the source of a
 commit, not a table operation)
 """
 
@@ -40,38 +49,42 @@ import shutil
 import uuid
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
 
+def arrow_table(rows: list, schema: str) -> pa.Table:
+    """Driver-side `rows` (tuples or Rows, in `schema`'s column order) as
+    one Arrow table typed by `schema`. Values are type-checked against
+    `schema` (a wrong type raises); map columns take dicts."""
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
+    width = len(arrow)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(f"row {bad!r} does not have the {width} fields "
+                         f"of {schema!r}")
+    cols = zip(*rows) if rows else [()] * width
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+
+
 def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """DataFrame of driver-side `rows` (tuples or Rows, in `schema`'s
-    column order) built on the JVM from one Arrow table.
+    """DataFrame of driver-side `rows` built on the JVM from
+    :func:`arrow_table`.
 
     A Python list handed to ``spark.createDataFrame`` travels through a
     Python RDD, even when empty, so every driver-built relation ran Python
     worker tasks, each paying the worker's fixed start-up cost (~0.2
     CPU-s) for a handful of rows. An Arrow table is handed to the JVM
     as-is: no Python task runs, whatever
-    ``spark.sql.execution.arrow.pyspark.enabled`` says. Values are
-    type-checked against `schema` (a wrong type raises); map columns take
-    dicts."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    struct = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(struct)
-    width = len(struct.fields)
-    bad = next((r for r in rows if len(r) != width), None)
-    if bad is not None:
-        raise ValueError(f"row {bad!r} does not have the {width} fields "
-                         f"of {schema!r}")
-    cols = zip(*rows) if rows else [()] * width
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow,
-    )
-    return spark.createDataFrame(table, struct)
+    ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    return spark.createDataFrame(arrow_table(rows, schema),
+                                 StructType.fromDDL(schema))
 
 
 class SnapshotTable:
@@ -122,8 +135,9 @@ class SnapshotTable:
         sid = self.snapshot_id() if snapshot_id is None else snapshot_id
         if sid is None:
             raise ValueError(f"table {self.root} has no committed snapshot")
-        dirs = self._manifest(sid)["dirs"]
-        return self.spark.read.parquet(*dirs)
+        m = self._manifest(sid)
+        schema = StructType.fromJson(m["schema"])
+        return self.spark.read.schema(schema).parquet(*m["dirs"])
 
     def read_or_empty(self, schema: str) -> DataFrame:
         if self.exists():
@@ -131,15 +145,24 @@ class SnapshotTable:
         return local_df(self.spark, [], schema)
 
     # -- write -------------------------------------------------------------
-    def _commit(self, df: DataFrame, dirs_base: list[str], summary: dict) -> int:
+    def _commit(self, data: DataFrame | pa.Table,
+                dirs_base: list[str], summary: dict) -> int:
         parent = self.snapshot_id()
         sid = (parent or 0) + 1
         ddir = os.path.join(self.root, "data", f"s{sid}-{uuid.uuid4().hex[:8]}")
-        df.write.mode("errorifexists").parquet(ddir)
+        if isinstance(data, DataFrame):
+            data.write.mode("errorifexists").parquet(ddir)
+            schema = data.schema
+        else:
+            # driver-built rows: one file written here, no Spark job
+            os.makedirs(ddir)
+            pq.write_table(data, os.path.join(ddir, "part-00000.parquet"))
+            schema = from_arrow_schema(data.schema)
         manifest = {
             "snapshot_id": sid,
             "parent": parent,
             "dirs": dirs_base + [ddir],
+            "schema": schema.jsonValue(),
             "summary": summary,
         }
         mpath = os.path.join(self.root, "manifests", f"{sid}.json")
@@ -151,14 +174,19 @@ class SnapshotTable:
         os.replace(tmp, self._head_path)  # the atomic commit point
         return sid
 
-    def append(self, df: DataFrame, summary: Optional[dict] = None) -> int:
-        """Append-commit: new data dir + all parent dirs (Iceberg append)."""
+    def append(self, df: DataFrame | pa.Table,
+               summary: Optional[dict] = None) -> int:
+        """Append-commit: new data dir + all parent dirs (Iceberg append).
+        `df` may be an Arrow table of driver-built rows, committed without
+        a Spark job."""
         parent = self.snapshot_id()
         base = self._manifest(parent)["dirs"] if parent is not None else []
         return self._commit(df, base, summary or {})
 
-    def overwrite(self, df: DataFrame, summary: Optional[dict] = None) -> int:
-        """Full-table replace commit (Iceberg overwrite)."""
+    def overwrite(self, df: DataFrame | pa.Table,
+                  summary: Optional[dict] = None) -> int:
+        """Full-table replace commit (Iceberg overwrite). `df` may be an
+        Arrow table, as for :meth:`append`."""
         return self._commit(df, [], summary or {})
 
     def merge_upsert(self, src: DataFrame, key: str | list[str],

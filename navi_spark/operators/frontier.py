@@ -67,7 +67,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from navi_spark.catalog import SnapshotTable, local_df
+from navi_spark.catalog import SnapshotTable, arrow_table, local_df
 from navi_spark.functions.urlnorm import host_expr, normalize_url_udf
 from navi_spark.operators import bloom
 from navi_spark.operators.fetch import (
@@ -360,6 +360,13 @@ class CrawlEngine:
              + F.pmod(F.xxhash64(F.col(url_col)), F.lit(s))).cast("int")
         )
 
+    def _robots(self, df: DataFrame) -> DataFrame:
+        """`df` with its `robots_allowed` verdict (C10-C12)."""
+        if self.cfg.robots_reference_bug:
+            # shipped-binary parity: Pattern.quote'd rules never match
+            return df.withColumn("robots_allowed", F.lit(True))
+        return filter_allowed(df, self.rules).drop("crawl_delay_s")
+
     def _frontier_rows(self, urls: DataFrame) -> DataFrame:
         """(url[, rank, depth]) → full FRONTIER_SCHEMA rows."""
         out = urls
@@ -464,8 +471,9 @@ class CrawlEngine:
 
     # -- the wave ------------------------------------------------------------
     def wave(self) -> WaveStats:
-        """Run one wave. Everything the wave caches is unpersisted when it
-        returns or raises, so a failed wave leaks no cached relation."""
+        """Run one wave. Everything the wave caches or checkpoints is
+        unpersisted when it returns or raises, so a failed wave leaks no
+        cached relation."""
         with ExitStack() as cached:
             return self._wave(cached)
 
@@ -504,9 +512,19 @@ class CrawlEngine:
             .withColumn("host", host_expr(F.col("url")))
             .withColumn("url_hash", F.xxhash64("url"))
         )
-        cand = cand.withColumn("host_partition", self._hp()).cache()
-        cached.callback(cand.unpersist)
-        if remaining_global <= 0 or cand.isEmpty():
+        if remaining_global <= 0:
+            self._commit_state(True, {"op": "done"})
+            return stats
+        # A checkpoint, not a cache: `cand` is read ~5 times (lineage, the
+        # depth split, the seen check), and an eager checkpoint runs under
+        # AQE, which sizes it to its data. A cached plan keeps the
+        # session's shuffle-partition count
+        # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
+        # false), so every stage downstream of a cache, down to the
+        # frontier write, ran that many mostly-empty tasks.
+        cand = _local_checkpoint(
+            cand.withColumn("host_partition", self._hp()), cached)
+        if cand.isEmpty():
             self._commit_state(True, {"op": "done"})
             return stats
 
@@ -536,8 +554,9 @@ class CrawlEngine:
             )
         else:
             new = shallow.join(seen.select("url"), on="url", how="left_anti")
-        new = new.cache()
-        cached.callback(new.unpersist)
+        # checkpointed, not cached, for the reason given at `cand`: it is
+        # read by the politeness window, the re-queue and lineage
+        new = _local_checkpoint(new, cached)
 
         # ---- 3. pop-time domain quota (C8). Shallow rows of an AT-CAP host
         # are discarded (pop-time discard — eager is sound, at-cap is
@@ -612,26 +631,26 @@ class CrawlEngine:
         # bounded sample-selection — above ~10^4 the per-partition prune
         # stops pruning and orderBy().limit() ships the whole pool to one
         # merge task (see take_k_smallest). Both return the exact same set.
+        # The robots verdict (C10-C12) is part of the checkpoint, so the
+        # matcher UDF runs once, on the popped rows, and neither the
+        # labeled pass nor the image-key broadcast below re-runs it.
         if k > 10_000:
             pool = pool.persist()
             try:
-                attempts = _local_checkpoint(take_k_smallest(pool, k), cached)
+                attempts = _local_checkpoint(
+                    self._robots(take_k_smallest(pool, k)), cached)
             finally:
                 pool.unpersist()
         else:
             attempts = _local_checkpoint(
-                pool.orderBy("rank", "url").limit(k), cached)
+                self._robots(pool.orderBy("rank", "url").limit(k)), cached)
 
         # ---- 5-8. ONE labeled attempt pass: depth quirk (C6) → robots
-        # (C10-C12) → fetch+validate (C13) → language (C14) → in-wave phash
-        # dedup (C15). Every attempt gets an outcome label; lineage, metrics
-        # and wave stats all derive from this single DataFrame, so no
-        # per-stage count() jobs remain on the hot pipeline.
-        if cfg.robots_reference_bug:
-            # shipped-binary parity: Pattern.quote'd rules never match
-            att = attempts.withColumn("robots_allowed", F.lit(True))
-        else:
-            att = filter_allowed(attempts, self.rules).drop("crawl_delay_s")
+        # (C10-C12, from the checkpoint) → fetch+validate (C13) → language
+        # (C14) → in-wave phash dedup (C15). Every attempt gets an outcome
+        # label; lineage, metrics and wave stats all derive from this
+        # single DataFrame, so no per-stage count() jobs remain on the hot
+        # pipeline.
         # C13 fetch join, scalable form: `attempts` is wave_budget-bounded
         # (the driver-owned BATCH_SIZE analog, WebCrawler.java:29), so the
         # synthetic web/image stores are first pruned to the attempted
@@ -644,7 +663,7 @@ class CrawlEngine:
         web_hit = self.web.join(
             F.broadcast(attempts.select("url")), on="url", how="left_semi"
         )
-        att = att.join(web_hit, on="url", how="left")
+        att = attempts.join(web_hit, on="url", how="left")
         # Payload validation runs MAP-SIDE ON THE STORE SCAN, not after the
         # join: the validator is a pure function of the image row
         # (bytes/fmt/dims/caption), so decoding before the exchange means
@@ -756,8 +775,10 @@ class CrawlEngine:
                    lambda: self.t["seen"].append(
                        successes.select("url", "url_hash", "host_partition"),
                        {"wave": w}),
+                   # no distinct(): a fetched row is first (_rnp == 1) in
+                   # its phash partition, so successes' phashes are unique
                    lambda: self.t["phash_seen"].append(
-                       successes.select("phash").distinct(), {"wave": w})]
+                       successes.select("phash"), {"wave": w})]
         if cfg.use_bloom:
             new_f = bloom.update_filters(
                 self.t["filters"].read_or_empty(bloom.FILTERS_SCHEMA),
@@ -816,7 +837,7 @@ class CrawlEngine:
         ).unionByName(expansions)
 
         # ---- 11. frontier commit ∥ lineage aggregation (north rule): the
-        # lineage collect reads only the cached/checkpointed wave sets
+        # lineage collect reads only the checkpointed wave sets
         # (cand/new/labeled), never the frontier table, so it overlaps the
         # frontier write instead of idling behind it; one aggregation,
         # collected once (≤ n_host_partitions·salt_buckets rows) and reused
@@ -840,23 +861,19 @@ class CrawlEngine:
         stats.depth_skips = sum(r["depth_skipped"] for r in lin_rows)
         stats.wall_ms = int((time.monotonic() - t0) * 1000)
         par = self.spark.sparkContext.defaultParallelism
-        _run_commits_concurrently([
-            lambda: self.t["lineage"].append(
-                local_df(self.spark, lin_rows, LINEAGE_SCHEMA),
-                {"wave": w},
+        # driver-built rows: Arrow commits, no Spark job
+        self.t["lineage"].append(arrow_table(lin_rows, LINEAGE_SCHEMA),
+                                 {"wave": w})
+        self.t["metrics"].append(
+            arrow_table(
+                [(w, stats.scheduled, stats.deduped, stats.attempted,
+                  stats.fetched, stats.wall_ms,
+                  stats.scheduled / max(stats.wall_ms / 1000.0, 1e-9),
+                  par)],
+                METRICS_SCHEMA,
             ),
-            lambda: self.t["metrics"].append(
-                local_df(
-                    self.spark,
-                    [(w, stats.scheduled, stats.deduped, stats.attempted,
-                      stats.fetched, stats.wall_ms,
-                      stats.scheduled / max(stats.wall_ms / 1000.0, 1e-9),
-                      par)],
-                    METRICS_SCHEMA,
-                ),
-                {"wave": w},
-            ),
-        ])
+            {"wave": w},
+        )
 
         # ---- 12. state commit = the checkpoint barrier
         self.budget_consumed += stats.fetched + stats.depth_skips
@@ -865,45 +882,49 @@ class CrawlEngine:
         return stats
 
     def _lineage_rows(self, w, cand, poppable, labeled) -> list:
-        """Per-host_partition lineage with REAL per-cause counts, all from
-        one aggregation of the labeled attempts table. `poppable` = rows
-        surviving dedup + the seen check (deep rows included — they bypass
-        the seen check); `blocked_budget` = poppable rows not popped for an
-        attempt this wave (re-queued or at-cap-discarded)."""
-        def per_hp(df, name):
-            return df.groupBy("host_partition").agg(F.count("*").alias(name))
-
+        """Per-host_partition lineage with REAL per-cause counts, from ONE
+        aggregation over a tagged union of the wave's three sets: `cand`
+        (scheduled), `poppable` = rows surviving dedup + the seen check
+        (deep rows included — they bypass the seen check), and the labeled
+        attempts, tagged with their outcome. `blocked_budget` = poppable
+        rows not popped for an attempt this wave (re-queued or
+        at-cap-discarded)."""
         cause = [("depth_skip", "depth_skipped"),
                  ("blocked_robots", "blocked_robots"),
                  ("fetch_failed", "fetch_failed"),
                  ("dup_content", "dup_content"),
                  ("fetched", "fetched")]
-        att_agg = labeled.groupBy("host_partition").agg(
-            F.count("*").alias("attempted"),
-            *[F.sum(F.when(F.col("outcome") == o, 1).otherwise(0))
-              .cast("long").alias(c) for o, c in cause],
+        tagged = (
+            cand.select("host_partition", F.lit("scheduled").alias("_k"))
+            .unionByName(poppable.select("host_partition",
+                                         F.lit("deduped").alias("_k")))
+            .unionByName(labeled.select("host_partition",
+                                        F.col("outcome").alias("_k")))
         )
-        lin = (
-            per_hp(cand, "scheduled")
-            .join(per_hp(poppable, "deduped"), "host_partition", "full")
-            .join(att_agg, "host_partition", "full")
-            .fillna(0)
-            .select(
-                F.lit(w).alias("wave_id"), "host_partition",
-                "scheduled", "deduped", "attempted",
-                (F.col("deduped") - F.col("attempted")).alias("blocked_budget"),
-                "depth_skipped", "blocked_robots", "fetch_failed",
-                "dup_content", "fetched",
-            )
+
+        def n(*tags):
+            return F.count(F.when(F.col("_k").isin(*tags), 1))
+
+        lin = tagged.groupBy("host_partition").agg(
+            n("scheduled").alias("scheduled"),
+            n("deduped").alias("deduped"),
+            n(*[o for o, _ in cause]).alias("attempted"),
+            *[n(o).alias(c) for o, c in cause],
         )
-        return lin.collect()
+        return lin.select(
+            F.lit(w).alias("wave_id"), "host_partition",
+            "scheduled", "deduped", "attempted",
+            (F.col("deduped") - F.col("attempted")).alias("blocked_budget"),
+            "depth_skipped", "blocked_robots", "fetch_failed",
+            "dup_content", "fetched",
+        ).collect()
 
     def _commit_state(self, done: bool, summary: dict) -> None:
         """Overwrite `state` with the engine's position and every other
         table's snapshot id — the consistent cut resume() rolls back to."""
         self.t["state"].overwrite(
-            local_df(self.spark, [(self.wave_id, self.budget_consumed, done,
-                                   self._snapshot_map())], STATE_SCHEMA),
+            arrow_table([(self.wave_id, self.budget_consumed, done,
+                          self._snapshot_map())], STATE_SCHEMA),
             summary,
         )
 
@@ -1068,7 +1089,7 @@ class CrawlEngine:
             # each re-running the pruned web scan (r06: measured 0.33 s
             # for the extra scan at the bench size). cache() not
             # localCheckpoint: it rides the collect's job, keeping the
-            # no-drift job discipline at 17; unpersisted right after the
+            # no-drift job discipline at 13; unpersisted right after the
             # labeled checkpoint that consumes it.
             web_side = web_side.filter(web_pred).cache()
             cached.callback(web_side.unpersist)
@@ -1094,10 +1115,7 @@ class CrawlEngine:
             .join(web_side, "url", "left")
             .join(img_side, "new_image_id", "left")
         )
-        if cfg.robots_reference_bug:
-            re_f = re_f.withColumn("robots_allowed", F.lit(True))
-        else:
-            re_f = filter_allowed(re_f, self.rules).drop("crawl_delay_s")
+        re_f = self._robots(re_f)
         honors_304 = (
             F.coalesce(F.col("honors_304"), F.lit(True))
             if has_honors else F.lit(True)

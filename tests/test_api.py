@@ -253,11 +253,11 @@ def test_repeated_post_spark_job_count_bounded(spark, served, tmp_path):
         replace(idx, suggestions=SnapshotTable(spark, str(tmp_path / "s"))))
     srv._post_search("rivers banks")
     n_jobs = _post_jobs(spark, srv, "rivers banks")
-    # measured with AQE on (3): the parquet footer read that infers the
-    # table's schema in read(), the broadcast build of the table's keys
-    # for the left-anti probe, and the probe's isEmpty. The query's own
-    # ranking runs on GET, not here.
-    assert 0 < n_jobs <= 3, f"a repeated POST launched {n_jobs} Spark jobs"
+    # measured with AQE on (2): the broadcast build of the table's keys
+    # for the left-anti probe, and the probe's isEmpty. read() starts no
+    # job (the manifest carries the schema). The query's own ranking
+    # runs on GET, not here.
+    assert 0 < n_jobs <= 2, f"a repeated POST launched {n_jobs} Spark jobs"
 
 
 def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
@@ -278,9 +278,9 @@ def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
         f"spark q{i}" for i in range(n))
     assert len(tbl.data_files()) < 8  # compact()'s default min_files
     repeated = _post_jobs(spark, srv, "spark q7")
-    assert 0 < repeated <= 3, f"a repeated POST launched {repeated} jobs"
+    assert 0 < repeated <= 2, f"a repeated POST launched {repeated} jobs"
     # a new query, with no compaction due on it (7 data files after it):
-    # measured 5 with AQE on, the repeated POST's 3 plus the append
+    # measured 4 with AQE on, the repeated POST's 2 plus the append
     # re-running the probe's broadcast build and its parquet write job
     new = _post_jobs(spark, srv, f"spark q{n}")
-    assert 0 < new <= 5, f"a new query's POST launched {new} jobs"
+    assert 0 < new <= 4, f"a new query's POST launched {new} jobs"

@@ -4,12 +4,13 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
 from pyspark.sql.types import StructType
 
-from navi_spark.catalog import SnapshotTable, local_df
+from navi_spark.catalog import SnapshotTable, arrow_table, local_df
 from navi_spark.operators.frontier import (
     LINEAGE_SCHEMA,
     METRICS_SCHEMA,
@@ -67,6 +68,23 @@ def test_insert_absent(spark, table):
     assert table.snapshot_id() == s2 and len(table.history()) == 2
 
 
+def test_read_starts_no_spark_job(spark, table):
+    """The manifest carries the committed schema, so reading a table
+    plans its scan without the footer-reading job schema inference runs."""
+    table.append(_df(spark, [(1, "a")]))
+    sc = spark.sparkContext
+    group = f"read-jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs of one read")
+    try:
+        df = table.read()
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc._jsc.sc().statusTracker()  # noqa: SLF001
+    assert len(list(tracker.getJobIdsForGroup(group))) == 0
+    assert df.schema == StructType.fromDDL("k long, v string")
+    assert [tuple(r) for r in df.collect()] == [(1, "a")]
+
+
 def test_read_or_empty(spark, table):
     df = table.read_or_empty("k long, v string")
     assert df.schema == StructType.fromDDL("k long, v string")
@@ -90,14 +108,16 @@ DRIVER_ROWS = {
 
 
 @pytest.mark.parametrize("name", sorted(DRIVER_ROWS))
-def test_local_df_matches_create_dataframe(spark, name):
-    """local_df gives the rows and schema a Python-list createDataFrame
-    gives, for the engine's driver-built tables and for no rows."""
+def test_local_df_matches_create_dataframe(spark, table, name):
+    """local_df, and a commit of the Arrow table it is built from, give
+    the rows and schema a Python-list createDataFrame gives, for the
+    engine's driver-built tables and for no rows."""
     schema, rows = DRIVER_ROWS[name]
     want = spark.createDataFrame(rows, schema)
-    got = local_df(spark, rows, schema)
-    assert got.schema == want.schema
-    assert got.collect() == want.collect()
+    table.overwrite(arrow_table(rows, schema))
+    for got in (local_df(spark, rows, schema), table.read()):
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
     empty = local_df(spark, [], schema)
     assert empty.schema == want.schema
     assert empty.collect() == []

@@ -400,21 +400,53 @@ def test_wave_spark_job_count_bounded(spark, universe):
                     len(list(tracker.getJobIdsForGroup(f"wave-jobcount-{i}"))))
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
-        # measured composition of wave 1 (25): 12 parquet jobs for the 9
-        # table commits, 9 broadcast builds (incl. the two store-pruning
-        # semi-join sets that eliminated the wave's largest exchanges),
-        # 2 local checkpoints (attempts, labeled), the isEmpty probe and
-        # the lineage collect. Wave 2 (38) also reads a non-empty
-        # seen/filters/host_counts/phash_seen state: the bloom probe and
-        # the seen anti-join add broadcast builds (15) and parquet jobs
-        # (17). All are small fixed driver round-trips, none scale with
-        # data. The guard trips if per-stage stats counts creep back in
-        # (round 1 had ~15 of them) or a driver-built relation starts
-        # costing a job again.
-        assert 0 < n_jobs[0] <= 25, f"wave 1 launched {n_jobs[0]} Spark jobs"
-        assert 0 < n_jobs[1] <= 38, f"wave 2 launched {n_jobs[1]} Spark jobs"
+        # measured composition of wave 1 (20): 6 parquet write jobs, one
+        # per Spark-written commit (pages, seen, phash_seen, filters,
+        # host_counts, frontier; lineage, metrics and state are Arrow
+        # commits and start none), 4 local checkpoints (cand, new,
+        # attempts, labeled), 8 broadcast builds (incl. the two
+        # store-pruning semi-join sets that eliminated the wave's largest
+        # exchanges), the isEmpty probe and the lineage collect. No table
+        # read starts a job: the manifest carries the schema. Wave 2 (26)
+        # also reads a non-empty seen/filters/host_counts/phash_seen
+        # state: the bloom probe and the seen anti-join add 6 broadcast
+        # builds (14). All are small fixed driver round-trips, none scale
+        # with data. The guard trips if per-stage stats counts creep back
+        # in (round 1 had ~15 of them), a driver-built relation starts
+        # costing a job again, or a read goes back to inferring its
+        # schema.
+        assert 0 < n_jobs[0] <= 20, f"wave 1 launched {n_jobs[0]} Spark jobs"
+        assert 0 < n_jobs[1] <= 26, f"wave 2 launched {n_jobs[1]} Spark jobs"
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_wave_frontier_snapshot_files_bounded(spark, universe):
+    """The wave's relations are checkpointed under AQE, which sizes them
+    to their data, so a 100-seed wave writes its frontier snapshot as a
+    couple of files, not one per session shuffle partition (a cached
+    plan keeps the session's 8)."""
+    web, images, robots, _ = universe
+    seeds = generate_seeds(100, N_URLS, N_HOSTS)
+    workdir = tempfile.mkdtemp(prefix="navi-files-")
+    try:
+        eng, _ = _mk_engine(spark, (web, images, robots, seeds), workdir)
+        eng.bootstrap(seeds)
+        eng.wave()
+        n_files = len(eng.t["frontier"].data_files())
+        assert 0 < n_files <= 2, f"frontier snapshot has {n_files} files"
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_phash_seen_has_no_duplicates(std_run):
+    """A wave appends its successes' phashes without a distinct(): a
+    fetched row is the first of its phash in the wave and no earlier
+    wave recorded it, so over a whole crawl every phash appears once."""
+    ph = std_run.t["phash_seen"].read()
+    assert std_run.wave_id > 1
+    assert ph.count() == std_run.pages().count() > 0
+    assert ph.groupBy("phash").count().filter(F.col("count") > 1).count() == 0
 
 
 def test_error_paths_leak_no_cache(spark, universe, monkeypatch):
@@ -499,18 +531,17 @@ def test_recrawl_spark_job_count_bounded(spark, universe):
         tracker = sc._jsc.sc().statusTracker()  # noqa: SLF001
         ids = tracker.getJobIdsForGroup("recrawl-jobcount")
         n_jobs = len(list(ids))
-        # measured composition (17): 3 localCheckpoints (labeled / lab /
-        # consumed) + the bounded cap-boundary broadcast build + consumed
-        # agg + statuses agg + merge read/write + state commit + broadcast
-        # builds for the web/images/rules joins. (+1 vs earlier round 5:
-        # the classification-join scan prune broadcasts the reloaded key
-        # set into the web/image scans — one extra broadcast build that
-        # removes the |web|-proportional full-payload exchange. The
-        # changed-children fetch adds NO job on this path: n_changed == 0
-        # takes the literal-columns fast path.) The guard trips if
+        # measured composition (13): 3 localCheckpoints (labeled / lab /
+        # consumed), 5 broadcast builds (the bounded cap boundary and the
+        # web/images/rules joins), the 2 key collects of the
+        # classification-scan prune, the consumed agg, the statuses agg
+        # and the merge's parquet write. Reads start no job (the manifest
+        # carries the schema) and the state commit is an Arrow write.
+        # The changed-children fetch adds NO job on this path: n_changed
+        # == 0 takes the literal-columns fast path. The guard trips if
         # per-stat rescans (the 3 old count() jobs + the statuses groupBy
         # over un-checkpointed lineage ≈ +4) creep back in.
-        assert 0 < n_jobs <= 17, f"recrawl launched {n_jobs} Spark jobs"
+        assert 0 < n_jobs <= 13, f"recrawl launched {n_jobs} Spark jobs"
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
