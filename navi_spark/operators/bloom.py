@@ -34,10 +34,6 @@ FILTERS_SCHEMA = "host_partition int, filter binary, n_items long"
 _MULT = np.uint64(0x9E3779B97F4A7C15)  # odd → bijective on Z/2^64
 
 
-def host_partition_col(host_col: str, n_partitions: int):
-    return F.pmod(F.xxhash64(F.col(host_col)), F.lit(n_partitions)).cast("int")
-
-
 def _hashes(keys: np.ndarray, k: int, m_bits: int) -> Iterator[np.ndarray]:
     h1 = keys.astype(np.uint64)
     h2 = (h1 * _MULT) | np.uint64(1)
@@ -217,16 +213,3 @@ def literal_bloom_predicate(
         t = bit == 1
         pred = t if pred is None else pred & t
     return pred
-
-
-def literal_bloom_maybe_py(
-    words: list[int], m_bits: int, k: int, keys
-) -> "np.ndarray":
-    """Python twin of :func:`literal_bloom_predicate` (parity tests)."""
-    wu = np.asarray(words, dtype=np.int64).view(np.uint64)
-    h_a, h_b = _lb_hashes_py(keys, m_bits)
-    out = np.ones(len(h_a), dtype=bool)
-    for i in range(k):
-        idx = np.mod(h_a + i * h_b, m_bits)
-        out &= (wu[idx >> 6] >> (idx & 63).astype(np.uint64)) & np.uint64(1) != 0
-    return out

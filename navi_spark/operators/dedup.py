@@ -470,17 +470,3 @@ def embedding_neardup_pairs(
         .filter(F.col("cos_sim") >= tau)
         .select("id_a", "id_b", "cos_sim")
     )
-
-
-def phash_dedup(images: DataFrame, max_hamming: int = 0) -> DataFrame:
-    """Image near-dup on the 64-bit perceptual hash column (C15 on the
-    image+caption ground table): exact phash match keeps lowest image_id;
-    max_hamming>0 switches to the simhash-style blocked pair join."""
-    if max_hamming == 0:
-        w = Window.partitionBy("phash").orderBy("image_id")
-        return images.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
-        ).drop("_rn")
-    sims = images.select(F.col("image_id").alias("id"),
-                         F.col("phash").alias("simhash"))
-    return simhash_neardup_pairs(sims, max_hamming)

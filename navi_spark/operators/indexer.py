@@ -145,21 +145,3 @@ def field_totals(lengths: DataFrame, fields: Sequence[str]) -> DataFrame:
     return lengths.agg(
         *[F.sum(f"len_{f_}").alias(f"total_{f_}") for f_ in fields]
     )
-
-
-def index_pages(
-    pages: DataFrame,
-    stopwords: Sequence[str] = (),
-    stem: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """I9 driver over the crawl output: caption is the single text field of
-    the image+caption ground table (maps to the reference's `content`).
-
-    Returns (postings, lengths, totals). The isIndexed handoff flag
-    (C24/I1) is modeled by the caller filtering `pages` before the call and
-    MERGEing the flag after commit (SnapshotTable.merge_upsert)."""
-    fields = {"caption": "caption"}
-    postings = build_postings(pages, "url", fields, stopwords, stem)
-    lengths = field_lengths(pages, "url", fields, stopwords, stem)
-    totals = field_totals(lengths, list(fields))
-    return postings, lengths, totals

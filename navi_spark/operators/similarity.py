@@ -12,10 +12,7 @@ assignment ~0.5 ms/row single-core (measured at 200k rows). The hot
 scan kernels (cosine-vs-query, SRP signature, IVF cell assign) are
 therefore Arrow-batched pandas UDFs over the raw array column: one
 numpy/BLAS matmul per ~10k-row batch, 50-500× the interpreted
-expression throughput, which is what a 10^9-vector scan needs. The
-expression forms (`cosine_expr`, `_dot`) are kept for bounded
-candidate-set scoring where they compose into joins and the row count
-is pair-bounded, never corpus-bounded.
+expression throughput, which is what a 10^9-vector scan needs.
 """
 
 from __future__ import annotations
@@ -26,35 +23,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-def cosine_expr(a, b):
-    """cos(a, b) as a pure column expression (arrays of double).
-
-    Interpreted per element — use only on candidate-bounded row sets
-    (verify joins, certified small-data twins), never on a corpus scan."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _stack(col: pd.Series) -> np.ndarray:
     return np.vstack(col.to_numpy()).astype(np.float64, copy=False)
 
 
 def cosine_vs_query(vec_col, query_vec: list[float]):
     """cos(row, q) as an Arrow-vectorized column: one BLAS matvec per
-    ~10k-row batch. IEEE semantics match the expression form (±Inf/NaN on
-    zero norms, strict ordering preserved at 4-dp rounding); summation
-    order differs at the ~1e-15 relative level only."""
+    ~10k-row batch. IEEE semantics match a Spark `aggregate(zip_with(...))`
+    cosine (±Inf/NaN on zero norms, strict ordering preserved at 4-dp
+    rounding); summation order differs at the ~1e-15 relative level
+    only."""
     qv = np.asarray(query_vec, dtype=np.float64)
     qn = qv / np.linalg.norm(qv)
 

@@ -2,7 +2,6 @@
 checkable in tests instead of eyeballed.
 
     explain_str(df)              formatted plan text
-    assert_pushed_filters(df)    parquet scan received PushedFilters
     assert_no_cartesian(df)      no CartesianProduct/BroadcastNestedLoop
     count_exchanges(df)          shuffle count in the plan
     has_wholestage_codegen(df)   at least one codegen span
@@ -49,14 +48,6 @@ def assert_no_cartesian(df: DataFrame) -> None:
 def pushed_filters(df: DataFrame) -> list[str]:
     plan = explain_str(df, "formatted")
     return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-
-
-def assert_pushed_filters(df: DataFrame, expect_nonempty: bool = True) -> None:
-    pf = pushed_filters(df)
-    if expect_nonempty:
-        assert any(p.strip() for p in pf), (
-            "no filters pushed to the scan:\n" + explain_str(df, "formatted")[:2000]
-        )
 
 
 def scan_columns(df: DataFrame) -> list[list[str]]:

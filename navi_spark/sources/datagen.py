@@ -22,7 +22,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from navi_spark.functions.urlnorm import host_of_py as _host_of_py
 from navi_spark.sources.codec import encode_image, make_pixels, phash64
 
 SEED = 42
@@ -292,10 +291,6 @@ def canonical_url_vec(idx: np.ndarray, n_hosts: int) -> pd.Series:
         "https://host" + pd.Series(hid).astype(str) + ".test/p/"
         + pd.Series(idx).astype(str)
     )
-
-
-def canonical_host_vec(idx: np.ndarray, n_hosts: int) -> pd.Series:
-    return "host" + pd.Series(host_id_for_vec(idx, n_hosts)).astype(str) + ".test"
 
 
 def dirty_url_vec(idx: np.ndarray, n_hosts: int) -> pd.Series:
@@ -744,98 +739,3 @@ def generate_video(spark: SparkSession, n: int, parts: int | None = None) -> Dat
 
     rng = spark.range(n, numPartitions=parts) if parts else spark.range(n)
     return rng.mapInPandas(gen, VIDEO_SCHEMA)
-
-
-def generate_documents(
-    spark: SparkSession,
-    n_docs: int,
-    vocab: int = 50_000,
-    parts: int | None = None,
-    dup_every: int = 10,
-) -> DataFrame:
-    """Synthetic corpus for the dedup/ANN scale harness: ``(doc_id, text)``.
-
-    Deterministic per doc_id (splitmix64 over (base_id, pos), vectorized
-    in numpy per Arrow batch). Every ``dup_every``-th doc
-    (i % dup_every == dup_every-1) is a near-duplicate of doc i-1 — the
-    same word sequence with exactly one substituted word — planting one
-    high-Jaccard pair per window (J ≈ (S-n)/(S+n) for S shingles of width
-    n; ~0.84 at the default 20-50 words, n=3). Word ids are skew-drawn
-    (u² over ``vocab``) so boilerplate shingles and hot LSH buckets occur
-    like a real crawl corpus.
-    """
-    M1 = np.uint64(0xBF58476D1CE4E5B9)
-    M2 = np.uint64(0x94D049BB133111EB)
-    M3 = np.uint64(0x9E3779B97F4A7C15)
-    _DIGITS2AZ = str.maketrans("0123456789", "abcdefghij")
-
-    def _mix(x):
-        x = (x ^ (x >> np.uint64(30))) * M1
-        x = (x ^ (x >> np.uint64(27))) * M2
-        return x ^ (x >> np.uint64(31))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b["id"].to_numpy().astype(np.int64)
-            if dup_every:
-                is_dup = ids % dup_every == dup_every - 1
-            else:
-                is_dup = np.zeros(len(ids), dtype=bool)
-            base = np.where(is_dup, ids - 1, ids).astype(np.uint64)
-            ln = 20 + (_mix(base * M3) % np.uint64(31)).astype(np.int64)
-            texts = []
-            for r in range(len(ids)):
-                length = int(ln[r])
-                pos = np.arange(length, dtype=np.uint64)
-                h = _mix(base[r] * M3 + pos + np.uint64(1))
-                u = (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-                w = (u * u * vocab).astype(np.int64)
-                if is_dup[r]:
-                    p = int(ids[r]) % length
-                    w[p] = (w[p] + 1) % vocab
-                # letters only: the shingle tokenizer strips [^a-z\s], so a
-                # digit-bearing token like "w38487" would collapse to "w"
-                texts.append(" ".join(str(x).translate(_DIGITS2AZ) for x in w))
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    rng = spark.range(n_docs, numPartitions=parts) if parts else spark.range(n_docs)
-    return rng.mapInPandas(gen, "doc_id long, text string")
-
-
-def generate_embeddings(
-    spark: SparkSession,
-    n_vecs: int,
-    dim: int = 64,
-    parts: int | None = None,
-) -> DataFrame:
-    """Synthetic embedding table for the ANN throughput harness:
-    ``(vec_id long, embedding array<float>)``.
-
-    Deterministic per (vec_id, component) via splitmix64 — components are
-    uniform in [-1, 1), which is all a cosine-ANN benchmark needs (the
-    pruning math never assumes gaussian-ness). Vectorized numpy per Arrow
-    batch: one (rows x dim) matrix of mixes, no per-row python."""
-    M1 = np.uint64(0xBF58476D1CE4E5B9)
-    M2 = np.uint64(0x94D049BB133111EB)
-    M3 = np.uint64(0x9E3779B97F4A7C15)
-
-    def _mix(x):
-        x = (x ^ (x >> np.uint64(30))) * M1
-        x = (x ^ (x >> np.uint64(27))) * M2
-        return x ^ (x >> np.uint64(31))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b["id"].to_numpy().astype(np.uint64)
-            cells = ids[:, None] * np.uint64(dim) + np.arange(
-                dim, dtype=np.uint64
-            )[None, :]
-            h = _mix(cells * M3)
-            u = (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-            m = (2.0 * u - 1.0).astype(np.float32)
-            yield pd.DataFrame(
-                {"vec_id": ids.astype(np.int64), "embedding": list(m)}
-            )
-
-    rng = spark.range(n_vecs, numPartitions=parts) if parts else spark.range(n_vecs)
-    return rng.mapInPandas(gen, "vec_id long, embedding array<float>")

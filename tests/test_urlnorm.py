@@ -182,11 +182,11 @@ def test_vectorized_fast_path_matches_reference_kernel():
         assert g == normalize_url_py(c), (c, g)
 
 
-def test_jvm_column_matches_reference_kernel(spark):
-    """r06: normalize_url_udf now builds a pure-JVM column
-    (normalize_url_column) — it must equal normalize_url_py element-wise
-    over the adversarial spellings, a seeded fuzz corpus on the URL
-    charset, and the dirty generator universe."""
+def test_normalize_udf_matches_reference_kernel(spark):
+    """normalize_url_udf, the Spark entry point of the Arrow kernel, must
+    equal normalize_url_py element-wise over the adversarial spellings, a
+    seeded fuzz corpus on the URL charset, and the dirty generator
+    universe."""
     import random
 
     import numpy as np
@@ -226,9 +226,9 @@ def test_jvm_column_matches_reference_kernel(spark):
         "https://example.com/a/%2e%2e", "++", "%", "%%", "%25", ":", "/",
         "//", "///a", "https:///a", "https://", "http://", "https://?q",
         "https://#f",
-        # fast-branch routing quirks (the www/www2/.eg char-count mangles
-        # and charset edges the _FAST_PRED lookaheads must route to the
-        # exact slow branch)
+        # fast-path routing quirks (the www/www2/.eg char-count mangles
+        # and charset edges that must either rewrite exactly like the
+        # reference or fall back to it)
         "https://www2.www2.x/a", "https://www2.www.x/a", "https://www25.x/a",
         "https://www.www2.x/a", "https://www2~x.test/a", "https://www2x.y/a",
         "https://www.eg/a", "https://www2.eg/a", "https://x.eg:8080/a",
@@ -271,3 +271,22 @@ def test_jvm_column_matches_reference_kernel(spark):
         .collect()
     )
     assert row[0]["n"] is None
+
+
+def test_normalize_udf_evaluates_once_under_not_null_filter(spark):
+    """Bootstrap's shape, select(normalize(raw)).filter(isNotNull(url)),
+    must run the kernel once per row. A deterministic UDF lets Catalyst
+    push the filter below the projection and plan the kernel twice; the
+    nondeterministic mark on normalize_url_udf keeps it at one
+    ArrowEvalPython node."""
+    df = spark.createDataFrame(
+        [("HTTPS://Example.COM/a/",), ("",), ("::0",)], ["raw"]
+    )
+    out = df.select(normalize_url_udf("raw").alias("url")).filter(
+        F.col("url").isNotNull()
+    )
+    assert [r["url"] for r in out.collect()] == ["https://example.com/a"]
+    plan = out._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 1, plan
+    assert "normalize_url_pandas_udf" in nodes[0], plan
