@@ -9,10 +9,9 @@ snapshot-committed table layer for checkpoint/resume.
 Subpackages
 -----------
 functions   pure column-level kernels (URL canonicalization, hashing, text)
-operators   crawler/indexer/ranker operators (frontier, robots, dedup, ...)
+operators   crawler/indexer/ranker operators (frontier, robots, fetch, ...)
 sources     deterministic synthetic data generation + image codec
-plans       plan-inspection helpers (explain, shuffle audit)
-streaming   micro-batch wave runner
+plans       plan-inspection helpers (explain, pushed filters)
 """
 
 __version__ = "0.1.0"

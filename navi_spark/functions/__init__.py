@@ -3,7 +3,6 @@
 from navi_spark.functions.urlnorm import (  # noqa: F401
     normalize_url_py,
     normalize_url_udf,
-    normalize_url_expr,
     host_of_py,
     host_expr,
     base_url_py,

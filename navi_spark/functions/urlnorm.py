@@ -30,8 +30,7 @@ One kernel serves the data plane: ``_normalize_vec``, a vectorized pyarrow
 fast path with ``normalize_url_py`` (the single-row reference) as its
 per-row fallback. Seeds reach it through the Arrow-batched
 ``normalize_url_udf`` and every wave's child links through the frontier's
-array kernel. ``normalize_url_expr`` is the Catalyst-builtin form of the
-percent-free subset, kept because the DuckDB oracle mirrors it in SQL.
+array kernel.
 """
 
 from __future__ import annotations
@@ -284,42 +283,6 @@ def normalize_url_pandas_udf(urls: pd.Series) -> pd.Series:
 # (INVALID_NON_DETERMINISTIC_EXPRESSIONS). Project the normalized URL into a
 # column first.
 normalize_url_udf = normalize_url_pandas_udf.asNondeterministic()
-
-
-def normalize_url_expr(col: Column) -> Column:
-    """Catalyst-builtin canonicalizer for the percent-free subset.
-
-    Expresses rules 1,3,5-8,10 of the reference pipeline as pure column
-    expressions, mirrorable in ANSI SQL for the DuckDB oracle. Valid only
-    when the URL contains no percent-escapes, dot-segments, '+', or
-    userinfo.
-
-    PERFORMANCE NOTE (measured, 500k urls, local[32]): the Arrow-batched
-    pandas UDF is the HOT PATH at ~9µs/url (4.6s); this expression tree is
-    ~12× slower (57s) because the chained regexp derivations of
-    scheme/authority/host/path defeat common-subexpression elimination and
-    re-evaluate ~40 regex ops per row. Use this for SQL-oracle parity and
-    small inputs, `normalize_url_udf` for the data plane.
-    """
-    u = F.lower(F.trim(col))
-    u = F.when(u.rlike("^https?://"), u).otherwise(F.concat(F.lit("https://"), u))
-    # split once: scheme, authority+rest
-    scheme = F.regexp_extract(u, r"^(https?)://", 1)
-    rest = F.regexp_replace(u, r"^https?://", "")
-    rest = F.regexp_replace(rest, r"#.*$", "")      # '#' never a fragment; but
-    # builtin subset targets fragment-free URLs — strip defensively
-    rest = F.regexp_replace(rest, r"\?.*$", "")     # query dropped (rule 10)
-    authority = F.regexp_extract(rest, r"^([^/]*)", 1)
-    path = F.regexp_replace(rest, r"^[^/]*", "")
-    host = F.regexp_replace(authority, r":\d+$", "")  # port dropped from output
-    host = F.when(host.startswith("www2"), host.substr(F.lit(6), F.length(host))).otherwise(
-        F.when(host.startswith("www"), host.substr(F.lit(5), F.length(host))).otherwise(host)
-    )
-    host = F.when(host.endswith(".eg"), host.substr(F.lit(1), F.length(host) - 3)).otherwise(host)
-    path = F.regexp_replace(path, r"/$", "")        # one trailing slash
-    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-        F.concat(scheme, F.lit("://"), host, path)
-    )
 
 
 def host_expr(col: Column) -> Column:

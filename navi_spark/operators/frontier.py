@@ -60,6 +60,7 @@ from __future__ import annotations
 
 import os
 import time
+import warnings
 from contextlib import ExitStack
 from dataclasses import dataclass, field
 
@@ -238,9 +239,10 @@ def take_k_smallest(pool: DataFrame, k: int,
     O(n/√sample) band between the pivots is sorted exactly for the
     remaining k - c_lo rows. Exchanges: one ≤ sample_rows collect
     (bounded by construction, like the IVF quantizer sample), one count
-    aggregate, one band-sized TakeOrdered. If an unlucky sample
-    misbrackets (P ≲ e^-18 at the 3/√m margin), falls back to the global
-    sort — logged, never silent. The returned set is EXACTLY the k
+    aggregate, one band-sized TakeOrdered. If the sample is empty or an
+    unlucky one misbrackets (P ≲ e^-18 at the 3/√m margin), falls back to
+    the global sort with a RuntimeWarning, never silently. The returned
+    set is EXACTLY the k
     smallest whichever path runs; only performance depends on the sample.
     Row order is unspecified (the wave consumes the attempt set as a set).
     """
@@ -254,6 +256,9 @@ def take_k_smallest(pool: DataFrame, k: int,
     )
     m = len(smp)
     if m == 0:
+        warnings.warn(f"top-k sample empty (n={n}, sample_rows="
+                      f"{sample_rows}); exact global-sort fallback",
+                      RuntimeWarning, stacklevel=2)
         return pool.orderBy("rank", "url").limit(k)
     delta = 3.0 / (m ** 0.5)
     q = k / n
@@ -276,9 +281,9 @@ def take_k_smallest(pool: DataFrame, k: int,
     ).collect()[0]
     c_lo, c_hi = cnt["c_lo"] or 0, cnt["c_hi"] or 0
     if not (c_lo <= k <= c_hi):
-        print(f"[frontier] WARNING: top-k sample misbracketed "
-              f"(c_lo={c_lo}, k={k}, c_hi={c_hi}) — exact global-sort "
-              f"fallback")
+        warnings.warn(f"top-k sample misbracketed (c_lo={c_lo}, k={k}, "
+                      f"c_hi={c_hi}); exact global-sort fallback",
+                      RuntimeWarning, stacklevel=2)
         return pool.orderBy("rank", "url").limit(k)
     head = pool.filter(below_lo)
     band = pool.filter(below_hi & ~below_lo)

@@ -37,15 +37,20 @@ def record_suggestion(suggestions, query: str) -> None:
     so a known query commits nothing. Each new query appends one data
     directory, which every later probe and GET /suggestions reads; the
     compaction after an append keeps that fan-out below compact()'s
-    `min_files` (8) however many distinct queries arrive."""
+    `min_files` (8) however many distinct queries arrive. A compaction
+    that commits also expires the history behind it, so the table's
+    manifests and data directories stay bounded too. It keeps the
+    compaction's parent, whose files a GET that resolved HEAD just before
+    may still be reading."""
     before = suggestions.snapshot_id()
     sid = suggestions.insert_absent(
         local_df(suggestions.spark, [(query,)], "suggestion string"),
         "suggestion",
         {"op": "search-side-effect"},
     )
-    if sid != before:
-        suggestions.compact(summary={"op": "search-side-effect"})
+    if sid != before and suggestions.compact(
+            summary={"op": "search-side-effect"}) is not None:
+        suggestions.expire_snapshots(retain_last=2)
 
 
 @dataclass

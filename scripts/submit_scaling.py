@@ -1,32 +1,24 @@
-"""North-rule packaging lane: the frontier job via ``spark-submit
+"""North-rule packaging lane: the CrawlEngine job via ``spark-submit
 --py-files`` at two parallelism levels.
 
-The main scaling table (BENCH/BASELINE.md, scripts/bench_scaling.py) runs
-the job in-process; the north rule additionally names the DELIVERY
-mechanism: "run via spark-submit --py-files on a multi-executor cluster at
-two cluster sizes (N and 4N executors)". This lane evidences that clause
-literally:
+The north rule names the delivery mechanism: "the whole job runs via
+spark-submit --py-files on N and 4N executors". This lane runs
+scripts/submit_frontier.py that way:
 
-* ``navi_spark`` is zipped (same content-hashed builder contract as
-  ``__spark_entry__._ensure_workers_can_import``) and shipped with
-  ``--py-files navi_spark.zip,bench.py``;
+* ``navi_spark`` is zipped and shipped with ``--py-files navi_spark.zip``,
+  the only artifact the job gets;
 * the job file is COPIED into an empty temp dir and submitted from there,
-  with PYTHONPATH scrubbed from the environment — the driver AND the
-  python workers can only import the package from the shipped artifacts
-  (the job asserts so, see scripts/submit_frontier.py);
+  with PYTHONPATH scrubbed from the environment, so the driver AND the
+  Python workers can only import the package from the zip (the job
+  asserts so);
 * two levels (local[N] / local[4N]), taskset-pinned, fresh JVM per run,
-  interleaved samples, min per level — identical hygiene to
-  scripts/bench_scaling.py so the numbers are comparable with the main
-  table's "full" job.
+  interleaved samples, min per level.
 
 Usage:
   python scripts/submit_scaling.py pair [n_urls] [N]   # one interleaved
         N / 4N sample, appends BENCH/submit_scaling.jsonl
-  python scripts/submit_scaling.py hunt [n_urls] [N] [max_pairs] [factor]
-        # probe the host window first (bench.py's committed cpu+shuffle
-        # probes) and only sample when quiet; records the admitting probe
-  python scripts/submit_scaling.py report [N]          # aggregate minima →
-        BENCH/SUBMIT_SCALING.md
+  python scripts/submit_scaling.py report [N] [n_urls] # aggregate minima
+        → BENCH/SUBMIT_SCALING.md
 """
 
 from __future__ import annotations
@@ -64,17 +56,14 @@ def run_at(cpus: int, n_urls: int, staging: str, zip_path: str) -> dict:
             "taskset", "-c", f"0-{cpus - 1}",
             SPARK_SUBMIT,
             "--master", f"local[{cpus}]",
-            # driver JVM options MUST be CLI flags here: the builder-config
-            # forms (bench.build_session) only work in-process, where the
-            # gateway launch forwards them — under external spark-submit
-            # the JVM is already up and they are silently ignored. The
-            # first sample batch (archived submit_scaling_defaultjvm.jsonl)
-            # ran on the default 1g G1 heap and measured a systematic
-            # ~1.4x slowdown vs the in-process lane.
-            "--driver-memory", "12g",
-            "--conf", "spark.driver.extraJavaOptions=-XX:+UseParallelGC",
-            "--py-files", f"{zip_path},{os.path.join(REPO, 'bench.py')}",
-            job, str(cpus), str(n_urls), REPO,
+            # the driver JVM is already up when the job builds its session,
+            # so its memory must be set here, not in the job
+            "--driver-memory", "2g",
+            "--conf", f"spark.sql.shuffle.partitions={2 * cpus}",
+            "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
+            "--conf", "spark.ui.enabled=false",
+            "--py-files", zip_path,
+            job, str(n_urls), REPO,
         ],
         capture_output=True, text=True, timeout=1800, cwd=staging, env=env,
     )
@@ -86,60 +75,20 @@ def run_at(cpus: int, n_urls: int, staging: str, zip_path: str) -> dict:
     )
 
 
-PROBE_CHILD = r"""
-import json, sys
-sys.path.insert(0, sys.argv[2])
-import bench
-spark = bench.build_session(int(sys.argv[1]))
-spark.sparkContext.setLogLevel("ERROR")
-print("RESULT " + json.dumps({
-    "cpu": bench.calibration(spark, 2),
-    "shuffle": bench.shuffle_calibration(spark, 2)}))
-spark.stop()
-"""
-
-
-def probe_window(cpus: int = 32) -> dict:
-    """Measure the host's current cpu + shuffle window (fresh pinned JVM,
-    bench.py's two committed probes).
-
-    ``cpus`` MUST match the context the committed reference floors were
-    measured in — local[32], the whole machine (bench.py main sessions).
-    Both probes are fixed-size jobs, so a 16-core probe reads ~2x the
-    32-core floor on a PERFECTLY QUIET host; the first hunt deployment
-    probed at 4N=16 and rejected an hour of genuinely quiet windows
-    (steady cpu 1.6-2.0 s / shuffle 1.9-2.6 s — i.e. the 16-core quiet
-    floor) before this was caught. The probe reads the HOST's window;
-    the job pairs it admits then pin to their own N/4N levels."""
-    out = subprocess.run(
-        ["taskset", "-c", f"0-{cpus - 1}", sys.executable, "-c",
-         PROBE_CHILD, str(cpus), REPO],
-        capture_output=True, text=True, timeout=1200, cwd=REPO,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise RuntimeError(f"probe failed:\n{out.stdout[-1000:]}\n{out.stderr[-1000:]}")
-
-
-def do_pair(n_urls: int, n: int, window: dict | None = None) -> None:
+def main_pair() -> None:
+    n_urls = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
+    n = int(sys.argv[3]) if len(sys.argv) > 3 else 4
+    os.makedirs(os.path.dirname(RUNS), exist_ok=True)
     staging = tempfile.mkdtemp(prefix="navi-submit-")
     try:
         zip_path = build_zip(staging)
         with open(RUNS, "a") as f:
             for cpus in (n, 4 * n):
                 r = run_at(cpus, n_urls, staging, zip_path)
-                rec = {
-                    "lane": "spark-submit --py-files",
-                    "cpus": cpus,
-                    "config": {"shuffle_compress": False,
-                               "local_dir_tmpfs": True,
-                               "driver_memory": "12g",
-                               "gc": "ParallelGC"},
-                    **r,
-                }
-                if window:
-                    rec["host_window"] = window
+                rec = {"lane": "spark-submit --py-files", "job": "CrawlEngine",
+                       "cpus": cpus,
+                       **{k: v for k, v in r.items()
+                          if k not in ("visit_order", "seen")}}
                 f.write(json.dumps(rec) + "\n")
                 f.flush()
                 print(rec, flush=True)
@@ -147,57 +96,14 @@ def do_pair(n_urls: int, n: int, window: dict | None = None) -> None:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def main_pair() -> None:
-    n_urls = int(sys.argv[2]) if len(sys.argv) > 2 else 8_000_000
-    n = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-    os.makedirs(os.path.dirname(RUNS), exist_ok=True)
-    do_pair(n_urls, n)
-
-
-def main_hunt() -> None:
-    """Quiet-window hunter: the shared hypervisor has multi-hour windows
-    where the shuffle path runs 2-50x slow (bench.py's probe finding —
-    e.g. shuffle probe 32-48 s vs the 0.98 s committed quiet floor).
-    Samples taken inside such a window measure the neighbor, not the job.
-    This mode probes first (same two committed probes every bench run
-    emits) and only spends a pair when BOTH probes are within `factor`
-    of their quiet floors; each sample records the probe values that
-    admitted it, so every archived number carries its own evidence of a
-    quiet host.
-
-    Usage: submit_scaling.py hunt [n_urls] [N] [max_pairs] [factor]
-    """
-    import time as _time
-
-    n_urls = int(sys.argv[2]) if len(sys.argv) > 2 else 8_000_000
-    n = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-    max_pairs = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-    factor = float(sys.argv[5]) if len(sys.argv) > 5 else 1.6
-    sys.path.insert(0, REPO)
-    import bench
-
-    os.makedirs(os.path.dirname(RUNS), exist_ok=True)
-    done = 0
-    while done < max_pairs:
-        w = probe_window()
-        quiet = (
-            min(w["cpu"]) <= factor * bench.CALIBRATION_REF_SEC
-            and min(w["shuffle"]) <= factor * bench.SHUFFLE_CALIBRATION_REF_SEC
-        )
-        print(json.dumps({"probe": w, "quiet": quiet}), flush=True)
-        if quiet:
-            do_pair(n_urls, n, window=w)
-            done += 1
-        else:
-            _time.sleep(240)
-
-
 def main_report() -> None:
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    n_urls = int(sys.argv[3]) if len(sys.argv) > 3 else 8_000_000
-    # pin the input size too: smoke-test rows at other sizes share the file
+    n_urls = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
+    # only CrawlEngine rows at this size: the file also holds the retired
+    # proxy job's samples and smoke-test rows at other sizes
     rows = [json.loads(ln) for ln in open(RUNS)]
-    rows = [r for r in rows if r["n_urls"] == n_urls]
+    rows = [r for r in rows
+            if r.get("job") == "CrawlEngine" and r["n_urls"] == n_urls]
     lo = [r for r in rows if r["cpus"] == n]
     hi = [r for r in rows if r["cpus"] == 4 * n]
     if not lo or not hi:
@@ -210,39 +116,37 @@ def main_report() -> None:
     with open(path, "w") as f:
         f.write(f"""# BENCH/SUBMIT_SCALING.md — spark-submit --py-files lane
 
-The north rule names the delivery mechanism explicitly: "run via
-spark-submit --py-files on a multi-executor cluster at two cluster sizes
-(N and 4N executors)". This lane runs the SAME full wave-scheduling job as
-BENCH/BASELINE.md's "full" row, but launched with
-`spark-submit --master local[{{N}}] --py-files navi_spark.zip,bench.py`
+The north rule names the delivery mechanism: "the whole job runs via
+spark-submit --py-files on N and 4N executors". The job is `CrawlEngine`
+(scripts/submit_frontier.py: `bootstrap` + `run` over the synthetic
+universe), launched with
+`spark-submit --master local[{{N}}] --py-files navi_spark.zip`
 from an empty temp dir with PYTHONPATH scrubbed — the driver and the
-python workers import navi_spark ONLY from the shipped zip (asserted
+Python workers import navi_spark ONLY from the shipped zip (asserted
 in-job: `navi_spark.__file__` must resolve inside the zip and must not
-start with the repo root). That is the exact import topology of a real
-cluster whose executors share nothing with the driver's checkout.
+start with the repo root).
 
 ## Result ({blo['n_urls']:,} URLs, min over {len(lo)}/{len(hi)} interleaved samples)
 
-| level | wall | URLs/s |
+| level | wall | pages fetched |
 |---|---|---|
-| local[{n}] | {blo['wall_sec']} s | {blo['urls_per_sec']:,} |
-| local[{4 * n}] | {bhi['wall_sec']} s | {bhi['urls_per_sec']:,} |
+| local[{n}] | {blo['wall_sec']} s | {blo['fetched']:,} |
+| local[{4 * n}] | {bhi['wall_sec']} s | {bhi['fetched']:,} |
 
 **speedup {speedup}× / 4 → scaling efficiency {eff}**
 
 All walls — local[{n}]: {sorted(r['wall_sec'] for r in lo)},
 local[{4 * n}]: {sorted(r['wall_sec'] for r in hi)}.
-Package origin in the best run: `{blo.get('pkg_origins', {}).get('navi_spark', '?')}`.
+Package origin in the best run: `{blo['pkg_origins']['navi_spark']}`.
 
-Protocol = scripts/bench_scaling.py (taskset-pinned fresh JVM, two-step
-in-JVM warmup, interleaved levels, min per level); samples in
-BENCH/submit_scaling.jsonl, each self-describing its config. The
-packaging itself is regression-tested at small scale by
-tests/test_spark_submit.py on every pytest run.
+Protocol: taskset-pinned fresh JVM per run, interleaved levels, min per
+level; samples in BENCH/submit_scaling.jsonl (rows with
+`"job": "CrawlEngine"`). The packaging itself, with oracle parity of the
+crawl, is regression-tested at small scale by tests/test_spark_submit.py.
 
 Generated by:
   python scripts/submit_scaling.py pair {blo['n_urls']} {n}   (×S samples)
-  python scripts/submit_scaling.py report {n}
+  python scripts/submit_scaling.py report {n} {blo['n_urls']}
 """)
     print(f"wrote {path}")
     print(json.dumps({"speedup": speedup, "efficiency": eff,
@@ -251,5 +155,4 @@ Generated by:
 
 
 if __name__ == "__main__":
-    {"pair": main_pair, "report": main_report,
-     "hunt": main_hunt}[sys.argv[1]]()
+    {"pair": main_pair, "report": main_report}[sys.argv[1]]()

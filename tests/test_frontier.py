@@ -985,14 +985,15 @@ def test_take_k_smallest_k_covers_pool(spark):
         pool.unpersist()
 
 
-def test_take_k_smallest_fallback_is_exact(spark, capsys):
-    """A degenerate 1-row sample misbrackets; the guard must reroute to
-    the exact global sort, loudly."""
+def test_take_k_smallest_fallback_is_exact(spark):
+    """A degenerate 1-row sample (none drawn here) cannot bracket the k-th
+    key; the guard must reroute to the exact global sort, loudly."""
     from navi_spark.operators.frontier import take_k_smallest
 
     pool = _topk_pool(spark, 30_000, "equal").persist()
     try:
-        got = take_k_smallest(pool, 12_000, sample_rows=1)
+        with pytest.warns(RuntimeWarning, match="global-sort fallback"):
+            got = take_k_smallest(pool, 12_000, sample_rows=1)
         exp = pool.orderBy("rank", "url").limit(12_000)
         assert got.exceptAll(exp).isEmpty() and exp.exceptAll(got).isEmpty()
     finally:

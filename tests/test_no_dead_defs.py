@@ -1,8 +1,7 @@
 """Every top-level function or class in navi_spark/ is used somewhere: its
-name appears as a Name, an Attribute or an import alias in some .py file
-of the repo outside its own definition. A string literal does not count.
-The registry modules are exempt, because queries() reaches their entries
-by name."""
+name appears as a Name or an Attribute in some .py file of the repo
+outside its own definition. Neither a string literal nor an import counts:
+a name that is imported but never used keeps nothing alive."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "navi_spark"
-EXEMPT = {PKG / "queries.py", PKG / "extra_queries.py"}
 
 
 def _sources() -> list[pathlib.Path]:
@@ -22,15 +20,13 @@ def _sources() -> list[pathlib.Path]:
 
 
 def _references(tree: ast.AST) -> list[tuple[str, int]]:
-    """(name, line) for every Name, Attribute and import alias."""
+    """(name, line) for every Name and Attribute."""
     refs = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             refs.append((node.id, node.lineno))
         elif isinstance(node, ast.Attribute):
             refs.append((node.attr, node.lineno))
-        elif isinstance(node, ast.alias):
-            refs.append((node.name.rsplit(".", 1)[-1], node.lineno))
     return refs
 
 
@@ -43,7 +39,7 @@ def test_navi_spark_has_no_unreferenced_defs():
             refs.setdefault(name, []).append((p, line))
     dead = []
     for path, tree in trees.items():
-        if not path.is_relative_to(PKG) or path in EXEMPT:
+        if not path.is_relative_to(PKG):
             continue
         for node in tree.body:
             if not isinstance(

@@ -14,7 +14,6 @@ from navi_spark.functions.urlnorm import (
     base_url_py,
     host_expr,
     host_of_py,
-    normalize_url_expr,
     normalize_url_py,
     normalize_url_udf,
     url_hash64,
@@ -88,30 +87,6 @@ def test_normalize_udf_matches_py(spark):
     }
     for raw in raws:
         assert got[raw] == normalize_url_py(raw), raw
-
-
-def test_normalize_expr_fast_path(spark):
-    """The builtin-expression subset agrees with the kernel on clean URLs
-    (no percent escapes / dot segments / '+')."""
-    clean = [
-        "  HTTPS://Example.COM/Path  ",
-        "example.com/a",
-        "http://example.com/a",
-        "https://example.com:8080/a",
-        "https://example.com/a?q=1",
-        "https://example.com/a/",
-        "https://www.example.com/a",
-        "https://www2.example.com/a",
-        "https://wwwfoo.com/a",
-        "https://site.com.eg/a",
-        "https://example.com",
-    ]
-    df = spark.createDataFrame([(r,) for r in clean], ["url"])
-    rows = df.select(
-        "url", normalize_url_expr(F.col("url")).alias("norm")
-    ).collect()
-    for r in rows:
-        assert r["norm"] == normalize_url_py(r["url"]), r["url"]
 
 
 def test_host_and_base():
