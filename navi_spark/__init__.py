@@ -12,6 +12,7 @@ functions   pure column-level kernels (URL canonicalization, hashing, text)
 operators   crawler/indexer/ranker operators (frontier, robots, fetch, ...)
 sources     deterministic synthetic data generation + image codec
 plans       plan-inspection helpers (explain, pushed filters)
+streaming   Structured Streaming seen-filter and rollup
 """
 
 __version__ = "0.1.0"

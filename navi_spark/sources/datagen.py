@@ -15,6 +15,7 @@ north-rule salting story, dirty URL variants covering every C3 rule).
 from __future__ import annotations
 
 import zlib
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -637,3 +638,104 @@ def generate_robots(spark: SparkSession, n_hosts: int = 100) -> DataFrame:
     if not rows:
         return spark.createDataFrame([], ROBOTS_SCHEMA)
     return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+
+
+# ---------------------------------------------------------------------------
+# synthetic audio / video payloads (multimodal pipeline)
+# ---------------------------------------------------------------------------
+
+AUDIO_SCHEMA = "audio_id string, bytes binary, codec string, sample_rate int"
+VIDEO_SCHEMA = "video_id string, bytes binary, container string"
+
+AUDIO_SAMPLE_RATE = 16_000
+VIDEO_W, VIDEO_H = 16, 12
+VIDEO_MAGIC = b"NVID"
+
+
+def audio_params(i: int) -> tuple[int, int]:
+    """(n_samples, amplitude) of clip i — closed-form so tests can state
+    the decoder's expected outputs (a ±A square wave has peak = A,
+    mean|x| = A and RMS = A exactly, integer-exact in IEEE double)."""
+    return 8_000 + (i * 37) % 8_000, 1_000 + (i * 97) % 20_000
+
+
+def audio_wav_bytes(i: int) -> bytes:
+    """A real RIFF/WAVE payload (PCM16 mono): period-2 square wave of
+    amplitude A — decodable by any WAV reader, stdlib `wave` included."""
+    import io
+    import wave as wave_mod
+
+    n, amp = audio_params(i)
+    x = np.empty(n, dtype=np.int16)
+    x[0::2] = amp
+    x[1::2] = -amp
+    buf = io.BytesIO()
+    with wave_mod.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(AUDIO_SAMPLE_RATE)
+        w.writeframes(x.tobytes())
+    return buf.getvalue()
+
+
+def generate_audio(spark: SparkSession, n: int, parts: int | None = None) -> DataFrame:
+    """Opaque-binary audio table: (audio_id, bytes, codec, sample_rate)."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            idx = [int(i) for i in b["id"]]
+            yield pd.DataFrame(
+                {
+                    "audio_id": [f"aud{i:08d}" for i in idx],
+                    "bytes": [audio_wav_bytes(i) for i in idx],
+                    "codec": ["wav"] * len(idx),
+                    "sample_rate": [AUDIO_SAMPLE_RATE] * len(idx),
+                }
+            )
+
+    rng = spark.range(n, numPartitions=parts) if parts else spark.range(n)
+    return rng.mapInPandas(gen, AUDIO_SCHEMA)
+
+
+def video_params(i: int) -> int:
+    """n_frames of clip i — closed-form, so tests can state it."""
+    return 10 + i % 20
+
+
+def video_frame_value(i: int, j: int) -> int:
+    """Constant pixel value of frame j in clip i (mean is then exact)."""
+    return (i * 7 + j * 13) % 256
+
+
+def video_container_bytes(i: int) -> bytes:
+    """The synthetic raw-frame container: magic 'NVID' + n_frames/w/h
+    uint32 LE header, then n_frames × (h·w·3) RGB24 frames."""
+    import struct
+
+    n_frames = video_params(i)
+    head = VIDEO_MAGIC + struct.pack(
+        "<III", n_frames, VIDEO_W, VIDEO_H
+    )
+    frames = b"".join(
+        bytes([video_frame_value(i, j)]) * (VIDEO_W * VIDEO_H * 3)
+        for j in range(n_frames)
+    )
+    return head + frames
+
+
+def generate_video(spark: SparkSession, n: int, parts: int | None = None) -> DataFrame:
+    """Opaque-binary video table: (video_id, bytes, container)."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            idx = [int(i) for i in b["id"]]
+            yield pd.DataFrame(
+                {
+                    "video_id": [f"vid{i:08d}" for i in idx],
+                    "bytes": [video_container_bytes(i) for i in idx],
+                    "container": ["nvid"] * len(idx),
+                }
+            )
+
+    rng = spark.range(n, numPartitions=parts) if parts else spark.range(n)
+    return rng.mapInPandas(gen, VIDEO_SCHEMA)
