@@ -22,11 +22,12 @@ metadata does, so a read hands it to the parquet reader and never starts
 the footer-reading Spark job that schema inference costs.
 
 :func:`arrow_table` turns the small relations the driver itself produces
-(seed lists, the per-wave ``state``/``lineage``/``metrics`` rows, empty
-tables for ``read_or_empty``) into one Arrow table. :func:`local_df` hands
-that table to the JVM as a DataFrame, so building it runs no Python worker
-task; ``append``/``overwrite`` also take the Arrow table itself and write
-it with ``pyarrow.parquet``, so committing it runs no Spark job at all.
+(seed lists, the per-wave ``state``/``lineage``/``metrics`` rows, a
+query's suggestion row, empty tables for ``read_or_empty``) into one
+Arrow table. :func:`local_df` hands that table to the JVM as a DataFrame,
+so building it runs no Python worker task; ``append``/``overwrite``/
+``insert_absent`` also take the Arrow table itself and write it with
+``pyarrow.parquet``, so committing it runs no Spark job at all.
 
 On a real cluster every call site swaps one-for-one onto Iceberg:
 ``append``   → ``df.writeTo(tbl).append()``; an Arrow table →
@@ -35,6 +36,7 @@ PyIceberg's ``Table.append(pa.Table)``
 PyIceberg's ``Table.overwrite(pa.Table)``
 ``merge_upsert`` → ``MERGE INTO tbl USING src ON key``
 ``insert_absent`` → ``MERGE INTO … WHEN NOT MATCHED THEN INSERT *``
+(its source is an Arrow table of driver-built rows)
 ``read(snapshot_id=k)`` → ``spark.read.option("snapshot-id", k).table(tbl)``
 (the schema comes from the table metadata there too)
 ``arrow_table``/``local_df`` → unchanged (they are the source of a
@@ -43,7 +45,9 @@ commit, not a table operation)
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import shutil
 import uuid
@@ -51,6 +55,7 @@ from typing import Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
@@ -209,23 +214,39 @@ class SnapshotTable:
         # here would materialize the full table twice — block store + parquet)
         return self.overwrite(merged, summary)
 
-    def insert_absent(self, src: DataFrame, key: str | list[str],
+    def insert_absent(self, rows: pa.Table, key: str | list[str],
                       summary: Optional[dict] = None) -> int:
-        """MERGE INTO … USING src ON key WHEN NOT MATCHED THEN INSERT *.
+        """MERGE INTO … USING rows ON key WHEN NOT MATCHED THEN INSERT *,
+        for a source of driver-built rows (an Arrow table, see
+        :func:`arrow_table`).
 
-        Insert-only: the rows of `src` whose key the table lacks are
-        appended; matched rows stay as they are. When every key is already
-        present nothing is committed and the current snapshot id is
-        returned, so re-recording a known row costs a probe, not a
+        Insert-only: the rows whose key the table lacks are appended;
+        matched rows stay as they are. One filtered read of the table
+        fetches which of the source's keys it already holds, and the
+        absent rows commit through the Arrow path, so no Spark write job
+        runs. A null key matches nothing, as in MERGE. When every key is
+        already present nothing is committed and the current snapshot id
+        is returned, so re-recording a known row costs one probe, not a
         rewrite of the table (merge_upsert rewrites it on every call)."""
         keys = [key] if isinstance(key, str) else list(key)
         if not self.exists():
-            return self.overwrite(src, summary)
-        tgt = self.read()
-        new = src.join(tgt.select(*keys), on=keys, how="left_anti")
-        if new.isEmpty():
+            return self.overwrite(rows, summary)
+        src = [tuple(r[k] for k in keys) for r in rows.select(keys).to_pylist()]
+        if not src:
             return self.snapshot_id()
-        return self.append(new.select(*tgt.columns), summary)
+        match = functools.reduce(operator.or_, (
+            functools.reduce(operator.and_, (
+                F.col(k) == F.lit(v) for k, v in zip(keys, vals)))
+            for vals in src))
+        tgt = self.read()
+        present = {tuple(r) for r in
+                   tgt.filter(match).select(*keys).collect()}
+        absent = [i for i, vals in enumerate(src) if vals not in present]
+        if not absent:
+            return self.snapshot_id()
+        return self.append(
+            rows.take(absent).select(tgt.columns)
+            .cast(to_arrow_schema(tgt.schema)), summary)
 
     # -- maintenance ---------------------------------------------------------
     def data_files(self, snapshot_id: Optional[int] = None) -> list[tuple[str, int]]:

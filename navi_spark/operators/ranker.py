@@ -20,7 +20,7 @@ from dataclasses import dataclass
 from typing import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 K1 = 1.5
 B = 0.75
@@ -69,6 +69,28 @@ def avg_field_lengths(
     return {f_: (avg_row[f_] or 0.0) for f_ in fields}
 
 
+def bm25f_term_score(
+    avg_lengths: dict[str, float],
+    fields: Sequence[str] = ("h1", "h2", "a", "other"),
+    weights: dict[str, float] | None = None,
+) -> Column:
+    """R3's per-row score Σ_f w_f · IDF · tf_f(k+1) / (tf_f + k(1−b+b·len_f/avg_f))
+    over a posting row that carries ``idf``, ``tf_<field>`` and
+    ``len_<field>``. It depends on the index alone, so a server builds it
+    once: each Column call costs a driver-side call-site capture."""
+    weights = weights or FIELD_WEIGHTS
+    per_field = None
+    for f_ in fields:
+        w = float(weights.get(f_, 1.0))
+        tf = F.col(f"tf_{f_}")
+        avg = max(avg_lengths[f_], 1e-9)
+        num = tf * (K1 + 1.0)
+        den = tf + K1 * (1.0 - B + B * F.col(f"len_{f_}") / F.lit(avg))
+        term = F.lit(w) * F.col("idf") * num / den
+        per_field = term if per_field is None else per_field + term
+    return per_field
+
+
 def bm25f(
     postings: DataFrame,
     lengths: DataFrame | None,
@@ -79,6 +101,7 @@ def bm25f(
     last_term_overwrite: bool = False,
     avg_lengths: dict[str, float] | None = None,
     idf_table: DataFrame | None = None,
+    term_score: Column | None = None,
 ) -> DataFrame:
     """R3: per-field weighted BM25, summed over fields then over terms.
 
@@ -95,23 +118,31 @@ def bm25f(
     n_docs)`` result (the term dictionary's DF column). Without it every
     query re-aggregates document frequency — an exchange whose input is
     the full posting list of each query term. Values are identical by
-    construction (same function at build time).
+    construction (same function at build time). Posting rows that
+    already carry an ``idf`` column (the serving layout,
+    search.serving_layout) need neither: they join nothing.
 
     ``lengths`` may be None when the posting rows already carry the
     ``len_<field>`` columns (indexer.embed_field_lengths) — the served-
     index layout where one posting row holds everything BM25F needs and
-    a query never joins the corpus-sized lengths table."""
-    weights = weights or FIELD_WEIGHTS
-    embedded = all(f"len_{f_}" in postings.columns for f_ in fields)
-    if avg_lengths is None and lengths is None:
-        raise ValueError("avg_lengths or lengths required")
-    avgs = avg_lengths if avg_lengths is not None else avg_field_lengths(
-        lengths, fields
-    )
+    a query never joins the corpus-sized lengths table.
 
-    qt = postings.filter(F.col("word").isin(*terms))
-    idf_df = idf_table if idf_table is not None else idf(postings, n_docs)
-    j = qt.join(idf_df, "word")
+    ``term_score``: a prebuilt :func:`bm25f_term_score` over the same
+    averages and weights; ``avg_lengths`` and ``lengths`` are then not
+    read."""
+    embedded = all(f"len_{f_}" in postings.columns for f_ in fields)
+    if term_score is None:
+        if avg_lengths is None and lengths is None:
+            raise ValueError("avg_lengths or lengths required")
+        avgs = avg_lengths if avg_lengths is not None else avg_field_lengths(
+            lengths, fields
+        )
+        term_score = bm25f_term_score(avgs, fields, weights)
+
+    j = postings.filter(F.col("word").isin(*terms))
+    if "idf" not in postings.columns:
+        idf_df = idf_table if idf_table is not None else idf(postings, n_docs)
+        j = j.join(idf_df, "word")
     if not embedded:
         if lengths is None:
             raise ValueError(
@@ -119,16 +150,6 @@ def bm25f(
                 "was given"
             )
         j = j.join(lengths, "doc_id")
-    per_field = None
-    for f_ in fields:
-        w = float(weights.get(f_, 1.0))
-        tf = F.col(f"tf_{f_}")
-        avg = max(avgs[f_], 1e-9)
-        num = tf * (K1 + 1.0)
-        den = tf + K1 * (1.0 - B + B * F.col(f"len_{f_}") / F.lit(avg))
-        term = F.lit(w) * F.col("idf") * num / den
-        per_field = term if per_field is None else per_field + term
-    scored = j.withColumn("term_score", per_field)
     if last_term_overwrite:
         # reference bug parity: the LAST query term (in `terms` order)
         # present in the doc overwrites the doc's score (Ranker.java:268)
@@ -139,31 +160,40 @@ def bm25f(
 
         w_last = Window.partitionBy("doc_id").orderBy(F.desc(order))
         return (
-            scored.withColumn("_rn", F.row_number().over(w_last))
+            j.withColumn("term_score", term_score)
+            .withColumn("_rn", F.row_number().over(w_last))
             .filter(F.col("_rn") == 1)
             .select("doc_id", F.col("term_score").alias("relevance"))
         )
-    return scored.groupBy("doc_id").agg(
-        F.sum("term_score").alias("relevance")
-    )
+    return j.groupBy("doc_id").agg(F.sum(term_score).alias("relevance"))
 
 
 def hybrid_rank(
-    relevance: DataFrame, pages: DataFrame, limit: int | None = None
+    relevance: DataFrame, pages: DataFrame | None = None,
+    limit: int | None = None,
 ) -> DataFrame:
     """R7+R8: join PageRank popularity, 0.7/0.3 blend, sort desc.
 
-    pages must carry (url→doc_id key, rank). TakeOrderedAndProject when
+    pages must carry (url→doc_id key, rank). A `relevance` that already
+    carries `pop` (the serving layout's docs table joined on, or a phrase
+    scan that kept the page's rank) joins nothing, and `pages` is not
+    read. Columns of `relevance` besides doc_id, relevance and pop (the
+    snippet text) ride along to the output. TakeOrderedAndProject when
     `limit` is set — never a global sort for top-k."""
-    joined = relevance.join(
-        pages.select(F.col("url").alias("doc_id"), F.col("rank").alias("pop")),
-        "doc_id",
-        "left",
-    ).fillna({"pop": 0.0})
-    out = joined.select(
+    if "pop" not in relevance.columns:
+        relevance = relevance.join(
+            pages.select(F.col("url").alias("doc_id"),
+                         F.col("rank").alias("pop")),
+            "doc_id",
+            "left",
+        ).fillna({"pop": 0.0})
+    carried = [c for c in relevance.columns
+               if c not in ("doc_id", "relevance", "pop")]
+    out = relevance.select(
         "doc_id",
         (HYBRID_RELEVANCE * F.col("relevance")
          + HYBRID_POPULARITY * F.col("pop")).alias("score"),
+        *carried,
     ).orderBy(F.desc("score"), "doc_id")
     return out.limit(limit) if limit else out
 
@@ -322,19 +352,29 @@ def phrase_scores(
     pages: DataFrame, rx: str,
     field_cols: dict[str, str],
     weights: dict[str, float] | None = None,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """R11: per field, w_f · matches / field_len (Ranker.java:324-407) —
-    regexp_count + size(split) keep it JVM-side (no UDF)."""
+    regexp_count + size(split) keep it JVM-side (no UDF). The `carry`
+    columns of `pages` (a served scan's popularity and snippet text) pass
+    through to the output.
+
+    A field is split for its length only where the phrase occurs in it:
+    a match makes the field non-empty, so its length is ≥ 1, and a field
+    without one scores 0.0 either way. The counts are ints that the
+    arithmetic widens to double, as explicit casts would; each Column call
+    costs the driver a call-site capture, so the score uses few."""
     weights = weights or FIELD_WEIGHTS
     score = None
     for name, col in field_cols.items():
         w = float(weights.get(name, 1.0))
-        freq = F.regexp_count(F.col(col), F.lit(rx)).cast("double")
-        flen = F.size(F.split(F.col(col), "\\s+")).cast("double")
-        term = F.when(flen > 0, F.lit(w) * freq / flen).otherwise(F.lit(0.0))
+        c = F.col(col)
+        freq = F.regexp_count(c, F.lit(rx))
+        flen = F.size(F.split(c, "\\s+"))
+        term = F.when(freq > 0, freq * w / flen).otherwise(0.0)
         score = term if score is None else score + term
     return pages.select(
-        F.col("url").alias("doc_id"), score.alias("phrase_score")
+        F.col("url").alias("doc_id"), score.alias("phrase_score"), *carry
     ).filter(F.col("phrase_score") > 0)
 
 

@@ -15,27 +15,25 @@ queryengine/QueryEngine.java:360-375 (quoted phrase, bare terms, `X OR Y`,
 
 from __future__ import annotations
 
-import threading
+import uuid
 from dataclasses import dataclass
-from typing import Sequence
+from functools import cached_property
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
-from navi_spark.catalog import local_df
-from navi_spark.operators import ranker
+from navi_spark.catalog import arrow_table
+from navi_spark.operators import indexer, ranker
 from navi_spark.operators.queryengine import parse_query, snippet
-
-# held by search() for a whole query: it sets session-wide confs
-_CONF_LOCK = threading.Lock()
 
 
 def record_suggestion(suggestions, query: str) -> None:
     """Record `query` in the `suggestions` SnapshotTable with the
     reference's exact-duplicate check (DBManager.java:680-703
     insertSuggestion): an insert-only MERGE keyed on the raw query text,
-    so a known query commits nothing. Each new query appends one data
-    directory, which every later probe and GET /suggestions reads; the
+    so a known query commits nothing and costs one filtered read. Each
+    new query appends one data directory (an Arrow write, no Spark job),
+    which every later probe and GET /suggestions reads; the
     compaction after an append keeps that fan-out below compact()'s
     `min_files` (8) however many distinct queries arrive. A compaction
     that commits also expires the history behind it, so the table's
@@ -44,7 +42,7 @@ def record_suggestion(suggestions, query: str) -> None:
     may still be reading."""
     before = suggestions.snapshot_id()
     sid = suggestions.insert_absent(
-        local_df(suggestions.spark, [(query,)], "suggestion string"),
+        arrow_table([(query,)], "suggestion string"),
         "suggestion",
         {"op": "search-side-effect"},
     )
@@ -60,6 +58,108 @@ class SearchResult:
     snippet: str
 
 
+@dataclass
+class ServingLayout:
+    """What a ranking plan reads, laid out so that a terms query needs no
+    exchange: `postings` and `docs` are both hash-partitioned by doc_id on
+    the served postings' partition count, so BM25F's per-doc sum and the
+    join that brings in popularity and snippet text run inside the
+    partitions they read. Every column is index metadata, never query
+    state, so a server builds the layout once (:meth:`persist`);
+    :func:`search` without one builds the same plans over its inputs."""
+
+    postings: DataFrame    # (doc_id, word, tf_<f>…, len_<f>…, idf)
+    docs: DataFrame        # (doc_id, pop, _text)
+    pages: DataFrame       # (url, <field columns>, pop, _text)
+    fields: list[str]
+    avg_lengths: dict[str, float] | None
+    lengths: DataFrame | None
+
+    @cached_property
+    def term_score(self) -> Column:
+        """The query-independent BM25F row score (R3/R4)."""
+        if self.avg_lengths is None and self.lengths is None:
+            raise ValueError("avg_lengths or lengths required")
+        avgs = (self.avg_lengths if self.avg_lengths is not None
+                else ranker.avg_field_lengths(self.lengths, self.fields))
+        return ranker.bm25f_term_score(avgs, self.fields)
+
+    def persist(self) -> "ServingLayout":
+        """Cache and materialize both tables and build the score Column.
+
+        Spark's cache manager keeps one entry per plan, so two servers
+        over one index would share their layout's entries, and the first
+        stop() would uncache the other server's layout. A filter on a
+        literal unique to this layout, which the optimizer folds away,
+        gives its tables plans of their own."""
+        own = F.lit(uuid.uuid4().hex)
+        self.postings, self.docs = (
+            df.filter(own == own).cache() for df in (self.postings, self.docs))
+        for df in (self.postings, self.docs):
+            df.count()
+        self.term_score
+        return self
+
+    def unpersist(self) -> None:
+        for df in (self.postings, self.docs):
+            df.unpersist()
+
+
+def serving_layout(
+    pages: DataFrame,
+    postings: DataFrame,
+    lengths: DataFrame | None,
+    field_cols: dict[str, str],
+    n_docs: int,
+    snippet_field: str | None = None,
+    avg_lengths: dict[str, float] | None = None,
+    idf_table: DataFrame | None = None,
+) -> ServingLayout:
+    """The serving layout of an index: `postings` with the field lengths
+    (joined from `lengths` unless embedded, indexer.embed_field_lengths)
+    and `idf` on every row — the idf join is inner, so terms with idf ≤ 0
+    drop out as in R2 — and a `docs` table of each page's popularity
+    (rank, 0 when null) and snippet text (`snippet_field`, default the
+    first field column). Both are lazy; :meth:`ServingLayout.persist`
+    materializes them.
+
+    `avg_lengths`: optional prebuilt ranker.avg_field_lengths(lengths, ...)
+    — index metadata, computed once at build time; without it the layout's
+    first terms query pays an aggregation job over the lengths table (R4
+    depends only on the index, never on the query).
+
+    `idf_table`: optional prebuilt ranker.idf(postings, n_docs) — the term
+    dictionary's DF/IDF column, also index metadata (R1/R2); without it
+    the layout re-aggregates document frequency from the postings."""
+    fields = list(field_cols)
+    parts = max(postings.rdd.getNumPartitions(), 1)
+    if not all(f"len_{f_}" in postings.columns for f_ in fields):
+        if lengths is None:
+            raise ValueError("postings lack len_<field> columns and no "
+                             "lengths table was given")
+        postings = indexer.embed_field_lengths(postings, lengths)
+    if "idf" not in postings.columns:
+        postings = postings.join(
+            idf_table if idf_table is not None
+            else ranker.idf(postings, n_docs), "word")
+    text_col = snippet_field or next(iter(field_cols.values()))
+    pop = F.coalesce(F.col("rank"), F.lit(0.0)).alias("pop")
+    text = F.col(text_col).alias("_text")
+    return ServingLayout(
+        postings=postings.select(
+            "doc_id", "word", *[f"tf_{f_}" for f_ in fields],
+            *[f"len_{f_}" for f_ in fields], "idf",
+        ).repartition(parts, "doc_id"),
+        docs=pages.select(F.col("url").alias("doc_id"), pop, text)
+        .repartition(parts, "doc_id"),
+        pages=pages.select("url", *dict.fromkeys(field_cols.values()),
+                           pop, text),
+        fields=fields,
+        avg_lengths=avg_lengths,
+        lengths=lengths,
+    )
+
+
 def search(
     query: str,
     pages: DataFrame,          # (url, rank, <field columns>)
@@ -72,94 +172,56 @@ def search(
     snippet_field: str | None = None,
     phrase_index: "ranker.PhraseIndex | None" = None,
     suggestions=None,
-    avg_lengths: dict[str, float] | None = None,
-    idf_table: DataFrame | None = None,
+    layout: ServingLayout | None = None,
 ) -> list[SearchResult]:
     """`phrase_index`: optional prebuilt ranker.build_phrase_index over the
     same pages/fields — phrase and boolean queries then regex-scan only the
     docs containing the rarest phrase word instead of the whole corpus (the
     reference always pays the full Mongo collection scan).
 
-    `avg_lengths`: optional prebuilt ranker.avg_field_lengths(lengths, ...)
-    — index metadata, computed once at build time; without it every terms
-    query pays an extra aggregation job over the lengths table (R4 depends
-    only on the index, never on the query).
-
-    `idf_table`: optional prebuilt ranker.idf(postings, n_docs) — the term
-    dictionary's DF/IDF column, also index metadata (R1/R2); without it
-    every terms query re-aggregates document frequency from the postings.
     `postings` may be the embed_field_lengths layout (len_ columns on the
-    posting rows), in which case the per-query lengths join disappears
-    too — see ranker.bm25f."""
+    posting rows), in which case `lengths` is not joined.
+
+    `layout`: a persisted serving_layout over these inputs, with its
+    prebuilt index statistics and snippet field (what
+    api.QueryEngineServer holds). Without it, the same layout is built
+    here, uncached, so both paths run the same ranking plans: the cached
+    one is a terms query in one Spark job with no exchange, a phrase query
+    in its prune probe plus one scan of `pages`."""
     parsed = parse_query(query, stopwords=set(stopwords))
     if parsed.kind == "invalid":
         return []
-    # Serving-scale execution config (optimization round 6, guide §2.2 —
-    # "size partitions to the data"): a 10-result query over a few
-    # thousand cached posting rows must not run its aggregation/join
-    # exchanges at the session's scan-scale shuffle-partition count, and
-    # AQE's per-query-stage scheduling adds several separately scheduled
-    # jobs to a fixed, tiny plan (the same small-size regime the engine's
-    # pagerank gates on). Partition count derives from the served index's
-    # own layout (index_partitions is the invariant that scales with the
-    # corpus), never a constant for the host. Both restored on exit.
-    # Measured at a 50k-doc corpus, local[32]: terms 0.615 → 0.357 s,
-    # phrase 0.727 → 0.470 s min-of-6. The confs are session-wide, so
-    # _CONF_LOCK serializes save/set/run/restore: without it two
-    # concurrent queries interleave and the later restore leaves the
-    # session at the serving values.
-    spark = pages.sparkSession
-    with _CONF_LOCK:
-        # planned under the lock: an uncached `postings` plans its exchange
-        # at the session's confs, which another query may have set
-        serving_parts = max(postings.rdd.getNumPartitions(), 1)
-        _sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
-        _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", str(serving_parts))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return _search_impl(
-                query, pages, postings, lengths, field_cols, n_docs, k,
-                stopwords, snippet_field, phrase_index, suggestions,
-                avg_lengths, idf_table, parsed,
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", _sp_prev)
-            spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
-
-
-def _search_impl(
-    query, pages, postings, lengths, field_cols, n_docs, k,
-    stopwords, snippet_field, phrase_index, suggestions,
-    avg_lengths, idf_table, parsed,
-) -> list[SearchResult]:
     if suggestions is not None:
         # the reference records every successfully-parsed query as a
         # suggestion (QueryEngine.java:81)
         record_suggestion(suggestions, query)
-    fields = list(field_cols.keys())
+    if layout is None:
+        layout = serving_layout(
+            pages, postings, lengths, field_cols, n_docs, snippet_field)
 
     def pruned(phrase: list[str]) -> DataFrame:
         if phrase_index is None:
-            return pages
+            return layout.pages
         return ranker.phrase_prune(
-            pages, phrase_index, phrase, id_col="url", n_docs=n_docs
+            layout.pages, phrase_index, phrase, id_col="url", n_docs=n_docs
         )
 
     if parsed.kind == "terms":
+        # co-partitioned with docs: the join plans no exchange; the hint
+        # keeps the planner from broadcasting the small docs table instead
         relevance = ranker.bm25f(
-            postings, lengths, parsed.terms, n_docs, fields=fields,
-            avg_lengths=avg_lengths, idf_table=idf_table,
-        )
+            layout.postings, None, parsed.terms, n_docs, fields=layout.fields,
+            term_score=layout.term_score,
+        ).join(layout.docs.hint("shuffle_hash"), "doc_id")
     elif parsed.kind == "phrase":
+        # the scan keeps the page's popularity and text: no join at all
         rx = ranker.phrase_regex(parsed.phrases[0])
         relevance = ranker.phrase_scores(
-            pruned(parsed.phrases[0]), rx, field_cols
+            pruned(parsed.phrases[0]), rx, field_cols, carry=("pop", "_text")
         ).withColumnRenamed("phrase_score", "relevance")
     else:  # boolean
-        universe = pages.select(F.col("url").alias("doc_id"))
         scored: list[DataFrame] = []
-        for i, phrase in enumerate(parsed.phrases):
+        for phrase in parsed.phrases:
             rx = ranker.phrase_regex(phrase)
             s = ranker.phrase_scores(
                 pruned(phrase), rx, field_cols
@@ -168,37 +230,14 @@ def _search_impl(
             # during combine; unary not handled by boolean_combine
             scored.append(s)
         relevance = ranker.boolean_combine(
-            universe, scored, parsed.operators
-        ).withColumnRenamed("score", "relevance")
+            layout.docs, scored, parsed.operators
+        ).withColumnRenamed("score", "relevance").join(layout.docs, "doc_id")
 
-    ranked = ranker.hybrid_rank(relevance, pages, limit=k)
-    # ordered multi-get (R14) fused into the ranking action: join the page
-    # text onto the top-k INSIDE the same plan so one search = one Spark
-    # job instead of a rank job plus a text-fetch job — per-query latency
-    # is job-count-bound at this scale. INNER join with the ≤k-row side
-    # broadcast: an outer join here would force Spark to build the FULL
-    # pages-text relation (the preserved side of an outer BHJ cannot be
-    # broadcast), which is a corpus-sized broadcast/shuffle at scale.
-    # Inner is semantically safe because postings are built from these
-    # pages, so every ranked doc_id has a pages row (the reference's index
-    # rows likewise always reference stored pages).
-    text_col = snippet_field or next(iter(field_cols.values()))
-    top = (
-        F.broadcast(ranked)
-        .join(
-            pages.select(
-                F.col("url").alias("doc_id"), F.col(text_col).alias("_text")
-            ),
-            "doc_id",
-        )
-        .collect()
-    )
-    if not top:
-        return []
-    # the join does not preserve the rank order — restore it driver-side
-    # over the ≤k collected rows (exact same (score desc, doc_id) key the
-    # TakeOrdered used, so the order is bit-identical to the pre-join sort)
-    top.sort(key=lambda r: (-r["score"], r["doc_id"]))
+    # top-k with its text (ordered multi-get R14) in the ranking job itself.
+    # The joins above are inner: postings are built from these pages, so
+    # every ranked doc_id has a pages row (the reference's index rows
+    # likewise always reference stored pages).
+    top = ranker.hybrid_rank(relevance, limit=k).collect()
     toks = (
         parsed.terms
         if parsed.kind == "terms"

@@ -20,7 +20,7 @@ import pytest
 
 from navi_spark.api import QueryEngineServer, ServedIndex
 from navi_spark.catalog import SnapshotTable
-from navi_spark.operators import indexer
+from navi_spark.operators import indexer, ranker
 from navi_spark.operators.search import search
 
 DOCS = [
@@ -231,18 +231,23 @@ def test_suggestion_commits_once_per_distinct_query(spark, served, tmp_path):
     assert len(os.listdir(os.path.join(tbl.root, "data"))) == 5
 
 
-def _post_jobs(spark, srv, query):
-    """Spark jobs one POST of `query` launches (the endpoint body runs on
+def _job_ids(spark, body):
+    """Ids of the Spark jobs `body()` launches (an endpoint body run on
     this thread, so the job group sees its jobs)."""
     sc = spark.sparkContext
     tracker = sc._jsc.sc().statusTracker()  # noqa: SLF001
-    group = f"post-jobcount-{uuid.uuid4().hex}"  # a group's count is cumulative
-    sc.setJobGroup(group, "count jobs of one POST")
+    group = f"jobcount-{uuid.uuid4().hex}"  # a group's count is cumulative
+    sc.setJobGroup(group, "count jobs of one request")
     try:
-        srv._post_search(query)
+        body()
     finally:
         sc.setJobGroup(None, None)
-    return len(list(tracker.getJobIdsForGroup(group)))
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def _post_jobs(spark, srv, query):
+    """Spark jobs one POST of `query` launches."""
+    return len(_job_ids(spark, lambda: srv._post_search(query)))
 
 
 def test_repeated_post_spark_job_count_bounded(spark, served, tmp_path):
@@ -250,14 +255,17 @@ def test_repeated_post_spark_job_count_bounded(spark, served, tmp_path):
     jobs one repeated POST launches."""
     _, idx = served
     srv = QueryEngineServer(
-        replace(idx, suggestions=SnapshotTable(spark, str(tmp_path / "s"))))
-    srv._post_search("rivers banks")
-    n_jobs = _post_jobs(spark, srv, "rivers banks")
-    # measured with AQE on (2): the broadcast build of the table's keys
-    # for the left-anti probe, and the probe's isEmpty. read() starts no
-    # job (the manifest carries the schema). The query's own ranking
-    # runs on GET, not here.
-    assert 0 < n_jobs <= 2, f"a repeated POST launched {n_jobs} Spark jobs"
+        replace(idx, suggestions=SnapshotTable(spark, str(tmp_path / "s")))
+    ).start()
+    try:
+        srv._post_search("rivers banks")
+        n_jobs = _post_jobs(spark, srv, "rivers banks")
+    finally:
+        srv.stop()
+    # measured (1): the filtered read that finds the query's key. read()
+    # starts no job (the manifest carries the schema). The query's own
+    # ranking runs on GET, not here.
+    assert 0 < n_jobs <= 1, f"a repeated POST launched {n_jobs} Spark jobs"
 
 
 def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
@@ -270,17 +278,138 @@ def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
     POST launches no more jobs than on a one-row table."""
     _, idx = served
     tbl = SnapshotTable(spark, str(tmp_path / "s"))
-    srv = QueryEngineServer(replace(idx, suggestions=tbl))
+    srv = QueryEngineServer(replace(idx, suggestions=tbl)).start()
     n = 40
-    for i in range(n):
-        srv._post_search(f"spark q{i}")
-    assert sorted(r["suggestion"] for r in tbl.read().collect()) == sorted(
-        f"spark q{i}" for i in range(n))
-    assert len(tbl.data_files()) < 8  # compact()'s default min_files
-    repeated = _post_jobs(spark, srv, "spark q7")
-    assert 0 < repeated <= 2, f"a repeated POST launched {repeated} jobs"
-    # a new query, with no compaction due on it (7 data files after it):
-    # measured 4 with AQE on, the repeated POST's 2 plus the append
-    # re-running the probe's broadcast build and its parquet write job
-    new = _post_jobs(spark, srv, f"spark q{n}")
-    assert 0 < new <= 4, f"a new query's POST launched {new} jobs"
+    try:
+        for i in range(n):
+            srv._post_search(f"spark q{i}")
+        assert sorted(r["suggestion"] for r in tbl.read().collect()) == sorted(
+            f"spark q{i}" for i in range(n))
+        assert len(tbl.data_files()) < 8  # compact()'s default min_files
+        repeated = _post_jobs(spark, srv, "spark q7")
+        # a new query, with no compaction due on it (7 data files after
+        # it)
+        new = _post_jobs(spark, srv, f"spark q{n}")
+    finally:
+        srv.stop()
+    assert 0 < repeated <= 1, f"a repeated POST launched {repeated} jobs"
+    # measured 1: the same filtered read; the absent row is appended as
+    # an Arrow table, which writes its file without a Spark job
+    assert 0 < new <= 1, f"a new query's POST launched {new} jobs"
+
+
+# GET /results on a server's cached serving layout, per query shape, with
+# a phrase index (measured, AQE on; the parent's plans ran 6, 4, 6 and 9):
+# a terms query is one job with no exchange; a phrase query is its prune
+# probe plus one scan; a boolean query is one probe per phrase (plus the
+# id fetch of a selective one) plus the stages of its set algebra
+RESULTS_JOB_BOUNDS = {
+    "rivers banks": 1,
+    '"big tables"': 2,
+    '"big tables" OR "rivers"': 6,
+    '"spark" AND "tables" NOT "joy"': 8,
+}
+
+
+def test_results_spark_job_count_bounded(spark, served):
+    """Guard the Spark jobs one GET /results launches for each query
+    shape. The plain search() reference over the same index agrees."""
+    _, idx = served
+    phrase_index = ranker.build_phrase_index(idx.pages, "url",
+                                             list(FIELDS.values()))
+    phrase_index.pairs.count(), phrase_index.word_df.count()
+    srv = QueryEngineServer(
+        replace(idx, suggestions=None, phrase_index=phrase_index)).start()
+    got = {}
+    try:
+        for q in RESULTS_JOB_BOUNDS:
+            srv._post_search(q)
+            out = {}
+            got[q] = len(_job_ids(spark,
+                                  lambda: out.update(srv._results())))
+            direct = search(q, idx.pages, idx.postings, idx.lengths, FIELDS,
+                            n_docs=idx.n_docs, k=idx.k)
+            assert [(h["url"], h["score"]) for h in out["results"]] == [
+                (d.doc_id, d.score) for d in direct], q
+    finally:
+        srv.stop()
+        phrase_index.pairs.unpersist(), phrase_index.word_df.unpersist()
+    for q, bound in RESULTS_JOB_BOUNDS.items():
+        assert 0 < got[q] <= bound, f"GET {q!r} launched {got[q]} jobs"
+
+
+def test_concurrent_results_overlap_in_time(spark, served):
+    """Two GET /results bodies on two threads run their Spark jobs at the
+    same time: nothing serializes one query behind another. Read from the
+    jobs' submission and completion times in the status store."""
+    _, idx = served
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    queries = ['"big tables" OR "rivers"', '"spark" AND "tables" NOT "joy"']
+    servers = [QueryEngineServer(replace(idx, suggestions=None)).start()
+               for _ in queries]
+
+    def span(ids):
+        """(first submission, last completion) of the jobs, in ms."""
+        for _ in range(200):  # the listener bus is asynchronous: settle
+            jobs = [store.job(j) for j in ids]
+            if all(j.completionTime().isDefined() for j in jobs):
+                break
+            time.sleep(0.05)
+        return (min(j.submissionTime().get().getTime() for j in jobs),
+                max(j.completionTime().get().getTime() for j in jobs))
+
+    overlapped = 0
+    try:
+        for srv, q in zip(servers, queries):
+            srv._post_search(q)
+        want = [srv._results()["results"] for srv in servers]
+        for _ in range(5):
+            start = threading.Barrier(len(servers))
+            ids: list = [None] * len(servers)
+            out: list = [None] * len(servers)
+
+            def client(i):
+                start.wait()
+                ids[i] = _job_ids(spark, lambda: out.__setitem__(
+                    i, servers[i]._results()["results"]))
+
+            threads = [threading.Thread(target=client, args=(i,))
+                       for i in range(len(servers))]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+            assert out == want
+            (s0, e0), (s1, e1) = span(ids[0]), span(ids[1])
+            overlapped += max(s0, s1) < min(e0, e1)
+    finally:
+        for srv in servers:
+            srv.stop()
+    assert overlapped > 0, "concurrent GET /results never ran at once"
+
+
+def test_stop_releases_what_the_server_cached(spark, tmp_path):
+    """A server caches its serving layout; no RDD it persisted survives
+    its stop() (ids, not counts, so an unrelated RDD cleaned up meanwhile
+    cannot mask a leak)."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
+
+    pages = spark.createDataFrame(
+        [(u, h1, other, 1.0) for u, h1, other in DOCS],
+        "url string, h1 string, other string, rank double",
+    )
+    idx = ServedIndex(
+        pages=pages, field_cols=FIELDS, n_docs=len(DOCS),
+        postings=indexer.build_postings(pages, "url", FIELDS, stem=True),
+        lengths=indexer.field_lengths(pages, "url", FIELDS, stem=True),
+        suggestions=SnapshotTable(spark, str(tmp_path / "s")),
+    )
+    before = persisted()
+    with QueryEngineServer(idx) as url:
+        for q in ("rivers banks", '"big tables"'):
+            _post(url, "/search?query=" + urllib.parse.quote(q))
+            assert json.loads(_get(url, "/results")[1])["results"]
+        assert persisted() - before, "the server cached nothing"
+    assert persisted() <= before

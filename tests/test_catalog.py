@@ -29,6 +29,10 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
 
 
+def _arrow(rows):
+    return arrow_table(rows, "k long, v string")
+
+
 def test_append_and_time_travel(spark, table):
     assert not table.exists()
     s1 = table.append(_df(spark, [(1, "a")]), {"op": "first"})
@@ -59,12 +63,12 @@ def test_insert_absent(spark, table):
     """Insert-only MERGE: the first call creates the table, matched keys
     keep their rows, only unmatched source rows are appended, and a source
     with no new key commits nothing."""
-    s1 = table.insert_absent(_df(spark, [(1, "a"), (2, "b")]), key="k")
-    s2 = table.insert_absent(_df(spark, [(2, "B"), (3, "c")]), key="k")
+    s1 = table.insert_absent(_arrow([(1, "a"), (2, "b")]), key="k")
+    s2 = table.insert_absent(_arrow([(2, "B"), (3, "c")]), key="k")
     got = {r["k"]: r["v"] for r in table.read().collect()}
     assert got == {1: "a", 2: "b", 3: "c"}
     assert s2 == s1 + 1 and len(table.history()) == 2
-    assert table.insert_absent(_df(spark, [(1, "A"), (3, "C")]), "k") == s2
+    assert table.insert_absent(_arrow([(1, "A"), (3, "C")]), "k") == s2
     assert table.snapshot_id() == s2 and len(table.history()) == 2
 
 

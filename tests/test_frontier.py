@@ -1000,6 +1000,30 @@ def test_take_k_smallest_fallback_is_exact(spark):
         pool.unpersist()
 
 
+def test_take_k_smallest_misbracket_fallback_is_exact(spark):
+    """Both pivots land on one (rank, url) key that 500 of the pool's 600
+    rows share, so c_lo = c_hi = 600 > k: no band can be cut there, and
+    the guard must reroute to the exact global sort, loudly."""
+    from navi_spark.operators.frontier import take_k_smallest
+
+    pool = spark.range(600).select(
+        F.when(F.col("id") < 100,
+               F.format_string("http://h.test/p/%04d", F.col("id")))
+        .otherwise(F.lit("http://h.test/tied")).alias("url"),
+        F.lit(1.0).alias("rank"),
+        F.lit(0).alias("depth"),
+    ).persist()
+    try:
+        # sample_rows ≥ n: the sample is the whole pool, never empty
+        with pytest.warns(RuntimeWarning, match="misbracketed"):
+            got = take_k_smallest(pool, 200, sample_rows=1_000)
+        exp = pool.orderBy("rank", "url").limit(200)
+        assert got.count() == 200
+        assert got.exceptAll(exp).isEmpty() and exp.exceptAll(got).isEmpty()
+    finally:
+        pool.unpersist()
+
+
 def test_take_k_smallest_recursive_band(spark):
     """A tiny sample forces a wide pivot band with a web-scale remainder,
     so the band selection must RECURSE (the band at a 10^10-row pool is

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from navi_spark.plans import explain_str, pushed_filters
+from navi_spark.plans import executed_operators, explain_str, pushed_filters
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -152,3 +152,53 @@ def test_payload_validation_not_relocated_below_store_semi_join(spark):
             ._jdf.queryExecution().executedPlan().toString())
     assert plan.count("validate_payload") == 1, plan
     assert plan.index("validate_payload") < plan.index("BroadcastHashJoin"), plan
+
+
+def test_served_terms_query_plans_no_exchange(spark, monkeypatch):
+    """A terms query on a server's serving layout runs inside the doc_id
+    partitions the layout was cached in: BM25F's per-doc sum, the join
+    that brings popularity and snippet text, and the top-k plan no
+    shuffle and no broadcast, whatever the session's partition and AQE
+    confs say."""
+    from navi_spark.api import QueryEngineServer, ServedIndex
+    from navi_spark.operators import indexer
+
+    fields = {"h1": "h1", "other": "other"}
+    words = F.array(*[F.lit(w) for w in
+                      "alpha beta gamma delta kappa sigma omega".split()])
+    colors = F.array(*[F.lit(w) for w in "red green blue cyan pink".split()])
+    pages = spark.range(400).select(
+        F.format_string("u%04d", F.col("id")).alias("url"),
+        F.element_at(words, (F.col("id") % 7 + 1).cast("int")).alias("h1"),
+        F.concat_ws(" ", F.lit("spark"),
+                    F.element_at(colors, (F.col("id") % 5 + 1).cast("int")),
+                    F.lit("tables")).alias("other"),
+        (F.col("id") % 10 / 10.0).alias("rank"),
+    ).cache()
+    postings = indexer.build_postings(pages, "url", fields, stem=False)
+    lengths = indexer.field_lengths(pages, "url", fields, stem=False)
+    srv = QueryEngineServer(ServedIndex(
+        pages=pages, postings=postings.cache(), lengths=lengths.cache(),
+        field_cols=fields, n_docs=400)).start()
+    ran = []
+    df_type = type(pages)
+    real_collect = df_type.collect
+
+    def spy(self):
+        ran.append(self)
+        return real_collect(self)
+
+    try:
+        srv._post_search("green beta")
+        monkeypatch.setattr(df_type, "collect", spy)
+        out = srv._results()
+        monkeypatch.undo()
+        assert len(out["results"]) == 10 and len(ran) == 1
+        ops = executed_operators(ran[0])
+        assert "InMemoryTableScan" in ops, ops
+        assert not [o for o in ops if "Exchange" in o], ops
+    finally:
+        monkeypatch.undo()
+        srv.stop()
+        for df in (pages, postings, lengths):
+            df.unpersist()
