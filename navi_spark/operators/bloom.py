@@ -1,22 +1,20 @@
-"""Partitioned bloom URL-seen pre-filter (north-rule hardening of C9).
+"""Bloom filters: numpy bit-array blobs and a JVM literal predicate.
 
-The reference keeps the entire visited set in one JVM heap
-(`crawler/WebCrawler.java:64`) — a non-starter at 10^10 URLs. Here the seen
-set is split by `host_partition = pmod(xxhash64(host), P)` and each partition
-maintains a numpy bit-array bloom filter, stored as a binary blob in a
-`seen_filters(host_partition, filter, n_items)` table and updated via
-`cogroup(...).applyInPandas` (old blob ⨝ new keys → new blob).
+Two forms, one sizing rule (`sizing`, double hashing):
 
-Role in the wave (SURVEY.md §4.3): the bloom is a PRE-filter only —
-candidates it reports *definitely-new* skip the anti-join against the huge
-exact `seen` table entirely; only *maybe-seen* candidates (true positives +
-~1% false positives) pay the join. Parity stays exact because the exact
-table always decides; the bloom only prunes join input. At 10^10 rows with
-~1% frontier novelty that removes ~99% of the anti-join's probe side.
+* numpy blobs (`bloom_new` / `bloom_add` / `bloom_maybe`): vectorized
+  membership over uint64 keys (idx_i = h1 + i*h2 mod m). The streaming
+  wave state (`streaming/wave_stream.py`) swaps its exact per-partition
+  seen set for one of these past a size threshold.
+* the literal bloom (`literal_bloom_build` / `literal_bloom_predicate`):
+  a filter baked into a pure-JVM column expression, which recrawl uses to
+  prune the web and image scans to the stored pages' keys.
 
-All membership math is vectorized numpy over uint64 arrays (double hashing:
-idx_i = h1 + i*h2 mod m); keys are Spark `xxhash64(url)` values, so the JVM
-computes the hash once and Python only does bit arithmetic.
+Keys are Spark `xxhash64` values, so the JVM computes the hash once and
+Python only does bit arithmetic. The crawl wave itself uses no bloom: its
+seen check is one exact anti-join, because at the wave budgets the engine
+runs a pre-filter's per-wave upkeep (a Python cogroup rebuilding every
+partition's blob) cost more than the probe rows it pruned.
 """
 
 from __future__ import annotations
@@ -25,11 +23,7 @@ import math
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-
-FILTERS_SCHEMA = "host_partition int, filter binary, n_items long"
 
 _MULT = np.uint64(0x9E3779B97F4A7C15)  # odd → bijective on Z/2^64
 
@@ -71,74 +65,6 @@ def sizing(expected_per_partition: int, fpp: float = 0.01) -> tuple[int, int]:
     m = max((m + 7) // 8 * 8, 64)
     k = max(int(round(m / n * math.log(2))), 1)
     return m, min(k, 16)
-
-
-def update_filters(
-    filters_df: DataFrame,
-    new_keys: DataFrame,
-    m_bits: int,
-    k: int,
-) -> DataFrame:
-    """Merge newly-seen keys into per-partition blobs.
-
-    `filters_df`: FILTERS_SCHEMA rows (possibly empty);
-    `new_keys`: (host_partition int, url_hash long).
-    Returns the complete new FILTERS_SCHEMA DataFrame (all partitions that
-    have ever had keys). One shuffle on host_partition; blob work is numpy.
-    """
-
-    def merge(key, old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:
-        hp = int(key[0])
-        blob = bytes(old["filter"].iloc[0]) if len(old) else bloom_new(m_bits)
-        n = int(old["n_items"].iloc[0]) if len(old) else 0
-        if len(new):
-            blob = bloom_add(blob, new["url_hash"].to_numpy(np.int64), k)
-            n += len(new)
-        return pd.DataFrame(
-            {"host_partition": [hp], "filter": [blob], "n_items": [n]}
-        )
-
-    return (
-        filters_df.groupBy("host_partition")
-        .cogroup(new_keys.groupBy("host_partition"))
-        .applyInPandas(merge, FILTERS_SCHEMA)
-    )
-
-
-def annotate_maybe_seen(
-    candidates: DataFrame,
-    filters_df: DataFrame,
-    k: int,
-    key_col: str = "url_hash",
-) -> DataFrame:
-    """Add `maybe_seen` per candidate (False ⇒ provably unseen).
-
-    Grouped by host_partition so each task touches exactly one blob; the
-    blob rides in via a left cogroup (no broadcast of the full filter set —
-    at 10^10 scale the filters table is itself large).
-    """
-    cand_cols = candidates.columns
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def check(key, cand: pd.DataFrame, filt: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand):
-            return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-        if len(filt):
-            blob = bytes(filt["filter"].iloc[0])
-            maybe = bloom_maybe(blob, cand[key_col].to_numpy(np.int64), k)
-        else:
-            maybe = np.zeros(len(cand), dtype=bool)
-        out = cand.copy()
-        out["maybe_seen"] = maybe
-        return out
-
-    return (
-        candidates.groupBy("host_partition")
-        .cogroup(filters_df.groupBy("host_partition"))
-        .applyInPandas(check, out_schema)
-    )
 
 
 # ---------------------------------------------------------------------------

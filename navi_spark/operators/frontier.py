@@ -44,8 +44,12 @@ the reference heap loop verbatim and the tests assert bit-equal visit
 order + seen set against it (north rule).
 
 Scale design (the part the reference cannot do):
-  * seen-check = partitioned bloom pre-filter (definitely-new rows skip the
-    join) + exact anti-join on the `seen` table for maybe-seen rows only;
+  * seen-check = one exact anti-join of the wave's shallow rows against
+    the `seen` table, on the JVM (no pre-filter: at the wave budgets run
+    here a filter's upkeep costs more than the probe rows it would prune);
+  * robots verdicts are one JVM expression over rules parsed and compiled
+    to Java regexes once per engine, so the only Python a wave runs is the
+    payload validator and the child-link canonicalizer;
   * politeness window is TWO-LEVEL: a salted (host, url-hash-salt) top-k
     prunes each host to ≤ S·cap rows BEFORE the per-host row_number window,
     so the hot host never lands in one straggler task;
@@ -70,7 +74,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from navi_spark.catalog import SnapshotTable, arrow_table, local_df
 from navi_spark.functions.urlnorm import host_expr, normalize_url_udf
-from navi_spark.operators import bloom
 from navi_spark.operators.fetch import (
     language_gate,
     payload_etag,
@@ -140,11 +143,13 @@ class CrawlConfig:
     max_pages: int = 6000         # WebCrawler.java:27
     max_pages_per_domain: int = 10  # WebCrawler.java:37
     wave_budget: int = 1000       # attempts per wave (BATCH_SIZE analog, :29)
-    n_host_partitions: int = 16   # bloom/seen partitions
+    n_host_partitions: int = 16   # host partitions of seen rows and lineage
     salt_buckets: int = 8         # hot-host salt (north rule)
+    # Accepted and ignored: the wave has no bloom pre-filter any more.
+    # perfbench's crawl workload still passes both, so they stay until the
+    # benchmark changes; nothing in the engine may read them.
     bloom_bits_per_partition: int = 1 << 20
     bloom_hashes: int = 7
-    use_bloom: bool = True
     validate_payloads: bool = True
     max_waves: int = 10_000
     # North-rule crawl-delay budget (robots Crawl-delay, which the
@@ -327,6 +332,10 @@ def politeness_open_rows(new: DataFrame, counts: DataFrame, cap: int) -> DataFra
 class CrawlEngine:
     """One crawl run rooted at `workdir`; all state in snapshot tables."""
 
+    # "filters" held the retired bloom pre-filter. The engine never creates
+    # or commits it; the name stays because perfbench reports one
+    # catalog.commit_s.<name> per entry and BENCHMARK.json lists
+    # catalog.commit_s.filters. self.t holds the tables that exist.
     TABLES = ("frontier", "seen", "pages", "host_counts", "phash_seen",
               "filters", "lineage", "metrics", "state")
 
@@ -343,7 +352,7 @@ class CrawlEngine:
         self.cfg = config or CrawlConfig()
         self.t = {
             name: SnapshotTable(spark, os.path.join(workdir, name))
-            for name in self.TABLES
+            for name in self.TABLES if name != "filters"
         }
         # static inputs, reused every wave
         self.web = web
@@ -357,7 +366,7 @@ class CrawlEngine:
     def _hp(self, host_col: str = "host", url_col: str = "url"):
         """Salted host partition: hash(host) spread over `salt_buckets` by
         hash(url) — same url always lands in the same partition, a hot
-        host's keys spread across S blooms (north-rule skew handling)."""
+        host's rows spread across S partitions (north-rule skew handling)."""
         s = self.cfg.salt_buckets
         p = self.cfg.n_host_partitions
         return (
@@ -370,7 +379,7 @@ class CrawlEngine:
         if self.cfg.robots_reference_bug:
             # shipped-binary parity: Pattern.quote'd rules never match
             return df.withColumn("robots_allowed", F.lit(True))
-        return filter_allowed(df, self.rules).drop("crawl_delay_s")
+        return filter_allowed(df, self.rules)
 
     def _frontier_rows(self, urls: DataFrame) -> DataFrame:
         """(url[, rank, depth]) → full FRONTIER_SCHEMA rows."""
@@ -412,7 +421,7 @@ class CrawlEngine:
         (real ids start at 1). Recording every table — not just committed
         ones — lets resume() detect a torn FIRST commit of a table."""
         return {n: (self.t[n].snapshot_id() or 0)
-                for n in self.TABLES if n != "state"}
+                for n in self.t if n != "state"}
 
     def resume(self) -> None:
         """Restore the engine to the last CONSISTENT cut: the `state` table
@@ -424,7 +433,7 @@ class CrawlEngine:
         self.wave_id = row["wave_id"]
         self.budget_consumed = row["budget_consumed"]
         snaps = row["snapshots"] or {}
-        for name in self.TABLES:
+        for name in self.t:
             if name == "state":
                 continue
             cur = self.t[name].snapshot_id()
@@ -454,7 +463,7 @@ class CrawlEngine:
         (manifests deleted before data dirs, so survivors stay readable
         mid-crash). Returns per-table stats."""
         stats: dict[str, dict] = {}
-        for name in self.TABLES:
+        for name in self.t:
             if name == "state" or not self.t[name].exists():
                 continue
             before = len(self.t[name].data_files())
@@ -465,7 +474,7 @@ class CrawlEngine:
                            "compacted": sid is not None}
         done = self.t["state"].read().collect()[0]["done"]
         self._commit_state(done, {"op": "maintain", "wave": self.wave_id})
-        for name in self.TABLES:
+        for name in self.t:
             if not self.t[name].exists():
                 continue
             exp = self.t[name].expire_snapshots(
@@ -503,10 +512,7 @@ class CrawlEngine:
         # url, so they are DROPPED before the dedup exchange and recomputed
         # after it — at the 10^10-URL design point the dedup shuffle is the
         # wave's largest, and carrying a ~15-char host + 8-byte hash per
-        # row through it is ~30% wasted bytes. (The seen anti-join already
-        # avoids shuffling strings for the common case: the bloom
-        # pre-filter keys on url_hash and only bloom-positive rows reach
-        # the exact string join.)
+        # row through it is ~30% wasted bytes.
         cand = (
             frontier.groupBy("url")
             .agg(F.min(F.struct("rank", "depth")).alias("_m"))
@@ -542,23 +548,12 @@ class CrawlEngine:
         deep = cand.filter(F.col("depth") > cfg.max_depth)
         shallow = cand.filter(F.col("depth") <= cfg.max_depth)
 
-        # ---- 2b. URL-seen check (C9) on shallow rows: bloom pre-filter +
-        # exact anti-join. Pop-time visited refund (WebCrawler.java:446)
-        # done eagerly: a seen shallow row can never produce a page, so
-        # removing it before the pop is outcome-equivalent and costs no
-        # budget either way.
+        # ---- 2b. URL-seen check (C9) on shallow rows: one exact anti-join.
+        # Pop-time visited refund (WebCrawler.java:446) done eagerly: a seen
+        # shallow row can never produce a page, so removing it before the
+        # pop is outcome-equivalent and costs no budget either way.
         seen = self.t["seen"].read_or_empty(SEEN_SCHEMA)
-        if cfg.use_bloom and self.t["filters"].exists():
-            marked = bloom.annotate_maybe_seen(
-                shallow, self.t["filters"].read(), cfg.bloom_hashes
-            )
-            definite_new = marked.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            maybe = marked.filter(F.col("maybe_seen")).drop("maybe_seen")
-            new = definite_new.unionByName(
-                maybe.join(seen.select("url"), on="url", how="left_anti")
-            )
-        else:
-            new = shallow.join(seen.select("url"), on="url", how="left_anti")
+        new = shallow.join(seen.select("url"), on="url", how="left_anti")
         # checkpointed, not cached, for the reason given at `cand`: it is
         # read by the politeness window, the re-queue and lineage
         new = _local_checkpoint(new, cached)
@@ -637,7 +632,7 @@ class CrawlEngine:
         # stops pruning and orderBy().limit() ships the whole pool to one
         # merge task (see take_k_smallest). Both return the exact same set.
         # The robots verdict (C10-C12) is part of the checkpoint, so the
-        # matcher UDF runs once, on the popped rows, and neither the
+        # matcher runs once, on the popped rows, and neither the
         # labeled pass nor the image-key broadcast below re-runs it.
         if k > 10_000:
             pool = pool.persist()
@@ -663,10 +658,15 @@ class CrawlEngine:
         # never shuffle. Measured at 300k urls these two store exchanges
         # were the wave's largest by far (46 of 57 shuffle-write MB);
         # semantically this is the "fetch only what you attempt" contract
-        # a real fetcher has for free. The pruned slivers (≤ wave_budget
-        # rows) then join left — AQE broadcasts them at runtime.
+        # a real fetcher has for free. Only FETCHABLE attempts (robots and
+        # depth already known) are looked up: a blocked or too-deep row's
+        # outcome needs no web row, so its web columns stay null. The
+        # pruned slivers (≤ wave_budget rows) then join left — AQE
+        # broadcasts them at runtime.
+        fetchable = F.col("robots_allowed") & (F.col("depth") <= cfg.max_depth)
         web_hit = self.web.join(
-            F.broadcast(attempts.select("url")), on="url", how="left_semi"
+            F.broadcast(attempts.filter(fetchable).select("url")),
+            on="url", how="left_semi",
         )
         att = attempts.join(web_hit, on="url", how="left")
         # Payload validation runs MAP-SIDE ON THE STORE SCAN, not after the
@@ -675,17 +675,21 @@ class CrawlEngine:
         # the join moves ~60 B verdict rows instead of multi-KB payloads —
         # measured 3.0 GB -> ~0.05 GB on the wave's largest exchange at an
         # 800k-attempt wave (payload bytes die right after the decode; no
-        # downstream consumer reads them). The semi-join key set is pruned
-        # to fetch-eligible rows (robots+depth already known pre-join), so
+        # downstream consumer reads them). The image keys are the pruned
+        # web rows' images, i.e. those of fetch-eligible attempts only, so
         # the decode volume is identical to the old ok_fetch byte gate; an
         # image referenced by several attempts now decodes ONCE instead of
         # per attempt row. Verdicts are deterministic per image row, so
-        # outcome labels are bit-identical either way.
-        img_keys = att.filter(
-            F.col("robots_allowed") & (F.col("depth") <= cfg.max_depth)
-        ).select("image_id")
+        # outcome labels are bit-identical either way. Keying the image
+        # prune on `web_hit` rather than on `att` keeps the attempts ⋈ web
+        # join, and its web-row broadcast, out of the image-key branch:
+        # Spark cannot share that branch's broadcasts with the main one,
+        # because the attempts checkpoint's scan reports its (rank, url)
+        # order and plan canonicalization leaves those attribute ids as
+        # they are, so two scans of it never compare equal.
         img_hit = self.images.join(
-            F.broadcast(img_keys), on="image_id", how="left_semi",
+            F.broadcast(web_hit.select("image_id")), on="image_id",
+            how="left_semi",
         )
         if cfg.validate_payloads:
             img_meta = img_hit.withColumn(
@@ -699,11 +703,7 @@ class CrawlEngine:
                 F.lit(None).cast("string").alias("_fail"),
             )
         att = att.join(img_meta, on="image_id", how="left")
-        ok_fetch = (
-            F.col("robots_allowed")
-            & (F.col("depth") <= cfg.max_depth)
-            & F.col("phash").isNotNull()
-        )
+        ok_fetch = fetchable & F.col("phash").isNotNull()
         att = language_gate(att)
         pre_ok = (
             ok_fetch & F.col("_fail").isNull()
@@ -764,7 +764,7 @@ class CrawlEngine:
             payload_etag().alias("etag"),
             payload_last_modified().alias("last_modified"),
         )
-        # The five wave-output commits are mutually independent: each writes
+        # The four wave-output commits are mutually independent: each writes
         # its OWN table from the checkpointed `successes` set (or its own
         # table's previous snapshot), and resume() depends only on `state`
         # committing last with the post-barrier snapshot map — the
@@ -784,15 +784,6 @@ class CrawlEngine:
                    # its phash partition, so successes' phashes are unique
                    lambda: self.t["phash_seen"].append(
                        successes.select("phash"), {"wave": w})]
-        if cfg.use_bloom:
-            new_f = bloom.update_filters(
-                self.t["filters"].read_or_empty(bloom.FILTERS_SCHEMA),
-                successes.select("host_partition", "url_hash"),
-                cfg.bloom_bits_per_partition,
-                cfg.bloom_hashes,
-            )
-            commits.append(
-                lambda: self.t["filters"].overwrite(new_f, {"wave": w}))
         new_counts = (
             self.t["host_counts"].read_or_empty(HOST_COUNTS_SCHEMA)
             .unionByName(

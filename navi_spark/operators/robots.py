@@ -20,24 +20,31 @@ of its own regex text — so in the running Java binary no rule ever matches
 and nothing is ever blocked. We implement the intended semantics above; a
 parity oracle for the buggy build is trivially `lambda *a: True`.
 
-Scale shape: the rules table is one row per host (pre-parsed once per crawl),
-joined to the frontier on `host` — broadcast when small, shuffle-join when
-the host universe is large — then matched with one Arrow-batched pandas UDF.
-The reference instead caches per-host rule maps in memory per JVM
+Scale shape: the rules table is one row per host, parsed ONCE per crawl
+by `parse_robots_udf` into rules already sorted longest-first and compiled
+to Java regex strings. It is joined to the frontier on `host` (broadcast
+when small, shuffle-join when the host universe is large) and matched by
+one JVM expression (`filter_allowed`), so a wave runs no Python to decide
+robots. The reference instead caches per-host rule maps in memory per JVM
 (`RobotServer.java:21`); the join replaces the cache.
 """
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Optional
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 
 def parse_robots_txt(robots_txt: Optional[str]) -> list[tuple[str, str]]:
@@ -101,50 +108,64 @@ def is_allowed_py(url: Optional[str], parsed: list[tuple[str, str]]) -> bool:
     return True
 
 
-@pandas_udf(StringType())
+# array<struct<allow:boolean, rx:string>>, longest pattern first
+RULES_TYPE = ArrayType(StructType([StructField("allow", BooleanType()),
+                                   StructField("rx", StringType())]))
+
+# the path `_path_for_match` extracts; a URL it does not match is unparseable
+_URL_PATH_RX = r"^https?://[^/?#]+([^?#]*)"
+
+
+def _java_quote(part: str) -> str:
+    """`part` as a Java regex literal (`Pattern.quote`'s \\Q…\\E form)."""
+    return "\\Q" + part.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+
+
+def _java_rules(parsed: list[tuple[str, str]]) -> list[dict]:
+    """`_compile_rules`' order and semantics as Java regex strings: literal
+    parts quoted, `*` → `.*`, and `(?d)` so that `.` stops only at `\\n`,
+    as Python's `.` does."""
+    ordered = sorted(parsed, key=lambda dp: -len(dp[1]))
+    return [
+        {"allow": directive == "allow",
+         "rx": "(?d)" + ".*".join(
+             _java_quote(part) if part else "" for part in pattern.split("*"))}
+        for directive, pattern in ordered
+    ]
+
+
+@pandas_udf(RULES_TYPE)
 def parse_robots_udf(texts: pd.Series) -> pd.Series:
-    """robots.txt → JSON '[[directive, pattern], ...]' (the `*` group)."""
-    return texts.map(
-        lambda t: json.dumps(parse_robots_txt(t)), na_action="ignore"
-    )
-
-
-@pandas_udf(BooleanType())
-def is_allowed_udf(urls: pd.Series, rules_json: pd.Series) -> pd.Series:
-    """Arrow-batched matcher; compiled-rule cache keyed on the JSON text so
-    each distinct host rule-set compiles once per batch."""
-    cache: dict[str, list] = {}
-
-    def one(url, rj):
-        if rj is None or rj == "[]":
-            return True  # no rules → allow (RobotServer.java:135-137)
-        compiled = cache.get(rj)
-        if compiled is None:
-            compiled = _compile_rules([tuple(r) for r in json.loads(rj)])
-            cache[rj] = compiled
-        if url is None:
-            return False
-        path = _path_for_match(url)
-        if path is None:
-            return False
-        for directive, rx in compiled:
-            if rx.search(path):
-                return directive == "allow"
-        return True
-
-    return pd.Series([one(u, r) for u, r in zip(urls, rules_json)], dtype=bool)
+    """robots.txt → the `*` group's rules, longest first, as Java regexes."""
+    return texts.map(lambda t: _java_rules(parse_robots_txt(t)))
 
 
 def parsed_rules_table(robots_df: DataFrame) -> DataFrame:
-    """(host, robots_txt, crawl_delay_s) → (host, rules_json, crawl_delay_s).
+    """(host, robots_txt, crawl_delay_s) → (host, rules, crawl_delay_s).
 
     Parsed ONCE per crawl and reused every wave — the vectorized replacement
     for the reference's per-JVM `rulesCache` (RobotServer.java:21).
     """
     return robots_df.select(
         "host",
-        parse_robots_udf(F.col("robots_txt")).alias("rules_json"),
+        parse_robots_udf(F.col("robots_txt")).alias("rules"),
         "crawl_delay_s",
+    )
+
+
+def _allowed_expr(url: Column, rules: Column) -> Column:
+    """`is_allowed_py` as one JVM expression: no rules → allow; unparseable
+    URL → disallow; else the first (longest) rule whose regex `find`s the
+    path decides, and no match → allow."""
+    path = F.regexp_extract(url, _URL_PATH_RX, 1)
+    path = F.when(path == "", F.lit("/")).otherwise(path)
+    path = F.when(url.endswith("/") & ~path.endswith("/"),
+                  F.concat(path, F.lit("/"))).otherwise(path)
+    first = F.get(F.filter(rules, lambda r: F.regexp_like(path, r["rx"])), 0)
+    return (
+        F.when(F.coalesce(F.size(rules), F.lit(0)) <= 0, F.lit(True))
+        .when(~F.coalesce(url.rlike(_URL_PATH_RX), F.lit(False)), F.lit(False))
+        .otherwise(F.coalesce(first["allow"], F.lit(True)))
     )
 
 
@@ -154,20 +175,18 @@ def filter_allowed(candidates: DataFrame, rules: DataFrame,
     """Annotate candidates with `robots_allowed` (C12).
 
     Left join on host (missing host row = no robots.txt = allow), then one
-    vectorized match. The rules table has one row per host that serves a
-    robots.txt — UNBOUNDED at the 10^10-URL design point, so it is NOT
+    JVM match expression. The rules table has one row per host that serves
+    a robots.txt — UNBOUNDED at the 10^10-URL design point, so it is NOT
     broadcast by default: AQE broadcasts whichever side is actually small
     at runtime (in the wave that is usually `candidates`, which is bounded
     by the wave budget). `broadcast_rules=True` opts in the hint for
     known-small host universes.
     """
-    r = F.broadcast(rules) if broadcast_rules else rules
-    joined = candidates.join(
-        r.withColumnRenamed("host", host_col), on=host_col, how="left"
-    )
+    r = rules.select(F.col("host").alias(host_col),
+                     F.col("rules").alias("_rules"))
+    if broadcast_rules:
+        r = F.broadcast(r)
+    joined = candidates.join(r, on=host_col, how="left")
     return joined.withColumn(
-        "robots_allowed",
-        F.when(F.col("rules_json").isNull(), F.lit(True)).otherwise(
-            is_allowed_udf(F.col(url_col), F.col("rules_json"))
-        ),
-    ).drop("rules_json")
+        "robots_allowed", _allowed_expr(F.col(url_col), F.col("_rules"))
+    ).drop("_rules")

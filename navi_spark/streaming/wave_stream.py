@@ -5,7 +5,7 @@ feed the frontier from a live discovery stream).
 
   streaming_seen_filter   stateful URL-seen dedup per host_partition via
                           applyInPandasWithState — the streaming twin of the
-                          bloom/anti-join seen check (C9); state = the set of
+                          anti-join seen check (C9); state = the set of
                           64-bit url hashes per partition
   streaming_hourly_rollup watermarked tumbling-window metrics aggregation —
                           the streaming twin of the per-wave metrics table
@@ -55,8 +55,7 @@ def _dedupe_keys(
       genuinely-new URL with P ≤ fpp — the engine's batch reconciliation
       (the exact `seen` anti-join, C9) remains the arbiter of record, the
       stream is its bounded-loss pre-filter. Production sizing: capacity =
-      expected per-partition URLs (10^10/P), the same math as the batch
-      bloom pre-filter table.
+      expected per-partition URLs (10^10/P), through `bloom.sizing`.
 
     Within-batch duplicates dedupe exactly in both modes (first
     occurrence wins, vectorized first-index selection)."""

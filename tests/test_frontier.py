@@ -8,6 +8,7 @@ snapshot checkpoint (SURVEY.md §5).
 
 from __future__ import annotations
 
+import re
 import shutil
 import tempfile
 
@@ -204,20 +205,6 @@ def test_maintain_mid_crawl_invisible(spark, universe, oracle_result):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_no_bloom_same_result(spark, universe, oracle_result):
-    """Bloom is a pure pre-filter: disabling it must not change anything."""
-    workdir = tempfile.mkdtemp(prefix="navi-nb-")
-    try:
-        eng, seeds = _mk_engine(spark, universe, workdir, use_bloom=False)
-        eng.bootstrap(seeds)
-        eng.run(max_waves=30)
-        visit, seen, _ = _engine_state(eng)
-        assert visit == oracle_result.visit_order
-        assert seen == oracle_result.seen
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
 def test_sequential_heap_mode(spark, universe):
     """wave_budget=1 = the reference's exact sequential min-heap pop order:
     the engine, the wave oracle at budget 1, and the verbatim heap replay
@@ -400,23 +387,87 @@ def test_wave_spark_job_count_bounded(spark, universe):
                     len(list(tracker.getJobIdsForGroup(f"wave-jobcount-{i}"))))
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
-        # measured composition of wave 1 (20): 6 parquet write jobs, one
-        # per Spark-written commit (pages, seen, phash_seen, filters,
-        # host_counts, frontier; lineage, metrics and state are Arrow
-        # commits and start none), 4 local checkpoints (cand, new,
-        # attempts, labeled), 8 broadcast builds (incl. the two
-        # store-pruning semi-join sets that eliminated the wave's largest
-        # exchanges), the isEmpty probe and the lineage collect. No table
-        # read starts a job: the manifest carries the schema. Wave 2 (26)
-        # also reads a non-empty seen/filters/host_counts/phash_seen
-        # state: the bloom probe and the seen anti-join add 6 broadcast
-        # builds (14). All are small fixed driver round-trips, none scale
-        # with data. The guard trips if per-stage stats counts creep back
-        # in (round 1 had ~15 of them), a driver-built relation starts
-        # costing a job again, or a read goes back to inferring its
-        # schema.
-        assert 0 < n_jobs[0] <= 20, f"wave 1 launched {n_jobs[0]} Spark jobs"
-        assert 0 < n_jobs[1] <= 26, f"wave 2 launched {n_jobs[1]} Spark jobs"
+        # measured composition of wave 1 (19): 5 parquet write jobs, one
+        # per Spark-written commit (pages, seen, phash_seen, host_counts,
+        # frontier; lineage, metrics and state are Arrow commits and start
+        # none), 4 local checkpoints (cand, new, attempts, labeled), 8
+        # broadcast builds (the robots rules join; 5 in the labeled pass,
+        # incl. the two store-pruning semi-join sets that eliminated the
+        # wave's largest exchanges; 2 in the frontier write's anti-joins),
+        # the isEmpty probe and the lineage collect. No table read starts a
+        # job: the manifest carries the schema. Wave 2 (25) also reads a
+        # non-empty seen/host_counts/phash_seen state: the seen anti-join,
+        # the two politeness joins (once for the attempts, once more in the
+        # frontier write's re-queue) and the phash_seen join add 6
+        # broadcast builds (14). No filters write and no bloom probe: the
+        # seen check is one exact anti-join. All are small fixed driver
+        # round-trips, none scale with data. The guard trips if per-stage
+        # stats counts creep back in (round 1 had ~15 of them), a
+        # driver-built relation starts costing a job again, or a read goes
+        # back to inferring its schema.
+        assert 0 < n_jobs[0] <= 19, f"wave 1 launched {n_jobs[0]} Spark jobs"
+        assert 0 < n_jobs[1] <= 25, f"wave 2 launched {n_jobs[1]} Spark jobs"
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+_PLAN_NODE = re.compile(r"^([\s:+-]*)(?:\* )?(\w+)[^()]*?\((\d+)\)")
+_PYTHON_NODE = re.compile(r"Python|Pandas|InArrow")
+
+
+def _python_nodes(plan: str) -> list[tuple[str, str]]:
+    """(node name, `Arguments:` text) of every Python-evaluating node in a
+    formatted physical plan that runs when the plan runs: the plan of an
+    already cached relation, printed under its InMemoryRelation, does not."""
+    tree, _, details = plan.partition("\n\n")
+    live, skip_below = set(), None
+    for line in tree.splitlines():
+        m = _PLAN_NODE.match(line)
+        if not m:
+            continue
+        depth, name, node_id = len(m.group(1)), m.group(2), m.group(3)
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if name == "InMemoryRelation" else None
+        if _PYTHON_NODE.search(name):
+            live.add(node_id)
+    out = []
+    for block in re.split(r"\n(?=\(\d+\) )", details):
+        m = re.match(r"\((\d+)\) (\w+)", block)
+        if m and m.group(1) in live:
+            args = re.search(r"^Arguments: (.*)$", block, re.M)
+            out.append((m.group(2), args.group(1) if args else ""))
+    return out
+
+
+def _executions(store) -> list:
+    lst = store.executionsList()
+    return [lst.apply(i) for i in range(lst.size())]
+
+
+def test_wave_runs_python_only_to_validate_and_canonicalize(spark, universe):
+    """A wave's scheduling path (dedup, seen check, politeness, budget,
+    robots) runs on the JVM: over the SQL executions of two waves, the only
+    Python nodes are Arrow UDFs over the payload validator and the
+    child-link canonicalizer. A bloom cogroup (FlatMapCoGroupsInPandas) or
+    a Python robots matcher would each add one."""
+    workdir = tempfile.mkdtemp(prefix="navi-python-")
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+    try:
+        eng, seeds = _mk_engine(spark, universe, workdir)
+        eng.bootstrap(seeds)
+        bus.waitUntilEmpty()
+        first = max((e.executionId() for e in _executions(store)), default=-1)
+        s1, s2 = eng.wave(), eng.wave()
+        assert s1.fetched > 0 and s2.fetched > 0
+        bus.waitUntilEmpty()
+        plans = [e.physicalPlanDescription() for e in _executions(store)
+                 if e.executionId() > first]
+        nodes = [n for p in plans for n in _python_nodes(p)]
+        udfs = {u for name, args in nodes for u in re.findall(r"(\w+)\(", args)}
+        assert {name for name, _ in nodes} == {"ArrowEvalPython"}, nodes
+        assert udfs == {"validate_payload_udf", "_norm_children_kernel"}, nodes
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
