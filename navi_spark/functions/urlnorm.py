@@ -1,8 +1,9 @@
 """URL canonicalization + host extraction (reference ops C3/C4).
 
 Faithful, vectorized reimplementation of the reference normalizer
-(`crawler/UrlNomalizer.java:27-96`) and base-URL extractor
-(`crawler/UrlNomalizer.java:101-126`). The Java pipeline is:
+(`crawler/UrlNomalizer.java:27-96`). The reference's base-URL extractor
+(`:101-126`) has no counterpart: nothing here stores a base URL, and the
+politeness key is the host. The Java pipeline is:
 
     1. trim + lowercase                                  (UrlNomalizer.java:38)
     2. form-encode (URLEncoder: space->'+', rest %XX, uppercase hex),
@@ -180,21 +181,6 @@ def host_of_py(url: Optional[str]) -> Optional[str]:
     return parts[1] if parts else None
 
 
-def base_url_py(url: Optional[str]) -> Optional[str]:
-    """scheme://host[:nondefault-port] (UrlNomalizer.java:101-126)."""
-    if url is None:
-        return None
-    encoded = _java_form_encode(url)
-    parts = _split_encoded(encoded)
-    if parts is None:
-        return None
-    scheme, host, port, _path, _query = parts
-    base = scheme + "://" + host
-    if port is not None and port not in (80, 443):
-        base += f":{port}"
-    return base
-
-
 # Fast-path eligibility: URLs over a restricted charset where every
 # reference-pipeline step is the identity — no %-escapes or '+' (both
 # decodes are no-ops; every fast char survives java form-encoding verbatim
@@ -288,9 +274,3 @@ normalize_url_udf = normalize_url_pandas_udf.asNondeterministic()
 def host_expr(col: Column) -> Column:
     """Builtin host extraction from a normalized URL (C4 fast path)."""
     return F.regexp_extract(col, r"^https?://([^/:?#]+)", 1)
-
-
-def url_hash64(col: Column) -> Column:
-    """64-bit URL key (C9/C15 seen-set key): xxhash64 — JVM-side, stable,
-    and the same function Spark uses for shuffle-level hashing."""
-    return F.xxhash64(col)

@@ -154,47 +154,37 @@ def payload_last_modified(phash_col: str = "phash") -> Column:
     )
 
 
-def classify_recrawl(
-    old_pages: DataFrame, refetch: DataFrame
-) -> DataFrame:
-    """C13+C21: conditional-GET recrawl classification
-    (WebCrawler.java:674-756 recrawlUrl, DBManager.java:1019-1049).
+def recrawl_status(honors_304: Column | None = None) -> Column:
+    """C13+C21: a reloaded page's conditional-GET outcome
+    (WebCrawler.java:664-756 recrawlUrl), over a row that carries
+    `robots_allowed`, the stored `old_phash`/`old_caption` and the live
+    fetch's `new_phash`/`new_caption` (null when the fetch failed).
 
-    `old_pages`: previous snapshot — (url, phash, children, etag).
-    `refetch`:   current fetch results — (url, phash, children, etag);
-                 its etag is the server's CURRENT validator.
-
-    Per reference semantics:
-      * server validator still matches the stored one ⇒ HTTP 304 ⇒
-        'touched' — content fields kept, only lastTime bumped, and the
-        global budget is REFUNDED (:697);
-      * refetched but content hash equal ⇒ 'unchanged' — old fields kept
-        (:709-718), budget consumed;
-      * hash differs ⇒ 'changed' — fields updated, link_structure_changed
-        = old children ≠ new children (:745-747), which is what triggers
-        the PageRank recompute (:571-580).
-
-    One inner join on url, pure column algebra — the MERGE source for
-    catalog.merge_upsert on Iceberg."""
-    old = old_pages.select(
-        "url",
-        F.col("phash").alias("old_phash"),
-        F.col("children").alias("old_children"),
-        F.col("etag").alias("old_etag"),
+    `honors_304`: whether the page's server answers validators with a 304;
+    None, or a null value, means it does (the reference's implicit
+    assumption). The rules, first match wins:
+      * robots disallows the URL ⇒ 'blocked_robots' (:670-674);
+      * the fetch failed ⇒ 'touched' (doc == null, :680);
+      * the server honors validators and the payload is the same ⇒ 304
+        ⇒ 'touched' (:697);
+      * same content hash ⇒ 'unchanged' (:709-718), even when the caption
+        moved or the server ignored the validators;
+      * otherwise 'changed' (:745).
+    Only 'unchanged' and 'changed' consume recrawl budget."""
+    honored = (
+        F.coalesce(honors_304, F.lit(True)) if honors_304 is not None
+        else F.lit(True)
     )
-    j = refetch.join(old, "url", "inner")
-    status = (
-        F.when(F.col("etag") == F.col("old_etag"), "touched")
-        .when(F.col("phash") == F.col("old_phash"), "unchanged")
+    same_payload = (
+        (F.col("new_phash") == F.col("old_phash"))
+        & (F.col("new_caption") == F.col("old_caption"))
+    )
+    return (
+        F.when(~F.col("robots_allowed"), "blocked_robots")
+        .when(F.col("new_phash").isNull(), "touched")
+        .when(honored & same_payload, "touched")
+        .when(F.col("new_phash") == F.col("old_phash"), "unchanged")
         .otherwise(F.lit("changed"))
-    )
-    return j.select(
-        "url", "phash", "children",
-        status.alias("status"),
-        ((status == "changed")
-         & ~(F.col("children") == F.col("old_children")))
-        .alias("link_structure_changed"),
-        (status != "touched").alias("budget_consumed"),
     )
 
 

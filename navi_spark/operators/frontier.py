@@ -78,6 +78,7 @@ from navi_spark.operators.fetch import (
     language_gate,
     payload_etag,
     payload_last_modified,
+    recrawl_status,
     validate_payload_udf,
 )
 from navi_spark.operators.robots import filter_allowed, parsed_rules_table
@@ -256,7 +257,7 @@ def take_k_smallest(pool: DataFrame, k: int,
         return pool
     frac = min(1.0, sample_rows / n)
     smp = sorted(
-        pool.select("rank", "url").sample(frac, seed=7).collect(),
+        pool.select("rank", "url").sample(fraction=frac, seed=7).collect(),
         key=lambda r: (r["rank"], r["url"]),
     )
     m = len(smp)
@@ -1112,22 +1113,8 @@ class CrawlEngine:
             .join(img_side, "new_image_id", "left")
         )
         re_f = self._robots(re_f)
-        honors_304 = (
-            F.coalesce(F.col("honors_304"), F.lit(True))
-            if has_honors else F.lit(True)
-        )
-        fetch_ok = F.col("new_phash").isNotNull()
-        same_payload = (
-            (F.col("new_phash") == F.col("old_phash"))
-            & (F.col("new_caption") == F.col("old_caption"))
-        )
-        status = (
-            F.when(~F.col("robots_allowed"), "blocked_robots")
-            .when(~fetch_ok, "touched")                  # doc == null (:680)
-            .when(honors_304 & same_payload, "touched")  # 304 (:697)
-            .when(F.col("new_phash") == F.col("old_phash"), "unchanged")
-            .otherwise(F.lit("changed"))
-        )
+        status = recrawl_status(
+            F.col("honors_304") if has_honors else None)
         # per-host domain-cap boundary in pop order: a consuming row is
         # cap-eligible iff fewer than `cap` consuming rows of its host pop
         # before it (only cap-eligible rows increment the reference's

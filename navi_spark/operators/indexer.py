@@ -138,10 +138,3 @@ def embed_field_lengths(postings: DataFrame, lengths: DataFrame) -> DataFrame:
     from the same token streams, so every posting doc_id has a lengths
     row (and docs with no postings have nothing to score)."""
     return postings.join(lengths, "doc_id")
-
-
-def field_totals(lengths: DataFrame, fields: Sequence[str]) -> DataFrame:
-    """Global per-field token mass (I8 → field_counts.json parity)."""
-    return lengths.agg(
-        *[F.sum(f"len_{f_}").alias(f"total_{f_}") for f_ in fields]
-    )

@@ -1,4 +1,5 @@
-"""PageRank + recrawl over the crawled pages graph (reference C21-C23).
+"""PageRank over the crawled pages graph (reference C22-C23); the C21
+recrawl that reruns it is `CrawlEngine.recrawl`.
 
 PageRank reproduces the reference formula EXACTLY
 (`dbmanager/DBManager.java:1051-1172`):
@@ -236,35 +237,3 @@ def pagerank_py(
             u: (1 - damping) + damping * contrib.get(u, 0.0) for u in nodes
         }
     return ranks
-
-
-def recrawl_order(pages: DataFrame) -> DataFrame:
-    """C21: freshness pass ordering — rank DESCENDING (highest-value pages
-    first; `DBManager.java:945-970` getAllUrlsSortedByRank). Note the
-    asymmetry with the frontier's rank-ASCENDING heap (C5) — both
-    reproduced deliberately."""
-    return pages.select("url", "rank", "phash").orderBy(
-        F.desc("rank"), "url"
-    )
-
-
-def detect_changes(
-    old_pages: DataFrame, new_fetch: DataFrame
-) -> DataFrame:
-    """C21 change detection: join previous snapshot on url, compare content
-    hash and children; unchanged → touch only, changed → update + flag
-    `link_structure_changed` (WebCrawler.java:652-761, `updateUrlIfChanged`
-    DBManager.java:1019-1049). Returns the MERGE source."""
-    old = old_pages.select(
-        "url",
-        F.col("phash").alias("old_phash"),
-        F.col("children").alias("old_children"),
-    )
-    j = new_fetch.join(old, "url", "inner")
-    return j.select(
-        "url", "phash", "children", "caption",
-        (F.col("phash") != F.col("old_phash")).alias("content_changed"),
-        (F.col("children") != F.col("old_children")).alias(
-            "link_structure_changed"
-        ),
-    )

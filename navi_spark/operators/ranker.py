@@ -46,16 +46,6 @@ def idf(postings: DataFrame, n_docs: int) -> DataFrame:
     )
 
 
-def candidate_docs(postings: DataFrame, terms: Sequence[str]) -> DataFrame:
-    """R5 `commonDocs`: UNION (not intersection, despite the reference's
-    name — Ranker.java:174-216) of docs containing any query term."""
-    return (
-        postings.filter(F.col("word").isin(*terms))
-        .select("doc_id")
-        .distinct()
-    )
-
-
 def avg_field_lengths(
     lengths: DataFrame, fields: Sequence[str]
 ) -> dict[str, float]:
@@ -334,20 +324,6 @@ def phrase_prune(
     return pages.filter(F.col(id_col).isin(ids))
 
 
-def phrase_candidates(
-    pages: DataFrame, rx: str, text_cols: Sequence[str]
-) -> DataFrame:
-    """R10: regex OR-scan over the text fields (DBManager.java:755-780).
-    Callers with a prebuilt phrase_prune_index should pass
-    `phrase_prune(pages, index, words)` as `pages` — the scan then reads
-    only candidate docs instead of the whole corpus."""
-    cond = None
-    for c in text_cols:
-        p = F.col(c).rlike(rx)
-        cond = p if cond is None else cond | p
-    return pages.filter(cond)
-
-
 def phrase_scores(
     pages: DataFrame, rx: str,
     field_cols: dict[str, str],
@@ -379,18 +355,19 @@ def phrase_scores(
 
 
 def boolean_combine(
-    universe: DataFrame,
     scored: Sequence[DataFrame],
     operators: Sequence[str],
 ) -> DataFrame:
     """R12: left-to-right AND/OR/NOT over (doc_id, score) sets
     (Ranker.java:410-598; no precedence despite the comment at :500).
 
-    NOT x  = universe − docs(x), each scored 0.1   (:486-493)
     a OR b = union, score = max                     (:543-553)
     a AND b= intersection, score = (s_a + s_b)/2    (:554-572)
-    trailing NOT = set-minus                        (:577-587)
-    """
+    a NOT b= set-minus                              (:577-587)
+
+    The reference's unary NOT (universe − docs(x), each scored 0.1,
+    :486-493) has no form here: parse_query's grammar starts every phrase
+    query with a phrase, so an operator never comes first."""
     assert len(scored) == len(operators) + 1
 
     def as_scored(df):
@@ -419,10 +396,3 @@ def boolean_combine(
         else:
             raise ValueError(f"unknown operator {op}")
     return acc
-
-
-def not_docs(universe: DataFrame, docs: DataFrame) -> DataFrame:
-    """R12 unary NOT: universe − docs, scored 0.1 (Ranker.java:486-493)."""
-    return universe.select("doc_id").join(
-        docs.select("doc_id"), "doc_id", "left_anti"
-    ).withColumn("score", F.lit(0.1))

@@ -226,11 +226,11 @@ def search(
             s = ranker.phrase_scores(
                 pruned(phrase), rx, field_cols
             ).withColumnRenamed("phrase_score", "score")
-            # leading NOT-semantics: reference treats `NOT x` via set minus
-            # during combine; unary not handled by boolean_combine
             scored.append(s)
+        # every NOT is binary: parse_query's grammar starts a phrase query
+        # with a phrase, so a unary NOT never reaches the ranker
         relevance = ranker.boolean_combine(
-            layout.docs, scored, parsed.operators
+            scored, parsed.operators
         ).withColumnRenamed("score", "relevance").join(layout.docs, "doc_id")
 
     # top-k with its text (ordered multi-get R14) in the ranking job itself.

@@ -57,10 +57,11 @@ def oracle_result():
 
 def _mk_engine(spark, universe, workdir, **kw):
     web, images, robots, seeds = universe
-    cfg = CrawlConfig(
-        max_pages=MAX_PAGES, max_pages_per_domain=CAP, wave_budget=WAVE,
-        n_host_partitions=4, salt_buckets=2, **kw,
-    )
+    cfg = CrawlConfig(**{
+        "max_pages": MAX_PAGES, "max_pages_per_domain": CAP,
+        "wave_budget": WAVE, "n_host_partitions": 4, "salt_buckets": 2,
+        **kw,
+    })
     return CrawlEngine(spark, workdir, web, images, robots, cfg), seeds
 
 
@@ -120,27 +121,49 @@ def test_pages_carry_conditional_get_validators(std_run):
     assert all(r["same"] for r in recomputed)
 
 
-def test_classify_recrawl_semantics(spark):
-    """C13+C21: 304 → touched (budget refunded), same hash → unchanged,
-    changed hash → changed with link_structure_changed iff children moved
-    (WebCrawler.java:674-756)."""
-    from navi_spark.operators.fetch import classify_recrawl
+# (url, robots_allowed, honors_304, old_phash, old_caption, new_phash,
+#  new_caption, status with an honors_304 column, status without one)
+RECRAWL_CASES = [
+    ("blocked", False, True, 1, "c", 2, "d", "blocked_robots", "blocked_robots"),
+    ("blocked_same", False, False, 1, "c", 1, "c",
+     "blocked_robots", "blocked_robots"),
+    ("fetch_fail", True, True, 1, "c", None, None, "touched", "touched"),
+    ("fetch_fail_no_304", True, False, 1, "c", None, None, "touched", "touched"),
+    ("304", True, True, 1, "c", 1, "c", "touched", "touched"),
+    ("no_304_same", True, False, 1, "c", 1, "c", "unchanged", "touched"),
+    ("null_304_same", True, None, 1, "c", 1, "c", "touched", "touched"),
+    ("new_caption", True, True, 1, "c", 1, "c2", "unchanged", "unchanged"),
+    ("new_caption_no_304", True, False, 1, "c", 1, "c2",
+     "unchanged", "unchanged"),
+    ("changed", True, True, 1, "c", 2, "c", "changed", "changed"),
+    ("changed_no_304", True, None, 1, "c", 2, "d", "changed", "changed"),
+]
 
-    schema = ("url string, phash long, children array<string>, etag string")
-    old = spark.createDataFrame(
-        [("u1", 10, ["a"], "e1"), ("u2", 20, ["a"], "e2"),
-         ("u3", 30, ["a"], "e3"), ("u4", 40, ["a"], "e4")], schema)
-    new = spark.createDataFrame(
-        [("u1", 10, ["a"], "e1"),            # validator match → 304 touched
-         ("u2", 20, ["b"], "e2x"),           # rotated etag, same hash → unchanged
-         ("u3", 31, ["a"], "e3x"),           # changed, same children
-         ("u4", 41, ["b"], "e4x")], schema)  # changed + structure
-    out = {r["url"]: r for r in classify_recrawl(old, new).collect()}
-    assert out["u1"]["status"] == "touched" and not out["u1"]["budget_consumed"]
-    assert out["u2"]["status"] == "unchanged" and out["u2"]["budget_consumed"]
-    assert out["u3"]["status"] == "changed"
-    assert not out["u3"]["link_structure_changed"]
-    assert out["u4"]["status"] == "changed" and out["u4"]["link_structure_changed"]
+
+def test_classify_recrawl_semantics(spark):
+    """C13+C21, the status the engine's recrawl labels each reloaded page
+    with (WebCrawler.java:664-756): robots first, then a failed fetch is a
+    refunded touch, a 304 (validators honored, same payload) a refunded
+    touch, the same content hash 'unchanged' and anything else 'changed'.
+    A null honors_304, or no such column, means the server honors
+    validators."""
+    from navi_spark.operators.fetch import recrawl_status
+
+    df = spark.createDataFrame(
+        [c[:7] for c in RECRAWL_CASES],
+        "url string, robots_allowed boolean, honors_304 boolean, "
+        "old_phash long, old_caption string, new_phash long, "
+        "new_caption string",
+    )
+    got = {
+        r["url"]: (r["with_col"], r["without_col"])
+        for r in df.select(
+            "url",
+            recrawl_status(F.col("honors_304")).alias("with_col"),
+            recrawl_status().alias("without_col"),
+        ).collect()
+    }
+    assert got == {c[0]: (c[7], c[8]) for c in RECRAWL_CASES}
 
 
 def test_lineage_and_metrics_written(std_run):
@@ -756,57 +779,90 @@ def _oracle_pages_map(ores):
     return {p["url"]: p for p in ores.pages}
 
 
+def _assert_recrawl_matches(eng, stats, ores):
+    from collections import Counter
+
+    assert stats["consumed"] == ores["consumed"]
+    assert stats["pagerank_recomputed"] == ores["pagerank_recomputed"]
+    # exact pop-outcome telemetry: the engine's statuses must equal the
+    # oracle's per-pop classification (domain_skip included), and rows
+    # the oracle never popped (budget exhausted) are the not_popped set
+    assert stats["statuses"] == dict(Counter(ores["statuses"].values()))
+    assert stats["not_popped"] == len(ores["pages"]) - len(ores["statuses"])
+    assert stats["reloaded"] == len(ores["pages"])
+    got = {
+        r["url"]: (r["image_id"], r["phash"], r["caption"],
+                   list(r["children"]), r["rank"])
+        for r in eng.pages().collect()
+    }
+    want = {
+        u: (p["image_id"], p["phash"], p["caption"],
+            list(p["children"]), p["rank"])
+        for u, p in ores["pages"].items()
+    }
+    assert set(got) == set(want)
+    for u in got:
+        assert got[u][:4] == want[u][:4], u
+        assert got[u][4] == pytest.approx(want[u][4], rel=1e-9), u
+
+
 def test_recrawl_parity_with_sequential_oracle(spark, universe, oracle_result):
+    """Recrawls checked against sequential_recrawl_oracle. The first, of
+    the drifted v1 web, reloads pages that all carry the crawl's rank 1.0
+    and changes links, so PageRank reruns. The second, of the v2 web with
+    a per-host cap of 1 and a budget of 3, pops pages in the rank-DESC
+    order of those new ranks until both cuts bind: a host's second
+    consuming page is skipped, and the budget runs out while a
+    cap-eligible page is left. A wrong reload order or cap window then
+    changes which pages it recrawls. It runs twice from the same tables,
+    with 1 and 2 salt buckets: the host's pages share the window that
+    picks its first `cap` in one layout and not in the other."""
     from navi_spark.oracle import sequential_recrawl_oracle
 
-    web, images, robots, seeds = universe
+    def ocfg(cap):
+        return OracleConfig(
+            max_pages=MAX_PAGES, max_pages_per_domain=cap, wave_budget=WAVE)
+
     workdir = tempfile.mkdtemp(prefix="navi-recrawl-")
+    web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
+    web_v2 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=2)
     try:
         eng, seeds = _mk_engine(spark, universe, workdir)
         eng.bootstrap(seeds)
         eng.run(max_waves=30)
 
-        web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
         stats = eng.recrawl(web=web_v1, max_pages=12)
-
-        oweb1, oimages, orobots = build_oracle_inputs(
-            N_URLS, N_HOSTS, version=1
-        )
-        ocfg = OracleConfig(
-            max_pages=MAX_PAGES, max_pages_per_domain=CAP, wave_budget=WAVE
-        )
         ores = sequential_recrawl_oracle(
-            oracle_result.pages, oweb1, oimages, orobots, ocfg, max_pages=12
+            oracle_result.pages,
+            *build_oracle_inputs(N_URLS, N_HOSTS, version=1),
+            ocfg(CAP), max_pages=12,
         )
+        _assert_recrawl_matches(eng, stats, ores)
+        assert stats["pagerank_recomputed"]
 
-        assert stats["consumed"] == ores["consumed"]
-        assert stats["pagerank_recomputed"] == ores["pagerank_recomputed"]
-        # exact pop-outcome telemetry: the engine's statuses must equal the
-        # oracle's per-pop classification (domain_skip included), and rows
-        # the oracle never popped (budget exhausted) are the not_popped set
-        from collections import Counter
-
-        assert stats["statuses"] == dict(Counter(ores["statuses"].values()))
-        assert stats["not_popped"] == len(ores["pages"]) - len(
-            ores["statuses"]
+        # the oracle starts from the engine's own ranks, so float noise
+        # in PageRank cannot reorder tied pages between the two
+        pages = [r.asDict() for r in eng.pages().collect()]
+        assert len({p["rank"] for p in pages}) > 1
+        ores = sequential_recrawl_oracle(
+            pages, *build_oracle_inputs(N_URLS, N_HOSTS, version=2),
+            ocfg(1), max_pages=3,
         )
-        assert stats["reloaded"] == len(ores["pages"])
-        got = {
-            r["url"]: (r["image_id"], r["phash"], r["caption"],
-                       list(r["children"]), r["rank"])
-            for r in eng.pages().collect()
-        }
-        want = {
-            u: (p["image_id"], p["phash"], p["caption"],
-                list(p["children"]), p["rank"])
-            for u, p in ores["pages"].items()
-        }
-        assert set(got) == set(want)
-        for u in got:
-            assert got[u][:4] == want[u][:4], u
-            assert got[u][4] == pytest.approx(want[u][4], rel=1e-9), u
-        web_v1.unpersist()
+        # committed data is never rewritten, so a copy of the tables
+        # resumes the same state
+        shutil.copytree(workdir, workdir + "-salt1")
+        for wd, salt in ((workdir + "-salt1", 1), (workdir, 2)):
+            # a recrawl's cap is its engine's: resume the tables with cap 1
+            eng, _ = _mk_engine(spark, universe, wd,
+                                max_pages_per_domain=1, salt_buckets=salt)
+            eng.resume()
+            stats = eng.recrawl(web=web_v2, max_pages=3)
+            _assert_recrawl_matches(eng, stats, ores)
+            assert stats["consumed"] == 3 and stats["not_popped"] > 0
+            assert stats["statuses"].get("domain_skip", 0) > 0
     finally:
+        web_v1.unpersist(), web_v2.unpersist()
+        shutil.rmtree(workdir + "-salt1", ignore_errors=True)
         shutil.rmtree(workdir, ignore_errors=True)
 
 
@@ -986,8 +1042,8 @@ def test_crawl_recrawl_crawl_lifecycle(spark, universe):
 # ---------------------------------------------------------------------------
 
 
-def _topk_pool(spark, n, ranks="mixed"):
-    df = spark.range(n).select(
+def _topk_pool(spark, n, ranks="mixed", parts=None):
+    df = spark.range(0, n, 1, parts).select(
         F.format_string("http://h%03d.test/p/%07d",
                         F.pmod(F.col("id"), F.lit(37)),
                         F.pmod(F.col("id") * 2654435761, F.lit(10_000_019)),
@@ -1036,16 +1092,47 @@ def test_take_k_smallest_k_covers_pool(spark):
         pool.unpersist()
 
 
+def test_take_k_smallest_sample_is_seeded(spark, monkeypatch):
+    """The pivot sample's plan carries take_k_smallest's fixed seed 7, so
+    the same pool draws the same sample on every run. A positional
+    fraction with a `seed=` keyword is read by PySpark as (fraction,
+    seed=None) and gets a random seed."""
+    from navi_spark.operators.frontier import take_k_smallest
+    from navi_spark.plans import explain_str
+
+    pool = _topk_pool(spark, 2_000, parts=4)
+    samples = []
+    sample = type(pool).sample
+
+    def spy(self, *args, **kwargs):
+        out = sample(self, *args, **kwargs)
+        samples.append(out)
+        return out
+
+    monkeypatch.setattr(type(pool), "sample", spy)
+    take_k_smallest(pool, 500, sample_rows=200)
+    assert len(samples) == 1
+    seeds = re.findall(r"Sample [^,]+, [^,]+, (?:true|false), (-?\d+)",
+                       explain_str(samples[0], "simple"))
+    assert seeds == ["7"]
+
+
 def test_take_k_smallest_fallback_is_exact(spark):
-    """A degenerate 1-row sample (none drawn here) cannot bracket the k-th
-    key; the guard must reroute to the exact global sort, loudly."""
+    """A degenerate 1-row sample that draws nothing cannot bracket the
+    k-th key; the guard must reroute to the exact global sort, loudly.
+    The sample is seeded, so on this pool (4 range partitions) it draws
+    no row on every run."""
     from navi_spark.operators.frontier import take_k_smallest
 
-    pool = _topk_pool(spark, 30_000, "equal").persist()
+    n, k = 10_000, 4_000
+    pool = _topk_pool(spark, n, "equal", parts=4).persist()
     try:
-        with pytest.warns(RuntimeWarning, match="global-sort fallback"):
-            got = take_k_smallest(pool, 12_000, sample_rows=1)
-        exp = pool.orderBy("rank", "url").limit(12_000)
+        assert pool.select("rank", "url").sample(
+            fraction=1 / n, seed=7).isEmpty()
+        with pytest.warns(RuntimeWarning, match="top-k sample empty"):
+            got = take_k_smallest(pool, k, sample_rows=1)
+        exp = pool.orderBy("rank", "url").limit(k)
+        assert got.count() == k
         assert got.exceptAll(exp).isEmpty() and exp.exceptAll(got).isEmpty()
     finally:
         pool.unpersist()

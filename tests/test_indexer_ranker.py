@@ -73,8 +73,11 @@ def test_field_lengths_and_totals(index, pages_df):
     lr = {r["doc_id"]: r for r in lengths.collect()}
     assert lr["u0"]["len_h1"] == 2 and lr["u0"]["len_other"] == 7
     assert lr["u3"]["len_a"] == 0
-    totals = indexer.field_totals(lengths, list(FIELDS)).collect()[0]
-    assert totals["total_h1"] == sum(len(d[1].split()) for d in DOCS)
+    # R4 averages are the global token mass (I8) over N
+    assert lengths.count() == N_DOCS
+    avgs = ranker.avg_field_lengths(lengths, list(FIELDS))
+    assert avgs["h1"] * N_DOCS == pytest.approx(
+        sum(len(d[1].split()) for d in DOCS))
 
 
 def test_stopword_filter(pages_df):
@@ -97,9 +100,10 @@ def test_idf_and_df(index):
 
 
 def test_candidate_union_semantics(index):
-    postings, _ = index
+    postings, lengths = index
     cand = {r["doc_id"] for r in
-            ranker.candidate_docs(postings, ["spark", "rivers"]).collect()}
+            ranker.bm25f(postings, lengths, ["spark", "rivers"],
+                         N_DOCS).collect()}
     assert cand == {"u0", "u1"}  # UNION, not intersection (R5)
 
 
@@ -172,34 +176,33 @@ def test_hybrid_rank(index, pages_df):
 
 def test_phrase_pipeline(pages_df):
     rx = ranker.phrase_regex(["big", "tables"])
-    cands = ranker.phrase_candidates(
-        pages_df, rx, ["h1", "h2", "a", "other"]
-    )
-    assert {r["url"] for r in cands.collect()} == {"u0", "u2"}
+    idx = ranker.build_phrase_index(pages_df, "url", list(FIELDS.values()))
+    pruned = ranker.phrase_prune(pages_df, idx, ["big", "tables"])
+    assert {r["url"] for r in pruned.collect()} == {"u0", "u2"}
     scores = {r["doc_id"]: r["phrase_score"] for r in
               ranker.phrase_scores(pages_df, rx, FIELDS).collect()}
+    # the prune keeps every match: same scores as the unpruned scan
+    assert {r["doc_id"]: r["phrase_score"] for r in
+            ranker.phrase_scores(pruned, rx, FIELDS).collect()} == scores
     # u2's hit is in h2 (w=2.0, len=2 → 1.0); u0's is in other (w=1.0, len=7)
     assert scores["u2"] > scores["u0"]
     assert set(scores) == {"u0", "u2"}
+    idx.pairs.unpersist(), idx.word_df.unpersist()
 
 
-def test_boolean_combine(spark, pages_df):
+def test_boolean_combine(spark):
     a = spark.createDataFrame([("u0", 1.0), ("u1", 0.5)], "doc_id string, score double")
     b = spark.createDataFrame([("u1", 0.8), ("u2", 0.6)], "doc_id string, score double")
     c = spark.createDataFrame([("u1", 0.9)], "doc_id string, score double")
-    uni = pages_df.select(F.col("url").alias("doc_id"))
     or_ = {r["doc_id"]: r["score"] for r in
-           ranker.boolean_combine(uni, [a, b], ["OR"]).collect()}
+           ranker.boolean_combine([a, b], ["OR"]).collect()}
     assert or_ == {"u0": 1.0, "u1": 0.8, "u2": 0.6}
     and_ = {r["doc_id"]: r["score"] for r in
-            ranker.boolean_combine(uni, [a, b], ["AND"]).collect()}
+            ranker.boolean_combine([a, b], ["AND"]).collect()}
     assert and_ == {"u1": pytest.approx(0.65)}
     not_ = {r["doc_id"] for r in
-            ranker.boolean_combine(uni, [a, c], ["NOT"]).collect()}
+            ranker.boolean_combine([a, c], ["NOT"]).collect()}
     assert not_ == {"u0"}
-    unary = {r["doc_id"]: r["score"] for r in
-             ranker.not_docs(uni, a).collect()}
-    assert unary == {"u2": 0.1, "u3": 0.1, "u4": 0.1}
 
 
 def test_query_tokenizer_and_parser():

@@ -1,15 +1,10 @@
-"""PageRank parity vs pure-Python oracle + recrawl ops (C21-C23)."""
+"""PageRank parity vs the pure-Python oracle (C22-C23)."""
 
 from __future__ import annotations
 
 import pytest
 
-from navi_spark.operators.pagerank import (
-    detect_changes,
-    pagerank,
-    pagerank_py,
-    recrawl_order,
-)
+from navi_spark.operators.pagerank import pagerank, pagerank_py
 
 PAGES = [
     {"url": "a", "children": ["b", "c"], "rank": 1.0, "phash": 1},
@@ -43,26 +38,6 @@ def test_pagerank_reference_semantics(pages_df):
     # after 1 iter: a receives c's dup edge twice (2 · (1/5)/2 = 1/5)
     # plus e's single (1/5)/2 = 1/10 → 0.15 + 0.85·0.3
     assert got["a"] == pytest.approx(0.15 + 0.85 * 0.3)
-
-
-def test_recrawl_order_desc(pages_df):
-    urls = [r["url"] for r in recrawl_order(pages_df).collect()]
-    assert urls == ["c", "b", "e", "a", "d"]  # rank DESC (C21)
-
-
-def test_detect_changes(spark, pages_df):
-    new = spark.createDataFrame(
-        [
-            ("a", 1, ["b", "c"], "same"),     # unchanged
-            ("b", 99, ["c"], "new content"),  # content changed
-            ("c", 3, ["a"], "same"),          # link structure changed
-        ],
-        "url string, phash long, children array<string>, caption string",
-    )
-    got = {r["url"]: r for r in detect_changes(pages_df, new).collect()}
-    assert not got["a"]["content_changed"] and not got["a"]["link_structure_changed"]
-    assert got["b"]["content_changed"] and not got["b"]["link_structure_changed"]
-    assert not got["c"]["content_changed"] and got["c"]["link_structure_changed"]
 
 
 def test_error_path_leaks_no_cache(spark, pages_df, monkeypatch):

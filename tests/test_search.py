@@ -89,9 +89,9 @@ def test_phrase_prune_is_boundary_sound(spark):
     yields 'xhash' — the prune must use split-on-non-letter instead."""
     from navi_spark.operators.ranker import (
         build_phrase_index,
-        phrase_candidates,
         phrase_prune,
         phrase_regex,
+        phrase_scores,
     )
 
     pages = spark.createDataFrame(
@@ -106,11 +106,11 @@ def test_phrase_prune_is_boundary_sound(spark):
     kept = {r["url"] for r in cand.collect()}
     assert {"d1", "d2"} <= kept and "d4" not in kept
     rx = phrase_regex(["hash", "join"])
-    hits = {r["url"]
-            for r in phrase_candidates(cand, rx, ["body"]).collect()}
-    full = {r["url"]
-            for r in phrase_candidates(pages, rx, ["body"]).collect()}
-    assert hits == full == {"d1", "d2"}
+    hits = {r["doc_id"]: r["phrase_score"]
+            for r in phrase_scores(cand, rx, {"body": "body"}).collect()}
+    full = {r["doc_id"]: r["phrase_score"]
+            for r in phrase_scores(pages, rx, {"body": "body"}).collect()}
+    assert hits == full and set(full) == {"d1", "d2"}
 
 
 def test_phrase_prune_pushes_in_filter_to_scan(spark, tmp_path):

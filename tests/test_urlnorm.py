@@ -11,12 +11,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from navi_spark.functions.urlnorm import (
-    base_url_py,
     host_expr,
     host_of_py,
     normalize_url_py,
     normalize_url_udf,
-    url_hash64,
 )
 
 # (input, expected) — expected=None means the reference returns null.
@@ -92,9 +90,8 @@ def test_normalize_udf_matches_py(spark):
 def test_host_and_base():
     assert host_of_py("https://example.com/a/b") == "example.com"
     assert host_of_py("https://example.com:8080/a") == "example.com"
-    assert base_url_py("https://example.com:8080/a") == "https://example.com:8080"
-    assert base_url_py("https://example.com/a") == "https://example.com"
-    assert base_url_py("https://example.com:443/a") == "https://example.com"
+    assert host_of_py("https://example.com:443/a") == "example.com"
+    assert host_of_py("example.com/a") == "example.com"
 
 
 def test_host_expr(spark):
@@ -103,13 +100,6 @@ def test_host_expr(spark):
     )
     rows = df.select(host_expr(F.col("url")).alias("h")).collect()
     assert [r["h"] for r in rows] == ["example.com", "h1.test"]
-
-
-def test_url_hash64_stable(spark):
-    df = spark.createDataFrame([("https://example.com/a",)], ["url"])
-    a = df.select(url_hash64(F.col("url")).alias("h")).collect()[0]["h"]
-    b = df.select(F.xxhash64("url").alias("h")).collect()[0]["h"]
-    assert a == b and isinstance(a, int)
 
 
 def test_idempotent():
