@@ -27,11 +27,14 @@ Scale note: the server builds a serving layout of the index once, at
 construction (operators/search.py serving_layout: postings carrying idf
 and field lengths, and a (doc_id, pop, snippet text) table, both cached
 and hash-partitioned by doc_id), and releases it in stop(). Measured
-Spark jobs per request on perfbench's 2k-doc index: a repeated POST runs
-1 (the suggestion probe) and a first-seen POST 1 more when its append
-triggers a compaction; GET /results runs 1 for a terms query (no
-exchange), 2 for a phrase (the prune probe, then one scan), 5 for
-`"a b" OR "c"` and 7 for `"a" AND "b" NOT "c"`. The HTTP layer holds no
+Spark jobs per request on perfbench's 2k-doc index: a POST of a query
+this server already recorded runs 0 (it remembers up to
+KNOWN_QUERIES_MAX of them), a first-seen POST 1 (the suggestion probe)
+and 1 more when its append triggers a compaction; GET /results runs 1
+for a terms query (no exchange), and 2 for a phrase or a boolean query
+such as `"a b" OR "c"` or `"a" AND "b" NOT "c"` (the prune probe, then
+one scan that scores every phrase); a third, the id fetch, when a
+selective phrase narrows the scan. The HTTP layer holds no
 data — at cluster scale this process is a driver-side gateway and every
 ranking stage still runs distributed. Serving state (the parsed query)
 is per-server exactly like the reference's per-controller fields, quirks
@@ -44,6 +47,7 @@ from __future__ import annotations
 import json
 import threading
 import time
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
@@ -80,9 +84,18 @@ class ServedIndex:
     k: int = 10
 
 
+# How many recorded queries a server remembers (least recently POSTed
+# first out): a bound, since a long-running server must not grow with its
+# traffic, and a known query's POST then runs no Spark job
+KNOWN_QUERIES_MAX = 4096
+
+
 @dataclass
 class _ServerState:
     query: Optional[str] = None        # last successfully POSTed query
+    # queries this server recorded in its suggestions table; positive
+    # only, so a hit is exact while no suggestion row is ever deleted
+    known: OrderedDict[str, None] = field(default_factory=OrderedDict)
     lock: threading.Lock = field(default_factory=threading.Lock)
 
 
@@ -185,12 +198,25 @@ class QueryEngineServer:
             # the reference inserts the suggestion BEFORE validating
             # (:81 runs ahead of the grammar walk) — same here
             if self.index.suggestions is not None:
-                record_suggestion(self.index.suggestions, query)
+                self._record(query)
             if parsed.kind == "invalid":
                 self.state.query = None
                 return []
             self.state.query = query
         return _parsed_tokens(query, self.index.stopwords)
+
+    def _record(self, query: str) -> None:
+        """record_suggestion unless this server already recorded `query`
+        (under state.lock). A query is remembered only once its record
+        returned, so a failed one is retried by the next POST."""
+        known = self.state.known
+        if query in known:
+            known.move_to_end(query)
+            return
+        record_suggestion(self.index.suggestions, query)
+        known[query] = None
+        if len(known) > KNOWN_QUERIES_MAX:
+            known.popitem(last=False)
 
     def _results(self) -> dict:
         t0 = time.monotonic()

@@ -260,80 +260,103 @@ def build_phrase_index(
     return PhraseIndex(pairs, word_df)
 
 
+def _compose(sets: Sequence, operators: Sequence[str]):
+    """Candidate sets of a left-to-right boolean chain, None = all docs:
+    OR → union, AND → intersection, NOT → the left side. The right side
+    of a NOT is a superset of its matches, so subtracting it could drop a
+    match; the left side bounds `a NOT b` already."""
+    acc = sets[0]
+    for op, s in zip(operators, sets[1:]):
+        if op == "OR":
+            acc = None if acc is None or s is None else acc | s
+        elif op == "AND":
+            acc = s if acc is None else acc if s is None else acc & s
+        elif op != "NOT":
+            raise ValueError(f"unknown operator {op}")
+    return acc
+
+
 def phrase_prune(
     pages: DataFrame,
     index: PhraseIndex,
-    words: Sequence[str],
+    phrases: Sequence[Sequence[str]],
+    operators: Sequence[str] = (),
     id_col: str = "url",
-    max_ids_for_pushdown: int = 10_000,
     n_docs: int | None = None,
     max_frac: float = 0.1,
     max_literal_in: int = 1_000,
 ) -> DataFrame:
-    """Restrict `pages` to docs containing the RAREST prunable phrase word
-    — a guaranteed superset of the regex matches (every match contains all
-    phrase words), decided and fetched with two narrow lookups instead of
-    any scan of the fat text columns.
+    """Restrict `pages` to a guaranteed superset of the docs where a phrase
+    query — one phrase, or phrases joined left to right by AND/OR/NOT —
+    scores > 0, decided with at most two narrow lookups and applied as
+    one literal IN filter on the pages scan (parquet row-group skipping,
+    regex only on rows passing the set probe).
 
-    Per query: (1) probe the tiny word_df table for the phrase words'
-    document frequencies; a word absent from the index appears in no doc
-    (the index tokenization provably covers every \\b-match — see
-    phrase_prune_index), so the phrase matches nothing. (2) Since every
-    match contains the rarest word, candidates ≤ min(df). If that bound is
-    selective (≤ max_ids_for_pushdown and ≤ max_frac·n_docs when known),
-    fetch the rarest word's doc ids — a plain filter on the pairs table,
-    no shuffle — and push them as a literal IN filter on the pages scan:
-    parquet row-group skipping, regex only on rows passing the set probe.
+    A phrase's candidates are the docs holding its RAREST prunable word:
+    every match contains all phrase words. (1) One probe of the tiny
+    word_df table covers the words of all phrases. A word absent from the
+    index appears in no doc (the index tokenization provably covers every
+    \\b-match — see phrase_prune_index), so its phrase has no candidates.
+    A phrase counts as "all docs" when it has no prunable word, or when
+    its rarest word is dense: in more than max_frac·n_docs docs (when
+    `n_docs` is known) or more than `max_literal_in`. The full regex scan
+    the reference always pays (DBManager.java:755-780) is then the right
+    plan, and a larger literal IN bloats plan compile time out of
+    proportion to its skipping value. (2) The phrases' sets compose as
+    the fold they bound (ranker.boolean_score): OR → union, AND →
+    intersection, NOT → the left side. Only when that composition can be
+    narrower than all docs does one fetch of `pairs` bring the rarest
+    word's ids of every selective phrase — a plain filter, no shuffle.
 
-    Above `max_literal_in` ids the pushdown switches from a literal IN
-    predicate to a broadcast LEFT SEMI join on the rarest word's id set
-    (no collect at all): a 10k-literal IN bloats plan compile/codegen time
-    out of proportion to its row-group-skipping value, while a ≤10k-row
-    broadcast build side is constant-cost. Note Catalyst pushes the
-    caller's (deterministic) regex below the semi-join onto the scan, so
-    this path bounds OUTPUT rows and compile time rather than scan bytes —
-    the literal-IN path stays the genuinely scan-saving plan, which is why
-    the crossover sits at 1k and not higher.
-
-    A DENSE phrase (min df above the cutoff) returns `pages` unchanged:
-    the full regex scan the reference always pays (DBManager.java:755-780)
-    is then genuinely the best plan — a semi-join adds nothing once the
-    candidate set stops being selective, because the pushed-down regex
-    already touches every row."""
-    ws = phrase_prunable_words(words)
-    if not ws:
+    Returns `pages` unchanged when the composed set is all docs or holds
+    more than `max_literal_in` ids."""
+    words = {w for p in phrases for w in phrase_prunable_words(p)}
+    if not words:
         return pages
-    cutoff = max_ids_for_pushdown
+    cutoff = max_literal_in
     if n_docs is not None:
         cutoff = min(cutoff, max(1, int(max_frac * n_docs)))
     dfs = {
         r["word"]: r["df"]
-        for r in index.word_df.filter(F.col("word").isin(*ws)).collect()
+        for r in index.word_df.filter(F.col("word").isin(*words)).collect()
     }
-    if any(w not in dfs for w in ws):
-        return pages.filter(F.lit(False))  # some word occurs in no doc
-    rarest = min(ws, key=lambda w: dfs[w])
-    if dfs[rarest] > cutoff:
-        return pages  # dense phrase: the full scan is the right plan
-    id_rows = index.pairs.filter(F.col("word") == rarest).select(
-        F.col("doc_id").alias(id_col)
-    )
-    if dfs[rarest] > max_literal_in:
-        return pages.join(F.broadcast(id_rows), on=id_col, how="left_semi")
-    ids = [r[id_col] for r in id_rows.collect()]
-    return pages.filter(F.col(id_col).isin(ids))
+    # per phrase: None = all docs, "" = no doc, else its rarest word
+    rarest: list[str | None] = []
+    for p in phrases:
+        ws = phrase_prunable_words(p)
+        if any(w not in dfs for w in ws):
+            rarest.append("")
+            continue
+        w = min(ws, key=dfs.__getitem__, default=None)
+        rarest.append(w if w is not None and dfs[w] <= cutoff else None)
+    # the composition with one stand-in set for every selective phrase:
+    # None or empty decides the prune without fetching any ids
+    shape = _compose([None if w is None else frozenset({0} if w else ())
+                      for w in rarest], operators)
+    if shape is None:
+        return pages
+    ids: dict[str, set] = {w: set() for w in rarest if w}
+    if shape:
+        for r in (index.pairs.filter(F.col("word").isin(*ids))
+                  .select("word", "doc_id").collect()):
+            ids[r["word"]].add(r["doc_id"])
+    keep = _compose([None if w is None else frozenset(ids.get(w, ()))
+                     for w in rarest], operators)
+    if not keep:
+        return pages.filter(F.lit(False))
+    if len(keep) > max_literal_in:  # a union of selective phrases
+        return pages
+    return pages.filter(F.col(id_col).isin(sorted(keep)))
 
 
-def phrase_scores(
-    pages: DataFrame, rx: str,
+def phrase_score(
+    words: Sequence[str],
     field_cols: dict[str, str],
     weights: dict[str, float] | None = None,
-    carry: Sequence[str] = (),
-) -> DataFrame:
-    """R11: per field, w_f · matches / field_len (Ranker.java:324-407) —
-    regexp_count + size(split) keep it JVM-side (no UDF). The `carry`
-    columns of `pages` (a served scan's popularity and snippet text) pass
-    through to the output.
+) -> Column:
+    """R9+R11: a page's score for one phrase, per field w_f · matches /
+    field_len of the phrase regex (Ranker.java:324-407) — regexp_count +
+    size(split) keep it JVM-side (no UDF); 0.0 where it does not occur.
 
     A field is split for its length only where the phrase occurs in it:
     a match makes the field non-empty, so its length is ≥ 1, and a field
@@ -341,58 +364,62 @@ def phrase_scores(
     arithmetic widens to double, as explicit casts would; each Column call
     costs the driver a call-site capture, so the score uses few."""
     weights = weights or FIELD_WEIGHTS
+    rx = F.lit(phrase_regex(words))
     score = None
     for name, col in field_cols.items():
         w = float(weights.get(name, 1.0))
         c = F.col(col)
-        freq = F.regexp_count(c, F.lit(rx))
+        freq = F.regexp_count(c, rx)
         flen = F.size(F.split(c, "\\s+"))
         term = F.when(freq > 0, freq * w / flen).otherwise(0.0)
         score = term if score is None else score + term
-    return pages.select(
-        F.col("url").alias("doc_id"), score.alias("phrase_score"), *carry
-    ).filter(F.col("phrase_score") > 0)
+    return score
 
 
-def boolean_combine(
-    scored: Sequence[DataFrame],
-    operators: Sequence[str],
-) -> DataFrame:
-    """R12: left-to-right AND/OR/NOT over (doc_id, score) sets
-    (Ranker.java:410-598; no precedence despite the comment at :500).
+def boolean_score(scores: Sequence[Column], operators: Sequence[str]) -> Column:
+    """R12: left-to-right AND/OR/NOT (Ranker.java:410-598; no precedence
+    despite the comment at :500) folded over per-page phrase scores, where
+    a page is in a phrase's set iff its score is > 0:
 
-    a OR b = union, score = max                     (:543-553)
-    a AND b= intersection, score = (s_a + s_b)/2    (:554-572)
-    a NOT b= set-minus                              (:577-587)
+    a OR b  = greatest(a, b): union, score = max             (:543-553)
+    a AND b = (a + b) / 2 where both > 0, else 0:
+              intersection, score = mean                     (:554-572)
+    a NOT b = 0 where b > 0, else a: set-minus               (:577-587)
 
-    The reference's unary NOT (universe − docs(x), each scored 0.1,
-    :486-493) has no form here: parse_query's grammar starts every phrase
-    query with a phrase, so an operator never comes first."""
-    assert len(scored) == len(operators) + 1
-
-    def as_scored(df):
-        return df.select("doc_id", "score")
-
-    acc = as_scored(scored[0])
-    for op, nxt in zip(operators, scored[1:]):
-        op = op.upper()
-        nx = as_scored(nxt)
+    These are the set algebra's values exactly, because an absent score
+    is 0 and a present one is > 0. The reference's unary NOT (universe −
+    docs(x), each scored 0.1, :486-493) has no form here: parse_query's
+    grammar starts every phrase query with a phrase, so an operator never
+    comes first."""
+    assert len(scores) == len(operators) + 1
+    acc = scores[0]
+    for op, s in zip(operators, scores[1:]):
         if op == "OR":
-            acc = (
-                acc.unionByName(nx)
-                .groupBy("doc_id")
-                .agg(F.max("score").alias("score"))
-            )
+            acc = F.greatest(acc, s)
         elif op == "AND":
-            acc = (
-                acc.withColumnRenamed("score", "s1")
-                .join(nx.withColumnRenamed("score", "s2"), "doc_id")
-                .select(
-                    "doc_id", ((F.col("s1") + F.col("s2")) / 2).alias("score")
-                )
-            )
+            acc = F.when((acc > 0) & (s > 0), (acc + s) / 2).otherwise(0.0)
         elif op == "NOT":
-            acc = acc.join(nx.select("doc_id"), "doc_id", "left_anti")
+            acc = F.when(s > 0, 0.0).otherwise(acc)
         else:
             raise ValueError(f"unknown operator {op}")
     return acc
+
+
+def phrase_scores(
+    pages: DataFrame,
+    phrases: Sequence[Sequence[str]],
+    field_cols: dict[str, str],
+    operators: Sequence[str] = (),
+    weights: dict[str, float] | None = None,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """(doc_id, phrase_score) of the pages where a phrase query scores
+    > 0: every phrase's :func:`phrase_score` folded by
+    :func:`boolean_score` in one scan of `pages`. The `carry` columns of
+    `pages` (a served scan's popularity and snippet text) pass through to
+    the output."""
+    score = boolean_score(
+        [phrase_score(p, field_cols, weights) for p in phrases], operators)
+    return pages.select(
+        F.col("url").alias("doc_id"), score.alias("phrase_score"), *carry
+    ).filter(F.col("phrase_score") > 0)

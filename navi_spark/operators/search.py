@@ -3,8 +3,9 @@ lifecycle (SURVEY.md §3.3) as one composition:
 
     parse (Q1/Q2) → dispatch:
         bare terms   → BM25F (R3) over postings
-        single phrase→ phrase scoring (R9-R11) over page text
-        boolean      → left-to-right set algebra (R12)
+        phrases      → phrase scoring (R9-R11) over page text, a boolean
+                       query's phrases folded left to right (R12) in the
+                       same scan
     → hybrid 0.7·relevance + 0.3·PageRank (R7/R8)
     → top-k + ordered multi-get (R14) → snippets (Q3)
 
@@ -39,7 +40,13 @@ def record_suggestion(suggestions, query: str) -> None:
     that commits also expires the history behind it, so the table's
     manifests and data directories stay bounded too. It keeps the
     compaction's parent, whose files a GET that resolved HEAD just before
-    may still be reading."""
+    may still be reading.
+
+    Invariant: no suggestion row is ever deleted. insert_absent only
+    inserts, and compact() and expire_snapshots() keep every row of HEAD,
+    so a query once recorded stays present. api.QueryEngineServer relies
+    on it: its cache of recorded queries skips this call for a known
+    query, which is exact only while nothing deletes suggestion rows."""
     before = suggestions.snapshot_id()
     sid = suggestions.insert_absent(
         arrow_table([(query,)], "suggestion string"),
@@ -175,9 +182,13 @@ def search(
     layout: ServingLayout | None = None,
 ) -> list[SearchResult]:
     """`phrase_index`: optional prebuilt ranker.build_phrase_index over the
-    same pages/fields — phrase and boolean queries then regex-scan only the
-    docs containing the rarest phrase word instead of the whole corpus (the
-    reference always pays the full Mongo collection scan).
+    same pages/fields — phrase and boolean queries then regex-scan only a
+    candidate set instead of the whole corpus (the reference always pays
+    the full Mongo collection scan). ranker.phrase_prune composes it for
+    the whole query: each selective phrase's candidates are the docs
+    holding its rarest word, and OR unions them, AND intersects them and
+    NOT keeps the left side's; one probe of the word frequencies, at most
+    one fetch of ids, and one literal IN on the scan.
 
     `postings` may be the embed_field_lengths layout (len_ columns on the
     posting rows), in which case `lengths` is not joined.
@@ -186,8 +197,10 @@ def search(
     prebuilt index statistics and snippet field (what
     api.QueryEngineServer holds). Without it, the same layout is built
     here, uncached, so both paths run the same ranking plans: the cached
-    one is a terms query in one Spark job with no exchange, a phrase query
-    in its prune probe plus one scan of `pages`."""
+    one is a terms query in one Spark job with no exchange; a phrase or
+    boolean query is its prune probe (plus the id fetch when a selective
+    phrase can narrow the composed set) and one scan of `pages` that
+    scores every phrase as a column and folds them (ranker.boolean_score)."""
     parsed = parse_query(query, stopwords=set(stopwords))
     if parsed.kind == "invalid":
         return []
@@ -199,13 +212,6 @@ def search(
         layout = serving_layout(
             pages, postings, lengths, field_cols, n_docs, snippet_field)
 
-    def pruned(phrase: list[str]) -> DataFrame:
-        if phrase_index is None:
-            return layout.pages
-        return ranker.phrase_prune(
-            layout.pages, phrase_index, phrase, id_col="url", n_docs=n_docs
-        )
-
     if parsed.kind == "terms":
         # co-partitioned with docs: the join plans no exchange; the hint
         # keeps the planner from broadcasting the small docs table instead
@@ -213,28 +219,22 @@ def search(
             layout.postings, None, parsed.terms, n_docs, fields=layout.fields,
             term_score=layout.term_score,
         ).join(layout.docs.hint("shuffle_hash"), "doc_id")
-    elif parsed.kind == "phrase":
-        # the scan keeps the page's popularity and text: no join at all
-        rx = ranker.phrase_regex(parsed.phrases[0])
+    else:
+        # a phrase, or phrases under AND/OR/NOT: every phrase is a score
+        # column of one scan that keeps the page's popularity and text,
+        # so no join at all
+        scanned = layout.pages
+        if phrase_index is not None:
+            scanned = ranker.phrase_prune(
+                scanned, phrase_index, parsed.phrases, parsed.operators,
+                n_docs=n_docs)
         relevance = ranker.phrase_scores(
-            pruned(parsed.phrases[0]), rx, field_cols, carry=("pop", "_text")
+            scanned, parsed.phrases, field_cols, parsed.operators,
+            carry=("pop", "_text"),
         ).withColumnRenamed("phrase_score", "relevance")
-    else:  # boolean
-        scored: list[DataFrame] = []
-        for phrase in parsed.phrases:
-            rx = ranker.phrase_regex(phrase)
-            s = ranker.phrase_scores(
-                pruned(phrase), rx, field_cols
-            ).withColumnRenamed("phrase_score", "score")
-            scored.append(s)
-        # every NOT is binary: parse_query's grammar starts a phrase query
-        # with a phrase, so a unary NOT never reaches the ranker
-        relevance = ranker.boolean_combine(
-            scored, parsed.operators
-        ).withColumnRenamed("score", "relevance").join(layout.docs, "doc_id")
 
     # top-k with its text (ordered multi-get R14) in the ranking job itself.
-    # The joins above are inner: postings are built from these pages, so
+    # The terms join is inner: postings are built from these pages, so
     # every ranked doc_id has a pages row (the reference's index rows
     # likewise always reference stored pages).
     top = ranker.hybrid_rank(relevance, limit=k).collect()

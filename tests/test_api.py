@@ -18,6 +18,7 @@ from dataclasses import replace
 
 import pytest
 
+from navi_spark import api
 from navi_spark.api import QueryEngineServer, ServedIndex
 from navi_spark.catalog import SnapshotTable
 from navi_spark.operators import indexer, ranker
@@ -252,7 +253,8 @@ def _post_jobs(spark, srv, query):
 
 def test_repeated_post_spark_job_count_bounded(spark, served, tmp_path):
     """Guard the cost of re-recording a known query by counting the Spark
-    jobs one repeated POST launches."""
+    jobs one repeated POST launches: none, since the server remembers the
+    queries it recorded and suggestion rows are never deleted."""
     _, idx = served
     srv = QueryEngineServer(
         replace(idx, suggestions=SnapshotTable(spark, str(tmp_path / "s")))
@@ -262,10 +264,8 @@ def test_repeated_post_spark_job_count_bounded(spark, served, tmp_path):
         n_jobs = _post_jobs(spark, srv, "rivers banks")
     finally:
         srv.stop()
-    # measured (1): the filtered read that finds the query's key. read()
-    # starts no job (the manifest carries the schema). The query's own
-    # ranking runs on GET, not here.
-    assert 0 < n_jobs <= 1, f"a repeated POST launched {n_jobs} Spark jobs"
+    # the query's own ranking runs on GET, not here
+    assert n_jobs == 0, f"a repeated POST launched {n_jobs} Spark jobs"
 
 
 def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
@@ -275,7 +275,8 @@ def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
     (spark.sql.sources.parallelPartitionDiscovery.threshold) listing them
     alone starts one more Spark job per request; the compaction after an
     append keeps the table below that, so at 40 distinct suggestions a
-    POST launches no more jobs than on a one-row table."""
+    new query's POST launches no more jobs than on a one-row table, and a
+    repeated one none."""
     _, idx = served
     tbl = SnapshotTable(spark, str(tmp_path / "s"))
     srv = QueryEngineServer(replace(idx, suggestions=tbl)).start()
@@ -292,22 +293,112 @@ def test_post_jobs_bounded_past_many_distinct_queries(spark, served,
         new = _post_jobs(spark, srv, f"spark q{n}")
     finally:
         srv.stop()
-    assert 0 < repeated <= 1, f"a repeated POST launched {repeated} jobs"
-    # measured 1: the same filtered read; the absent row is appended as
-    # an Arrow table, which writes its file without a Spark job
+    assert repeated == 0, f"a repeated POST launched {repeated} jobs"
+    # measured 1: the filtered read that finds whether the key is present
+    # (read() starts no job, the manifest carries the schema); the absent
+    # row is appended as an Arrow table, which writes its file without a
+    # Spark job
     assert 0 < new <= 1, f"a new query's POST launched {new} jobs"
 
 
+def test_known_queries_stay_bounded(spark, served, tmp_path, monkeypatch):
+    """The queries a server remembers as recorded never outnumber
+    KNOWN_QUERIES_MAX, the least recently POSTed leaving first. A POST of
+    an evicted query probes the table again and adds no row."""
+    _, idx = served
+    monkeypatch.setattr(api, "KNOWN_QUERIES_MAX", 3)
+    tbl = SnapshotTable(spark, str(tmp_path / "s"))
+    srv = QueryEngineServer(replace(idx, suggestions=tbl)).start()
+    queries = [f"spark q{i}" for i in range(7)]
+    try:
+        for q in queries:
+            srv._post_search(q)
+            assert len(srv.state.known) <= 3
+        srv._post_search(queries[4])  # a hit keeps q4 over q5
+        assert list(srv.state.known) == [queries[5], queries[6], queries[4]]
+        head = tbl.snapshot_id()
+        assert _post_jobs(spark, srv, queries[0]) == 1  # evicted: probed
+        assert list(srv.state.known) == [queries[6], queries[4], queries[0]]
+        assert _post_jobs(spark, srv, queries[0]) == 0
+    finally:
+        srv.stop()
+    assert tbl.snapshot_id() == head
+    assert sorted(r["suggestion"] for r in tbl.read().collect()) == sorted(
+        queries)
+
+
+def test_failed_record_is_not_remembered(spark, served, tmp_path,
+                                         monkeypatch):
+    """A POST whose suggestion commit raises fails, and the server does
+    not remember its query: the next POST of it records the row."""
+    _, idx = served
+    tbl = SnapshotTable(spark, str(tmp_path / "s"))
+    srv = QueryEngineServer(replace(idx, suggestions=tbl)).start()
+    insert_absent = tbl.insert_absent
+    failures = [OSError("injected commit failure")]
+
+    def fails_once(*a, **kw):
+        if failures:
+            raise failures.pop()
+        return insert_absent(*a, **kw)
+
+    try:
+        srv._post_search("spark")
+        monkeypatch.setattr(tbl, "insert_absent", fails_once)
+        with pytest.raises(OSError, match="injected"):
+            srv._post_search("rivers banks")
+        assert [r["suggestion"] for r in tbl.read().collect()] == ["spark"]
+        assert srv._post_search("rivers banks") == ["river", "bank"]
+        assert _post_jobs(spark, srv, "rivers banks") == 0
+    finally:
+        srv.stop()
+    assert sorted(r["suggestion"] for r in tbl.read().collect()) == [
+        "rivers banks", "spark"]
+
+
+def test_concurrent_posts_record_each_query_once(spark, served, tmp_path):
+    """POSTs from 8 clients at once over a duplicate-heavy mix of queries
+    leave exactly one row and one snapshot per distinct query."""
+    _, idx = served
+    tbl = SnapshotTable(spark, str(tmp_path / "s"))
+    queries = ["rivers banks", "spark", '"big tables"', "slow rivers"]
+    start = threading.Barrier(8)
+    errors: list[Exception] = []
+
+    def client(i, url):
+        try:
+            start.wait()
+            for j in range(6):
+                q = queries[(i + j) % 2 if j % 3 else (i * j) % 4]
+                _post(url, "/search?query=" + urllib.parse.quote(q))
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+            start.abort()
+
+    with QueryEngineServer(replace(idx, suggestions=tbl)) as url:
+        threads = [threading.Thread(target=client, args=(i, url))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    assert not errors, errors
+    assert sorted(r["suggestion"] for r in tbl.read().collect()) == sorted(
+        queries)
+    assert len(tbl.history()) == len(queries)
+
+
 # GET /results on a server's cached serving layout, per query shape, with
-# a phrase index (measured, AQE on; the parent's plans ran 6, 4, 6 and 9):
-# a terms query is one job with no exchange; a phrase query is its prune
-# probe plus one scan; a boolean query is one probe per phrase (plus the
-# id fetch of a selective one) plus the stages of its set algebra
+# a phrase index (measured, AQE on): a terms query is one job with no
+# exchange; a phrase or boolean query is one prune probe for all its
+# phrases plus one scan that scores them all. Here "rivers" and "joy" are
+# selective, but neither narrows its query's candidates (an OR with a
+# dense phrase, the right side of a NOT), so no id fetch runs
 RESULTS_JOB_BOUNDS = {
     "rivers banks": 1,
     '"big tables"': 2,
-    '"big tables" OR "rivers"': 6,
-    '"spark" AND "tables" NOT "joy"': 8,
+    '"big tables" OR "rivers"': 2,
+    '"spark" AND "tables" NOT "joy"': 2,
 }
 
 
@@ -341,13 +432,21 @@ def test_results_spark_job_count_bounded(spark, served):
 def test_concurrent_results_overlap_in_time(spark, served):
     """Two GET /results bodies on two threads run their Spark jobs at the
     same time: nothing serializes one query behind another. Read from the
-    jobs' submission and completion times in the status store."""
+    jobs' submission and completion times in the status store. With a
+    phrase index a boolean GET is its prune probe and one scan, so its
+    jobs span the driver's planning of the scan; one scan job alone
+    (~10 ms) is shorter than the stagger that planning on two threads,
+    which share the GIL, puts between their submissions."""
     _, idx = served
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()  # noqa: SLF001
     queries = ['"big tables" OR "rivers"', '"spark" AND "tables" NOT "joy"']
-    servers = [QueryEngineServer(replace(idx, suggestions=None)).start()
-               for _ in queries]
+    phrase_index = ranker.build_phrase_index(idx.pages, "url",
+                                             list(FIELDS.values()))
+    phrase_index.pairs.count(), phrase_index.word_df.count()
+    servers = [QueryEngineServer(replace(
+        idx, suggestions=None, phrase_index=phrase_index)).start()
+        for _ in queries]
 
     def span(ids):
         """(first submission, last completion) of the jobs, in ms."""
@@ -386,6 +485,7 @@ def test_concurrent_results_overlap_in_time(spark, served):
     finally:
         for srv in servers:
             srv.stop()
+        phrase_index.pairs.unpersist(), phrase_index.word_df.unpersist()
     assert overlapped > 0, "concurrent GET /results never ran at once"
 
 

@@ -816,8 +816,17 @@ def test_recrawl_parity_with_sequential_oracle(spark, universe, oracle_result):
     cap-eligible page is left. A wrong reload order or cap window then
     changes which pages it recrawls. It runs twice from the same tables,
     with 1 and 2 salt buckets: the host's pages share the window that
-    picks its first `cap` in one layout and not in the other."""
+    picks its first `cap` in one layout and not in the other. The v2
+    recrawl also sees robots that now disallow a stored page and a web
+    where another stored page fails its fetch, so the engine classifies
+    both refunds that need such a change (blocked_robots, a failed
+    fetch) against the oracle."""
+    from urllib.parse import urlparse
+
+    from navi_spark.functions.urlnorm import host_of_py
+    from navi_spark.operators.robots import parse_robots_txt
     from navi_spark.oracle import sequential_recrawl_oracle
+    from navi_spark.sources.datagen import ROBOTS_SCHEMA
 
     def ocfg(cap):
         return OracleConfig(
@@ -844,19 +853,44 @@ def test_recrawl_parity_with_sequential_oracle(spark, universe, oracle_result):
         # in PageRank cannot reorder tied pages between the two
         pages = [r.asDict() for r in eng.pages().collect()]
         assert len({p["rank"] for p in pages}) > 1
+        oweb, oimages, orobots = build_oracle_inputs(N_URLS, N_HOSTS,
+                                                     version=2)
+        # two pages that v2 refunds as 'touched' change only their own
+        # pop outcome: robots now disallow one (by a path that no other
+        # stored page of its host contains), and the other's image is gone
+        touched = [u for u, st in sequential_recrawl_oracle(
+            pages, oweb, oimages, orobots, ocfg(1), max_pages=3,
+        )["statuses"].items() if st == "touched"]
+        paths: dict[str, list[str]] = {}
+        for p in pages:
+            paths.setdefault(host_of_py(p["url"]), []).append(
+                urlparse(p["url"]).path)
+        blocked = next(u for u in touched if sum(
+            urlparse(u).path in q for q in paths[host_of_py(u)]) == 1)
+        failing = next(u for u in touched if u != blocked)
+        host = host_of_py(blocked)
+        txt = f"User-agent: *\nDisallow: {urlparse(blocked).path}\n"
+        rows = {r["host"]: tuple(r) for r in universe[2].collect()}
+        rows[host] = (host, txt, rows.get(host, (None, None, None))[2])
+        robots_v2 = spark.createDataFrame(list(rows.values()), ROBOTS_SCHEMA)
+        web_v2_fail = web_v2.withColumn("image_id", F.when(
+            F.col("url") == failing, F.lit("imgmissing-v2")
+        ).otherwise(F.col("image_id")))
+        orobots[host] = parse_robots_txt(txt)
+        oweb[failing] = ("imgmissing-v2", oweb[failing][1])
         ores = sequential_recrawl_oracle(
-            pages, *build_oracle_inputs(N_URLS, N_HOSTS, version=2),
-            ocfg(1), max_pages=3,
-        )
+            pages, oweb, oimages, orobots, ocfg(1), max_pages=3)
+        assert ores["statuses"][blocked] == "blocked_robots"
+        assert ores["statuses"][failing] == "touched"
         # committed data is never rewritten, so a copy of the tables
         # resumes the same state
         shutil.copytree(workdir, workdir + "-salt1")
         for wd, salt in ((workdir + "-salt1", 1), (workdir, 2)):
             # a recrawl's cap is its engine's: resume the tables with cap 1
-            eng, _ = _mk_engine(spark, universe, wd,
+            eng, _ = _mk_engine(spark, (*universe[:2], robots_v2, None), wd,
                                 max_pages_per_domain=1, salt_buckets=salt)
             eng.resume()
-            stats = eng.recrawl(web=web_v2, max_pages=3)
+            stats = eng.recrawl(web=web_v2_fail, max_pages=3)
             _assert_recrawl_matches(eng, stats, ores)
             assert stats["consumed"] == 3 and stats["not_popped"] > 0
             assert stats["statuses"].get("domain_skip", 0) > 0

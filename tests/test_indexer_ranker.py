@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import itertools
 import math
+import random
 
 import pyspark.sql.functions as F
 import pytest
@@ -175,34 +177,75 @@ def test_hybrid_rank(index, pages_df):
 
 
 def test_phrase_pipeline(pages_df):
-    rx = ranker.phrase_regex(["big", "tables"])
+    phrase = [["big", "tables"]]
     idx = ranker.build_phrase_index(pages_df, "url", list(FIELDS.values()))
-    pruned = ranker.phrase_prune(pages_df, idx, ["big", "tables"])
+    pruned = ranker.phrase_prune(pages_df, idx, phrase)
     assert {r["url"] for r in pruned.collect()} == {"u0", "u2"}
     scores = {r["doc_id"]: r["phrase_score"] for r in
-              ranker.phrase_scores(pages_df, rx, FIELDS).collect()}
+              ranker.phrase_scores(pages_df, phrase, FIELDS).collect()}
     # the prune keeps every match: same scores as the unpruned scan
     assert {r["doc_id"]: r["phrase_score"] for r in
-            ranker.phrase_scores(pruned, rx, FIELDS).collect()} == scores
+            ranker.phrase_scores(pruned, phrase, FIELDS).collect()} == scores
     # u2's hit is in h2 (w=2.0, len=2 → 1.0); u0's is in other (w=1.0, len=7)
     assert scores["u2"] > scores["u0"]
     assert set(scores) == {"u0", "u2"}
     idx.pairs.unpersist(), idx.word_df.unpersist()
 
 
-def test_boolean_combine(spark):
-    a = spark.createDataFrame([("u0", 1.0), ("u1", 0.5)], "doc_id string, score double")
-    b = spark.createDataFrame([("u1", 0.8), ("u2", 0.6)], "doc_id string, score double")
-    c = spark.createDataFrame([("u1", 0.9)], "doc_id string, score double")
-    or_ = {r["doc_id"]: r["score"] for r in
-           ranker.boolean_combine([a, b], ["OR"]).collect()}
-    assert or_ == {"u0": 1.0, "u1": 0.8, "u2": 0.6}
-    and_ = {r["doc_id"]: r["score"] for r in
-            ranker.boolean_combine([a, b], ["AND"]).collect()}
-    assert and_ == {"u1": pytest.approx(0.65)}
-    not_ = {r["doc_id"] for r in
-            ranker.boolean_combine([a, c], ["NOT"]).collect()}
-    assert not_ == {"u0"}
+def test_boolean_score_table(spark):
+    """R12's fold over per-page phrase scores, where 0 is absent: OR is
+    the max, AND the mean of two present scores, NOT the left score
+    where the right is absent."""
+    table = [  # a, b → a OR b, a AND b, a NOT b
+        (0.5, 0.8, 0.8, 0.65, 0.0),
+        (1.0, 0.0, 1.0, 0.0, 1.0),
+        (0.0, 0.6, 0.6, 0.0, 0.0),
+        (0.0, 0.0, 0.0, 0.0, 0.0),
+    ]
+    df = spark.createDataFrame([r[:2] for r in table], "a double, b double")
+    a, b = F.col("a"), F.col("b")
+    got = df.select(*[ranker.boolean_score([a, b], [op]).alias(op)
+                      for op in ("OR", "AND", "NOT")]).collect()
+    assert [tuple(r) for r in got] == [pytest.approx(r[2:]) for r in table]
+    with pytest.raises(ValueError):
+        ranker.boolean_score([a, b], ["XOR"])
+
+
+def test_boolean_score_matches_set_algebra(spark):
+    """Every 1- and 2-operator chain of the fold equals the reference's
+    left-to-right set algebra over (doc → score) maps (Ranker.java:
+    543-587): union keeping the max, intersection averaging, set-minus."""
+    rng = random.Random(17)
+    docs = [f"d{i:02d}" for i in range(60)]
+    maps = [{d: rng.randint(1, 300) / 100 for d in docs if rng.random() < 0.5}
+            for _ in range(3)]
+
+    def algebra(ops):
+        acc = maps[0]
+        for op, m in zip(ops, maps[1:]):
+            if op == "OR":
+                acc = {d: max(s for s in (acc.get(d), m.get(d)) if s)
+                       for d in acc.keys() | m.keys()}
+            elif op == "AND":
+                acc = {d: (acc[d] + m[d]) / 2 for d in acc.keys() & m.keys()}
+            else:
+                acc = {d: s for d, s in acc.items() if d not in m}
+        return acc
+
+    chains = [ops for n in (1, 2)
+              for ops in itertools.product(("OR", "AND", "NOT"), repeat=n)]
+    df = spark.createDataFrame(
+        [(d, *(m.get(d, 0.0) for m in maps)) for d in docs],
+        "doc string, s0 double, s1 double, s2 double")
+    cols = [F.col(f"s{i}") for i in range(3)]
+    rows = df.select("doc", *[
+        ranker.boolean_score(cols[:len(ops) + 1], ops).alias(f"c{i}")
+        for i, ops in enumerate(chains)]).collect()
+    for i, ops in enumerate(chains):
+        got = {r["doc"]: r[f"c{i}"] for r in rows if r[f"c{i}"] > 0}
+        want = algebra(ops)
+        assert want, ops  # the chain keeps some doc
+        assert got == pytest.approx(want), ops
 
 
 def test_query_tokenizer_and_parser():

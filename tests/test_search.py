@@ -68,16 +68,35 @@ def test_invalid_query(corpus):
 
 
 def test_phrase_index_same_results(corpus, spark):
-    """Pruned phrase path ≡ full-scan path on every golden query shape."""
+    """Pruned phrase path ≡ full-scan path on every golden query shape,
+    and on the shapes where composing the phrases' candidate sets goes
+    wrong. On 5 docs a word in one doc is selective and a word in two is
+    dense (all docs): an OR must unite a selective phrase's candidates
+    with a dense one's, an AND of disjoint candidates keeps none, and the
+    right side of a NOT must not narrow the scan — neither by its
+    candidates ("joy") nor by subtracting them, which can hold docs
+    where the phrase does not occur ("joy spark": u2 has "spark joy")."""
     from navi_spark.operators.ranker import build_phrase_index
 
     pages, _postings, _lengths = corpus
     idx = build_phrase_index(pages, "url", list(FIELDS.values()))
-    for q in ('"big tables"', '"rivers" OR "tables"',
-              '"spark" AND "tables" NOT "joy"'):
+    want = {
+        '"big tables"': {"u0", "u2"},
+        '"rivers" OR "tables"': {"u0", "u1", "u2"},
+        '"spark" AND "tables" NOT "joy"': {"u0"},
+        '"joy" OR "big tables"': {"u0", "u2"},
+        '"banks" OR "joy"': {"u1", "u2"},
+        '"joy" AND "banks"': set(),
+        '"joy" AND "hold rows"': {"u2"},
+        '"big tables" NOT "joy"': {"u0"},
+        '"hold rows" NOT "joy spark"': {"u2"},
+        '"joy" OR "banks" NOT "rivers"': {"u2"},
+    }
+    for q, docs in want.items():
         full = [(r.doc_id, round(r.score, 9)) for r in _run(corpus, q)]
         pruned = [(r.doc_id, round(r.score, 9))
                   for r in _run(corpus, q, phrase_index=idx)]
+        assert {d for d, _ in full} == docs, q
         assert pruned == full, q
     idx.pairs.unpersist(), idx.word_df.unpersist()
 
@@ -90,7 +109,6 @@ def test_phrase_prune_is_boundary_sound(spark):
     from navi_spark.operators.ranker import (
         build_phrase_index,
         phrase_prune,
-        phrase_regex,
         phrase_scores,
     )
 
@@ -102,14 +120,14 @@ def test_phrase_prune_is_boundary_sound(spark):
         "url string, body string",
     )
     idx = build_phrase_index(pages, "url", ["body"])
-    cand = phrase_prune(pages, idx, ["hash", "join"], id_col="url")
+    phrase = [["hash", "join"]]
+    cand = phrase_prune(pages, idx, phrase, id_col="url")
     kept = {r["url"] for r in cand.collect()}
     assert {"d1", "d2"} <= kept and "d4" not in kept
-    rx = phrase_regex(["hash", "join"])
     hits = {r["doc_id"]: r["phrase_score"]
-            for r in phrase_scores(cand, rx, {"body": "body"}).collect()}
+            for r in phrase_scores(cand, phrase, {"body": "body"}).collect()}
     full = {r["doc_id"]: r["phrase_score"]
-            for r in phrase_scores(pages, rx, {"body": "body"}).collect()}
+            for r in phrase_scores(pages, phrase, {"body": "body"}).collect()}
     assert hits == full and set(full) == {"d1", "d2"}
 
 
@@ -128,7 +146,7 @@ def test_phrase_prune_pushes_in_filter_to_scan(spark, tmp_path):
     ).write.parquet(p)
     pages = spark.read.parquet(p)
     idx = build_phrase_index(pages, "url", ["body"])
-    cand = phrase_prune(pages, idx, ["hash", "join"], id_col="url")
+    cand = phrase_prune(pages, idx, [["hash", "join"]], id_col="url")
     plan = explain_str(cand)
     assert "PushedFilters" in plan and "In(url" in plan, plan[:2000]
     assert cand.count() == len([i for i in range(200) if i % 7 == 0])
