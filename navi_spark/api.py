@@ -22,6 +22,7 @@ Endpoints (paths, params, and response shapes mirror the reference):
                                "total_time": ms}          (:305-358)
   GET  /suggestions?query=… → JSON array, case-insensitive contains,
                               limit 5 (DBManager.java:705-726)
+An endpoint that raises answers 500 ``{"error": "internal error"}``.
 
 Scale note: the server builds a serving layout of the index once, at
 construction (operators/search.py serving_layout: postings carrying idf
@@ -160,16 +161,26 @@ class QueryEngineServer:
                                  "GET, POST, OPTIONS")
                 self.end_headers()
 
+            def _serve(self, body, *args) -> None:
+                """Send `body(*args)` as JSON; a 500 if it raises, so the
+                client gets an answer rather than a dropped connection."""
+                try:
+                    out = body(*args)
+                except Exception:  # noqa: BLE001 — any failure is a 500
+                    self._send({"error": "internal error"}, status=500)
+                    return
+                self._send(out)
+
             def do_GET(self):
                 u = urlparse(self.path)
                 if u.path == "/home":
                     self._send("Query Engine is running!",
                                content_type="text/plain")
                 elif u.path == "/results":
-                    self._send(outer._results())
+                    self._serve(outer._results)
                 elif u.path == "/suggestions":
                     q = parse_qs(u.query).get("query", [""])[0]
-                    self._send(outer._suggestions(q))
+                    self._serve(outer._suggestions, q)
                 else:
                     self._send({"error": "not found"}, status=404)
 
@@ -179,7 +190,7 @@ class QueryEngineServer:
                     self._send({"error": "not found"}, status=404)
                     return
                 q = parse_qs(u.query).get("query", [""])[0]
-                self._send(outer._post_search(q))
+                self._serve(outer._post_search, q)
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self._thread = threading.Thread(

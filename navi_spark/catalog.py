@@ -15,19 +15,21 @@ A commit = write data dir → write manifest → atomic HEAD swap. Readers
 resolve HEAD → manifest → ``spark.read.schema(schema).parquet(*dirs)``.
 Time travel = read any manifest; rollback = move HEAD. Crash between
 data-write and HEAD swap leaves an orphan dir, never a torn table — the
-same guarantee Iceberg's metadata pointer gives.
+same guarantee Iceberg's metadata pointer gives. A cut across tables is
+one more file replaced by :func:`atomic_write` after their commits: the
+crawl engine's root file of snapshot ids (``frontier.CUT_FILE``).
 
 The manifest records the schema the commit wrote, as Iceberg's table
 metadata does, so a read hands it to the parquet reader and never starts
 the footer-reading Spark job that schema inference costs.
 
 :func:`arrow_table` turns the small relations the driver itself produces
-(seed lists, the per-wave ``state``/``lineage``/``metrics`` rows, a
-query's suggestion row, empty tables for ``read_or_empty``) into one
-Arrow table. :func:`local_df` hands that table to the JVM as a DataFrame,
-so building it runs no Python worker task; ``append``/``overwrite``/
-``insert_absent`` also take the Arrow table itself and write it with
-``pyarrow.parquet``, so committing it runs no Spark job at all.
+(seed lists, the per-wave ``lineage`` rows, a query's suggestion row,
+empty tables for ``read_or_empty``) into one Arrow table.
+:func:`local_df` hands that table to the JVM as a DataFrame, so building
+it runs no Python worker task; ``append``/``overwrite``/``insert_absent``
+also take the Arrow table itself and write it with ``pyarrow.parquet``,
+so committing it runs no Spark job at all.
 
 On a real cluster every call site swaps one-for-one onto Iceberg:
 ``append``   → ``df.writeTo(tbl).append()``; an Arrow table →
@@ -76,6 +78,15 @@ def arrow_table(rows: list, schema: str) -> pa.Table:
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
         schema=arrow,
     )
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Replace the file at `path` with `text` in one step: a reader, or a
+    restart after a crash, sees the old content or the new, never a mix."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
@@ -173,10 +184,7 @@ class SnapshotTable:
         mpath = os.path.join(self.root, "manifests", f"{sid}.json")
         with open(mpath, "w") as f:
             json.dump(manifest, f)
-        tmp = self._head_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(tmp, self._head_path)  # the atomic commit point
+        atomic_write(self._head_path, str(sid))  # the atomic commit point
         return sid
 
     def append(self, df: DataFrame | pa.Table,
@@ -299,13 +307,10 @@ class SnapshotTable:
         return self.overwrite(self.read().coalesce(int(nparts)), base)
 
     def expire_snapshots(self, retain_last: int = 1,
-                         retain_ids: Optional[set[int]] = None,
                          clean_orphans: bool = False) -> dict:
         """Iceberg ``expire_snapshots`` (+ ``remove_orphan_files`` when
         `clean_orphans`). Keeps the newest `retain_last` snapshots on the
-        HEAD lineage plus any in `retain_ids` (e.g. the ids recorded in
-        the engine's last consistent cut, which resume() may still roll
-        back to), deletes the expired manifests, then removes every data
+        HEAD lineage, deletes the expired manifests, then removes every data
         directory no manifest still on disk references. Manifests from
         abandoned rollback forks keep protecting their dirs unless
         `clean_orphans` scrubs directories referenced by NO manifest
@@ -316,7 +321,6 @@ class SnapshotTable:
             return {"expired": 0, "dirs_removed": 0, "bytes_reclaimed": 0}
         lineage = self.history()
         keep = {m["snapshot_id"] for m in lineage[-max(retain_last, 1):]}
-        keep |= set(retain_ids or ())
         expired = [m for m in lineage if m["snapshot_id"] not in keep]
         mdir = os.path.join(self.root, "manifests")
         expired_dirs: set[str] = set()
@@ -347,10 +351,7 @@ class SnapshotTable:
     def rollback(self, snapshot_id: int) -> None:
         """Point HEAD at an earlier snapshot (Iceberg rollback)."""
         self._manifest(snapshot_id)  # raises if unknown
-        tmp = self._head_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(str(snapshot_id))
-        os.replace(tmp, self._head_path)
+        atomic_write(self._head_path, str(snapshot_id))
 
     def rollback_to_empty(self) -> None:
         """Roll back to the pre-first-commit state (no snapshot at all).

@@ -37,7 +37,7 @@ lowest-(rank, url) entries subject to pop-time rules:
 
 Every attempt gets an outcome label (depth_skip / blocked_robots /
 fetch_failed / dup_content / fetched) in ONE labeled DataFrame pass —
-lineage, metrics, and all wave stats derive from one aggregation of it
+lineage and all wave stats derive from one aggregation of it
 instead of per-stage count() jobs. `wave_budget=1` degenerates to the exact
 sequential pop order: `navi_spark.oracle.sequential_crawl_oracle` replays
 the reference heap loop verbatim and the tests assert bit-equal visit
@@ -45,8 +45,10 @@ order + seen set against it (north rule).
 
 Scale design (the part the reference cannot do):
   * seen-check = one exact anti-join of the wave's shallow rows against
-    the `seen` table, on the JVM (no pre-filter: at the wave budgets run
-    here a filter's upkeep costs more than the probe rows it would prune);
+    the `url` column of `pages` — the URL-seen set is the crawled pages,
+    not a copy of them — on the JVM (no pre-filter: at the wave budgets
+    run here a filter's upkeep costs more than the probe rows it would
+    prune);
   * robots verdicts are one JVM expression over rules parsed and compiled
     to Java regexes once per engine, so the only Python a wave runs is the
     payload validator and the child-link canonicalizer;
@@ -55,13 +57,15 @@ Scale design (the part the reference cannot do):
     so the hot host never lands in one straggler task;
   * global cap uses orderBy().limit() — Spark's distributed TakeOrdered —
     never a single-partition row_number;
-  * every wave ends in snapshot commits; `state` commits LAST and records
-    the per-table snapshot ids, so resume() can roll every table back to a
+  * every wave ends in snapshot commits, then atomically replaces one
+    root file (`CUT_FILE`) holding the engine's position and every
+    table's snapshot id, so resume() can roll every table back to a
     consistent cut (crash between commits loses nothing but the tail wave).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import warnings
@@ -72,7 +76,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from navi_spark.catalog import SnapshotTable, arrow_table, local_df
+from navi_spark.catalog import (
+    SnapshotTable,
+    arrow_table,
+    atomic_write,
+    local_df,
+)
 from navi_spark.functions.urlnorm import host_expr, normalize_url_udf
 from navi_spark.operators.fetch import (
     language_gate,
@@ -83,8 +92,7 @@ from navi_spark.operators.fetch import (
 )
 from navi_spark.operators.robots import filter_allowed, parsed_rules_table
 
-FRONTIER_SCHEMA = "url string, rank double, depth int, host string, url_hash long"
-SEEN_SCHEMA = "url string, url_hash long, host_partition int"
+FRONTIER_SCHEMA = "url string, rank double, depth int"
 PAGES_SCHEMA = (
     "url string, image_id string, phash long, caption string, depth int, "
     "rank double, host string, wave_id int, children array<string>, "
@@ -95,15 +103,12 @@ PHASH_SEEN_SCHEMA = "phash long"
 LINEAGE_SCHEMA = (
     "wave_id int, host_partition int, scheduled long, deduped long, "
     "attempted long, blocked_budget long, depth_skipped long, "
-    "blocked_robots long, fetch_failed long, dup_content long, fetched long"
+    "blocked_robots long, fetch_failed long, dup_content long, fetched long, "
+    "wall_ms long"
 )
-METRICS_SCHEMA = (
-    "wave_id int, scheduled long, deduped long, attempted long, fetched long, "
-    "wall_ms long, urls_per_sec double, parallelism int"
-)
-STATE_SCHEMA = (
-    "wave_id int, budget_consumed long, done boolean, snapshots map<string,int>"
-)
+# The consistent cut, in the workdir next to the tables: {"wave_id",
+# "budget_consumed", "done", "snapshots": {table: id or null}}
+CUT_FILE = "root.json"
 
 # recrawl() scan-pruning gate: broadcast the reloaded key set (≈ |pages|,
 # upper-bounded by the driver-side budget_consumed scalar — no count job)
@@ -144,7 +149,7 @@ class CrawlConfig:
     max_pages: int = 6000         # WebCrawler.java:27
     max_pages_per_domain: int = 10  # WebCrawler.java:37
     wave_budget: int = 1000       # attempts per wave (BATCH_SIZE analog, :29)
-    n_host_partitions: int = 16   # host partitions of seen rows and lineage
+    n_host_partitions: int = 16   # host partitions of lineage rows
     salt_buckets: int = 8         # hot-host salt (north rule)
     # Accepted and ignored: the wave has no bloom pre-filter any more.
     # perfbench's crawl workload still passes both, so they stay until the
@@ -184,10 +189,11 @@ def _run_commits_concurrently(commits) -> None:
     """Run independent single-table commit thunks on parallel threads.
 
     Only for commits to DISTINCT tables whose recovery is covered by the
-    state-last consistent cut (resume() rolls back any torn subset, order
-    irrelevant). pyspark.InheritableThread copies the submitting thread's
-    JVM-local properties (job group, description, interrupt-on-cancel), so
-    jobs launched here still land in the caller's job group. The first
+    consistent cut written after them (resume() rolls back any torn
+    subset, order irrelevant). pyspark.InheritableThread copies the
+    submitting thread's JVM-local properties (job group, description,
+    interrupt-on-cancel), so jobs launched here still land in the caller's
+    job group. The first
     failure is re-raised after every thread joins — a half-finished commit
     set is exactly the torn-wave shape resume() already unwinds."""
     from pyspark import InheritableThread
@@ -331,14 +337,18 @@ def politeness_open_rows(new: DataFrame, counts: DataFrame, cap: int) -> DataFra
 
 
 class CrawlEngine:
-    """One crawl run rooted at `workdir`; all state in snapshot tables."""
+    """One crawl run rooted at `workdir`: snapshot tables plus the cut
+    file that pins them."""
 
-    # "filters" held the retired bloom pre-filter. The engine never creates
-    # or commits it; the name stays because perfbench reports one
-    # catalog.commit_s.<name> per entry and BENCHMARK.json lists
-    # catalog.commit_s.filters. self.t holds the tables that exist.
+    # Retired tables: the URL-seen set is `pages`' urls, per-wave wall time
+    # rides on `lineage`, the bloom pre-filter is gone and the consistent
+    # cut is CUT_FILE. Their names stay in TABLES only because perfbench
+    # reports one catalog.commit_s.<name> per entry and BENCHMARK.json
+    # lists them; they read 0 until the benchmark drops them. self.t holds
+    # the tables that exist.
     TABLES = ("frontier", "seen", "pages", "host_counts", "phash_seen",
               "filters", "lineage", "metrics", "state")
+    _RETIRED = ("seen", "filters", "metrics", "state")
 
     def __init__(
         self,
@@ -353,8 +363,9 @@ class CrawlEngine:
         self.cfg = config or CrawlConfig()
         self.t = {
             name: SnapshotTable(spark, os.path.join(workdir, name))
-            for name in self.TABLES if name != "filters"
+            for name in self.TABLES if name not in self._RETIRED
         }
+        self.cut_path = os.path.join(workdir, CUT_FILE)
         # static inputs, reused every wave
         self.web = web
         self.images = images
@@ -382,19 +393,6 @@ class CrawlEngine:
             return df.withColumn("robots_allowed", F.lit(True))
         return filter_allowed(df, self.rules)
 
-    def _frontier_rows(self, urls: DataFrame) -> DataFrame:
-        """(url[, rank, depth]) → full FRONTIER_SCHEMA rows."""
-        out = urls
-        if "rank" not in out.columns:
-            out = out.withColumn("rank", F.lit(1.0))  # INITIAL_RANK (:40)
-        if "depth" not in out.columns:
-            out = out.withColumn("depth", F.lit(0))
-        return out.select(
-            "url", "rank", "depth",
-            host_expr(F.col("url")).alias("host"),
-            F.xxhash64(F.col("url")).alias("url_hash"),
-        )
-
     # -- bootstrap / resume --------------------------------------------------
     def bootstrap(self, seeds: "list[str] | DataFrame") -> None:
         """Seed source (C1): normalize, drop invalid, load the frontier.
@@ -408,43 +406,36 @@ class CrawlEngine:
         else:
             seed_df = local_df(self.spark, [(s,) for s in seeds], "raw string")
         normed = seed_df.select(
-            normalize_url_udf(F.col("raw")).alias("url")
+            normalize_url_udf(F.col("raw")).alias("url"),
+            F.lit(1.0).alias("rank"),  # INITIAL_RANK (:40)
+            F.lit(0).alias("depth"),
         ).filter(F.col("url").isNotNull())
-        self.t["frontier"].overwrite(
-            self._frontier_rows(normed), {"wave": 0, "op": "bootstrap"}
-        )
+        self.t["frontier"].overwrite(normed, {"wave": 0, "op": "bootstrap"})
         self.wave_id = 0
         self.budget_consumed = 0
-        self._commit_state(False, {"op": "bootstrap"})
+        self._commit_state(False)
 
-    def _snapshot_map(self) -> dict[str, int]:
-        """Snapshot id of EVERY non-state table; sentinel 0 = no commit yet
-        (real ids start at 1). Recording every table — not just committed
-        ones — lets resume() detect a torn FIRST commit of a table."""
-        return {n: (self.t[n].snapshot_id() or 0)
-                for n in self.t if n != "state"}
+    def _read_cut(self) -> dict:
+        with open(self.cut_path) as f:
+            return json.load(f)
 
     def resume(self) -> None:
-        """Restore the engine to the last CONSISTENT cut: the `state` table
-        commits last each wave and records every table's snapshot id (0 =
-        not yet committed), so any table with a later (torn) snapshot is
-        rolled back — including a torn first-ever commit, which rolls back
-        to the empty table."""
-        row = self.t["state"].read().collect()[0]
-        self.wave_id = row["wave_id"]
-        self.budget_consumed = row["budget_consumed"]
-        snaps = row["snapshots"] or {}
-        for name in self.t:
-            if name == "state":
-                continue
-            cur = self.t[name].snapshot_id()
+        """Restore the engine to the last CONSISTENT cut: CUT_FILE is
+        replaced last each wave and records every table's snapshot id
+        (null = not yet committed), so any table with a later (torn)
+        snapshot is rolled back — including a torn first-ever commit,
+        which rolls back to the empty table. Reads no table data."""
+        cut = self._read_cut()
+        self.wave_id = cut["wave_id"]
+        self.budget_consumed = cut["budget_consumed"]
+        for name, table in self.t.items():
+            cur, rec = table.snapshot_id(), cut["snapshots"].get(name)
             if cur is None:
                 continue
-            rec = snaps.get(name, 0) or 0
-            if rec == 0:
-                self.t[name].rollback_to_empty()
+            if rec is None:
+                table.rollback_to_empty()
             elif cur > rec:
-                self.t[name].rollback(rec)
+                table.rollback(rec)
 
     def maintain(self, target_file_bytes: int = 128 << 20, min_files: int = 8,
                  retain_snapshots: int = 2) -> dict:
@@ -458,30 +449,23 @@ class CrawlEngine:
         Three crash-safe steps, in an order resume() can always unwind:
         (1) compact every fragmented data table (data-identical REPLACE
         commits — a crash here makes resume() roll them back using the
-        still-present parent manifests); (2) commit a fresh `state` row so
-        the recorded consistent cut points at the compacted snapshots;
-        (3) expire snapshot history down to `retain_snapshots` per table
-        (manifests deleted before data dirs, so survivors stay readable
-        mid-crash). Returns per-table stats."""
+        still-present parent manifests); (2) rewrite the cut so it points
+        at the compacted snapshots; (3) expire snapshot history down to
+        `retain_snapshots` per table (manifests deleted before data dirs,
+        so survivors stay readable mid-crash). Returns per-table stats."""
+        live = {n: t for n, t in self.t.items() if t.exists()}
         stats: dict[str, dict] = {}
-        for name in self.t:
-            if name == "state" or not self.t[name].exists():
-                continue
-            before = len(self.t[name].data_files())
-            sid = self.t[name].compact(target_file_bytes, min_files,
-                                       {"wave": self.wave_id})
+        for name, table in live.items():
+            before = len(table.data_files())
+            sid = table.compact(target_file_bytes, min_files,
+                                {"wave": self.wave_id})
             stats[name] = {"files_before": before,
-                           "files_after": len(self.t[name].data_files()),
+                           "files_after": len(table.data_files()),
                            "compacted": sid is not None}
-        done = self.t["state"].read().collect()[0]["done"]
-        self._commit_state(done, {"op": "maintain", "wave": self.wave_id})
-        for name in self.t:
-            if not self.t[name].exists():
-                continue
-            exp = self.t[name].expire_snapshots(
-                retain_last=retain_snapshots, clean_orphans=True
-            )
-            stats.setdefault(name, {}).update(exp)
+        self._commit_state(self._read_cut()["done"])
+        for name, table in live.items():
+            stats[name].update(table.expire_snapshots(
+                retain_last=retain_snapshots, clean_orphans=True))
         return stats
 
     # -- the wave ------------------------------------------------------------
@@ -504,16 +488,13 @@ class CrawlEngine:
         # ---- 1. within-frontier dedup: lowest (rank, depth) entry wins.
         # Hash aggregation, NOT a row_number window: a per-url window pays
         # per-group sort machinery (~80µs/group — measured 41s on a 500k-url
-        # frontier); min(struct) is a partial-aggregating hash agg (host and
-        # url_hash are functions of url, so any value is the right one).
+        # frontier); min(struct) is a partial-aggregating hash agg.
         # Duplicate heap entries are outcome-equivalent in the reference:
         # the first pop decides, later pops of the same url hit the visited
         # check or fail identically (deterministic robots/fetch/dup).
-        # Shuffle-byte discipline: host and url_hash are pure functions of
-        # url, so they are DROPPED before the dedup exchange and recomputed
-        # after it — at the 10^10-URL design point the dedup shuffle is the
-        # wave's largest, and carrying a ~15-char host + 8-byte hash per
-        # row through it is ~30% wasted bytes.
+        # Shuffle-byte discipline: the frontier stores no function of url
+        # (host is computed after the dedup exchange) — at the 10^10-URL
+        # design point the dedup shuffle is the wave's largest.
         cand = (
             frontier.groupBy("url")
             .agg(F.min(F.struct("rank", "depth")).alias("_m"))
@@ -522,10 +503,9 @@ class CrawlEngine:
                 F.col("_m.depth").alias("depth"),
             )
             .withColumn("host", host_expr(F.col("url")))
-            .withColumn("url_hash", F.xxhash64("url"))
         )
         if remaining_global <= 0:
-            self._commit_state(True, {"op": "done"})
+            self._commit_state(True)
             return stats
         # A checkpoint, not a cache: `cand` is read ~5 times (lineage, the
         # depth split, the seen check), and an eager checkpoint runs under
@@ -537,7 +517,7 @@ class CrawlEngine:
         cand = _local_checkpoint(
             cand.withColumn("host_partition", self._hp()), cached)
         if cand.isEmpty():
-            self._commit_state(True, {"op": "done"})
+            self._commit_state(True)
             return stats
 
         # ---- 2. depth split FIRST (C6): the reference checks depth before
@@ -553,8 +533,7 @@ class CrawlEngine:
         # Pop-time visited refund (WebCrawler.java:446) done eagerly: a seen
         # shallow row can never produce a page, so removing it before the
         # pop is outcome-equivalent and costs no budget either way.
-        seen = self.t["seen"].read_or_empty(SEEN_SCHEMA)
-        new = shallow.join(seen.select("url"), on="url", how="left_anti")
+        new = shallow.join(self.seen(), on="url", how="left_anti")
         # checkpointed, not cached, for the reason given at `cand`: it is
         # read by the politeness window, the re-queue and lineage
         new = _local_checkpoint(new, cached)
@@ -649,7 +628,7 @@ class CrawlEngine:
         # ---- 5-8. ONE labeled attempt pass: depth quirk (C6) → robots
         # (C10-C12, from the checkpoint) → fetch+validate (C13) → language
         # (C14) → in-wave phash dedup (C15). Every attempt gets an outcome
-        # label; lineage, metrics and wave stats all derive from this
+        # label; lineage and wave stats all derive from this
         # single DataFrame, so no per-stage count() jobs remain on the hot
         # pipeline.
         # C13 fetch join, scalable form: `attempts` is wave_budget-bounded
@@ -746,14 +725,14 @@ class CrawlEngine:
             )
             .select(
                 "url", "image_id", "phash", "caption", "depth", "rank",
-                "host", "children", "url_hash", "host_partition", "outcome",
+                "host", "children", "host_partition", "outcome",
             ),
             cached,
         )
         successes = labeled.filter(F.col("outcome") == "fetched")
 
         # ---- 9. commit wave outputs (C18/C19): one snapshot per table;
-        #          `state` last records the consistent cut
+        #          the cut written last records the consistent state
         # C13 validators: the synthetic web's ETag/Last-Modified are
         # deterministic functions of the payload version (a real server's
         # validators change exactly when content does) — stored with the
@@ -765,10 +744,10 @@ class CrawlEngine:
             payload_etag().alias("etag"),
             payload_last_modified().alias("last_modified"),
         )
-        # The four wave-output commits are mutually independent: each writes
-        # its OWN table from the checkpointed `successes` set (or its own
-        # table's previous snapshot), and resume() depends only on `state`
-        # committing last with the post-barrier snapshot map — the
+        # The three wave-output commits are mutually independent: each
+        # writes its OWN table from the checkpointed `successes` set (or its
+        # own table's previous snapshot), and resume() depends only on the
+        # cut being written last with the post-barrier snapshot map — the
         # consistent cut never depends on the ORDER of the middle commits
         # (any torn subset rolls back). So they run concurrently: each
         # write is a small fixed-overhead Spark job, and at any realistic
@@ -778,9 +757,6 @@ class CrawlEngine:
         # the caller's job group/description, so job accounting (and the
         # wave job-count guard) stays truthful.
         commits = [lambda: self.t["pages"].append(pages_out, {"wave": w}),
-                   lambda: self.t["seen"].append(
-                       successes.select("url", "url_hash", "host_partition"),
-                       {"wave": w}),
                    # no distinct(): a fetched row is first (_rnp == 1) in
                    # its phash partition, so successes' phashes are unique
                    lambda: self.t["phash_seen"].append(
@@ -804,7 +780,6 @@ class CrawlEngine:
             open_rows.drop("_remaining").unionByName(deep)
             .join(labeled.select("url"), on="url", how="left_anti")
         )
-        seen_now = self.t["seen"].read()
         counts_now = self.t["host_counts"].read()
         expansions = (
             successes.filter(F.col("depth") < cfg.max_depth)
@@ -812,15 +787,14 @@ class CrawlEngine:
                     (F.col("depth") + 1).alias("depth"))
             .filter(F.col("url").isNotNull())
             .withColumn("rank", F.lit(1.0))
-            .join(seen_now.select("url"), on="url", how="left_anti")
+            .join(self.seen(), on="url", how="left_anti")
             .withColumn("host", host_expr(F.col("url")))
             .join(
                 F.broadcast(counts_now.filter(F.col("successes") >= cap)
                             .select("host")),
                 on="host", how="left_anti",
             )
-            .withColumn("url_hash", F.xxhash64("url"))
-            .select("url", "rank", "depth", "host", "url_hash")
+            .select("url", "rank", "depth")
         )
         # No checkpoint here: overwrite() always commits to a FRESH data dir
         # (catalog._commit), so the plan can read the old frontier dirs while
@@ -830,8 +804,7 @@ class CrawlEngine:
         # — measured as the wave's worst-scaling stage (ENGINE_SCALING.md,
         # 64-task barrier 10.5 s at local[4], 2.1x/4 cores).
         new_frontier = leftover.select(
-            "url", "rank", "depth", "host", "url_hash"
-        ).unionByName(expansions)
+            "url", "rank", "depth").unionByName(expansions)
 
         # ---- 11. frontier commit ∥ lineage aggregation (north rule): the
         # lineage collect reads only the checkpointed wave sets
@@ -857,25 +830,17 @@ class CrawlEngine:
         stats.fetched = sum(r["fetched"] for r in lin_rows)
         stats.depth_skips = sum(r["depth_skipped"] for r in lin_rows)
         stats.wall_ms = int((time.monotonic() - t0) * 1000)
-        par = self.spark.sparkContext.defaultParallelism
-        # driver-built rows: Arrow commits, no Spark job
-        self.t["lineage"].append(arrow_table(lin_rows, LINEAGE_SCHEMA),
-                                 {"wave": w})
-        self.t["metrics"].append(
-            arrow_table(
-                [(w, stats.scheduled, stats.deduped, stats.attempted,
-                  stats.fetched, stats.wall_ms,
-                  stats.scheduled / max(stats.wall_ms / 1000.0, 1e-9),
-                  par)],
-                METRICS_SCHEMA,
-            ),
-            {"wave": w},
-        )
+        # driver-built rows, each carrying the wave's wall time: an Arrow
+        # commit, no Spark job
+        self.t["lineage"].append(
+            arrow_table([(*r, stats.wall_ms) for r in lin_rows],
+                        LINEAGE_SCHEMA),
+            {"wave": w})
 
-        # ---- 12. state commit = the checkpoint barrier
+        # ---- 12. the cut = the checkpoint barrier
         self.budget_consumed += stats.fetched + stats.depth_skips
         self.wave_id = w
-        self._commit_state(False, {"wave": w})
+        self._commit_state(False)
         return stats
 
     def _lineage_rows(self, w, cand, poppable, labeled) -> list:
@@ -916,14 +881,16 @@ class CrawlEngine:
             "dup_content", "fetched",
         ).collect()
 
-    def _commit_state(self, done: bool, summary: dict) -> None:
-        """Overwrite `state` with the engine's position and every other
-        table's snapshot id — the consistent cut resume() rolls back to."""
-        self.t["state"].overwrite(
-            arrow_table([(self.wave_id, self.budget_consumed, done,
-                          self._snapshot_map())], STATE_SCHEMA),
-            summary,
-        )
+    def _commit_state(self, done: bool) -> None:
+        """Atomically replace CUT_FILE with the engine's position and every
+        table's snapshot id (null = no commit yet, so resume() can undo a
+        torn FIRST commit) — the consistent cut resume() rolls back to."""
+        atomic_write(self.cut_path, json.dumps({
+            "wave_id": self.wave_id,
+            "budget_consumed": self.budget_consumed,
+            "done": done,
+            "snapshots": {n: t.snapshot_id() for n, t in self.t.items()},
+        }))
 
     # -- drivers -------------------------------------------------------------
     def run(self, max_waves: int | None = None) -> list[WaveStats]:
@@ -1315,9 +1282,9 @@ class CrawlEngine:
             "statuses": status_counts,
             "not_popped": not_popped,
         }
-        # state commit = the checkpoint barrier (same machinery as wave():
-        # a crash between the MERGE and here rolls pages back on resume)
-        self._commit_state(False, {"op": "recrawl"})
+        # the cut = the checkpoint barrier (same machinery as wave(): a
+        # crash between the MERGE and here rolls pages back on resume)
+        self._commit_state(False)
         return stats
 
     # -- outputs ---------------------------------------------------------------
@@ -1325,7 +1292,9 @@ class CrawlEngine:
         return self.t["pages"].read_or_empty(PAGES_SCHEMA)
 
     def seen(self) -> DataFrame:
-        return self.t["seen"].read_or_empty(SEEN_SCHEMA)
+        """The URL-seen set (C9): `pages`' urls, unique since a page is
+        stored once and a recrawl MERGE or PageRank rewrite keeps its url."""
+        return self.pages().select("url")
 
     def index_feed(self) -> DataFrame:
         """Indexer handoff contract (C24): (url, image_id, phash, caption)."""

@@ -140,6 +140,31 @@ def test_unknown_path_404(served):
     assert e.value.code == 404
 
 
+def test_failing_endpoint_answers_500(spark, served, tmp_path, monkeypatch):
+    """An endpoint body that raises answers 500 instead of dropping the
+    connection: a POST /search whose suggestion commit raises, and a GET
+    /results whose search raises. The server keeps serving."""
+    _, idx = served
+    tbl = SnapshotTable(spark, str(tmp_path / "s"))
+
+    def boom(*_a, **_k):
+        raise OSError("injected failure")
+
+    with QueryEngineServer(replace(idx, suggestions=tbl)) as url:
+        _post(url, "/search?query=rivers")  # stores a query to rank
+        monkeypatch.setattr(tbl, "insert_absent", boom)
+        monkeypatch.setattr(api, "search", boom)
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(url, "/search?query=spark")
+        assert e.value.code == 500
+        assert json.loads(e.value.read()) == {"error": "internal error"}
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(url, "/results")
+        assert e.value.code == 500
+        r, body = _get(url, "/home")
+        assert r.status == 200 and body == b"Query Engine is running!"
+
+
 def test_concurrent_results_keep_session_conf(spark, served):
     """search() sets the session's shuffle-partition and AQE confs for a
     query and restores them; concurrent GET /results calls must not

@@ -11,11 +11,7 @@ import pytest
 from pyspark.sql.types import StructType
 
 from navi_spark.catalog import SnapshotTable, arrow_table, local_df
-from navi_spark.operators.frontier import (
-    LINEAGE_SCHEMA,
-    METRICS_SCHEMA,
-    STATE_SCHEMA,
-)
+from navi_spark.operators.frontier import LINEAGE_SCHEMA
 
 
 @pytest.fixture()
@@ -95,18 +91,17 @@ def test_read_or_empty(spark, table):
     assert df.count() == 0
 
 
-# the engine's driver-built rows: a state row with the 0 = "no commit yet"
-# sentinel in its snapshot map, per-partition lineage rows, a metrics row
+# a map-typed schema, whose column takes dicts (an empty one included)
+MAP_SCHEMA = "k int, n long, done boolean, ids map<string,int>"
+
+# the engine's per-partition lineage rows, and rows of a map-typed table
 DRIVER_ROWS = {
-    "state": (STATE_SCHEMA, [
-        (3, 42, False, {"frontier": 4, "seen": 0, "pages": 2}),
-        (0, 0, True, {}),
-    ]),
     "lineage": (LINEAGE_SCHEMA, [
-        (1, hp, 10 + hp, 9, 7, 2, 1, 1, 0, 1, 4) for hp in range(3)
+        (1, hp, 10 + hp, 9, 7, 2, 1, 1, 0, 1, 4, 7520) for hp in range(3)
     ]),
-    "metrics": (METRICS_SCHEMA, [
-        (1, 100, 96, 89, 80, 7520, 13.3, 2),
+    "map": (MAP_SCHEMA, [
+        (3, 42, False, {"frontier": 4, "pages": 2}),
+        (0, 0, True, {}),
     ]),
 }
 
@@ -115,7 +110,7 @@ DRIVER_ROWS = {
 def test_local_df_matches_create_dataframe(spark, table, name):
     """local_df, and a commit of the Arrow table it is built from, give
     the rows and schema a Python-list createDataFrame gives, for the
-    engine's driver-built tables and for no rows."""
+    engine's lineage rows, for dicts in a map column and for no rows."""
     schema, rows = DRIVER_ROWS[name]
     want = spark.createDataFrame(rows, schema)
     table.overwrite(arrow_table(rows, schema))
@@ -129,9 +124,9 @@ def test_local_df_matches_create_dataframe(spark, table, name):
 
 def test_local_df_rejects_mistyped_rows(spark):
     with pytest.raises((TypeError, ValueError)):
-        local_df(spark, [("not-an-int", 0, False, {})], STATE_SCHEMA)
+        local_df(spark, [("not-an-int", 0, False, {})], MAP_SCHEMA)
     with pytest.raises(ValueError, match="4 fields"):
-        local_df(spark, [(1, 0, False)], STATE_SCHEMA)
+        local_df(spark, [(1, 0, False)], MAP_SCHEMA)
 
 
 def _rows(table):

@@ -8,6 +8,7 @@ snapshot checkpoint (SURVEY.md §5).
 
 from __future__ import annotations
 
+import os
 import re
 import shutil
 import tempfile
@@ -15,7 +16,12 @@ import tempfile
 import pytest
 import pyspark.sql.functions as F
 
-from navi_spark.operators.frontier import CrawlConfig, CrawlEngine
+from navi_spark.operators.frontier import (
+    CUT_FILE,
+    FRONTIER_SCHEMA,
+    CrawlConfig,
+    CrawlEngine,
+)
 from navi_spark.oracle import (
     OracleConfig,
     build_oracle_inputs,
@@ -167,12 +173,12 @@ def test_classify_recrawl_semantics(spark):
 
 
 def test_lineage_and_metrics_written(std_run):
-    lin = std_run.t["lineage"].read()
-    met = std_run.t["metrics"].read()
-    assert lin.count() > 0 and met.count() > 0
-    waves = {r["wave_id"] for r in met.select("wave_id").collect()}
-    assert waves == set(range(1, std_run.wave_id + 1))
-    total_fetched = sum(r["fetched"] for r in lin.collect())
+    """Every wave writes lineage rows, each carrying the wave's wall time."""
+    lin = std_run.t["lineage"].read().collect()
+    assert lin
+    assert {r["wave_id"] for r in lin} == set(range(1, std_run.wave_id + 1))
+    assert all(r["wall_ms"] > 0 for r in lin)
+    total_fetched = sum(r["fetched"] for r in lin)
     assert total_fetched == std_run.pages().count()
 
 
@@ -410,16 +416,17 @@ def test_wave_spark_job_count_bounded(spark, universe):
                     len(list(tracker.getJobIdsForGroup(f"wave-jobcount-{i}"))))
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
-        # measured composition of wave 1 (19): 5 parquet write jobs, one
-        # per Spark-written commit (pages, seen, phash_seen, host_counts,
-        # frontier; lineage, metrics and state are Arrow commits and start
-        # none), 4 local checkpoints (cand, new, attempts, labeled), 8
-        # broadcast builds (the robots rules join; 5 in the labeled pass,
-        # incl. the two store-pruning semi-join sets that eliminated the
-        # wave's largest exchanges; 2 in the frontier write's anti-joins),
-        # the isEmpty probe and the lineage collect. No table read starts a
-        # job: the manifest carries the schema. Wave 2 (25) also reads a
-        # non-empty seen/host_counts/phash_seen state: the seen anti-join,
+        # measured composition of wave 1 (18): 4 parquet write jobs, one
+        # per Spark-written commit (pages, phash_seen, host_counts,
+        # frontier; lineage is the only Arrow commit and starts none, and
+        # the cut is a file written on the driver), 4 local checkpoints
+        # (cand, new, attempts, labeled), 8 broadcast builds (the robots
+        # rules join; 5 in the labeled pass, incl. the two store-pruning
+        # semi-join sets that eliminated the wave's largest exchanges; 2
+        # in the frontier write's anti-joins), the isEmpty probe and the
+        # lineage collect. No table read starts a job: the manifest
+        # carries the schema. Wave 2 (24) also reads a
+        # non-empty pages/host_counts/phash_seen state: the seen anti-join,
         # the two politeness joins (once for the attempts, once more in the
         # frontier write's re-queue) and the phash_seen join add 6
         # broadcast builds (14). No filters write and no bloom probe: the
@@ -428,8 +435,8 @@ def test_wave_spark_job_count_bounded(spark, universe):
         # stats counts creep back in (round 1 had ~15 of them), a
         # driver-built relation starts costing a job again, or a read goes
         # back to inferring its schema.
-        assert 0 < n_jobs[0] <= 19, f"wave 1 launched {n_jobs[0]} Spark jobs"
-        assert 0 < n_jobs[1] <= 25, f"wave 2 launched {n_jobs[1]} Spark jobs"
+        assert 0 < n_jobs[0] <= 18, f"wave 1 launched {n_jobs[0]} Spark jobs"
+        assert 0 < n_jobs[1] <= 24, f"wave 2 launched {n_jobs[1]} Spark jobs"
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -560,8 +567,8 @@ def test_error_paths_leak_no_cache(spark, universe, monkeypatch):
 
 
 def test_control_plane_builds_no_python_rdd(spark, universe, monkeypatch):
-    """Driver-built relations (seed list, state, lineage, metrics rows and
-    empty-table reads) go to the JVM as Arrow tables: a bootstrap from a
+    """Driver-built relations (seed list, lineage rows and empty-table
+    reads) go to the JVM as Arrow tables: a bootstrap from a
     Python list and two waves never build a Python RDD, whose tasks would
     each pay a Python worker's start-up cost."""
     workdir = tempfile.mkdtemp(prefix="navi-nordd-")
@@ -575,7 +582,9 @@ def test_control_plane_builds_no_python_rdd(spark, universe, monkeypatch):
         eng.bootstrap(list(seeds))
         s1, s2 = eng.wave(), eng.wave()
         assert s1.attempted > 0 and s2.attempted > 0
-        assert eng.t["metrics"].read().count() == 2
+        lin = eng.t["lineage"].read().collect()
+        assert {r["wave_id"] for r in lin} == {1, 2}
+        assert all(r["wall_ms"] > 0 for r in lin)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -643,19 +652,17 @@ def test_robots_reference_bug_parity_mode():
 
 
 def test_resume_after_torn_first_commit(spark, universe, oracle_result):
-    """Crash DURING wave 1: pages/seen got their first-ever (torn) commits
-    but `state` still holds the bootstrap cut with no recorded snapshot for
-    them. resume() must roll those tables back to EMPTY (sentinel-0 path),
-    and the rerun must match the uninterrupted oracle exactly — no
-    double-appended pages."""
-    import pyspark.sql.functions as F
-
+    """Crash DURING wave 1: pages/phash_seen got their first-ever (torn)
+    commits but the cut still holds the bootstrap state with no recorded
+    snapshot for them. resume() must roll those tables back to EMPTY (the
+    null-snapshot path), and the rerun must match the uninterrupted oracle
+    exactly — no double-appended pages."""
     workdir = tempfile.mkdtemp(prefix="navi-torn-")
     try:
         eng, seeds = _mk_engine(spark, universe, workdir)
         eng.bootstrap(seeds)
-        # simulate the torn middle of wave 1: pages + seen committed,
-        # crash before host_counts/frontier/state
+        # simulate the torn middle of wave 1: pages + phash_seen
+        # committed, crash before host_counts/frontier/the cut
         junk = spark.createDataFrame(
             [("http://torn.example/x", "imgX", 0, "torn", 0, 1.0,
               "torn.example", 1, [])],
@@ -664,18 +671,15 @@ def test_resume_after_torn_first_commit(spark, universe, oracle_result):
             "children array<string>",
         )
         eng.t["pages"].append(junk, {"wave": 1, "torn": True})
-        eng.t["seen"].append(
-            junk.select("url", F.xxhash64("url").alias("url_hash"),
-                        F.lit(0).alias("host_partition")),
-            {"wave": 1, "torn": True},
-        )
+        eng.t["phash_seen"].append(junk.select("phash"),
+                                   {"wave": 1, "torn": True})
         assert eng.t["pages"].snapshot_id() == 1
 
         eng2, _ = _mk_engine(spark, universe, workdir)
         eng2.resume()
         assert eng2.wave_id == 0
         assert eng2.t["pages"].snapshot_id() is None   # rolled back to empty
-        assert eng2.t["seen"].snapshot_id() is None
+        assert eng2.t["phash_seen"].snapshot_id() is None
         eng2.run(max_waves=30)
         visit, seen, counts = _engine_state(eng2)
         assert visit == oracle_result.visit_order
@@ -726,8 +730,6 @@ def test_deep_seen_row_still_consumes_budget(spark, universe):
     :446). Reachable when a crawl resumes with a reduced max_depth or a
     deep-seeded frontier — the deep row must bypass the seen anti-join and
     burn one budget unit as a depth_skip, storing nothing."""
-    from navi_spark.functions.urlnorm import host_expr
-
     web, images, robots, _seeds = universe
     workdir = tempfile.mkdtemp(prefix="navi-deepseen-")
     try:
@@ -747,13 +749,7 @@ def test_deep_seen_row_still_consumes_budget(spark, universe):
 
         # deep-seed the frontier with an ALREADY-SEEN url at depth 5
         eng.t["frontier"].overwrite(
-            spark.createDataFrame(
-                [(seed_url, 0.5, 5)], "url string, rank double, depth int"
-            ).select(
-                "url", "rank", "depth",
-                host_expr(F.col("url")).alias("host"),
-                F.xxhash64("url").alias("url_hash"),
-            ),
+            spark.createDataFrame([(seed_url, 0.5, 5)], FRONTIER_SCHEMA),
             {"op": "test-deep-seed"},
         )
         stats = eng.wave()
@@ -986,11 +982,11 @@ def test_recrawl_zero_budget_pops_nothing(spark, universe):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_resume_mid_recrawl_rolls_back_merge(spark, universe):
-    """A crash AFTER the recrawl MERGE but BEFORE the state commit must
+def test_resume_mid_recrawl_rolls_back_merge(spark, universe, monkeypatch):
+    """A crash AFTER the recrawl MERGE but BEFORE the cut is written must
     roll the pages table back to the pre-recrawl snapshot on resume, and a
     re-run recrawl then lands the same final state (idempotent replay)."""
-    from navi_spark.operators.frontier import CrawlEngine
+    from navi_spark.operators import frontier
 
     workdir = tempfile.mkdtemp(prefix="navi-recrawl-torn-")
     try:
@@ -1002,13 +998,12 @@ def test_resume_mid_recrawl_rolls_back_merge(spark, universe):
         )
         web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
 
-        real_overwrite = eng.t["state"].overwrite
         def crash(*a, **kw):
-            raise RuntimeError("simulated crash before state commit")
-        eng.t["state"].overwrite = crash
-        with pytest.raises(RuntimeError):
+            raise RuntimeError("simulated crash before the cut is written")
+        monkeypatch.setattr(frontier, "atomic_write", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
             eng.recrawl(web=web_v1)
-        eng.t["state"].overwrite = real_overwrite
+        monkeypatch.undo()
 
         # fresh engine + resume: torn pages commits rolled back
         web, images, robots, _ = universe
@@ -1067,6 +1062,32 @@ def test_crawl_recrawl_crawl_lifecycle(spark, universe):
         eng2.resume()
         assert eng2.pages().count() == len(urls)
         web_v1.unpersist()
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_workdir_holds_live_tables_and_cut_only(spark, universe):
+    """Each crawl fact is stored once: a crawl, a recrawl and maintain()
+    write exactly the live tables plus the cut file, and no retired table
+    (the seen set, the bloom filters, wave metrics, the state row) ever
+    gets a directory."""
+    workdir = tempfile.mkdtemp(prefix="navi-tables-")
+    try:
+        eng, seeds = _mk_engine(spark, universe, workdir)
+        assert set(eng.t) == {"frontier", "pages", "host_counts",
+                              "phash_seen", "lineage"}
+        assert not set(eng.t) & set(CrawlEngine._RETIRED)
+        want = {*eng.t, CUT_FILE}
+        eng.bootstrap(seeds)
+        eng.run(max_waves=2)
+        assert set(os.listdir(workdir)) == want
+        web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
+        eng.recrawl(web=web_v1)
+        web_v1.unpersist()
+        assert set(os.listdir(workdir)) == want
+        eng.maintain(min_files=2)
+        assert set(os.listdir(workdir)) == want
+        assert all(eng.t[n].exists() for n in eng.t)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
