@@ -3,21 +3,24 @@
 The north rule requires wave-atomic commits, snapshot checkpoint/resume, and
 per-partition lineage (reference: JSON state files, crawler/WebCrawler.java:
 135-172, replaced per SURVEY.md §1.3 by table snapshots). This container has
-no Iceberg runtime jars, so :class:`SnapshotTable` provides the same commit
-semantics over plain parquet:
+no Iceberg runtime jars, so :class:`SnapshotTable` and :class:`CatalogRoot`
+provide the same commit semantics over plain parquet:
 
-    root/
-      data/s<k>/part-*.parquet      one immutable directory per commit
+    <table>/
+      data/s<k>-<uuid>/part-*.parquet  one immutable directory per commit
       manifests/<k>.json            {snapshot_id, parent, dirs, schema, summary}
-      HEAD                          text file "k" — atomically os.replace()d
+    <root file>                     {"snapshots": {table: k}, …owner fields}
 
-A commit = write data dir → write manifest → atomic HEAD swap. Readers
-resolve HEAD → manifest → ``spark.read.schema(schema).parquet(*dirs)``.
-Time travel = read any manifest; rollback = move HEAD. Crash between
-data-write and HEAD swap leaves an orphan dir, never a torn table — the
-same guarantee Iceberg's metadata pointer gives. A cut across tables is
-one more file replaced by :func:`atomic_write` after their commits: the
-crawl engine's root file of snapshot ids (``frontier.CUT_FILE``).
+A commit writes a data dir and a manifest and stages its snapshot id in
+the table's :class:`CatalogRoot`; one atomic replace of the root file
+publishes every staged id at once (Iceberg's multi-table catalog
+commit). The crawl engine's root (``frontier.CUT_FILE``) publishes once
+per step; a standalone table's root names only itself and publishes on
+every commit. Readers resolve id → manifest →
+``spark.read.schema(schema).parquet(*dirs)``; time travel = read any
+manifest. A crash before the publish leaves orphan files, never a torn
+table; the next commit reuses their ids, and
+``expire_snapshots(clean_orphans=True)`` clears them.
 
 The manifest records the schema the commit wrote, as Iceberg's table
 metadata does, so a read hands it to the parquet reader and never starts
@@ -43,6 +46,8 @@ PyIceberg's ``Table.overwrite(pa.Table)``
 (the schema comes from the table metadata there too)
 ``arrow_table``/``local_df`` → unchanged (they are the source of a
 commit, not a table operation)
+``CatalogRoot.publish`` → the catalog's commit of a multi-table
+transaction (one metadata-pointer swap for every table it staged)
 """
 
 from __future__ import annotations
@@ -103,25 +108,51 @@ def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
                                  StructType.fromDDL(schema))
 
 
+class CatalogRoot:
+    """The one commit point of a set of tables: the file at `path` holds
+    each table's published snapshot id (``snapshots``) and its owner's
+    fields. Commits stage ids in :attr:`staged` (distinct tables may
+    stage from concurrent threads); :meth:`publish` makes them visible
+    in one atomic replace, and :meth:`load` drops them."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self.load()
+
+    def load(self) -> dict:
+        """The published root ({"snapshots": {}} if none); staged := it."""
+        try:
+            with open(self.path) as f:
+                doc = json.load(f)
+        except FileNotFoundError:
+            doc = {"snapshots": {}}
+        self.staged = dict(doc["snapshots"])
+        return doc
+
+    def publish(self, **fields) -> None:
+        atomic_write(self.path,
+                     json.dumps({**fields, "snapshots": self.staged}))
+
+
 class SnapshotTable:
-    def __init__(self, spark: SparkSession, root: str):
+    """Snapshot commits under the directory `root`, whose basename names
+    the table in `catalog`, the root it commits through: by default its
+    own ``<root>/root.json``, published on every commit."""
+
+    def __init__(self, spark: SparkSession, root: str,
+                 catalog: Optional[CatalogRoot] = None):
         self.spark = spark
         self.root = root
+        self.name = os.path.basename(os.path.normpath(root))
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
+        self._own_root = catalog is None
+        self.catalog = catalog or CatalogRoot(os.path.join(root, "root.json"))
 
     # -- metadata ----------------------------------------------------------
-    @property
-    def _head_path(self) -> str:
-        return os.path.join(self.root, "HEAD")
-
     def snapshot_id(self) -> Optional[int]:
-        """Current committed snapshot id, or None for an empty table."""
-        try:
-            with open(self._head_path) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        """The id staged in the table's root, or None for an empty table."""
+        return self.catalog.staged.get(self.name)
 
     def _manifest(self, sid: int) -> dict:
         with open(os.path.join(self.root, "manifests", f"{sid}.json")) as f:
@@ -147,7 +178,8 @@ class SnapshotTable:
 
     # -- read --------------------------------------------------------------
     def read(self, snapshot_id: Optional[int] = None) -> DataFrame:
-        """Read the table at HEAD or at a given snapshot (time travel)."""
+        """Read the table at its snapshot id or at a given one (time
+        travel)."""
         sid = self.snapshot_id() if snapshot_id is None else snapshot_id
         if sid is None:
             raise ValueError(f"table {self.root} has no committed snapshot")
@@ -174,17 +206,14 @@ class SnapshotTable:
             os.makedirs(ddir)
             pq.write_table(data, os.path.join(ddir, "part-00000.parquet"))
             schema = from_arrow_schema(data.schema)
-        manifest = {
-            "snapshot_id": sid,
-            "parent": parent,
-            "dirs": dirs_base + [ddir],
-            "schema": schema.jsonValue(),
-            "summary": summary,
-        }
-        mpath = os.path.join(self.root, "manifests", f"{sid}.json")
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-        atomic_write(self._head_path, str(sid))  # the atomic commit point
+        atomic_write(os.path.join(self.root, "manifests", f"{sid}.json"),
+                     json.dumps({"snapshot_id": sid, "parent": parent,
+                                 "dirs": dirs_base + [ddir],
+                                 "schema": schema.jsonValue(),
+                                 "summary": summary}))
+        self.catalog.staged[self.name] = sid
+        if self._own_root:
+            self.catalog.publish()
         return sid
 
     def append(self, df: DataFrame | pa.Table,
@@ -216,10 +245,9 @@ class SnapshotTable:
         tgt = self.read()
         merged = tgt.join(src.select(*keys).distinct(), on=keys, how="left_anti")
         merged = merged.unionByName(src.select(*tgt.columns))
-        # no pre-materialization needed: _commit writes a FRESH data dir and
-        # the dirs the plan reads stay on disk until expire_snapshots, so the
-        # single write job both evaluates and commits the merge (a checkpoint
-        # here would materialize the full table twice — block store + parquet)
+        # no pre-materialization: _commit writes a FRESH data dir while the
+        # plan's dirs stay until expire_snapshots, so one write job both
+        # evaluates and commits the merge (a checkpoint would write it twice)
         return self.overwrite(merged, summary)
 
     def insert_absent(self, rows: pa.Table, key: str | list[str],
@@ -282,18 +310,18 @@ class SnapshotTable:
         part-files, so after W waves a scan schedules O(W × partitions)
         tasks and the manifest lists as many files — the small-files
         problem that dominates table maintenance at the 10^10-row design
-        point. compact() reads HEAD and commits a data-identical REPLACE
-        snapshot written as ceil(total_bytes / target_file_bytes) balanced
-        files via ``coalesce`` — a shuffle-free rewrite where each output
-        task concatenates ~files/n similar-sized inputs.
+        point. compact() reads the table and commits a data-identical
+        REPLACE snapshot written as ceil(total_bytes / target_file_bytes)
+        balanced files via ``coalesce`` — a shuffle-free rewrite where
+        each output task concatenates ~files/n similar-sized inputs.
 
         Time travel to pre-compaction snapshots is untouched (old dirs
-        stay until expire_snapshots); a crash mid-compaction leaves HEAD
-        on the parent like any torn commit; the engine's resume() may roll
-        a compaction back, which only re-exposes the same rows in more
-        files. Returns the new snapshot id, or None when the table already
-        has fewer than `min_files` files or is already at the target
-        granularity (file-count probe only — no data is read)."""
+        stay until expire_snapshots). A compaction is a commit like any
+        other: a crash before its root publishes it leaves the parent as
+        the table, the same rows in more files. Returns the new snapshot
+        id, or None when the table already has fewer than `min_files`
+        files or is already at the target granularity (file-count probe
+        only — no data is read)."""
         files = self.data_files()
         if len(files) < min_files:
             return None
@@ -310,14 +338,18 @@ class SnapshotTable:
                          clean_orphans: bool = False) -> dict:
         """Iceberg ``expire_snapshots`` (+ ``remove_orphan_files`` when
         `clean_orphans`). Keeps the newest `retain_last` snapshots on the
-        HEAD lineage, deletes the expired manifests, then removes every data
-        directory no manifest still on disk references. Manifests from
-        abandoned rollback forks keep protecting their dirs unless
-        `clean_orphans` scrubs directories referenced by NO manifest
-        (debris of torn commits). Manifests are deleted before data dirs,
-        so a partial expiration never leaves a readable snapshot whose
-        data is gone."""
-        if self.snapshot_id() is None:
+        current snapshot's lineage, deletes the expired manifests, then
+        removes every data directory no manifest still on disk
+        references. A manifest of a commit its root never published (an
+        id above the current one) keeps protecting its dirs unless
+        `clean_orphans` removes it, along with every directory no kept
+        manifest references (debris of unpublished commits). Anything
+        in manifests/ that is not a readable ``<id>.json`` (the temp file
+        of an interrupted write, a torn file) is debris and is removed.
+        Manifests are deleted before data dirs, so a partial expiration
+        never leaves a readable snapshot whose data is gone."""
+        head = self.snapshot_id()
+        if head is None:
             return {"expired": 0, "dirs_removed": 0, "bytes_reclaimed": 0}
         lineage = self.history()
         keep = {m["snapshot_id"] for m in lineage[-max(retain_last, 1):]}
@@ -329,8 +361,19 @@ class SnapshotTable:
             os.remove(os.path.join(mdir, f"{m['snapshot_id']}.json"))
         still_referenced: set[str] = set()
         for name in os.listdir(mdir):
-            with open(os.path.join(mdir, name)) as f:
-                still_referenced |= set(json.load(f)["dirs"])
+            path = os.path.join(mdir, name)
+            try:
+                if not (name.endswith(".json") and name[:-5].isdigit()):
+                    raise ValueError(name)
+                with open(path) as f:
+                    m = json.load(f)
+            except ValueError:  # a temp file or a torn write
+                os.remove(path)
+                continue
+            if clean_orphans and m["snapshot_id"] > head:
+                os.remove(path)  # a commit never published
+            else:
+                still_referenced |= set(m["dirs"])
         removed, reclaimed = 0, 0
         droot = os.path.join(self.root, "data")
         for name in sorted(os.listdir(droot)):
@@ -347,24 +390,3 @@ class SnapshotTable:
             removed += 1
         return {"expired": len(expired), "dirs_removed": removed,
                 "bytes_reclaimed": reclaimed}
-
-    def rollback(self, snapshot_id: int) -> None:
-        """Point HEAD at an earlier snapshot (Iceberg rollback)."""
-        self._manifest(snapshot_id)  # raises if unknown
-        atomic_write(self._head_path, str(snapshot_id))
-
-    def rollback_to_empty(self) -> None:
-        """Roll back to the pre-first-commit state (no snapshot at all).
-
-        Needed by crash recovery when a table's FIRST-ever commit was torn:
-        there is no earlier snapshot id to point HEAD at, so HEAD is removed
-        and the table reads as empty again. Orphan data dirs/manifests are
-        harmless (same as any aborted commit) and get overwritten by id reuse.
-        """
-        try:
-            os.remove(self._head_path)
-        except FileNotFoundError:
-            pass
-
-    def drop(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)

@@ -57,19 +57,19 @@ Scale design (the part the reference cannot do):
     so the hot host never lands in one straggler task;
   * global cap uses orderBy().limit() — Spark's distributed TakeOrdered —
     never a single-partition row_number;
-  * every wave ends in snapshot commits, then atomically replaces one
-    root file (`CUT_FILE`) holding the engine's position and every
-    table's snapshot id, so resume() can roll every table back to a
-    consistent cut (crash between commits loses nothing but the tail wave).
+  * every step (bootstrap, wave, recrawl, maintain) stages its table
+    commits and ends in ONE atomic replace of the root file (`CUT_FILE`:
+    the engine's position and every table's snapshot id). A crash or an
+    error before it leaves the last published cut as the visible state,
+    which resume() just loads — as does an engine whose step raised.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import warnings
-from contextlib import ExitStack
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -77,9 +77,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from navi_spark.catalog import (
+    CatalogRoot,
     SnapshotTable,
     arrow_table,
-    atomic_write,
     local_df,
 )
 from navi_spark.functions.urlnorm import host_expr, normalize_url_udf
@@ -106,8 +106,8 @@ LINEAGE_SCHEMA = (
     "blocked_robots long, fetch_failed long, dup_content long, fetched long, "
     "wall_ms long"
 )
-# The consistent cut, in the workdir next to the tables: {"wave_id",
-# "budget_consumed", "done", "snapshots": {table: id or null}}
+# The engine's catalog root, in the workdir next to the tables: {"wave_id",
+# "budget_consumed", "snapshots": {table: id}}
 CUT_FILE = "root.json"
 
 # recrawl() scan-pruning gate: broadcast the reloaded key set (≈ |pages|,
@@ -188,14 +188,13 @@ class WaveStats:
 def _run_commits_concurrently(commits) -> None:
     """Run independent single-table commit thunks on parallel threads.
 
-    Only for commits to DISTINCT tables whose recovery is covered by the
-    consistent cut written after them (resume() rolls back any torn
-    subset, order irrelevant). pyspark.InheritableThread copies the
-    submitting thread's JVM-local properties (job group, description,
-    interrupt-on-cancel), so jobs launched here still land in the caller's
-    job group. The first
-    failure is re-raised after every thread joins — a half-finished commit
-    set is exactly the torn-wave shape resume() already unwinds."""
+    Only for commits to DISTINCT tables of one catalog root: each stages
+    its own table's id, and nothing is visible until the step publishes
+    the root, so their order is irrelevant. pyspark.InheritableThread
+    copies the submitting thread's JVM-local properties (job group,
+    description, interrupt-on-cancel), so jobs launched here still land
+    in the caller's job group. The first failure is re-raised after every
+    thread joins; the step then drops whatever the others staged."""
     from pyspark import InheritableThread
 
     errors: list[BaseException] = []
@@ -337,8 +336,8 @@ def politeness_open_rows(new: DataFrame, counts: DataFrame, cap: int) -> DataFra
 
 
 class CrawlEngine:
-    """One crawl run rooted at `workdir`: snapshot tables plus the cut
-    file that pins them."""
+    """One crawl run rooted at `workdir`: snapshot tables plus the
+    catalog root (CUT_FILE) they commit through."""
 
     # Retired tables: the URL-seen set is `pages`' urls, per-wave wall time
     # rides on `lineage`, the bloom pre-filter is gone and the consistent
@@ -361,11 +360,11 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = config or CrawlConfig()
+        self.root = CatalogRoot(os.path.join(workdir, CUT_FILE))
         self.t = {
-            name: SnapshotTable(spark, os.path.join(workdir, name))
+            name: SnapshotTable(spark, os.path.join(workdir, name), self.root)
             for name in self.TABLES if name not in self._RETIRED
         }
-        self.cut_path = os.path.join(workdir, CUT_FILE)
         # static inputs, reused every wave
         self.web = web
         self.images = images
@@ -410,32 +409,35 @@ class CrawlEngine:
             F.lit(1.0).alias("rank"),  # INITIAL_RANK (:40)
             F.lit(0).alias("depth"),
         ).filter(F.col("url").isNotNull())
-        self.t["frontier"].overwrite(normed, {"wave": 0, "op": "bootstrap"})
-        self.wave_id = 0
-        self.budget_consumed = 0
-        self._commit_state(False)
-
-    def _read_cut(self) -> dict:
-        with open(self.cut_path) as f:
-            return json.load(f)
+        with self._step():
+            self.t["frontier"].overwrite(normed,
+                                         {"wave": 0, "op": "bootstrap"})
+            self.wave_id = 0
+            self.budget_consumed = 0
 
     def resume(self) -> None:
-        """Restore the engine to the last CONSISTENT cut: CUT_FILE is
-        replaced last each wave and records every table's snapshot id
-        (null = not yet committed), so any table with a later (torn)
-        snapshot is rolled back — including a torn first-ever commit,
-        which rolls back to the empty table. Reads no table data."""
-        cut = self._read_cut()
-        self.wave_id = cut["wave_id"]
-        self.budget_consumed = cut["budget_consumed"]
-        for name, table in self.t.items():
-            cur, rec = table.snapshot_id(), cut["snapshots"].get(name)
-            if cur is None:
-                continue
-            if rec is None:
-                table.rollback_to_empty()
-            elif cur > rec:
-                table.rollback(rec)
+        """Restore the engine to the last published cut (CUT_FILE). A
+        commit staged after it, by a step that crashed or raised, is named
+        by no published id: nothing rolls back, and no table is read."""
+        cut = self.root.load()
+        self.wave_id = cut.get("wave_id", 0)
+        self.budget_consumed = cut.get("budget_consumed", 0)
+
+    @contextmanager
+    def _step(self):
+        """One step, the unit the root publishes: yields an ExitStack that
+        unpersists the step's caches. A step that returns publishes the
+        engine's position and every staged snapshot id — its one commit
+        point; a step that raises drops its staged commits, leaving the
+        engine at the last published cut."""
+        with ExitStack() as held:
+            try:
+                yield held
+                self.root.publish(wave_id=self.wave_id,
+                                  budget_consumed=self.budget_consumed)
+            except BaseException:
+                self.resume()
+                raise
 
     def maintain(self, target_file_bytes: int = 128 << 20, min_files: int = 8,
                  retain_snapshots: int = 2) -> dict:
@@ -446,23 +448,22 @@ class CrawlEngine:
         W waves × P shuffle partitions of appends is a scan with O(W×P)
         tasks and an O(W×P)-entry manifest).
 
-        Three crash-safe steps, in an order resume() can always unwind:
-        (1) compact every fragmented data table (data-identical REPLACE
-        commits — a crash here makes resume() roll them back using the
-        still-present parent manifests); (2) rewrite the cut so it points
-        at the compacted snapshots; (3) expire snapshot history down to
-        `retain_snapshots` per table (manifests deleted before data dirs,
-        so survivors stay readable mid-crash). Returns per-table stats."""
+        (1) One step compacts every fragmented data table (data-identical
+        REPLACE commits; a crash before its publish leaves the cut on the
+        uncompacted snapshots). (2) Then snapshot history is expired down
+        to `retain_snapshots` per table and the orphans of unpublished
+        commits are cleared (manifests deleted before data dirs, so
+        survivors stay readable mid-crash). Returns per-table stats."""
         live = {n: t for n, t in self.t.items() if t.exists()}
         stats: dict[str, dict] = {}
-        for name, table in live.items():
-            before = len(table.data_files())
-            sid = table.compact(target_file_bytes, min_files,
-                                {"wave": self.wave_id})
-            stats[name] = {"files_before": before,
-                           "files_after": len(table.data_files()),
-                           "compacted": sid is not None}
-        self._commit_state(self._read_cut()["done"])
+        with self._step():
+            for name, table in live.items():
+                before = len(table.data_files())
+                sid = table.compact(target_file_bytes, min_files,
+                                    {"wave": self.wave_id})
+                stats[name] = {"files_before": before,
+                               "files_after": len(table.data_files()),
+                               "compacted": sid is not None}
         for name, table in live.items():
             stats[name].update(table.expire_snapshots(
                 retain_last=retain_snapshots, clean_orphans=True))
@@ -470,10 +471,9 @@ class CrawlEngine:
 
     # -- the wave ------------------------------------------------------------
     def wave(self) -> WaveStats:
-        """Run one wave. Everything the wave caches or checkpoints is
-        unpersisted when it returns or raises, so a failed wave leaks no
-        cached relation."""
-        with ExitStack() as cached:
+        """Run one wave, one :meth:`_step`: a failed wave leaks no cached
+        relation and no staged commit."""
+        with self._step() as cached:
             return self._wave(cached)
 
     def _wave(self, cached: ExitStack) -> WaveStats:
@@ -505,7 +505,6 @@ class CrawlEngine:
             .withColumn("host", host_expr(F.col("url")))
         )
         if remaining_global <= 0:
-            self._commit_state(True)
             return stats
         # A checkpoint, not a cache: `cand` is read ~5 times (lineage, the
         # depth split, the seen check), and an eager checkpoint runs under
@@ -517,7 +516,6 @@ class CrawlEngine:
         cand = _local_checkpoint(
             cand.withColumn("host_partition", self._hp()), cached)
         if cand.isEmpty():
-            self._commit_state(True)
             return stats
 
         # ---- 2. depth split FIRST (C6): the reference checks depth before
@@ -731,8 +729,8 @@ class CrawlEngine:
         )
         successes = labeled.filter(F.col("outcome") == "fetched")
 
-        # ---- 9. commit wave outputs (C18/C19): one snapshot per table;
-        #          the cut written last records the consistent state
+        # ---- 9. commit wave outputs (C18/C19): one staged snapshot per
+        #          table; the cut published last makes them visible
         # C13 validators: the synthetic web's ETag/Last-Modified are
         # deterministic functions of the payload version (a real server's
         # validators change exactly when content does) — stored with the
@@ -746,16 +744,12 @@ class CrawlEngine:
         )
         # The three wave-output commits are mutually independent: each
         # writes its OWN table from the checkpointed `successes` set (or its
-        # own table's previous snapshot), and resume() depends only on the
-        # cut being written last with the post-barrier snapshot map — the
-        # consistent cut never depends on the ORDER of the middle commits
-        # (any torn subset rolls back). So they run concurrently: each
-        # write is a small fixed-overhead Spark job, and at any realistic
-        # budget the serialized chain is pure fixed cost the executor slots
-        # sit idle through (ENGINE_SCALING.md attributes the composed-wave
-        # scaling floor to exactly this chain). InheritableThread propagates
-        # the caller's job group/description, so job accounting (and the
-        # wave job-count guard) stays truthful.
+        # own table's previous snapshot) and only stages its id, and the
+        # published cut names all of them or none. So they run
+        # concurrently: each is a small fixed-overhead Spark job, and a
+        # serialized chain of them is fixed cost the executor slots sit
+        # idle through (ENGINE_SCALING.md attributes the composed-wave
+        # scaling floor to exactly this chain).
         commits = [lambda: self.t["pages"].append(pages_out, {"wave": w}),
                    # no distinct(): a fetched row is first (_rnp == 1) in
                    # its phash partition, so successes' phashes are unique
@@ -837,10 +831,10 @@ class CrawlEngine:
                         LINEAGE_SCHEMA),
             {"wave": w})
 
-        # ---- 12. the cut = the checkpoint barrier
+        # ---- 12. the new position: the step publishes it with the
+        # wave's staged snapshots as the cut when this returns
         self.budget_consumed += stats.fetched + stats.depth_skips
         self.wave_id = w
-        self._commit_state(False)
         return stats
 
     def _lineage_rows(self, w, cand, poppable, labeled) -> list:
@@ -881,17 +875,6 @@ class CrawlEngine:
             "dup_content", "fetched",
         ).collect()
 
-    def _commit_state(self, done: bool) -> None:
-        """Atomically replace CUT_FILE with the engine's position and every
-        table's snapshot id (null = no commit yet, so resume() can undo a
-        torn FIRST commit) — the consistent cut resume() rolls back to."""
-        atomic_write(self.cut_path, json.dumps({
-            "wave_id": self.wave_id,
-            "budget_consumed": self.budget_consumed,
-            "done": done,
-            "snapshots": {n: t.snapshot_id() for n, t in self.t.items()},
-        }))
-
     # -- drivers -------------------------------------------------------------
     def run(self, max_waves: int | None = None) -> list[WaveStats]:
         out: list[WaveStats] = []
@@ -919,13 +902,14 @@ class CrawlEngine:
         count is derived from that size (guide §2.2) instead of running
         dozens of store-bounded exchanges at the session's scan-scale
         default. Restored on exit; the session conf is never leaked, and
-        nothing the pass caches outlives it, on error paths too."""
+        nothing the pass caches or stages outlives it, on error paths
+        too."""
         spark = self.spark
         sess = spark.conf.get("spark.sql.shuffle.partitions")
         p = _partitions_for_rows(self.budget_consumed, int(sess))
         spark.conf.set("spark.sql.shuffle.partitions", str(p))
         try:
-            with ExitStack() as cached:
+            with self._step() as cached:
                 return self._recrawl_impl(cached, web, images, max_pages,
                                           pagerank_iterations)
         finally:
@@ -1053,7 +1037,7 @@ class CrawlEngine:
             # each re-running the pruned web scan (r06: measured 0.33 s
             # for the extra scan at the bench size). cache() not
             # localCheckpoint: it rides the collect's job, keeping the
-            # no-drift job discipline at 13; unpersisted right after the
+            # no-drift job discipline at 11; unpersisted right after the
             # labeled checkpoint that consumes it.
             web_side = web_side.filter(web_pred).cache()
             cached.callback(web_side.unpersist)
@@ -1176,17 +1160,12 @@ class CrawlEngine:
         # here from broadcast-semi-pruned, column-pruned scans instead of
         # riding the full classification exchange. Above the broadcast
         # gate the joins degrade to plain shuffles carrying (url,
-        # children) only.
-        changed = consumed.filter(F.col("status") == "changed")
-        if n_changed == 0:
-            # no-drift fast path: nothing to fetch, merge, or compare —
-            # the empty set gets its columns as literals, no join / no
-            # checkpoint / no aggregation job
-            changed = changed.withColumn(
-                "children", F.array().cast("array<string>")
-            ).withColumn("link_structure_changed", F.lit(False))
-            n_struct = 0
-        else:
+        # children) only. With no drift there is nothing to fetch,
+        # compare or merge: a MERGE of the empty changed set would still
+        # rewrite the whole store into a new snapshot.
+        n_struct = 0
+        if n_changed:
+            changed = consumed.filter(F.col("status") == "changed")
             new_kids = self.web.select(
                 "url", F.col("children").alias("new_children_raw"))
             old_kids = old.select(
@@ -1235,16 +1214,16 @@ class CrawlEngine:
                           .otherwise(0)).alias("n")
                 ).collect()[0]["n"] or 0
             )
-        merge_src = changed.select(
-            "url",
-            F.col("new_image_id").alias("image_id"),
-            F.col("new_phash").alias("phash"),
-            F.col("new_caption").alias("caption"),
-            "depth", "rank", "host", "wave_id", "children",
-            payload_etag("new_phash", "new_caption").alias("etag"),
-            payload_last_modified("new_phash").alias("last_modified"),
-        )
-        self.t["pages"].merge_upsert(merge_src, "url", {"op": "recrawl"})
+            merge_src = changed.select(
+                "url",
+                F.col("new_image_id").alias("image_id"),
+                F.col("new_phash").alias("phash"),
+                F.col("new_caption").alias("caption"),
+                "depth", "rank", "host", "wave_id", "children",
+                payload_etag("new_phash", "new_caption").alias("etag"),
+                payload_last_modified("new_phash").alias("last_modified"),
+            )
+            self.t["pages"].merge_upsert(merge_src, "url", {"op": "recrawl"})
 
         if n_struct > 0:
             # :571-580 — calculatePageRank writes into the docs' rank field
@@ -1282,9 +1261,6 @@ class CrawlEngine:
             "statuses": status_counts,
             "not_popped": not_popped,
         }
-        # the cut = the checkpoint barrier (same machinery as wave(): a
-        # crash between the MERGE and here rolls pages back on resume)
-        self._commit_state(False)
         return stats
 
     # -- outputs ---------------------------------------------------------------

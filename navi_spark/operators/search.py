@@ -39,14 +39,15 @@ def record_suggestion(suggestions, query: str) -> None:
     `min_files` (8) however many distinct queries arrive. A compaction
     that commits also expires the history behind it, so the table's
     manifests and data directories stay bounded too. It keeps the
-    compaction's parent, whose files a GET that resolved HEAD just before
-    may still be reading.
+    compaction's parent, whose files a GET that resolved the table's
+    snapshot id just before may still be reading.
 
     Invariant: no suggestion row is ever deleted. insert_absent only
-    inserts, and compact() and expire_snapshots() keep every row of HEAD,
-    so a query once recorded stays present. api.QueryEngineServer relies
-    on it: its cache of recorded queries skips this call for a known
-    query, which is exact only while nothing deletes suggestion rows."""
+    inserts, and compact() and expire_snapshots() keep every row of the
+    current snapshot, so a query once recorded stays present.
+    api.QueryEngineServer relies on it: its cache of recorded queries
+    skips this call for a known query, which is exact only while nothing
+    deletes suggestion rows."""
     before = suggestions.snapshot_id()
     sid = suggestions.insert_absent(
         arrow_table([(query,)], "suggestion string"),

@@ -1,7 +1,10 @@
-"""SnapshotTable commit semantics: append/overwrite/merge/time-travel/rollback."""
+"""SnapshotTable commit semantics: append/overwrite/merge/time-travel, and
+the catalog root that publishes them."""
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import tempfile
 import uuid
@@ -10,7 +13,12 @@ import pytest
 
 from pyspark.sql.types import StructType
 
-from navi_spark.catalog import SnapshotTable, arrow_table, local_df
+from navi_spark.catalog import (
+    CatalogRoot,
+    SnapshotTable,
+    arrow_table,
+    local_df,
+)
 from navi_spark.operators.frontier import LINEAGE_SCHEMA
 
 
@@ -40,12 +48,49 @@ def test_append_and_time_travel(spark, table):
     assert hist[0]["summary"] == {"op": "first"}
 
 
-def test_overwrite_and_rollback(spark, table):
+def test_overwrite_and_time_travel(spark, table):
     s1 = table.append(_df(spark, [(1, "a")]))
     table.overwrite(_df(spark, [(9, "z")]))
     assert [r["k"] for r in table.read().collect()] == [9]
-    table.rollback(s1)
-    assert [r["k"] for r in table.read().collect()] == [1]
+    assert [r["k"] for r in table.read(snapshot_id=s1).collect()] == [1]
+
+
+def test_standalone_table_publishes_every_commit(spark, table):
+    """A table with no shared root is a root naming only itself, in its
+    own directory, published by each commit: a second handle on the
+    directory reads what the first committed. No HEAD file is written."""
+    table.append(_df(spark, [(1, "a")]))
+    sid = table.append(_df(spark, [(2, "b")]))
+    with open(os.path.join(table.root, "root.json")) as f:
+        assert json.load(f) == {"snapshots": {table.name: sid}}
+    again = SnapshotTable(spark, table.root)
+    assert again.snapshot_id() == sid
+    assert _rows(again) == [(1, "a"), (2, "b")]
+    assert sorted(os.listdir(table.root)) == ["data", "manifests",
+                                              "root.json"]
+
+
+def test_shared_root_publishes_tables_together(spark, tmp_path):
+    """Tables on one root stage their commits; nothing is visible through
+    the root file until publish(), which names every staged id at once.
+    load() drops what was staged since, and the next commit reuses the
+    dropped id without reading the unpublished files."""
+    root = CatalogRoot(str(tmp_path / "root.json"))
+    a = SnapshotTable(spark, str(tmp_path / "a"), root)
+    b = SnapshotTable(spark, str(tmp_path / "b"), root)
+    a.append(_df(spark, [(1, "a")]))
+    b.append(_df(spark, [(2, "b")]))
+    assert CatalogRoot(root.path).staged == {}  # staged, not published
+    root.publish(step=1)
+    assert CatalogRoot(root.path).load() == {"step": 1,
+                                             "snapshots": {"a": 1, "b": 1}}
+    a.overwrite(_df(spark, [(9, "z")]))
+    assert _rows(a) == [(9, "z")]  # a step reads what it staged
+    assert root.load() == {"step": 1, "snapshots": {"a": 1, "b": 1}}
+    assert a.snapshot_id() == 1 and _rows(a) == [(1, "a")]
+    assert a.append(_df(spark, [(3, "c")])) == 2
+    assert _rows(a) == [(1, "a"), (3, "c")]
+    assert not any("HEAD" in fns for _, _, fns in os.walk(tmp_path))
 
 
 def test_merge_upsert(spark, table):
@@ -183,8 +228,6 @@ def test_expire_after_compact_reclaims_files(spark, table):
 
 
 def test_expire_clean_orphans(spark, table):
-    import os
-
     table.append(_df(spark, [(1, "a")]))
     # debris of a torn commit: a data dir no manifest references
     orphan = os.path.join(table.root, "data", "s99-deadbeef")
@@ -196,3 +239,31 @@ def test_expire_clean_orphans(spark, table):
     assert out["dirs_removed"] == 1
     assert not os.path.exists(orphan)
     assert _rows(table) == [(1, "a")]
+
+
+def test_expire_clears_torn_and_unpublished_manifests(spark, table):
+    """A manifest that is not a readable <id>.json (a torn write, a temp
+    file of an interrupted one) is debris: expiration clears it instead of
+    failing on it. A readable manifest above the current id, a commit its
+    root never published, keeps its data dir until clean_orphans removes
+    both."""
+    for i in range(3):
+        table.append(_df(spark, [(i, "x")]))
+    mdir = os.path.join(table.root, "manifests")
+    with open(os.path.join(mdir, "4.json"), "w") as f:
+        f.write('{"snapshot_id": 4, "par')
+    with open(os.path.join(mdir, "4.json.tmp-0123abcd"), "w") as f:
+        f.write("{")
+    orphan = os.path.join(table.root, "data", "s5-deadbeef")
+    os.makedirs(orphan)
+    with open(os.path.join(mdir, "5.json"), "w") as f:
+        json.dump({"snapshot_id": 5, "parent": 4, "dirs": [orphan],
+                   "schema": {}, "summary": {}}, f)
+    out = table.expire_snapshots(retain_last=2)
+    assert out["expired"] == 1 and out["dirs_removed"] == 0
+    assert sorted(os.listdir(mdir)) == ["2.json", "3.json", "5.json"]
+    assert _rows(table) == [(0, "x"), (1, "x"), (2, "x")]
+    out = table.expire_snapshots(retain_last=2, clean_orphans=True)
+    assert out["dirs_removed"] == 1 and not os.path.exists(orphan)
+    assert sorted(os.listdir(mdir)) == ["2.json", "3.json"]
+    assert _rows(table) == [(0, "x"), (1, "x"), (2, "x")]

@@ -16,6 +16,7 @@ import tempfile
 import pytest
 import pyspark.sql.functions as F
 
+from navi_spark.catalog import SnapshotTable
 from navi_spark.operators.frontier import (
     CUT_FILE,
     FRONTIER_SCHEMA,
@@ -230,6 +231,80 @@ def test_maintain_mid_crawl_invisible(spark, universe, oracle_result):
         assert visit == oracle_result.visit_order
         assert seen == oracle_result.seen
         assert counts == oracle_result.host_counts
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_crash_inside_maintain(spark, universe, oracle_result, monkeypatch):
+    """A crash inside maintain(), after the first table's compaction and
+    before the root is published, leaves the cut of wave 2: a fresh
+    engine resumes on the uncompacted snapshots and finishes exactly."""
+    workdir = tempfile.mkdtemp(prefix="navi-mnt-crash-")
+    try:
+        eng, seeds = _mk_engine(spark, universe, workdir)
+        eng.bootstrap(seeds)
+        eng.run(max_waves=2)
+        cut = {n: t.snapshot_id() for n, t in eng.t.items()}
+        compact = SnapshotTable.compact
+
+        def compact_then_crash(table, *a, **kw):
+            sid = compact(table, *a, **kw)
+            if sid is not None:
+                raise RuntimeError("simulated crash after a compaction")
+            return sid
+
+        monkeypatch.setattr(SnapshotTable, "compact", compact_then_crash)
+        with pytest.raises(RuntimeError, match="after a compaction"):
+            eng.maintain(target_file_bytes=1 << 30, min_files=2)
+        monkeypatch.undo()
+
+        eng2, _ = _mk_engine(spark, universe, workdir)
+        eng2.resume()
+        assert eng2.wave_id == 2
+        assert {n: t.snapshot_id() for n, t in eng2.t.items()} == cut
+        eng2.run(max_waves=30)
+        visit, seen, counts = _engine_state(eng2)
+        assert visit == oracle_result.visit_order
+        assert seen == oracle_result.seen
+        assert counts == oracle_result.host_counts
+        assert eng2.budget_consumed == oracle_result.budget_consumed
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_failed_wave_retried_on_same_engine(spark, universe, oracle_result,
+                                            monkeypatch):
+    """Wave 2 raises at the frontier overwrite, after pages, phash_seen
+    and host_counts committed. The engine that raised stays at the cut of
+    wave 1, and running on from it matches the uninterrupted oracle."""
+    workdir = tempfile.mkdtemp(prefix="navi-retry-")
+    try:
+        eng, seeds = _mk_engine(spark, universe, workdir)
+        eng.bootstrap(seeds)
+        eng.wave()
+        cut = {n: t.snapshot_id() for n, t in eng.t.items()}
+        budget = eng.budget_consumed
+        staged = {}
+
+        def fail(*_a, **_k):
+            staged.update({n: t.snapshot_id() for n, t in eng.t.items()})
+            raise RuntimeError("frontier write failed")
+
+        monkeypatch.setattr(eng.t["frontier"], "overwrite", fail)
+        with pytest.raises(RuntimeError, match="frontier write failed"):
+            eng.wave()
+        monkeypatch.undo()
+        for name in ("pages", "phash_seen", "host_counts"):
+            assert staged[name] == cut[name] + 1, name  # really committed
+        assert eng.wave_id == 1 and eng.budget_consumed == budget
+        assert {n: t.snapshot_id() for n, t in eng.t.items()} == cut
+
+        eng.run(max_waves=30)
+        visit, seen, counts = _engine_state(eng)
+        assert visit == oracle_result.visit_order
+        assert seen == oracle_result.seen
+        assert counts == oracle_result.host_counts
+        assert eng.budget_consumed == oracle_result.budget_consumed
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -614,17 +689,18 @@ def test_recrawl_spark_job_count_bounded(spark, universe):
         tracker = sc._jsc.sc().statusTracker()  # noqa: SLF001
         ids = tracker.getJobIdsForGroup("recrawl-jobcount")
         n_jobs = len(list(ids))
-        # measured composition (13): 3 localCheckpoints (labeled / lab /
-        # consumed), 5 broadcast builds (the bounded cap boundary and the
+        # measured composition (11): 3 localCheckpoints (labeled / lab /
+        # consumed), 4 broadcast builds (the bounded cap boundary and the
         # web/images/rules joins), the 2 key collects of the
-        # classification-scan prune, the consumed agg, the statuses agg
-        # and the merge's parquet write. Reads start no job (the manifest
-        # carries the schema) and the state commit is an Arrow write.
-        # The changed-children fetch adds NO job on this path: n_changed
-        # == 0 takes the literal-columns fast path. The guard trips if
+        # classification-scan prune, the consumed agg and the statuses
+        # agg. Reads start no job (the manifest carries the schema) and
+        # the cut is a file written on the driver. With n_changed == 0
+        # there is no children fetch and no MERGE (whose key broadcast
+        # and parquet write were 2 more jobs). The guard trips if
         # per-stat rescans (the 3 old count() jobs + the statuses groupBy
-        # over un-checkpointed lineage ≈ +4) creep back in.
-        assert 0 < n_jobs <= 13, f"recrawl launched {n_jobs} Spark jobs"
+        # over un-checkpointed lineage ≈ +4) creep back in, or a no-drift
+        # recrawl rewrites the store again.
+        assert 0 < n_jobs <= 11, f"recrawl launched {n_jobs} Spark jobs"
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -652,11 +728,11 @@ def test_robots_reference_bug_parity_mode():
 
 
 def test_resume_after_torn_first_commit(spark, universe, oracle_result):
-    """Crash DURING wave 1: pages/phash_seen got their first-ever (torn)
-    commits but the cut still holds the bootstrap state with no recorded
-    snapshot for them. resume() must roll those tables back to EMPTY (the
-    null-snapshot path), and the rerun must match the uninterrupted oracle
-    exactly — no double-appended pages."""
+    """Crash DURING wave 1: pages/phash_seen got their first-ever commits
+    (data and manifest on disk) but the published cut still holds the
+    bootstrap state, which names no snapshot for them. A resumed engine
+    sees both tables EMPTY, and the rerun must match the uninterrupted
+    oracle exactly — no double-appended pages."""
     workdir = tempfile.mkdtemp(prefix="navi-torn-")
     try:
         eng, seeds = _mk_engine(spark, universe, workdir)
@@ -674,11 +750,13 @@ def test_resume_after_torn_first_commit(spark, universe, oracle_result):
         eng.t["phash_seen"].append(junk.select("phash"),
                                    {"wave": 1, "torn": True})
         assert eng.t["pages"].snapshot_id() == 1
+        assert os.listdir(os.path.join(workdir, "pages", "manifests")) == [
+            "1.json"]
 
         eng2, _ = _mk_engine(spark, universe, workdir)
         eng2.resume()
         assert eng2.wave_id == 0
-        assert eng2.t["pages"].snapshot_id() is None   # rolled back to empty
+        assert eng2.t["pages"].snapshot_id() is None   # never published
         assert eng2.t["phash_seen"].snapshot_id() is None
         eng2.run(max_waves=30)
         visit, seen, counts = _engine_state(eng2)
@@ -907,9 +985,11 @@ def test_recrawl_no_drift_is_all_refunds(spark, universe):
         before = sorted(
             (r["url"], r["phash"], r["rank"]) for r in eng.pages().collect()
         )
+        sid = eng.t["pages"].snapshot_id()
         stats = eng.recrawl()  # same web/images
         assert stats["changed"] == 0
         assert not stats["pagerank_recomputed"]
+        assert eng.t["pages"].snapshot_id() == sid  # nothing rewritten
         after = sorted(
             (r["url"], r["phash"], r["rank"]) for r in eng.pages().collect()
         )
@@ -967,7 +1047,9 @@ def test_recrawl_zero_budget_pops_nothing(spark, universe):
             (r["url"], r["phash"], r["rank"]) for r in eng.pages().collect()
         )
         web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
+        sid = eng.t["pages"].snapshot_id()
         stats = eng.recrawl(web=web_v1, max_pages=0)
+        assert eng.t["pages"].snapshot_id() == sid  # nothing rewritten
         assert stats["consumed"] == 0
         assert stats["changed"] == 0
         assert stats["statuses"] == {}
@@ -983,11 +1065,10 @@ def test_recrawl_zero_budget_pops_nothing(spark, universe):
 
 
 def test_resume_mid_recrawl_rolls_back_merge(spark, universe, monkeypatch):
-    """A crash AFTER the recrawl MERGE but BEFORE the cut is written must
-    roll the pages table back to the pre-recrawl snapshot on resume, and a
-    re-run recrawl then lands the same final state (idempotent replay)."""
-    from navi_spark.operators import frontier
-
+    """A crash AFTER the recrawl MERGE but BEFORE the cut is published
+    leaves the pre-recrawl pages as the table a resumed engine reads, and
+    a re-run recrawl then lands the same final state (idempotent
+    replay)."""
     workdir = tempfile.mkdtemp(prefix="navi-recrawl-torn-")
     try:
         eng, seeds = _mk_engine(spark, universe, workdir)
@@ -997,15 +1078,17 @@ def test_resume_mid_recrawl_rolls_back_merge(spark, universe, monkeypatch):
             (r["url"], r["phash"]) for r in eng.pages().collect()
         )
         web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
+        sid = eng.t["pages"].snapshot_id()
 
         def crash(*a, **kw):
+            assert eng.t["pages"].snapshot_id() > sid  # the MERGE staged
             raise RuntimeError("simulated crash before the cut is written")
-        monkeypatch.setattr(frontier, "atomic_write", crash)
+        monkeypatch.setattr(eng.root, "publish", crash)
         with pytest.raises(RuntimeError, match="simulated crash"):
             eng.recrawl(web=web_v1)
         monkeypatch.undo()
 
-        # fresh engine + resume: torn pages commits rolled back
+        # fresh engine + resume: the MERGE was never published
         web, images, robots, _ = universe
         from navi_spark.operators.frontier import CrawlConfig
         eng2 = CrawlEngine(
@@ -1022,6 +1105,37 @@ def test_resume_mid_recrawl_rolls_back_merge(spark, universe, monkeypatch):
         # replaying the recrawl completes and changes pages deterministically
         stats = eng2.recrawl(web=web_v1)
         assert stats["changed"] > 0
+        web_v1.unpersist()
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_failed_recrawl_leaves_pages_unchanged(spark, universe, monkeypatch):
+    """A recrawl that raises after its MERGE leaves the engine that ran it
+    on the pre-recrawl pages, and the same engine's retry completes."""
+    workdir = tempfile.mkdtemp(prefix="navi-recrawl-fail-")
+    try:
+        eng, seeds = _mk_engine(spark, universe, workdir)
+        eng.bootstrap(seeds)
+        eng.run(max_waves=30)
+        sid = eng.t["pages"].snapshot_id()
+        before = sorted((r["url"], r["phash"], r["rank"])
+                        for r in eng.pages().collect())
+        web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
+        merge = eng.t["pages"].merge_upsert
+
+        def merge_then_fail(*a, **kw):
+            merge(*a, **kw)
+            raise RuntimeError("failed after the MERGE")
+
+        monkeypatch.setattr(eng.t["pages"], "merge_upsert", merge_then_fail)
+        with pytest.raises(RuntimeError, match="after the MERGE"):
+            eng.recrawl(web=web_v1)
+        monkeypatch.undo()
+        assert eng.t["pages"].snapshot_id() == sid
+        assert sorted((r["url"], r["phash"], r["rank"])
+                      for r in eng.pages().collect()) == before
+        assert eng.recrawl(web=web_v1)["changed"] > 0
         web_v1.unpersist()
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -1070,7 +1184,8 @@ def test_workdir_holds_live_tables_and_cut_only(spark, universe):
     """Each crawl fact is stored once: a crawl, a recrawl and maintain()
     write exactly the live tables plus the cut file, and no retired table
     (the seen set, the bloom filters, wave metrics, the state row) ever
-    gets a directory."""
+    gets a directory. The cut is the only commit point: a table directory
+    holds its data and manifests, and no per-table HEAD or root file."""
     workdir = tempfile.mkdtemp(prefix="navi-tables-")
     try:
         eng, seeds = _mk_engine(spark, universe, workdir)
@@ -1078,16 +1193,24 @@ def test_workdir_holds_live_tables_and_cut_only(spark, universe):
                               "phash_seen", "lineage"}
         assert not set(eng.t) & set(CrawlEngine._RETIRED)
         want = {*eng.t, CUT_FILE}
+
+        def check():
+            assert set(os.listdir(workdir)) == want
+            for n in eng.t:
+                assert set(os.listdir(os.path.join(workdir, n))) == {
+                    "data", "manifests"}, n
+
         eng.bootstrap(seeds)
         eng.run(max_waves=2)
-        assert set(os.listdir(workdir)) == want
+        check()
         web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
         eng.recrawl(web=web_v1)
         web_v1.unpersist()
-        assert set(os.listdir(workdir)) == want
+        check()
         eng.maintain(min_files=2)
-        assert set(os.listdir(workdir)) == want
+        check()
         assert all(eng.t[n].exists() for n in eng.t)
+        assert not any("HEAD" in fns for _, _, fns in os.walk(workdir))
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 

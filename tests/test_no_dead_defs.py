@@ -1,10 +1,12 @@
-"""Every top-level function or class in navi_spark/ is used by the product:
-its name appears as a Name or an Attribute in some .py file of the repo
-outside tests/ and outside its own definition. Neither a string literal
-nor an import counts: a name that is imported but never used keeps
-nothing alive. A def that only tests reach is a second copy of product
-logic whose tests can pass while the product is wrong, unless it is an
-oracle or a test helper on TEST_ONLY below."""
+"""Every top-level function or class in navi_spark/, and every method of a
+top-level class, is used by the product: its name appears as a Name or an
+Attribute in some .py file of the repo outside tests/ and outside its own
+definition. Neither a string literal nor an import counts: a name that is
+imported but never used keeps nothing alive. A def that only tests reach
+is a second copy of product logic whose tests can pass while the product
+is wrong, unless it is an oracle, a test helper or an operation of the
+engine's public API on TEST_ONLY below. Dunder methods are exempt: the
+language calls them."""
 
 from __future__ import annotations
 
@@ -39,6 +41,11 @@ TEST_ONLY = {
     "operators.multimodal.sample_video_frames",
     "streaming.wave_stream.streaming_seen_filter",
     "streaming.wave_stream.streaming_hourly_rollup",
+    # the crawl engine's public operations that no product file calls:
+    # a caller maintains, refreshes or indexes a crawl with them
+    "operators.frontier.CrawlEngine.maintain",
+    "operators.frontier.CrawlEngine.recrawl",
+    "operators.frontier.CrawlEngine.index_feed",
 }
 
 
@@ -60,11 +67,29 @@ def _references(tree: ast.AST) -> list[tuple[str, int]]:
     return refs
 
 
-def _key(path: pathlib.Path, name: str) -> str:
+def _key(path: pathlib.Path, *names: str) -> str:
     mod = path.relative_to(PKG).with_suffix("").parts
     if mod[-1] == "__init__":
         mod = mod[:-1]
-    return ".".join(mod + (name,))
+    return ".".join(mod + names)
+
+
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _defs(tree: ast.Module):
+    """(names, node) of every top-level def and of every method of a
+    top-level class, dunder methods excepted."""
+    for node in tree.body:
+        if not isinstance(node, _DEF):
+            continue
+        yield (node.name,), node
+        if isinstance(node, ast.ClassDef):
+            for sub in node.body:
+                if (isinstance(sub, _DEF) and not (
+                        sub.name.startswith("__")
+                        and sub.name.endswith("__"))):
+                    yield (node.name, sub.name), sub
 
 
 def _unused_defs() -> tuple[dict[str, str], set[str]]:
@@ -82,12 +107,8 @@ def _unused_defs() -> tuple[dict[str, str], set[str]]:
     for path, tree in trees.items():
         if not path.is_relative_to(PKG):
             continue
-        for node in tree.body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                continue
-            key = _key(path, node.name)
+        for names, node in _defs(tree):
+            key = _key(path, *names)
             keys.add(key)
             # a decorated def starts at its first decorator line
             start = min([node.lineno] + [d.lineno for d in node.decorator_list])
