@@ -27,7 +27,19 @@ An endpoint that raises answers 500 ``{"error": "internal error"}``.
 Scale note: the server builds a serving layout of the index once, at
 construction (operators/search.py serving_layout: postings carrying idf
 and field lengths, and a (doc_id, pop, snippet text) table, both cached
-and hash-partitioned by doc_id), and releases it in stop(). Measured
+and hash-partitioned by doc_id), and releases it in stop(). It plans
+every ranking query in a serving session of its own: `newSession()` of
+the index's session (the same SparkContext and cache manager, its own
+SQL conf), which starts from the caller's modifiable SQL confs, so it
+ranks as the caller's session would, and turns AQE off once, at
+construction. The index's inputs reach that session as global temp
+views named for the server, which stop() drops. AQE off is sound for
+served plans at any scale: the layout is partitioned by doc_id, so a
+served plan (the prune probe, the id fetch, the ranking scan) has no
+exchange for AQE to adapt, and the layout's
+`repartition(parts, "doc_id")` keeps exactly `parts` partitions with
+AQE on or off; AQE on would only add query stages and re-planning to
+every GET. The caller's session and its confs are never changed. Measured
 Spark jobs per request on perfbench's 2k-doc index: a POST of a query
 this server already recorded runs 0 (it remembers up to
 KNOWN_QUERIES_MAX of them), a first-seen POST 1 (the suggestion probe)
@@ -48,14 +60,15 @@ from __future__ import annotations
 import json
 import threading
 import time
+import uuid
 from collections import OrderedDict
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
 from urllib.parse import parse_qs, urlparse
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from navi_spark.operators import ranker
 from navi_spark.operators.queryengine import parse_query
@@ -100,6 +113,18 @@ class _ServerState:
     lock: threading.Lock = field(default_factory=threading.Lock)
 
 
+def _serving_session(spark: SparkSession) -> SparkSession:
+    """A child of `spark` that a server plans its queries in: it shares
+    the SparkContext and the cache manager, starts from `spark`'s
+    modifiable SQL confs, and has AQE off. Nothing changes it afterwards."""
+    session = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            session.conf.set(key, value)
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    return session
+
+
 def _parsed_tokens(query: str, stopwords: frozenset[str]) -> list[str]:
     """The POST /search response body: stemmed terms for a bare query,
     the alternating phrase list for a quoted one, [] for invalid —
@@ -125,12 +150,53 @@ class QueryEngineServer:
                  port: int = 0):
         self.index = index
         self.state = _ServerState()
-        # built and cached once per server; stop() releases it
+        self.session = _serving_session(index.pages.sparkSession)
+        self.layout = None
+        self._httpd = None
+        self._id = uuid.uuid4().hex
+        self._views: list[str] = []
+        # all or nothing: a constructor that raises leaves no cache, view
+        # or socket behind
+        try:
+            self._build(host, port)
+        except BaseException:
+            self._release()
+            raise
+
+    def _bind(self, df: Optional[DataFrame],
+              what: str) -> Optional[DataFrame]:
+        """`df` as a DataFrame of the serving session, through a global
+        temp view named for this server (dropped by _release)."""
+        if df is None:
+            return None
+        name = f"navi_serve_{self._id}_{what}"
+        df.createGlobalTempView(name)
+        self._views.append(name)
+        db = self.session.conf.get("spark.sql.globalTempDatabase")
+        return self.session.table(f"{db}.{name}")
+
+    def _build(self, host: str, port: int) -> None:
+        index = self.index
+        phrase_index = index.phrase_index
+        if phrase_index is not None:
+            phrase_index = ranker.PhraseIndex(
+                self._bind(phrase_index.pairs, "pairs"),
+                self._bind(phrase_index.word_df, "word_df"))
+        # what the served plans read, bound into the serving session
+        served = self.served = replace(
+            index, pages=self._bind(index.pages, "pages"),
+            postings=self._bind(index.postings, "postings"),
+            lengths=self._bind(index.lengths, "lengths"),
+            idf_table=self._bind(index.idf_table, "idf_table"),
+            phrase_index=phrase_index)
+        # built and cached once per server; stop() releases it, and so
+        # does a failed construction, since persist() runs once assigned
         self.layout = serving_layout(
-            index.pages, index.postings, index.lengths, index.field_cols,
-            index.n_docs, avg_lengths=index.avg_lengths,
-            idf_table=index.idf_table,
-        ).persist()
+            served.pages, served.postings, served.lengths, served.field_cols,
+            served.n_docs, avg_lengths=served.avg_lengths,
+            idf_table=served.idf_table,
+        )
+        self.layout.persist()
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -235,7 +301,7 @@ class QueryEngineServer:
             query = self.state.query
         results = []
         if query is not None:
-            idx = self.index
+            idx = self.served
             hits = search(
                 query, idx.pages, idx.postings, idx.lengths, idx.field_cols,
                 idx.n_docs, k=idx.k, stopwords=idx.stopwords,
@@ -278,8 +344,18 @@ class QueryEngineServer:
     def stop(self) -> None:
         if self._thread.is_alive():  # shutdown() waits for serve_forever
             self._httpd.shutdown()
-        self._httpd.server_close()
-        self.layout.unpersist()
+        self._release()
+
+    def _release(self) -> None:
+        """Close the socket, uncache the layout and drop the views: what
+        construction acquired, as far as it got."""
+        if self._httpd is not None:
+            self._httpd.server_close()
+        if self.layout is not None:
+            self.layout.unpersist()
+        for name in self._views:
+            self.session.catalog.dropGlobalTempView(name)
+        self._views.clear()
 
     def __enter__(self) -> str:
         self.start()

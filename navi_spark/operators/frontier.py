@@ -70,7 +70,7 @@ import os
 import time
 import warnings
 from contextlib import ExitStack, contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 import pyspark.sql.functions as F

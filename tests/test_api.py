@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import socket
 import threading
 import time
 import urllib.error
@@ -166,10 +167,10 @@ def test_failing_endpoint_answers_500(spark, served, tmp_path, monkeypatch):
 
 
 def test_concurrent_results_keep_session_conf(spark, served):
-    """search() sets the session's shuffle-partition and AQE confs for a
-    query and restores them; concurrent GET /results calls must not
-    interleave that save/set/restore (the session was left at the serving
-    values) nor rank under each other's confs."""
+    """Each server plans in a serving session of its own and sets no conf
+    of the caller's session: concurrent GET /results calls must leave the
+    caller's shuffle-partition and AQE confs as they were and must not
+    rank under each other's confs."""
     _, idx = served
     queries = ["rivers banks", "spark tables", '"big tables"', "spark",
                '"big tables" OR "rivers"', "tables AND spark NOT rivers"]
@@ -514,27 +515,58 @@ def test_concurrent_results_overlap_in_time(spark, served):
     assert overlapped > 0, "concurrent GET /results never ran at once"
 
 
-def test_stop_releases_what_the_server_cached(spark, tmp_path):
-    """A server caches its serving layout; no RDD it persisted survives
-    its stop() (ids, not counts, so an unrelated RDD cleaned up meanwhile
-    cannot mask a leak)."""
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
 
+
+def _global_views(spark) -> set:
+    db = spark.conf.get("spark.sql.globalTempDatabase")
+    return {t.name for t in spark.catalog.listTables(db)}
+
+
+def _uncached_index(spark, tmp_path) -> ServedIndex:
     pages = spark.createDataFrame(
         [(u, h1, other, 1.0) for u, h1, other in DOCS],
         "url string, h1 string, other string, rank double",
     )
-    idx = ServedIndex(
+    return ServedIndex(
         pages=pages, field_cols=FIELDS, n_docs=len(DOCS),
         postings=indexer.build_postings(pages, "url", FIELDS, stem=True),
         lengths=indexer.field_lengths(pages, "url", FIELDS, stem=True),
         suggestions=SnapshotTable(spark, str(tmp_path / "s")),
     )
-    before = persisted()
+
+
+def test_stop_releases_what_the_server_cached(spark, tmp_path):
+    """A server caches its serving layout and binds its inputs as global
+    temp views; no RDD it persisted and none of its views survive its
+    stop() (ids and names, not counts, so an unrelated RDD cleaned up
+    meanwhile cannot mask a leak)."""
+    idx = _uncached_index(spark, tmp_path)
+    before, views = _persisted(spark), _global_views(spark)
     with QueryEngineServer(idx) as url:
         for q in ("rivers banks", '"big tables"'):
             _post(url, "/search?query=" + urllib.parse.quote(q))
             assert json.loads(_get(url, "/results")[1])["results"]
-        assert persisted() - before, "the server cached nothing"
-    assert persisted() <= before
+        assert _persisted(spark) - before, "the server cached nothing"
+        assert _global_views(spark) - views, "the server bound no view"
+    assert _persisted(spark) <= before
+    assert _global_views(spark) <= views
+
+
+def test_failed_construction_leaves_nothing_behind(spark, tmp_path):
+    """A server that cannot bind its port raises from its constructor,
+    and leaves no persisted RDD and no global temp view behind: it built
+    and cached its layout before it bound the socket."""
+    idx = _uncached_index(spark, tmp_path)
+    taken = socket.socket()
+    try:
+        taken.bind(("127.0.0.1", 0))
+        taken.listen()
+        before, views = _persisted(spark), _global_views(spark)
+        with pytest.raises(OSError):
+            QueryEngineServer(idx, port=taken.getsockname()[1])
+    finally:
+        taken.close()
+    assert _persisted(spark) <= before
+    assert _global_views(spark) <= views

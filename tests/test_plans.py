@@ -159,14 +159,11 @@ def test_payload_validation_not_relocated_below_store_semi_join(spark):
     assert plan.index("validate_payload") < plan.index("BroadcastHashJoin"), plan
 
 
-def test_served_terms_query_plans_no_exchange(spark, monkeypatch):
-    """A terms query on a server's serving layout runs inside the doc_id
-    partitions the layout was cached in: BM25F's per-doc sum, the join
-    that brings popularity and snippet text, and the top-k plan no
-    shuffle and no broadcast, whatever the session's partition and AQE
-    confs say."""
-    from navi_spark.api import QueryEngineServer, ServedIndex
-    from navi_spark.operators import indexer
+def _served_index(spark, phrase_index=False):
+    """A 400-page index whose inputs are cached, and the DataFrames to
+    release after the test."""
+    from navi_spark.api import ServedIndex
+    from navi_spark.operators import indexer, ranker
 
     fields = {"h1": "h1", "other": "other"}
     words = F.array(*[F.lit(w) for w in
@@ -182,28 +179,80 @@ def test_served_terms_query_plans_no_exchange(spark, monkeypatch):
     ).cache()
     postings = indexer.build_postings(pages, "url", fields, stem=False)
     lengths = indexer.field_lengths(pages, "url", fields, stem=False)
-    srv = QueryEngineServer(ServedIndex(
-        pages=pages, postings=postings.cache(), lengths=lengths.cache(),
-        field_cols=fields, n_docs=400)).start()
+    held = [pages, postings.cache(), lengths.cache()]
+    pi = None
+    if phrase_index:
+        pi = ranker.build_phrase_index(pages, "url", list(fields.values()))
+        held += [pi.pairs, pi.word_df]
+    return ServedIndex(
+        pages=pages, postings=postings, lengths=lengths, field_cols=fields,
+        n_docs=400, phrase_index=pi), held
+
+
+def _served_plans(srv, query, monkeypatch):
+    """GET /results of `query` on `srv`: its response and every DataFrame
+    it collected."""
     ran = []
-    df_type = type(pages)
+    df_type = type(srv.index.pages)
     real_collect = df_type.collect
 
     def spy(self):
         ran.append(self)
         return real_collect(self)
 
+    srv._post_search(query)
+    monkeypatch.setattr(df_type, "collect", spy)
     try:
-        srv._post_search("green beta")
-        monkeypatch.setattr(df_type, "collect", spy)
-        out = srv._results()
+        return srv._results(), ran
+    finally:
         monkeypatch.undo()
+
+
+def test_served_terms_query_plans_no_exchange(spark, monkeypatch):
+    """A terms query on a server's serving layout runs inside the doc_id
+    partitions the layout was cached in: BM25F's per-doc sum, the join
+    that brings popularity and snippet text, and the top-k plan no
+    shuffle and no broadcast, whatever the session's partition and AQE
+    confs say."""
+    from navi_spark.api import QueryEngineServer
+
+    idx, held = _served_index(spark)
+    srv = QueryEngineServer(idx).start()
+    try:
+        out, ran = _served_plans(srv, "green beta", monkeypatch)
         assert len(out["results"]) == 10 and len(ran) == 1
         ops = executed_operators(ran[0])
         assert "InMemoryTableScan" in ops, ops
         assert not [o for o in ops if "Exchange" in o], ops
     finally:
-        monkeypatch.undo()
         srv.stop()
-        for df in (pages, postings, lengths):
+        for df in held:
             df.unpersist()
+
+
+def test_served_plans_run_in_the_serving_session(spark, monkeypatch):
+    """Every plan a served GET runs (the prune probe and the ranking scan
+    of a boolean query, the one job of a terms query) is planned in the
+    server's serving session: without AQE, reading the cached layout, with
+    no exchange. The caller's session keeps its AQE and partition confs,
+    from before the server is built to after its GETs."""
+    from navi_spark.api import QueryEngineServer
+
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = [spark.conf.get(c) for c in confs]
+    idx, held = _served_index(spark, phrase_index=True)
+    srv = QueryEngineServer(idx).start()
+    try:
+        for query in ("green beta", '"spark" AND "tables" NOT "red"'):
+            out, ran = _served_plans(srv, query, monkeypatch)
+            assert len(out["results"]) == 10 and ran, query
+            for df in ran:
+                ops = executed_operators(df)
+                assert "AdaptiveSparkPlan" not in ops, (query, ops)
+                assert "InMemoryTableScan" in ops, (query, ops)
+                assert not [o for o in ops if "Exchange" in o], (query, ops)
+    finally:
+        srv.stop()
+        for df in held:
+            df.unpersist()
+    assert [spark.conf.get(c) for c in confs] == before
