@@ -33,14 +33,19 @@ the index's session (the same SparkContext and cache manager, its own
 SQL conf), which starts from the caller's modifiable SQL confs, so it
 ranks as the caller's session would, and turns AQE off once, at
 construction. The index's inputs reach that session as global temp
-views named for the server, which stop() drops. AQE off is sound for
-served plans at any scale: the layout is partitioned by doc_id, so a
-served plan (the prune probe, the id fetch, the ranking scan) has no
-exchange for AQE to adapt, and the layout's
-`repartition(parts, "doc_id")` keeps exactly `parts` partitions with
-AQE on or off; AQE on would only add query stages and re-planning to
-every GET. The caller's session and its confs are never changed. Measured
-Spark jobs per request on perfbench's 2k-doc index: a POST of a query
+views named for the server, which stop() drops; `srv.index` holds them.
+AQE off is sound for served plans at any scale: the layout is
+partitioned by doc_id, so a served plan (the prune probe, the id fetch,
+the ranking scan) has no exchange for AQE to adapt; AQE on would only
+add query stages and re-planning to every GET. The layout itself is
+built in the serving session too, so its one-off build (the
+postings-lengths and idf joins, then `repartition(parts, "doc_id")`,
+which keeps exactly `parts` partitions either way) also runs without
+AQE: at the static `spark.sql.shuffle.partitions`, with no runtime join
+conversion, partition coalescing or skew split; its cost was measured
+only at 2k docs (perfbench's setup_s). The caller's session, its confs
+and its caches are never changed. Measured Spark jobs per request on
+perfbench's 2k-doc index: a POST of a query
 this server already recorded runs 0 (it remembers up to
 KNOWN_QUERIES_MAX of them), a first-seen POST 1 (the suggestion probe)
 and 1 more when its append triggers a compaction; GET /results runs 1
@@ -170,7 +175,12 @@ class QueryEngineServer:
         if df is None:
             return None
         name = f"navi_serve_{self._id}_{what}"
-        df.createGlobalTempView(name)
+        # dropping a view uncaches the view's plan, and a view made from
+        # `df` has `df`'s plan: the caller's cache entry for `df`. A filter
+        # on a literal of this server's, which the optimizer folds away,
+        # gives the view a plan of its own; `df`'s cache still serves it
+        own = F.lit(self._id)
+        df.filter(own == own).createGlobalTempView(name)
         self._views.append(name)
         db = self.session.conf.get("spark.sql.globalTempDatabase")
         return self.session.table(f"{db}.{name}")
@@ -183,7 +193,7 @@ class QueryEngineServer:
                 self._bind(phrase_index.pairs, "pairs"),
                 self._bind(phrase_index.word_df, "word_df"))
         # what the served plans read, bound into the serving session
-        served = self.served = replace(
+        index = self.index = replace(
             index, pages=self._bind(index.pages, "pages"),
             postings=self._bind(index.postings, "postings"),
             lengths=self._bind(index.lengths, "lengths"),
@@ -192,9 +202,9 @@ class QueryEngineServer:
         # built and cached once per server; stop() releases it, and so
         # does a failed construction, since persist() runs once assigned
         self.layout = serving_layout(
-            served.pages, served.postings, served.lengths, served.field_cols,
-            served.n_docs, avg_lengths=served.avg_lengths,
-            idf_table=served.idf_table,
+            index.pages, index.postings, index.lengths, index.field_cols,
+            index.n_docs, avg_lengths=index.avg_lengths,
+            idf_table=index.idf_table,
         )
         self.layout.persist()
         outer = self
@@ -301,7 +311,7 @@ class QueryEngineServer:
             query = self.state.query
         results = []
         if query is not None:
-            idx = self.served
+            idx = self.index
             hits = search(
                 query, idx.pages, idx.postings, idx.lengths, idx.field_cols,
                 idx.n_docs, k=idx.k, stopwords=idx.stopwords,

@@ -524,41 +524,71 @@ def _global_views(spark) -> set:
     return {t.name for t in spark.catalog.listTables(db)}
 
 
-def _uncached_index(spark, tmp_path) -> ServedIndex:
+@pytest.fixture
+def cached_index(spark, tmp_path):
+    """An index whose inputs the caller cached, and the ids of the RDDs
+    that cache holds: a server must leave every one of them cached."""
     pages = spark.createDataFrame(
         [(u, h1, other, 1.0) for u, h1, other in DOCS],
         "url string, h1 string, other string, rank double",
-    )
-    return ServedIndex(
+    ).cache()
+    idx = ServedIndex(
         pages=pages, field_cols=FIELDS, n_docs=len(DOCS),
-        postings=indexer.build_postings(pages, "url", FIELDS, stem=True),
-        lengths=indexer.field_lengths(pages, "url", FIELDS, stem=True),
+        postings=indexer.build_postings(
+            pages, "url", FIELDS, stem=True).cache(),
+        lengths=indexer.field_lengths(
+            pages, "url", FIELDS, stem=True).cache(),
         suggestions=SnapshotTable(spark, str(tmp_path / "s")),
     )
+    held = (idx.pages, idx.postings, idx.lengths)
+    before = _persisted(spark)
+    for df in held:
+        df.count()
+    caller = _persisted(spark) - before
+    assert len(caller) == len(held), "an input shares another's cache entry"
+    yield idx, caller
+    for df in held:
+        df.unpersist()
 
 
-def test_stop_releases_what_the_server_cached(spark, tmp_path):
+def _served_results(url, query) -> list:
+    _post(url, "/search?query=" + urllib.parse.quote(query))
+    return json.loads(_get(url, "/results")[1])["results"]
+
+
+def test_stop_releases_what_the_server_cached(spark, cached_index):
     """A server caches its serving layout and binds its inputs as global
     temp views; no RDD it persisted and none of its views survive its
     stop() (ids and names, not counts, so an unrelated RDD cleaned up
-    meanwhile cannot mask a leak)."""
-    idx = _uncached_index(spark, tmp_path)
+    meanwhile cannot mask a leak). Its stop() uncaches nothing else: not
+    the caller's cached inputs, and not the layout of another live
+    server over the same index."""
+    idx, caller = cached_index
     before, views = _persisted(spark), _global_views(spark)
-    with QueryEngineServer(idx) as url:
-        for q in ("rivers banks", '"big tables"'):
-            _post(url, "/search?query=" + urllib.parse.quote(q))
-            assert json.loads(_get(url, "/results")[1])["results"]
-        assert _persisted(spark) - before, "the server cached nothing"
-        assert _global_views(spark) - views, "the server bound no view"
+    with QueryEngineServer(idx) as live:
+        kept = _persisted(spark) - before
+        live_views = _global_views(spark)
+        with QueryEngineServer(idx) as url:
+            for q in ("rivers banks", '"big tables"'):
+                assert _served_results(url, q)
+            assert _persisted(spark) - before - kept, \
+                "the server cached nothing"
+            assert _global_views(spark) - live_views, \
+                "the server bound no view"
+        assert caller | kept <= _persisted(spark)
+        assert _global_views(spark) <= live_views
+        assert _served_results(live, "rivers banks")
     assert _persisted(spark) <= before
+    assert caller <= _persisted(spark), "stop() uncached the caller's index"
     assert _global_views(spark) <= views
 
 
-def test_failed_construction_leaves_nothing_behind(spark, tmp_path):
+def test_failed_construction_leaves_nothing_behind(spark, cached_index):
     """A server that cannot bind its port raises from its constructor,
     and leaves no persisted RDD and no global temp view behind: it built
-    and cached its layout before it bound the socket."""
-    idx = _uncached_index(spark, tmp_path)
+    and cached its layout before it bound the socket. It uncaches none
+    of the caller's cached inputs either."""
+    idx, caller = cached_index
     taken = socket.socket()
     try:
         taken.bind(("127.0.0.1", 0))
@@ -569,4 +599,33 @@ def test_failed_construction_leaves_nothing_behind(spark, tmp_path):
     finally:
         taken.close()
     assert _persisted(spark) <= before
+    assert caller <= _persisted(spark), \
+        "a failed construction uncached the caller's index"
     assert _global_views(spark) <= views
+
+
+def test_serving_session_starts_from_caller_confs(spark, cached_index):
+    """The serving session ranks as the caller's session would: it starts
+    from the caller's runtime SQL confs, those set after the caller's
+    session was built too, and turns AQE off; the caller's confs stay as
+    they were."""
+    idx, _ = cached_index
+    confs = {"spark.sql.session.timeZone": "America/Lima",
+             "spark.sql.autoBroadcastJoinThreshold": "1234567"}
+    saved = {key: spark.conf.get(key) for key in confs}
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        srv = QueryEngineServer(idx)
+        try:
+            assert {key: srv.session.conf.get(key) for key in confs} == confs
+            assert srv.session.conf.get("spark.sql.adaptive.enabled") == \
+                "false"
+        finally:
+            srv.stop()
+        assert {key: spark.conf.get(key) for key in confs} == confs
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
