@@ -28,18 +28,20 @@ Scale note: the server builds a serving layout of the index once, at
 construction (operators/search.py serving_layout: postings carrying idf
 and field lengths, and a (doc_id, pop, snippet text) table, both cached
 and hash-partitioned by doc_id), and releases it in stop(). It plans
-every ranking query in a serving session of its own: `newSession()` of
-the index's session (the same SparkContext and cache manager, its own
-SQL conf), which starts from the caller's modifiable SQL confs, so it
-ranks as the caller's session would, and turns AQE off once, at
-construction. The index's inputs reach that session as global temp
-views named for the server, which stop() drops; `srv.index` holds them.
-AQE off is sound for served plans at any scale: the layout is
-partitioned by doc_id, so a served plan (the prune probe, the id fetch,
-the ranking scan) has no exchange for AQE to adapt; AQE on would only
-add query stages and re-planning to every GET. The layout itself is
-built in the serving session too, so its one-off build (the
-postings-lengths and idf joins, then `repartition(parts, "doc_id")`,
+every ranking query in a serving session of its own
+(catalog.child_session: `newSession()` of the index's session, the same
+SparkContext and cache manager, its own SQL conf), which starts from the
+caller's modifiable SQL confs, so it ranks as the caller's session
+would, and turns AQE off once, at construction. The index's inputs reach
+that session as their own logical plans rebound to it (catalog.rebind),
+so a cached input still serves them and nothing is registered that
+stop() would have to drop; `srv.index` holds them. AQE off is sound
+for served plans at any scale: the layout is partitioned by doc_id, so
+a served plan (the prune probe, the id fetch, the ranking scan) has no
+exchange for AQE to adapt; AQE on would only add query stages and
+re-planning to every GET. The layout itself is built in the serving
+session too, so its one-off build (the postings-lengths and idf joins,
+then `repartition(parts, "doc_id")`,
 which keeps exactly `parts` partitions either way) also runs without
 AQE: at the static `spark.sql.shuffle.partitions`, with no runtime join
 conversion, partition coalescing or skew split; its cost was measured
@@ -65,7 +67,6 @@ from __future__ import annotations
 import json
 import threading
 import time
-import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field, replace
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -73,8 +74,9 @@ from typing import Optional
 from urllib.parse import parse_qs, urlparse
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
+from navi_spark.catalog import child_session, rebind
 from navi_spark.operators import ranker
 from navi_spark.operators.queryengine import parse_query
 from navi_spark.operators.search import (
@@ -118,18 +120,6 @@ class _ServerState:
     lock: threading.Lock = field(default_factory=threading.Lock)
 
 
-def _serving_session(spark: SparkSession) -> SparkSession:
-    """A child of `spark` that a server plans its queries in: it shares
-    the SparkContext and the cache manager, starts from `spark`'s
-    modifiable SQL confs, and has AQE off. Nothing changes it afterwards."""
-    session = spark.newSession()
-    for key, value in spark.conf.getAll.items():
-        if spark.conf.isModifiable(key):
-            session.conf.set(key, value)
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    return session
-
-
 def _parsed_tokens(query: str, stopwords: frozenset[str]) -> list[str]:
     """The POST /search response body: stemmed terms for a bare query,
     the alternating phrase list for a quoted one, [] for invalid —
@@ -155,49 +145,31 @@ class QueryEngineServer:
                  port: int = 0):
         self.index = index
         self.state = _ServerState()
-        self.session = _serving_session(index.pages.sparkSession)
+        self.session = child_session(index.pages.sparkSession,
+                                     {"spark.sql.adaptive.enabled": "false"})
         self.layout = None
         self._httpd = None
-        self._id = uuid.uuid4().hex
-        self._views: list[str] = []
-        # all or nothing: a constructor that raises leaves no cache, view
-        # or socket behind
+        # all or nothing: a constructor that raises leaves no cache or
+        # socket behind
         try:
             self._build(host, port)
         except BaseException:
             self._release()
             raise
 
-    def _bind(self, df: Optional[DataFrame],
-              what: str) -> Optional[DataFrame]:
-        """`df` as a DataFrame of the serving session, through a global
-        temp view named for this server (dropped by _release)."""
-        if df is None:
-            return None
-        name = f"navi_serve_{self._id}_{what}"
-        # dropping a view uncaches the view's plan, and a view made from
-        # `df` has `df`'s plan: the caller's cache entry for `df`. A filter
-        # on a literal of this server's, which the optimizer folds away,
-        # gives the view a plan of its own; `df`'s cache still serves it
-        own = F.lit(self._id)
-        df.filter(own == own).createGlobalTempView(name)
-        self._views.append(name)
-        db = self.session.conf.get("spark.sql.globalTempDatabase")
-        return self.session.table(f"{db}.{name}")
-
     def _build(self, host: str, port: int) -> None:
+        def bind(df: Optional[DataFrame]) -> Optional[DataFrame]:
+            return None if df is None else rebind(df, self.session)
+
         index = self.index
         phrase_index = index.phrase_index
         if phrase_index is not None:
-            phrase_index = ranker.PhraseIndex(
-                self._bind(phrase_index.pairs, "pairs"),
-                self._bind(phrase_index.word_df, "word_df"))
-        # what the served plans read, bound into the serving session
+            phrase_index = ranker.PhraseIndex(bind(phrase_index.pairs),
+                                              bind(phrase_index.word_df))
+        # what the served plans read, as plans of the serving session
         index = self.index = replace(
-            index, pages=self._bind(index.pages, "pages"),
-            postings=self._bind(index.postings, "postings"),
-            lengths=self._bind(index.lengths, "lengths"),
-            idf_table=self._bind(index.idf_table, "idf_table"),
+            index, pages=bind(index.pages), postings=bind(index.postings),
+            lengths=bind(index.lengths), idf_table=bind(index.idf_table),
             phrase_index=phrase_index)
         # built and cached once per server; stop() releases it, and so
         # does a failed construction, since persist() runs once assigned
@@ -357,15 +329,12 @@ class QueryEngineServer:
         self._release()
 
     def _release(self) -> None:
-        """Close the socket, uncache the layout and drop the views: what
-        construction acquired, as far as it got."""
+        """Close the socket and uncache the layout: what construction
+        acquired, as far as it got."""
         if self._httpd is not None:
             self._httpd.server_close()
         if self.layout is not None:
             self.layout.unpersist()
-        for name in self._views:
-            self.session.catalog.dropGlobalTempView(name)
-        self._views.clear()
 
     def __enter__(self) -> str:
         self.start()

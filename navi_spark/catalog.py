@@ -108,6 +108,31 @@ def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
                                  StructType.fromDDL(schema))
 
 
+def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A new session of `spark`'s SparkContext and cache manager that
+    starts from `spark`'s modifiable SQL confs, then takes `confs`.
+
+    The only place navi_spark sets a conf: a component that plans under
+    confs of its own plans in a child session made once with them, so no
+    caller's session, shared with whatever else runs on it, ever changes."""
+    session = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            session.conf.set(key, value)
+    for key, value in confs.items():
+        session.conf.set(key, value)
+    return session
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """`df`'s logical plan as a DataFrame of `session`, planned under
+    `session`'s confs. The plan is the same, so the shared cache manager
+    serves a cached `df` to it; nothing is registered or copied."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jdf, session)
+
+
 class CatalogRoot:
     """The one commit point of a set of tables: the file at `path` holds
     each table's published snapshot id (``snapshots``) and its owner's

@@ -119,29 +119,6 @@ CUT_FILE = "root.json"
 # engine's 12 g driver sizing.
 RECRAWL_BROADCAST_MAX = 4_000_000
 
-# Scale-adaptive shuffle sizing for the store-bounded passes (guide §2.2:
-# "size shuffle partitions to the data, not a constant"): every relation
-# the freshness pass or the PageRank loop touches is bounded by the store
-# (≤ budget_consumed rows of light columns), so post-shuffle partitions
-# are derived from that row count instead of the session's scan-scale
-# default. 2 500 rows/partition ≈ the measured local sweet spot for the
-# ~150 B light rows (sub-MB partitions; below it task-launch overhead
-# dominates, above it per-task skew does); at the 10^10-row design point
-# the same formula yields ~4M partitions' worth of data split across
-# `ROWS_PER_SHUFFLE_PARTITION`-row units, capped by the session default
-# times 1024 so the derived value can grow well past the local default
-# but never unboundedly.
-ROWS_PER_SHUFFLE_PARTITION = 2500
-
-
-def _partitions_for_rows(rows: int, session_parts: int) -> int:
-    """Shuffle-partition count for a pass whose relations are bounded by
-    `rows`: grows linearly with data, never collapses below 1, and is
-    allowed to EXCEED the session default at scale (the cap only bounds
-    runaway values from a corrupt rows estimate)."""
-    p = -(-max(int(rows), 1) // ROWS_PER_SHUFFLE_PARTITION)
-    return max(1, min(p, max(session_parts, 64) * 1024))
-
 
 @dataclass
 class CrawlConfig:
@@ -660,11 +637,11 @@ class CrawlEngine:
         # per attempt row. Verdicts are deterministic per image row, so
         # outcome labels are bit-identical either way. Keying the image
         # prune on `web_hit` rather than on `att` keeps the attempts ⋈ web
-        # join, and its web-row broadcast, out of the image-key branch:
-        # Spark cannot share that branch's broadcasts with the main one,
-        # because the attempts checkpoint's scan reports its (rank, url)
-        # order and plan canonicalization leaves those attribute ids as
-        # they are, so two scans of it never compare equal.
+        # join, and its web-row broadcast, out of the image-key branch.
+        # That branch's attempts-url broadcast is the main one's (the
+        # labeled plan shows it as a ReusedExchange), but the `web_hit`
+        # semi-join itself still runs twice: once under `att` and once
+        # under this branch's broadcast of its image ids.
         img_hit = self.images.join(
             F.broadcast(web_hit.select("image_id")), on="image_id",
             how="left_semi",
@@ -895,25 +872,19 @@ class CrawlEngine:
     ) -> dict:
         """C21 freshness pass — see :meth:`_recrawl_impl` for the algorithm.
 
-        This wrapper only sets the pass's shuffle sizing: every relation
-        the freshness pass touches is bounded by the STORE (≤
-        budget_consumed rows of light columns, a driver-side scalar —
-        no count job), not by the web, so its post-shuffle partition
-        count is derived from that size (guide §2.2) instead of running
-        dozens of store-bounded exchanges at the session's scan-scale
-        default. Restored on exit; the session conf is never leaked, and
-        nothing the pass caches or stages outlives it, on error paths
-        too."""
-        spark = self.spark
-        sess = spark.conf.get("spark.sql.shuffle.partitions")
-        p = _partitions_for_rows(self.budget_consumed, int(sess))
-        spark.conf.set("spark.sql.shuffle.partitions", str(p))
-        try:
-            with self._step() as cached:
-                return self._recrawl_impl(cached, web, images, max_pages,
-                                          pagerank_iterations)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", sess)
+        One step: nothing the pass caches or stages outlives it, on error
+        paths too. It plans in the engine's session and changes none of
+        its confs, so its exchanges start at the session's shuffle
+        partitions; AQE's coalescing can lower that count to the data, as
+        it does the wave's, but never raise it. A count grown with the
+        store (1 per 2,500 rows) was no faster: at 2M URLs / 190,122
+        reloaded pages (local[4], 64 session partitions, same stats and
+        ranks) the pass took 46.8-49.9 s against 50.7-53.1 s at 77
+        partitions with coalescing off, and 37.1-47.1 s against
+        46.7-47.8 s with it on."""
+        with self._step() as cached:
+            return self._recrawl_impl(cached, web, images, max_pages,
+                                      pagerank_iterations)
 
     def _recrawl_impl(
         self,

@@ -31,7 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from navi_spark.catalog import local_df
+from navi_spark.catalog import child_session, local_df, rebind
 
 
 # The 10-iteration loop is a FIXED plan shape (ranks-join on pre-partitioned
@@ -54,7 +54,9 @@ PAGERANK_AQE_OFF_MAX_NODES = 5_000_000
 # shift by summation order only (≪ the 1e-12 test / 4dp oracle tolerances,
 # same class as the python-vs-spark oracle delta). ~2k nodes per loop
 # partition measured best (12k-node graph, local[32]: 64 parts 3.85 s,
-# 1 part 1.91 s, 4-12 parts 1.35-1.40 s).
+# 1 part 1.91 s, 4-12 parts 1.35-1.40 s). Raising the count past the
+# caller's does not pay either: a 438,608-node graph (local[4], AQE and
+# codegen off) ran the call in 9.5-12.8 s at 64 parts, 32-35 s at 176.
 PAGERANK_LOOP_ROWS_PER_PART = 2000
 
 
@@ -95,13 +97,32 @@ def pagerank(
         n = nodes.count()
         if n == 0:
             return local_df(pages.sparkSession, [], "url string, rank double")
-        spark = pages.sparkSession
-        aqe_off = n <= PAGERANK_AQE_OFF_MAX_NODES
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-        cg_prev = spark.conf.get("spark.sql.codegen.wholeStage")
-        sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
-        loop_parts = max(1, -(-n // PAGERANK_LOOP_ROWS_PER_PART))
-        shrink_shuffle = aqe_off and loop_parts < int(sp_prev)
+        caller = pages.sparkSession
+        # Small-graph loop config (size-gated on n), set in a child session
+        # the loop is planned in, so the caller's session never changes:
+        # AQE off — the loop is a FIXED plan shape and AQE turns its ~2
+        # exchanges/iteration into separately scheduled query-stage jobs
+        # whose scheduling latency dominates at small n; codegen off — the
+        # 10 iterations generate ~20 distinct codegen units (fresh
+        # expression ids each iteration, so the compiled-class cache never
+        # hits) and Janino compilation costs more than interpreting a
+        # few-thousand-row stage; and the loop's shuffle partitions, when
+        # fewer than the caller's. AQE and codegen off measured on the
+        # drifted-recrawl recompute at 11.7k nodes: 3.36 s → 1.9 s for the
+        # whole pagerank call, bit-identical ranks. Above the gate the loop
+        # plans in the caller's session (compilation amortizes; AQE's
+        # runtime skew/broadcast decisions matter at web scale).
+        if n <= PAGERANK_AQE_OFF_MAX_NODES:
+            confs = {"spark.sql.adaptive.enabled": "false",
+                     "spark.sql.codegen.wholeStage": "false"}
+            loop_parts = max(1, -(-n // PAGERANK_LOOP_ROWS_PER_PART))
+            parts = "spark.sql.shuffle.partitions"
+            if loop_parts < int(caller.conf.get(parts)):
+                confs[parts] = str(loop_parts)
+            session = child_session(caller, confs)
+            # the same plans, so the cache manager still serves `nodes`
+            # (and unpersist() still finds its entry)
+            pages, nodes = rebind(pages, session), rebind(nodes, session)
         edges = (
             edges_from_pages(pages)
             .join(out_degrees(pages), "src")
@@ -170,35 +191,11 @@ def pagerank(
         # lazy-then-unpersist vs 9.1 s / 306 MB / 51 cpu-s with this eager
         # cut — bit-identical ranks). The checkpoint is one |nodes|-row
         # write; the returned plan is a leaf, so downstream re-use (recrawl's
-        # repaged join, repeated collects) never re-runs the loop.
-        #
-        # Small-graph materialization config (size-gated on n, restored in
-        # the finally): AQE off — the loop is a FIXED plan shape and AQE
-        # turns its ~2 exchanges/iteration into separately scheduled
-        # query-stage jobs whose scheduling latency dominates at small n;
-        # codegen off — the 10 iterations generate ~20 distinct codegen
-        # units (fresh expression ids each iteration, so the compiled-class
-        # cache never hits) and Janino compilation costs more than
-        # interpreting a few-thousand-row stage.
-        # Both measured on the drifted-recrawl recompute at 11.7k nodes:
-        # 3.36 s → 1.9 s for the whole pagerank call, bit-identical ranks.
-        # Above the gate both stay on (compilation amortizes; AQE's runtime
-        # skew/broadcast decisions matter at web scale).
-        if aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        if shrink_shuffle:
-            spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        try:
-            out = ranks.select(
-                F.col("node").alias("url"), "rank"
-            ).localCheckpoint(eager=True)
-        finally:
-            if aqe_off:
-                spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-                spark.conf.set("spark.sql.codegen.wholeStage", cg_prev)
-            if shrink_shuffle:
-                spark.conf.set("spark.sql.shuffle.partitions", sp_prev)
+        # repaged join, repeated collects) never re-runs the loop; it goes
+        # back to the caller as a plan of the caller's session.
+        out = ranks.select(
+            F.col("node").alias("url"), "rank"
+        ).localCheckpoint(eager=True)
         # Block lifetime note (r05 ADVICE): the returned leaf is backed by
         # localCheckpoint blocks that live until the RDD is GC'd (the
         # ContextCleaner frees them); callers that hold the result long-term
@@ -206,7 +203,7 @@ def pagerank(
         # should not accumulate many of these, and the blocks are not
         # fault-tolerant on a real cluster — a lost executor after return
         # makes the result unrecoverable (acceptable in local mode).
-        return out
+        return rebind(out, caller)
     finally:
         # only after the eager checkpoint above (see its comment), and on
         # every error path too, so a failed call leaks no cache

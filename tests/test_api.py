@@ -519,11 +519,6 @@ def _persisted(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
 
 
-def _global_views(spark) -> set:
-    db = spark.conf.get("spark.sql.globalTempDatabase")
-    return {t.name for t in spark.catalog.listTables(db)}
-
-
 @pytest.fixture
 def cached_index(spark, tmp_path):
     """An index whose inputs the caller cached, and the ids of the RDDs
@@ -557,43 +552,37 @@ def _served_results(url, query) -> list:
 
 
 def test_stop_releases_what_the_server_cached(spark, cached_index):
-    """A server caches its serving layout and binds its inputs as global
-    temp views; no RDD it persisted and none of its views survive its
-    stop() (ids and names, not counts, so an unrelated RDD cleaned up
-    meanwhile cannot mask a leak). Its stop() uncaches nothing else: not
-    the caller's cached inputs, and not the layout of another live
-    server over the same index."""
+    """A server caches its serving layout; no RDD it persisted survives
+    its stop() (ids, not counts, so an unrelated RDD cleaned up meanwhile
+    cannot mask a leak). Its stop() uncaches nothing else: not the
+    caller's cached inputs, and not the layout of another live server
+    over the same index."""
     idx, caller = cached_index
-    before, views = _persisted(spark), _global_views(spark)
+    before = _persisted(spark)
     with QueryEngineServer(idx) as live:
         kept = _persisted(spark) - before
-        live_views = _global_views(spark)
         with QueryEngineServer(idx) as url:
             for q in ("rivers banks", '"big tables"'):
                 assert _served_results(url, q)
             assert _persisted(spark) - before - kept, \
                 "the server cached nothing"
-            assert _global_views(spark) - live_views, \
-                "the server bound no view"
         assert caller | kept <= _persisted(spark)
-        assert _global_views(spark) <= live_views
         assert _served_results(live, "rivers banks")
     assert _persisted(spark) <= before
     assert caller <= _persisted(spark), "stop() uncached the caller's index"
-    assert _global_views(spark) <= views
 
 
 def test_failed_construction_leaves_nothing_behind(spark, cached_index):
     """A server that cannot bind its port raises from its constructor,
-    and leaves no persisted RDD and no global temp view behind: it built
-    and cached its layout before it bound the socket. It uncaches none
-    of the caller's cached inputs either."""
+    and leaves no persisted RDD behind: it built and cached its layout
+    before it bound the socket. It uncaches none of the caller's cached
+    inputs either."""
     idx, caller = cached_index
     taken = socket.socket()
     try:
         taken.bind(("127.0.0.1", 0))
         taken.listen()
-        before, views = _persisted(spark), _global_views(spark)
+        before = _persisted(spark)
         with pytest.raises(OSError):
             QueryEngineServer(idx, port=taken.getsockname()[1])
     finally:
@@ -601,7 +590,6 @@ def test_failed_construction_leaves_nothing_behind(spark, cached_index):
     assert _persisted(spark) <= before
     assert caller <= _persisted(spark), \
         "a failed construction uncached the caller's index"
-    assert _global_views(spark) <= views
 
 
 def test_serving_session_starts_from_caller_confs(spark, cached_index):

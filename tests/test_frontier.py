@@ -1141,6 +1141,46 @@ def test_failed_recrawl_leaves_pages_unchanged(spark, universe, monkeypatch):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
+def test_drifted_recrawl_keeps_session_conf(spark, universe, monkeypatch):
+    """A drifted recrawl (PageRank reruns, with its small-graph loop
+    confs) sets no conf on the engine's session: the caller's AQE,
+    wholeStage codegen and shuffle partitions hold at every conf write
+    made during the call, on any session, and after it."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
+             "spark.sql.shuffle.partitions")
+    before = [spark.conf.get(c) for c in confs]
+    engine_conf = spark.conf._jconf  # noqa: SLF001
+    writes, elsewhere, seen = [], [], []
+    set_conf = RuntimeConfig.set
+
+    def spy(self, key, value):
+        set_conf(self, key, value)
+        mine = self._jconf.equals(engine_conf)  # noqa: SLF001
+        (writes if mine else elsewhere).append((key, value))
+        seen.append([spark.conf.get(c) for c in confs])
+
+    workdir = tempfile.mkdtemp(prefix="navi-recrawl-conf-")
+    web_v1 = _recrawl_universe(spark, N_URLS, N_HOSTS, version=1)
+    try:
+        eng, seeds = _mk_engine(spark, universe, workdir)
+        eng.bootstrap(seeds)
+        eng.run(max_waves=30)
+        monkeypatch.setattr(RuntimeConfig, "set", spy)
+        stats = eng.recrawl(web=web_v1, max_pages=12)
+        monkeypatch.undo()
+        assert stats["pagerank_recomputed"]
+        assert writes == [], "recrawl set confs on the engine's session"
+        # the spy saw PageRank's loop confs go to a session of their own
+        assert ("spark.sql.adaptive.enabled", "false") in elsewhere
+        assert all(v == before for v in seen)
+        assert [spark.conf.get(c) for c in confs] == before
+    finally:
+        web_v1.unpersist()
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
 def test_crawl_recrawl_crawl_lifecycle(spark, universe):
     """Full freshness lifecycle: crawl part of the budget, recrawl against
     a drifted web (ranks move via PageRank), then CONTINUE crawling — the

@@ -44,13 +44,17 @@ def test_error_path_leaks_no_cache(spark, pages_df, monkeypatch):
     """A pagerank() whose materializing checkpoint raises unpersists the
     nodes and edges it cached: no RDD persisted during the failed call
     survives it (ids, not counts, so an unrelated RDD cleaned up meanwhile
-    cannot mask a leak)."""
+    cannot mask a leak). Nor does it leave the caller's session with the
+    loop's confs."""
     def boom(*_a, **_k):
         raise RuntimeError("checkpoint failed")
 
     def persisted():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
 
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
+             "spark.sql.shuffle.partitions")
+    conf_before = [spark.conf.get(c) for c in confs]
     pages_df.count()  # the fixture's own cache is not the call's
     before = persisted()
     # the session's concrete DataFrame class, which overrides the base's
@@ -58,3 +62,4 @@ def test_error_path_leaks_no_cache(spark, pages_df, monkeypatch):
     with pytest.raises(RuntimeError, match="checkpoint failed"):
         pagerank(pages_df)
     assert persisted() <= before
+    assert [spark.conf.get(c) for c in confs] == conf_before
